@@ -1,6 +1,6 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 
 /** Mergeable Bloom filter over 64-bit keys — the membership member of the
   * sketch layer (quantiles: REQ/KLL, cardinality: HLL/Theta, frequency:
@@ -86,17 +86,12 @@ final class BloomFilter private (
     this
   }
 
+  /** Big-endian [version:1][numBits:8][numHashes:4][items:8][words:8*W]. */
   def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(words.length * 8 + 32)
-    val out = new DataOutputStream(bos)
-    out.writeByte(1) // version
-    out.writeLong(numBits)
-    out.writeInt(numHashes)
-    out.writeLong(_itemsAdded)
-    var i = 0
-    while (i < words.length) { out.writeLong(words(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
+    val buf = ByteBuffer.allocate(BloomFilter.HeaderBytes + words.length * 8)
+    buf.put(1.toByte).putLong(numBits).putInt(numHashes).putLong(_itemsAdded)
+    buf.asLongBuffer().put(words)
+    buf.array()
   }
 }
 
@@ -110,6 +105,7 @@ trait MembershipFilter {
 object BloomFilter {
   private[core] val SeedA = 0x71ee2a3173c6bb17L
   private[core] val SeedB = 0x2545f4914f6cdd1dL
+  private val HeaderBytes = 1 + 8 + 4 + 8
 
   /** m = ceil(-n ln p / ln^2 2), floored at 64 bits. */
   def optimalNumBits(expectedItems: Long, fpp: Double): Long = {
@@ -134,14 +130,13 @@ object BloomFilter {
   }
 
   def deserialize(bytes: Array[Byte]): BloomFilter = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    require(in.readByte() == 1, "unknown BloomFilter version")
-    val numBits = in.readLong()
-    val numHashes = in.readInt()
-    val items = in.readLong()
+    val buf = ByteBuffer.wrap(bytes)
+    require(buf.get() == 1, "unknown BloomFilter version")
+    val numBits = buf.getLong()
+    val numHashes = buf.getInt()
+    val items = buf.getLong()
     val words = new Array[Long](((numBits + 63) >>> 6).toInt)
-    var i = 0
-    while (i < words.length) { words(i) = in.readLong(); i += 1 }
+    buf.asLongBuffer().get(words)
     new BloomFilter(numBits, numHashes, words, items)
   }
 }

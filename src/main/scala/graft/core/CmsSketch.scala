@@ -1,6 +1,6 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 
 /** Count-Min sketch — the point-query member of the mergeable-sketch layer
   * (REQ/KLL quantiles, HLL/Theta cardinality, Misra–Gries heavy hitters,
@@ -106,23 +106,19 @@ final class CmsSketch private (
     this
   }
 
+  /** Big-endian [version:1][depth:4][width:4][weight:8][table:8*depth*width]. */
   def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(4 + 4 + 4 + 8 + table.length * 8)
-    val out = new DataOutputStream(bos)
-    out.writeByte(1) // version
-    out.writeInt(depth)
-    out.writeInt(width)
-    out.writeLong(_streamWeight)
-    var i = 0
-    while (i < table.length) { out.writeLong(table(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
+    val buf = ByteBuffer.allocate(CmsSketch.HeaderBytes + table.length * 8)
+    buf.put(1.toByte).putInt(depth).putInt(width).putLong(_streamWeight)
+    buf.asLongBuffer().put(table)
+    buf.array()
   }
 }
 
 object CmsSketch {
   val DefaultDepth = 5
   val DefaultWidth = 1024
+  private val HeaderBytes = 1 + 4 + 4 + 8
 
   def apply(depth: Int = DefaultDepth, width: Int = DefaultWidth): CmsSketch = {
     require(depth >= 1 && depth <= 32, s"depth must be in [1, 32], got $depth")
@@ -131,15 +127,14 @@ object CmsSketch {
   }
 
   def deserialize(bytes: Array[Byte]): CmsSketch = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val version = in.readByte()
+    val buf = ByteBuffer.wrap(bytes)
+    val version = buf.get()
     require(version == 1, s"unknown CmsSketch version $version")
-    val depth = in.readInt()
-    val width = in.readInt()
-    val weight = in.readLong()
+    val depth = buf.getInt()
+    val width = buf.getInt()
+    val weight = buf.getLong()
     val table = new Array[Long](depth * width)
-    var i = 0
-    while (i < table.length) { table(i) = in.readLong(); i += 1 }
+    buf.asLongBuffer().get(table)
     new CmsSketch(depth, width, table, weight)
   }
 }

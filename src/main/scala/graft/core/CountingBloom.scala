@@ -1,6 +1,6 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 
 /** Mergeable COUNTING Bloom filter over 64-bit keys — the deletable twin of
   * [[BloomFilter]] (Fan, Cao, Almeida, Broder: "Summary Cache", 1998/2000).
@@ -199,20 +199,17 @@ final class CountingBloomFilter private (
     this
   }
 
+  /** Big-endian [version:1][numCells:8][numHashes:4][items:8][cells:numCells]. */
   def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream(cells.length + 32)
-    val out = new DataOutputStream(bos)
-    out.writeByte(1) // version
-    out.writeLong(numCells)
-    out.writeInt(numHashes)
-    out.writeLong(_itemsAdded)
-    out.write(cells)
-    out.flush()
-    bos.toByteArray
+    val buf = ByteBuffer.allocate(CountingBloomFilter.HeaderBytes + cells.length)
+    buf.put(1.toByte).putLong(numCells).putInt(numHashes).putLong(_itemsAdded)
+    System.arraycopy(cells, 0, buf.array(), CountingBloomFilter.HeaderBytes, cells.length)
+    buf.array()
   }
 }
 
 object CountingBloomFilter {
+  private val HeaderBytes = 1 + 8 + 4 + 8
 
   /** Same optimal sizing as the bitset filter (cells play the role of
     * bits in the fp analysis). */
@@ -229,13 +226,13 @@ object CountingBloomFilter {
   }
 
   def deserialize(bytes: Array[Byte]): CountingBloomFilter = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    require(in.readByte() == 1, "unknown CountingBloomFilter version")
-    val numCells = in.readLong()
-    val numHashes = in.readInt()
-    val items = in.readLong()
+    val buf = ByteBuffer.wrap(bytes)
+    require(buf.get() == 1, "unknown CountingBloomFilter version")
+    val numCells = buf.getLong()
+    val numHashes = buf.getInt()
+    val items = buf.getLong()
     val cells = new Array[Byte](numCells.toInt)
-    in.readFully(cells)
+    System.arraycopy(bytes, HeaderBytes, cells, 0, cells.length)
     new CountingBloomFilter(numCells, numHashes, cells, items)
   }
 }

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 /** HyperLogLog sketch for per-group distinct counts (the HLL member of the
   * sketch family the reference README names,
   * `/root/reference/data-sketches/README.md:5`).
@@ -63,14 +61,13 @@ final class HllSketch private (val lgK: Int, private val registers: Array[Byte])
   def lowerBound(numStdDev: Int): Double = estimate / (1.0 + numStdDev * relativeStandardError)
   def upperBound(numStdDev: Int): Double = estimate * (1.0 + numStdDev * relativeStandardError)
 
+  /** [version:1][lgK:1][registers:2^lgK]. */
   def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeByte(1)
-    out.writeByte(lgK)
-    out.write(registers)
-    out.flush()
-    bos.toByteArray
+    val bytes = new Array[Byte](2 + m)
+    bytes(0) = 1
+    bytes(1) = lgK.toByte
+    System.arraycopy(registers, 0, bytes, 2, m)
+    bytes
   }
 }
 
@@ -83,11 +80,10 @@ object HllSketch {
   }
 
   def deserialize(bytes: Array[Byte]): HllSketch = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    require(in.readByte() == 1, "unknown HllSketch version")
-    val lgK = in.readByte().toInt
+    require(bytes(0) == 1, "unknown HllSketch version")
+    val lgK = bytes(1).toInt
     val regs = new Array[Byte](1 << lgK)
-    in.readFully(regs)
+    System.arraycopy(bytes, 2, regs, 0, regs.length)
     new HllSketch(lgK, regs)
   }
 

@@ -24,30 +24,44 @@ final class KllSketch private (
     var totalN: Long,
     var minValue: Double,
     var maxValue: Double,
-    val levels: ArrayBuffer[ArrayBuffer[Double]],
+    // level h holds sizes(h) items of weight 2^h in levels(h)(0 until sizes(h)),
+    // in insertion order; each array grows geometrically past what it holds
+    private var levels: Array[Array[Double]],
+    private var sizes: Array[Int],
     var coinState: Long
 ) extends Serializable {
 
   import KllSketch._
+
+  private var retained0: Int = sizes.sum
+  // per-level capacities at the current level count, total last
+  private var caps: Array[Int] = capacities(k, levels.length)
 
   def count: Long = totalN
   def isEmpty: Boolean = totalN == 0
   def minimum: Double = minValue
   def maximum: Double = maxValue
   def numLevels: Int = levels.length
-  def levelCount(h: Int): Int = levels(h).length
-  def retained: Int = { var s = 0; var i = 0; while (i < levels.length) { s += levels(i).length; i += 1 }; s }
+  def levelCount(h: Int): Int = sizes(h)
+  def retained: Int = retained0
 
-  private def levelCapacity(h: Int, numLevels: Int): Int = {
-    // capacity of level h when there are numLevels levels: k * c^(depth)
-    val depth = numLevels - 1 - h
-    math.max(MinLevelCap, math.ceil(k * math.pow(TwoThirds, depth)).toInt)
+  private def totalCapacity: Int = caps(levels.length)
+
+  private def addLevel(): Unit = {
+    levels = java.util.Arrays.copyOf(levels, levels.length + 1)
+    levels(levels.length - 1) = new Array[Double](InitialLevelCapacity)
+    sizes = java.util.Arrays.copyOf(sizes, sizes.length + 1)
+    caps = capacities(k, levels.length)
   }
 
-  private def totalCapacity: Int = {
-    var s = 0; var h = 0
-    while (h < levels.length) { s += levelCapacity(h, levels.length); h += 1 }
-    s
+  /** Room for `extra` more items on level h. */
+  private def reserve(h: Int, extra: Int): Array[Double] = {
+    val arr = levels(h)
+    val need = sizes(h) + extra
+    if (need > arr.length) {
+      levels(h) = java.util.Arrays.copyOf(arr, math.max(need, math.max(2 * arr.length, InitialLevelCapacity)))
+    }
+    levels(h)
   }
 
   def update(v: Double): Unit = {
@@ -58,8 +72,10 @@ final class KllSketch private (
       if (v > maxValue) maxValue = v
     }
     totalN += 1
-    levels(0) += v
-    if (retained >= totalCapacity) compress()
+    reserve(0, 1)(sizes(0)) = v
+    sizes(0) += 1
+    retained0 += 1
+    if (retained0 >= totalCapacity) compress()
   }
 
   private def nextCoin(): Boolean = {
@@ -70,25 +86,27 @@ final class KllSketch private (
   /** Compact the lowest over-capacity level into the next one. */
   private def compress(): Unit = {
     var h = 0
-    while (retained >= totalCapacity && h < levels.length) {
-      if (levels(h).length >= levelCapacity(h, levels.length)) {
-        if (h + 1 == levels.length) levels += new ArrayBuffer[Double]
-        val buf = levels(h)
-        val arr = buf.toArray
-        java.util.Arrays.sort(arr)
+    while (retained0 >= totalCapacity && h < levels.length) {
+      if (sizes(h) >= caps(h)) {
+        if (h + 1 == levels.length) addLevel()
+        val arr = levels(h)
+        val len = sizes(h)
+        java.util.Arrays.sort(arr, 0, len)
         // odd length: hold the smallest item out of the compaction so the
         // compacted range is even — total weight is conserved exactly:
         // promoted * 2^(h+1) + excess * 2^h == length * 2^h
-        val excess = arr.length % 2
+        val excess = len % 2
         val offset = if (nextCoin()) 1 else 0
-        val promoted = new ArrayBuffer[Double]((arr.length - excess) / 2)
+        val promoted = (len - excess) / 2
+        val up = reserve(h + 1, promoted)
+        var w = sizes(h + 1)
         var i = excess + offset
-        while (i < arr.length) { promoted += arr(i); i += 2 }
-        buf.clear()
-        if (excess == 1) buf += arr(0)
-        levels(h + 1) ++= promoted
-        h += 1
-      } else h += 1
+        while (i < len) { up(w) = arr(i); w += 1; i += 2 }
+        sizes(h + 1) = w
+        sizes(h) = excess // the held-out smallest item is already at arr(0)
+        retained0 -= promoted
+      }
+      h += 1
     }
   }
 
@@ -101,11 +119,17 @@ final class KllSketch private (
       if (other.maxValue > maxValue) maxValue = other.maxValue
     }
     totalN += other.totalN
-    while (levels.length < other.levels.length) levels += new ArrayBuffer[Double]
+    while (levels.length < other.levels.length) addLevel()
     var h = 0
-    while (h < other.levels.length) { levels(h) ++= other.levels(h); h += 1 }
+    while (h < other.levels.length) {
+      val n = other.sizes(h)
+      System.arraycopy(other.levels(h), 0, reserve(h, n), sizes(h), n)
+      sizes(h) += n
+      h += 1
+    }
+    retained0 += other.retained0
     coinState ^= other.coinState * 0xC2B2AE3D27D4EB4FL
-    while (retained >= totalCapacity) compress()
+    while (retained0 >= totalCapacity) compress()
     this
   }
 
@@ -115,7 +139,8 @@ final class KllSketch private (
     var h = 0
     while (h < levels.length) {
       val w = 1L << h
-      levels(h).foreach(v => pairs += ((v, w)))
+      var i = 0
+      while (i < sizes(h)) { pairs += ((levels(h)(i), w)); i += 1 }
       h += 1
     }
     val sorted = pairs.sortBy(_._1)
@@ -139,7 +164,9 @@ final class KllSketch private (
     var h = 0
     while (h < levels.length) {
       val w = 1L << h
-      levels(h).foreach(x => if (x < v) below += w)
+      val arr = levels(h)
+      var i = 0
+      while (i < sizes(h)) { if (arr(i) < v) below += w; i += 1 }
       h += 1
     }
     below.toDouble / totalN
@@ -170,14 +197,16 @@ final class KllSketch private (
     * so stored KLL sketch columns can evolve): [version:1][k:4][n:8][min:8]
     * [max:8][coin:8][numLevels:4][sizes:4*L][items:8*N]. */
   def serialize(): Array[Byte] = {
-    val nItems = retained
-    val buf = ByteBuffer.allocate(1 + 4 + 8 + 8 + 8 + 8 + 4 + levels.length * 4 + nItems * 8)
+    val buf = ByteBuffer.allocate(HeaderBytes + levels.length * 4 + retained0 * 8)
       .order(ByteOrder.LITTLE_ENDIAN)
     buf.put(KllSketch.SerVersion.toByte)
     buf.putInt(k).putLong(totalN).putDouble(minValue).putDouble(maxValue).putLong(coinState)
     buf.putInt(levels.length)
-    levels.foreach(l => buf.putInt(l.length))
-    levels.foreach(l => l.foreach(buf.putDouble))
+    buf.asIntBuffer().put(sizes)
+    buf.position(buf.position() + 4 * levels.length)
+    val items = buf.asDoubleBuffer()
+    var h = 0
+    while (h < levels.length) { items.put(levels(h), 0, sizes(h)); h += 1 }
     buf.array()
   }
 }
@@ -187,6 +216,23 @@ object KllSketch {
   val MinLevelCap = 8
   val SerVersion = 1
   private val TwoThirds = 2.0 / 3.0
+  private val InitialLevelCapacity = 16
+  private val HeaderBytes = 1 + 4 + 8 + 8 + 8 + 8 + 4
+
+  /** Level capacities k * (2/3)^depth (floored at MinLevelCap) for
+    * `numLevels` levels, followed by their sum; shared per (k, numLevels). */
+  private val capacityCache = new java.util.concurrent.ConcurrentHashMap[Long, Array[Int]]()
+  private def capacities(k: Int, numLevels: Int): Array[Int] =
+    capacityCache.computeIfAbsent((k.toLong << 32) | numLevels, _ => {
+      val caps = new Array[Int](numLevels + 1)
+      var h = 0
+      while (h < numLevels) {
+        caps(h) = math.max(MinLevelCap, math.ceil(k * math.pow(TwoThirds, numLevels - 1 - h)).toInt)
+        caps(numLevels) += caps(h)
+        h += 1
+      }
+      caps
+    })
 
   /** Published two-sided error constant for KLL with evens/odds compaction. */
   def normalizedRankError(k: Int): Double = 2.296 / math.pow(k, 0.9723)
@@ -194,7 +240,7 @@ object KllSketch {
   def apply(k: Int = DefaultK): KllSketch = {
     require(k >= 8 && k <= 65535, s"k must be in [8, 65535], got $k")
     new KllSketch(k, 0L, Double.NaN, Double.NaN,
-      ArrayBuffer(new ArrayBuffer[Double]), 0xD1CEB00CD1CEB00CL ^ k.toLong)
+      Array(new Array[Double](InitialLevelCapacity)), new Array[Int](1), 0xD1CEB00CD1CEB00CL ^ k.toLong)
   }
 
   def deserialize(bytes: Array[Byte]): KllSketch = {
@@ -207,14 +253,10 @@ object KllSketch {
     val mx = buf.getDouble
     val coin = buf.getLong
     val numLevels = buf.getInt
-    val sizes = Array.fill(numLevels)(buf.getInt)
-    val levels = new ArrayBuffer[ArrayBuffer[Double]](numLevels)
-    sizes.foreach { s =>
-      val l = new ArrayBuffer[Double](s)
-      var i = 0
-      while (i < s) { l += buf.getDouble; i += 1 }
-      levels += l
-    }
-    new KllSketch(k, n, mn, mx, levels, coin)
+    val sizes = new Array[Int](numLevels)
+    buf.asIntBuffer().get(sizes)
+    val items = buf.position(buf.position() + 4 * numLevels).asDoubleBuffer()
+    val levels = sizes.map { s => val l = new Array[Double](s); items.get(l); l }
+    new KllSketch(k, n, mn, mx, levels, sizes, coin)
   }
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 import scala.collection.mutable.ArrayBuffer
 
 /** Relative Error Quantile (REQ) sketch — single-pass, bounded-memory,
@@ -198,34 +198,24 @@ final class ReqSketch private (
   def rankUpperBound(r: Double, numStdDev: Int): Double =
     ReqBounds.rankUB(k, numLevels, r, numStdDev, hra, totalN0)
 
-  /** Serialize to a compact little-endian-ish binary layout (SURVEY.md §2.2
-    * #56): header + per-level state. */
+  /** Serialize to a compact big-endian binary layout (SURVEY.md §2.2 #56):
+    * header + per-level state, each level's items sorted ascending. */
   def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeByte(SerVersion)
-    out.writeInt(k)
-    out.writeBoolean(hra)
-    out.writeLong(seed)
-    out.writeLong(totalN0)
-    out.writeDouble(minValue0)
-    out.writeDouble(maxValue0)
-    out.writeDouble(sumValue0)
-    out.writeInt(compactors.length)
+    var size = HeaderBytes
+    compactors.foreach(c => size += LevelHeaderBytes + 8 * c.buffer.count)
+    val buf = ByteBuffer.allocate(size)
+    buf.put(SerVersion.toByte).putInt(k).put(bool(hra)).putLong(seed).putLong(totalN0)
+      .putDouble(minValue0).putDouble(maxValue0).putDouble(sumValue0).putInt(compactors.length)
     compactors.foreach { c =>
-      out.writeByte(c.lgWeight)
-      out.writeLong(c.state)
-      out.writeDouble(c.sectionSizeFlt)
-      out.writeInt(c.sectionSize)
-      out.writeInt(c.numSections)
-      out.writeBoolean(c.coin)
+      buf.put(c.lgWeight).putLong(c.state).putDouble(c.sectionSizeFlt).putInt(c.sectionSize)
+        .putInt(c.numSections).put(bool(c.coin))
       c.buffer.sort()
-      val items = c.buffer.toArray
-      out.writeInt(items.length)
-      items.foreach(out.writeDouble)
+      val (arr, start, n) = c.buffer.active
+      buf.putInt(n)
+      buf.asDoubleBuffer().put(arr, start, n)
+      buf.position(buf.position() + 8 * n)
     }
-    out.flush()
-    bos.toByteArray
+    buf.array()
   }
 }
 
@@ -233,6 +223,10 @@ object ReqSketch {
   val SerVersion = 1
   val DefaultK = 12
   val DefaultSeed = 0x5EEDC0DEL
+  private val HeaderBytes = 1 + 4 + 1 + 8 + 8 + 8 + 8 + 8 + 4
+  private val LevelHeaderBytes = 1 + 8 + 8 + 4 + 4 + 1 + 4
+
+  private def bool(b: Boolean): Byte = if (b) 1 else 0
 
   def apply(k: Int = DefaultK, hra: Boolean = true, seed: Long = DefaultSeed): ReqSketch = {
     require(k >= 4 && k <= 1024 && k % 2 == 0, s"k must be even and in [4,1024], got $k")
@@ -243,30 +237,30 @@ object ReqSketch {
   }
 
   def deserialize(bytes: Array[Byte]): ReqSketch = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val ver = in.readByte()
+    val buf = ByteBuffer.wrap(bytes)
+    val ver = buf.get()
     require(ver == SerVersion, s"unknown ReqSketch serialization version $ver")
-    val k = in.readInt()
-    val hra = in.readBoolean()
-    val seed = in.readLong()
-    val totalN = in.readLong()
-    val minV = in.readDouble()
-    val maxV = in.readDouble()
-    val sumV = in.readDouble()
-    val nLevels = in.readInt()
+    val k = buf.getInt()
+    val hra = buf.get() != 0
+    val seed = buf.getLong()
+    val totalN = buf.getLong()
+    val minV = buf.getDouble()
+    val maxV = buf.getDouble()
+    val sumV = buf.getDouble()
+    val nLevels = buf.getInt()
     val comps = ArrayBuffer.empty[ReqCompactor]
     var h = 0
     while (h < nLevels) {
-      val lgW = in.readByte()
-      val state = in.readLong()
-      val ssf = in.readDouble()
-      val ss = in.readInt()
-      val ns = in.readInt()
-      val coin = in.readBoolean()
-      val n = in.readInt()
+      val lgW = buf.get()
+      val state = buf.getLong()
+      val ssf = buf.getDouble()
+      val ss = buf.getInt()
+      val ns = buf.getInt()
+      val coin = buf.get() != 0
+      val n = buf.getInt()
       val items = new Array[Double](n)
-      var i = 0
-      while (i < n) { items(i) = in.readDouble(); i += 1 }
+      buf.asDoubleBuffer().get(items)
+      buf.position(buf.position() + 8 * n)
       // rngState re-derived from (seed, lgWeight, state) — deterministic
       val rng = SplitMix64.mix(seed ^ (0x9E3779B97F4A7C15L * (lgW + 1)) ^ state)
       comps += ReqCompactor.restore(lgW, hra, seed, state, ssf, ss, ns, coin, items, rng)

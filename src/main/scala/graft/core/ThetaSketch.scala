@@ -1,7 +1,8 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
 import java.util.Arrays
+import org.apache.spark.unsafe.Platform
 
 /** Theta sketch for approximate distinct counting and set expressions
   * (union / intersection / a-not-b), the family capability named by the
@@ -19,6 +20,12 @@ import java.util.Arrays
   *
   * Mutable, single-threaded, mergeable — the same lifecycle contract as the
   * reference ReqSketch (zero / update / merge / query).
+  *
+  * The hash buffer starts at [[ThetaSketch.InitialCapacity]] and doubles up
+  * to 2x nominal, so a sketch costs memory in proportion to what it holds; a
+  * rebuild (sort, dedupe, theta jump) still fires only when a full 2x-nominal
+  * buffer fills, which keeps theta and the retained hashes independent of
+  * the buffer's growth.
   */
 final class ThetaSketch private (
     val nominalEntries: Int,
@@ -39,11 +46,22 @@ final class ThetaSketch private (
     val h = h0 & Long.MaxValue // use 63 bits, non-negative
     if (h >= theta) return
     // linear membership check is too slow; dedupe lazily at rebuild instead.
-    if (n == hashes.length) rebuild()
-    if (h >= theta) return
-    hashes(n) = h
-    n += 1
+    append(h)
   }
+
+  /** Buffer `h` (< theta), first growing the buffer or, once it is full at
+    * 2x nominal, rebuilding — which may lower theta past `h`. */
+  private def append(h: Long): Unit = {
+    if (n == hashes.length) {
+      if (hashes.length < 2 * nominalEntries) grow(2 * hashes.length)
+      else rebuild()
+    }
+    if (h < theta) { hashes(n) = h; n += 1 }
+  }
+
+  private def grow(capacity: Int): Unit =
+    if (capacity > hashes.length && hashes.length < 2 * nominalEntries)
+      hashes = Arrays.copyOf(hashes, math.min(capacity, 2 * nominalEntries))
 
   def update(v: Long): Unit = updateHash(hashLong(v))
   def update(s: String): Unit = updateHash(hashBytes(s.getBytes("UTF-8")))
@@ -94,13 +112,11 @@ final class ThetaSketch private (
       theta = other.theta
       // drop own entries now above the lowered theta (handled by rebuild)
     }
+    grow(n + other.n) // one copy instead of repeated doubling
     var i = 0
     while (i < other.n) {
       val h = other.hashes(i)
-      if (h < theta) {
-        if (n == hashes.length) rebuild()
-        if (h < theta) { hashes(n) = h; n += 1 }
-      }
+      if (h < theta) append(h)
       i += 1
     }
     rebuild()
@@ -109,39 +125,40 @@ final class ThetaSketch private (
 
   private[core] def sortedHashes: Array[Long] = { rebuild(); Arrays.copyOf(hashes, n) }
 
+  /** Length of the hash buffer (grows with what the sketch holds). */
+  private[core] def bufferCapacity: Int = hashes.length
+
+  /** Big-endian [version:1][nominal:4][theta:8][n:4][hashes:8*n]. */
   def serialize(): Array[Byte] = {
     rebuild()
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeByte(1) // version
-    out.writeInt(nominalEntries)
-    out.writeLong(theta)
-    out.writeInt(n)
-    var i = 0
-    while (i < n) { out.writeLong(hashes(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
+    val buf = ByteBuffer.allocate(HeaderBytes + 8 * n)
+    buf.put(1.toByte).putInt(nominalEntries).putLong(theta).putInt(n)
+    buf.asLongBuffer().put(hashes, 0, n)
+    buf.array()
   }
 }
 
 object ThetaSketch {
   val DefaultNominalEntries = 4096
+  /** Hash-buffer length of a fresh sketch; it doubles up to 2x nominal. */
+  val InitialCapacity = 16
+  private val HeaderBytes = 1 + 4 + 8 + 4
+  private val NativeBigEndian = java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.BIG_ENDIAN
 
   def apply(nominalEntries: Int = DefaultNominalEntries): ThetaSketch = {
     require(nominalEntries >= 16 && (nominalEntries & (nominalEntries - 1)) == 0,
       s"nominalEntries must be a power of 2 >= 16, got $nominalEntries")
-    new ThetaSketch(nominalEntries, Long.MaxValue, new Array[Long](2 * nominalEntries), 0)
+    new ThetaSketch(nominalEntries, Long.MaxValue, new Array[Long](InitialCapacity), 0)
   }
 
   def deserialize(bytes: Array[Byte]): ThetaSketch = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    require(in.readByte() == 1, "unknown ThetaSketch version")
-    val nom = in.readInt()
-    val theta = in.readLong()
-    val n = in.readInt()
-    val arr = new Array[Long](math.max(2 * nom, n))
-    var i = 0
-    while (i < n) { arr(i) = in.readLong(); i += 1 }
+    val buf = ByteBuffer.wrap(bytes)
+    require(buf.get() == 1, "unknown ThetaSketch version")
+    val nom = buf.getInt()
+    val theta = buf.getLong()
+    val n = buf.getInt()
+    val arr = new Array[Long](math.max(n, InitialCapacity))
+    buf.asLongBuffer().get(arr, 0, n)
     new ThetaSketch(nom, theta, arr, n)
   }
 
@@ -183,18 +200,22 @@ object ThetaSketch {
 
   /** Bytes → 64-bit hash (xxh64-inspired little mixer over 8-byte words —
     * deterministic, same on driver and executors). */
-  def hashBytes(b: Array[Byte]): Long = {
-    var h = 0x9E3779B97F4A7C15L ^ (b.length * 0xC2B2AE3D27D4EB4FL)
+  def hashBytes(b: Array[Byte]): Long = hashBytes(b, Platform.BYTE_ARRAY_OFFSET.toLong, b.length)
+
+  /** [[hashBytes]] over `len` bytes at `base`+`offset` in Spark's unsafe
+    * addressing — hashes a `UTF8String` in place, without copying it out.
+    * Each 8-byte word is read with one (unaligned, as Spark's own
+    * `UTF8String` code reads) load and taken big-endian. */
+  def hashBytes(base: AnyRef, offset: Long, len: Int): Long = {
+    var h = 0x9E3779B97F4A7C15L ^ (len * 0xC2B2AE3D27D4EB4FL)
     var i = 0
-    while (i + 8 <= b.length) {
-      var w = 0L
-      var j = 0
-      while (j < 8) { w = (w << 8) | (b(i + j) & 0xFFL); j += 1 }
-      h = SplitMix64.mix(h ^ w)
+    while (i + 8 <= len) {
+      val w = Platform.getLong(base, offset + i)
+      h = SplitMix64.mix(h ^ (if (NativeBigEndian) w else java.lang.Long.reverseBytes(w)))
       i += 8
     }
     var tail = 0L
-    while (i < b.length) { tail = (tail << 8) | (b(i) & 0xFFL); i += 1 }
+    while (i < len) { tail = (tail << 8) | (Platform.getByte(base, offset + i) & 0xFFL); i += 1 }
     SplitMix64.mix(h ^ tail)
   }
 }

@@ -18,6 +18,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * `RelativeErrorQuantile.hs:428-476`). `eval` emits the serialized sketch
   * (BinaryType) so results can be stored, re-read, and re-merged across
   * jobs — the sketch-column workflow the north rule's metrics table needs.
+  *
+  * Cost model. `ObjectHashAggregateExec` keeps one buffer per group in a
+  * hash map only up to `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
+  * (128) groups per task; above that it falls back to sort-based
+  * aggregation, which creates a fresh buffer for every group it meets and
+  * serializes and deserializes every partial buffer again. At thousands of
+  * groups `createAggregationBuffer` and `deserialize` therefore run about
+  * once per input group per task, so both must cost O(retained), not
+  * O(capacity). Theta and CMS are the cases that matter: `ThetaSketch`
+  * grows its hash buffer with what it holds instead of allocating 2 x 4096
+  * hashes per buffer, and the fixed 5 x 1024 CMS table crosses serde as one
+  * bulk copy. Every sketch moves its arrays through bulk `ByteBuffer` or
+  * `System.arraycopy` copies, never element by element through a stream.
   */
 abstract class BinarySketchAgg[S] extends TypedImperativeAggregate[S] {
   def child: Expression
@@ -117,7 +130,7 @@ private[spark] object SketchInput {
   def hashOf(v: Any): Long = v match {
     case l: Long        => ThetaSketch.hashLong(l)
     case i: Int         => ThetaSketch.hashLong(i.toLong)
-    case s: UTF8String  => ThetaSketch.hashBytes(s.getBytes)
+    case s: UTF8String  => hashUtf8(s)
     case b: Array[Byte] => ThetaSketch.hashBytes(b)
     case d: Double      => ThetaSketch.hashLong(java.lang.Double.doubleToLongBits(d + 0.0))
     case f: Float       => ThetaSketch.hashLong(java.lang.Double.doubleToLongBits(f.toDouble + 0.0))
@@ -125,6 +138,9 @@ private[spark] object SketchInput {
     case b: Byte        => ThetaSketch.hashLong(b.toLong)
     case other => throw new IllegalArgumentException(s"unsupported sketch input: ${other.getClass}")
   }
+
+  /** `ThetaSketch.hashBytes` of the string's UTF-8 bytes, read in place. */
+  def hashUtf8(s: UTF8String): Long = ThetaSketch.hashBytes(s.getBaseObject, s.getBaseOffset, s.numBytes)
 
 }
 
@@ -293,7 +309,7 @@ case class CmsSketchAgg(
   override def update(buf: CmsSketch, input: InternalRow): CmsSketch = {
     val v = child.eval(input)
     if (v != null)
-      buf.updateHash(ThetaSketch.hashBytes(v.asInstanceOf[UTF8String].getBytes), 1L)
+      buf.updateHash(SketchInput.hashUtf8(v.asInstanceOf[UTF8String]), 1L)
     buf
   }
   override def merge(buf: CmsSketch, other: CmsSketch): CmsSketch = buf.merge(other)

@@ -170,6 +170,15 @@ class SketchAggSpec extends AnyFunSuite with SparkSuiteBase {
     assert(nullRow.isNullAt(1))
   }
 
+  test("string inputs hash in place, equal to hashing their UTF-8 bytes") {
+    val backing = "row-buffer: naïve café 日本語 tail".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    for (off <- Seq(0, 3, 12); len <- Seq(0, 1, 8, 17)) {
+      val u = org.apache.spark.unsafe.types.UTF8String.fromBytes(backing, off, len)
+      assert(SketchInput.hashOf(u) == ThetaSketch.hashBytes(u.getBytes), s"off=$off len=$len")
+      assert(SketchInput.hashUtf8(u) == ThetaSketch.hashBytes(java.util.Arrays.copyOfRange(backing, off, off + len)))
+    }
+  }
+
   test("sketch aggregates run under ObjectHashAggregate (plan check)") {
     import spark.implicits._
     GraftFunctions.register(spark)
