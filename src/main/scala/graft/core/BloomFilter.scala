@@ -30,7 +30,7 @@ final class BloomFilter private (
     val numHashes: Int,
     private val words: Array[Long],
     private var _itemsAdded: Long
-) extends MembershipFilter with Serializable {
+) extends MembershipFilter with Mergeable[BloomFilter] with Serializable {
 
   /** Count of update() calls absorbed (not distinct keys) — sizing telemetry. */
   def itemsAdded: Long = _itemsAdded
@@ -102,7 +102,7 @@ trait MembershipFilter {
   def mightContain(key: Long): Boolean
 }
 
-object BloomFilter {
+object BloomFilter extends SketchFormat[BloomFilter] {
   private[core] val SeedA = 0x71ee2a3173c6bb17L
   private[core] val SeedB = 0x2545f4914f6cdd1dL
   private val HeaderBytes = 1 + 8 + 4 + 8

@@ -33,7 +33,7 @@ final class CmsSketch private (
     val width: Int,
     private val table: Array[Long], // row-major depth x width
     private var _streamWeight: Long
-) extends Serializable {
+) extends Mergeable[CmsSketch] with Serializable {
 
   def streamWeight: Long = _streamWeight
 
@@ -115,7 +115,7 @@ final class CmsSketch private (
   }
 }
 
-object CmsSketch {
+object CmsSketch extends SketchFormat[CmsSketch] {
   val DefaultDepth = 5
   val DefaultWidth = 1024
   private val HeaderBytes = 1 + 4 + 4 + 8

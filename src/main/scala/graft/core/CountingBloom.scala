@@ -45,7 +45,7 @@ final class CountingBloomFilter private (
     val numHashes: Int,
     private val cells: Array[Byte],
     private var _itemsAdded: Long
-) extends MembershipFilter with Serializable {
+) extends MembershipFilter with Mergeable[CountingBloomFilter] with Serializable {
 
   /** Net update() count: inserts minus removes (subtract subtracts) —
     * sizing/retirement telemetry, deterministic. */
@@ -208,7 +208,7 @@ final class CountingBloomFilter private (
   }
 }
 
-object CountingBloomFilter {
+object CountingBloomFilter extends SketchFormat[CountingBloomFilter] {
   private val HeaderBytes = 1 + 8 + 4 + 8
 
   /** Same optimal sizing as the bitset filter (cells play the role of

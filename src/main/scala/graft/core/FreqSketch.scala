@@ -36,7 +36,7 @@ final class FreqSketch private (
     private val counts: mutable.HashMap[String, Long],
     private var _offset: Long,
     private var _streamWeight: Long
-) extends Serializable {
+) extends Mergeable[FreqSketch] with Serializable {
 
   /** Cumulative purge depth: the deterministic +/- error of every estimate. */
   def maxError: Long = _offset
@@ -140,7 +140,7 @@ final class FreqSketch private (
 /** One frequent-item row: estimate with its deterministic bounds. */
 final case class FreqItem(item: String, est: Long, lb: Long, ub: Long)
 
-object FreqSketch {
+object FreqSketch extends SketchFormat[FreqSketch] {
   val DefaultMaxMapSize = 256
 
   def apply(maxMapSize: Int = DefaultMaxMapSize): FreqSketch = {

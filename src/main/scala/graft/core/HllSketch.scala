@@ -15,7 +15,7 @@ package graft.core
   * (a) sketch *columns* that are stored, re-merged and post-aggregated
   * across jobs, and (b) lgK parity with reference-style configs.
   */
-final class HllSketch private (val lgK: Int, private val registers: Array[Byte]) extends Serializable {
+final class HllSketch private (val lgK: Int, private val registers: Array[Byte]) extends Mergeable[HllSketch] with Serializable {
   import HllSketch._
 
   private val m: Int = 1 << lgK
@@ -71,7 +71,7 @@ final class HllSketch private (val lgK: Int, private val registers: Array[Byte])
   }
 }
 
-object HllSketch {
+object HllSketch extends SketchFormat[HllSketch] {
   val DefaultLgK = 12
 
   def apply(lgK: Int = DefaultLgK): HllSketch = {

@@ -29,7 +29,7 @@ final class KllSketch private (
     private var levels: Array[Array[Double]],
     private var sizes: Array[Int],
     var coinState: Long
-) extends Serializable {
+) extends Mergeable[KllSketch] with Serializable {
 
   import KllSketch._
 
@@ -211,7 +211,7 @@ final class KllSketch private (
   }
 }
 
-object KllSketch {
+object KllSketch extends SketchFormat[KllSketch] {
   val DefaultK = 200
   val MinLevelCap = 8
   val SerVersion = 1

@@ -34,7 +34,7 @@ final class ReqSketch private (
     private var retainedItems0: Int,
     private var maxNominalCapacity0: Int,
     private val compactors: ArrayBuffer[ReqCompactor]
-) extends Serializable {
+) extends Mergeable[ReqSketch] with Serializable {
   import ReqSketch._
 
   private var aux: ReqAuxiliary = null
@@ -219,7 +219,7 @@ final class ReqSketch private (
   }
 }
 
-object ReqSketch {
+object ReqSketch extends SketchFormat[ReqSketch] {
   val SerVersion = 1
   val DefaultK = 12
   val DefaultSeed = 0x5EEDC0DEL

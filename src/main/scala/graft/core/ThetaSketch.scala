@@ -32,7 +32,7 @@ final class ThetaSketch private (
     private var theta: Long,            // exclusive upper bound, in [1, Long.MaxValue]
     private var hashes: Array[Long],    // unsorted buffer of retained hashes < theta
     private var n: Int                  // number of valid entries in `hashes`
-) extends Serializable {
+) extends Mergeable[ThetaSketch] with Serializable {
   import ThetaSketch._
 
   def retained: Int = n
@@ -138,7 +138,7 @@ final class ThetaSketch private (
   }
 }
 
-object ThetaSketch {
+object ThetaSketch extends SketchFormat[ThetaSketch] {
   val DefaultNominalEntries = 4096
   /** Hash-buffer length of a fresh sketch; it doubles up to 2x nominal. */
   val InitialCapacity = 16

@@ -25,50 +25,45 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
   */
 object GraftFunctions {
 
-  /** Column-API helpers (typed alternative to expr("req_sketch(x)")). */
+  /** Column-API helpers (typed alternative to expr("req_sketch(x)")): each
+    * calls the SQL builder of the same name with literal parameters. */
   def req_sketch(col: Column, k: Int = ReqSketch.DefaultK, hra: Boolean = true): Column =
-    GraftBridge.column(ReqSketchAgg(Cast(GraftBridge.expression(col), DoubleType), k, hra)
-      .toAggregateExpression())
-  def req_merge(col: Column): Column =
-    GraftBridge.column(ReqMergeAgg(GraftBridge.expression(col)).toAggregateExpression())
+    aggregate("req_sketch", col, k, hra)
+  def req_merge(col: Column): Column = aggregate("req_merge", col)
   def theta_sketch(col: Column, nominalEntries: Int = ThetaSketch.DefaultNominalEntries): Column =
-    GraftBridge.column(ThetaSketchAgg(GraftBridge.expression(col), nominalEntries)
-      .toAggregateExpression())
-  def theta_union(col: Column): Column =
-    GraftBridge.column(ThetaUnionAgg(GraftBridge.expression(col)).toAggregateExpression())
+    aggregate("theta_sketch", col, nominalEntries)
+  def theta_union(col: Column): Column = aggregate("theta_union", col)
   def hll_sketch(col: Column, lgK: Int = HllSketch.DefaultLgK): Column =
-    GraftBridge.column(HllSketchAgg(GraftBridge.expression(col), lgK).toAggregateExpression())
-  def hll_union(col: Column): Column =
-    GraftBridge.column(HllUnionAgg(GraftBridge.expression(col)).toAggregateExpression())
+    aggregate("hll_sketch", col, lgK)
+  def hll_union(col: Column): Column = aggregate("hll_union", col)
   def kll_sketch(col: Column, k: Int = KllSketch.DefaultK): Column =
-    GraftBridge.column(KllSketchAgg(Cast(GraftBridge.expression(col), DoubleType), k)
-      .toAggregateExpression())
+    aggregate("kll_sketch", col, k)
   def freq_sketch(col: Column, maxMapSize: Int = FreqSketch.DefaultMaxMapSize): Column =
-    GraftBridge.column(FreqSketchAgg(Cast(GraftBridge.expression(col), StringType), maxMapSize)
-      .toAggregateExpression())
-  def freq_merge(col: Column): Column =
-    GraftBridge.column(FreqMergeAgg(GraftBridge.expression(col)).toAggregateExpression())
+    aggregate("freq_sketch", col, maxMapSize)
+  def freq_merge(col: Column): Column = aggregate("freq_merge", col)
   def cms_sketch(col: Column, depth: Int = CmsSketch.DefaultDepth,
                  width: Int = CmsSketch.DefaultWidth): Column =
-    GraftBridge.column(CmsSketchAgg(Cast(GraftBridge.expression(col), StringType), depth, width)
-      .toAggregateExpression())
-  def cms_merge(col: Column): Column =
-    GraftBridge.column(CmsMergeAgg(GraftBridge.expression(col)).toAggregateExpression())
+    aggregate("cms_sketch", col, depth, width)
+  def cms_merge(col: Column): Column = aggregate("cms_merge", col)
   def bloom_agg(col: Column, expectedItems: Long, fpp: Double = 0.01): Column =
-    GraftBridge.column(BloomAgg(Cast(GraftBridge.expression(col), LongType), expectedItems, fpp)
-      .toAggregateExpression())
-  def bloom_merge(col: Column): Column =
-    GraftBridge.column(BloomMergeAgg(GraftBridge.expression(col)).toAggregateExpression())
+    aggregate("bloom_agg", col, expectedItems, fpp)
+  def bloom_merge(col: Column): Column = aggregate("bloom_merge", col)
   def cbloom_agg(col: Column, expectedItems: Long, fpp: Double = 0.01): Column =
-    GraftBridge.column(CBloomAgg.sized(Cast(GraftBridge.expression(col), LongType), expectedItems, fpp)
-      .toAggregateExpression())
+    aggregate("cbloom_agg", col, expectedItems, fpp)
   /** Geometry-explicit counting-filter build — for retirement filters that
-    * must share the persisted filter's exact cell layout. */
+    * must share the persisted filter's exact cell layout. It has no SQL
+    * name, so it is the one helper that constructs its aggregate itself. */
   def cbloom_agg_config(col: Column, numCells: Long, numHashes: Int): Column =
     GraftBridge.column(CBloomAgg(Cast(GraftBridge.expression(col), LongType), numCells, numHashes)
       .toAggregateExpression())
-  def cbloom_merge(col: Column): Column =
-    GraftBridge.column(CBloomMergeAgg(GraftBridge.expression(col)).toAggregateExpression())
+  def cbloom_merge(col: Column): Column = aggregate("cbloom_merge", col)
+
+  private lazy val aggregatesByName = aggregateBuilders.toMap
+  private def aggregate(name: String, col: Column, params: Any*): Column =
+    GraftBridge.column(aggregatesByName(name)(GraftBridge.expression(col) +: params.map(Literal(_))))
+
+  private def arity(name: String, expected: String, args: Seq[Expression]): Nothing =
+    throw new IllegalArgumentException(s"$name expects $expected, got ${args.length}")
 
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
@@ -97,7 +92,7 @@ object GraftFunctions {
   private[spark] val expressionBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_sim" -> {
       case Seq(a, b) => CosineSimilarity(Cast(a, ArrayType(DoubleType)), Cast(b, ArrayType(DoubleType)))
-      case args => throw new IllegalArgumentException(s"cosine_sim expects 2 args, got ${args.length}")
+      case args => arity("cosine_sim", "2 args", args)
     },
     // pipeline text-scan kernels as native expressions (not ScalaUDFs):
     // these two dominate the dedup pipeline's per-row CPU, and the UDF
@@ -105,90 +100,77 @@ object GraftFunctions {
     // serializer) was its largest non-kernel cost — r4 judge item #3
     "extract_text" -> {
       case Seq(h) => ExtractText(h)
-      case args => throw new IllegalArgumentException(s"extract_text expects 1 arg, got ${args.length}")
+      case args => arity("extract_text", "1 arg", args)
     },
     "doc_features" -> {
       case Seq(t) => DocFeaturesExpr(t)
-      case args => throw new IllegalArgumentException(s"doc_features expects 1 arg, got ${args.length}")
+      case args => arity("doc_features", "1 arg", args)
     },
     "minhash_bands" -> {
       case Seq(t) => MinHashBands(t)
-      case args => throw new IllegalArgumentException(s"minhash_bands expects 1 arg, got ${args.length}")
+      case args => arity("minhash_bands", "1 arg", args)
     })
 
-  /** Every aggregate, name -> SQL expression builder (shared by register()
-    * and GraftExtensions). */
+  /** Every aggregate, name -> SQL expression builder (shared by register(),
+    * GraftExtensions and the Column-API helpers). */
   private[spark] val aggregateBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "req_sketch" -> {
       case Seq(c)        => ReqSketchAgg(Cast(c, DoubleType)).toAggregateExpression()
       case Seq(c, k)     => ReqSketchAgg(Cast(c, DoubleType), intLit(k, "k")).toAggregateExpression()
       case Seq(c, k, h)  => ReqSketchAgg(Cast(c, DoubleType), intLit(k, "k"), boolLit(h, "hra")).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"req_sketch expects 1-3 args, got ${args.length}")
-    },
-    "req_merge" -> {
-      case Seq(c) => ReqMergeAgg(c).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"req_merge expects 1 arg, got ${args.length}")
+      case args => arity("req_sketch", "1-3 args", args)
     },
     "kll_sketch" -> {
       case Seq(c)    => KllSketchAgg(Cast(c, DoubleType)).toAggregateExpression()
       case Seq(c, k) => KllSketchAgg(Cast(c, DoubleType), intLit(k, "k")).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"kll_sketch expects 1-2 args, got ${args.length}")
+      case args => arity("kll_sketch", "1-2 args", args)
     },
     "theta_sketch" -> {
       case Seq(c)    => ThetaSketchAgg(c).toAggregateExpression()
       case Seq(c, k) => ThetaSketchAgg(c, intLit(k, "nominalEntries")).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"theta_sketch expects 1-2 args, got ${args.length}")
-    },
-    "theta_union" -> {
-      case Seq(c) => ThetaUnionAgg(c).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"theta_union expects 1 arg, got ${args.length}")
+      case args => arity("theta_sketch", "1-2 args", args)
     },
     "hll_sketch" -> {
       case Seq(c)    => HllSketchAgg(c).toAggregateExpression()
       case Seq(c, k) => HllSketchAgg(c, intLit(k, "lgK")).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"hll_sketch expects 1-2 args, got ${args.length}")
-    },
-    "hll_union" -> {
-      case Seq(c) => HllUnionAgg(c).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"hll_union expects 1 arg, got ${args.length}")
+      case args => arity("hll_sketch", "1-2 args", args)
     },
     "freq_sketch" -> {
       case Seq(c)    => FreqSketchAgg(Cast(c, StringType)).toAggregateExpression()
       case Seq(c, m) => FreqSketchAgg(Cast(c, StringType), intLit(m, "maxMapSize")).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"freq_sketch expects 1-2 args, got ${args.length}")
-    },
-    "freq_merge" -> {
-      case Seq(c) => FreqMergeAgg(c).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"freq_merge expects 1 arg, got ${args.length}")
+      case args => arity("freq_sketch", "1-2 args", args)
     },
     "cms_sketch" -> {
       case Seq(c)       => CmsSketchAgg(Cast(c, StringType)).toAggregateExpression()
       case Seq(c, d)    => CmsSketchAgg(Cast(c, StringType), intLit(d, "depth")).toAggregateExpression()
       case Seq(c, d, w) => CmsSketchAgg(Cast(c, StringType), intLit(d, "depth"), intLit(w, "width")).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"cms_sketch expects 1-3 args, got ${args.length}")
-    },
-    "cms_merge" -> {
-      case Seq(c) => CmsMergeAgg(c).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"cms_merge expects 1 arg, got ${args.length}")
+      case args => arity("cms_sketch", "1-3 args", args)
     },
     "bloom_agg" -> {
       case Seq(c, n)    => BloomAgg(Cast(c, LongType), longLit(n, "expectedItems"), 0.01).toAggregateExpression()
       case Seq(c, n, p) => BloomAgg(Cast(c, LongType), longLit(n, "expectedItems"), doubleLit(p, "fpp")).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"bloom_agg expects 2-3 args, got ${args.length}")
-    },
-    "bloom_merge" -> {
-      case Seq(c) => BloomMergeAgg(c).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"bloom_merge expects 1 arg, got ${args.length}")
+      case args => arity("bloom_agg", "2-3 args", args)
     },
     "cbloom_agg" -> {
       case Seq(c, n)    => CBloomAgg.sized(Cast(c, LongType), longLit(n, "expectedItems"), 0.01).toAggregateExpression()
       case Seq(c, n, p) => CBloomAgg.sized(Cast(c, LongType), longLit(n, "expectedItems"), doubleLit(p, "fpp")).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"cbloom_agg expects 2-3 args, got ${args.length}")
+      case args => arity("cbloom_agg", "2-3 args", args)
     },
-    "cbloom_merge" -> {
-      case Seq(c) => CBloomMergeAgg(c).toAggregateExpression()
-      case args => throw new IllegalArgumentException(s"cbloom_merge expects 1 arg, got ${args.length}")
-    })
+    mergeBuilder("req_merge", ReqSketch),
+    mergeBuilder("theta_union", ThetaSketch),
+    mergeBuilder("hll_union", HllSketch),
+    mergeBuilder("freq_merge", FreqSketch),
+    mergeBuilder("cms_merge", CmsSketch),
+    mergeBuilder("bloom_merge", BloomFilter),
+    mergeBuilder("cbloom_merge", CountingBloomFilter))
+
+  /** `name(sketch_col)` re-merges stored sketches of `format`'s family. */
+  private def mergeBuilder[S <: Mergeable[S]](name: String, format: SketchFormat[S])
+      : (String, Seq[Expression] => Expression) =
+    name -> {
+      case Seq(c) => SketchMergeAgg(c, name, format).toAggregateExpression()
+      case args => arity(name, "1 arg", args)
+    }
 
   /** Every scalar finisher / text kernel, name -> compiled UDF (shared by
     * register() and GraftExtensions).

@@ -19,6 +19,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * (BinaryType) so results can be stored, re-read, and re-merged across
   * jobs — the sketch-column workflow the north rule's metrics table needs.
   *
+  * `merge`, `eval` and the shuffle serde are defined here once, over the
+  * family's [[Mergeable]] sketch and its [[SketchFormat]]. A build aggregate
+  * adds its config, its empty buffer and its own per-row `update`, kept in
+  * each class so the per-row call stays monomorphic.
+  *
   * Cost model. `ObjectHashAggregateExec` keeps one buffer per group in a
   * hash map only up to `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
   * (128) groups per task; above that it falls back to sort-based
@@ -32,11 +37,57 @@ import org.apache.spark.unsafe.types.UTF8String
   * bulk copy. Every sketch moves its arrays through bulk `ByteBuffer` or
   * `System.arraycopy` copies, never element by element through a stream.
   */
-abstract class BinarySketchAgg[S] extends TypedImperativeAggregate[S] {
+abstract class BinarySketchAgg[S <: Mergeable[S]](format: SketchFormat[S])
+    extends TypedImperativeAggregate[S] with Serializable { // ships `format` with the plan
   def child: Expression
   override def children: Seq[Expression] = child :: Nil
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
+
+  // A null buffer exists only under SketchMergeAgg (its empty-group policy);
+  // build aggregates always start from a real sketch and never take it.
+  override def merge(buf: S, other: S): S =
+    if (buf == null) other else if (other == null) buf else buf.merge(other)
+  override def eval(buf: S): Any = if (buf == null) null else buf.serialize()
+  override def serialize(buf: S): Array[Byte] =
+    if (buf == null) Array.emptyByteArray else buf.serialize()
+  override def deserialize(bytes: Array[Byte]): S =
+    if (bytes.isEmpty) null.asInstanceOf[S] else format.deserialize(bytes)
+}
+
+/** Re-merge a column of stored sketches of one family: `req_merge`,
+  * `theta_union`, `hll_union`, `freq_merge`, `cms_merge`, `bloom_merge` and
+  * `cbloom_merge` are this aggregate over their family's [[SketchFormat]].
+  *
+  * Empty-group policy. The buffer starts as null and stays null until a
+  * non-null input arrives; a null partial shuffles as zero bytes, zero
+  * bytes read back as null, and an all-null or empty group evaluates to
+  * SQL NULL. There is no placeholder sketch, because a placeholder carries
+  * a config of its own: a later merge with the real sketches then either
+  * fails their same-config check (HLL lgK, REQ accuracy, filter geometry)
+  * or silently takes the placeholder's config (Theta nominal entries). So
+  * the result does not depend on how many empty partitions the input has,
+  * and a stored NULL re-merges with real sketches. */
+case class SketchMergeAgg[S <: Mergeable[S]](
+    child: Expression,
+    name: String,
+    format: SketchFormat[S],
+    override val mutableAggBufferOffset: Int = 0,
+    override val inputAggBufferOffset: Int = 0
+) extends BinarySketchAgg[S](format) {
+
+  override def prettyName: String = name
+  override def nullable: Boolean = true
+  override def createAggregationBuffer(): S = null.asInstanceOf[S]
+
+  override def update(buf: S, input: InternalRow): S = {
+    val v = child.eval(input)
+    if (v == null) buf else merge(buf, format.deserialize(v.asInstanceOf[Array[Byte]]))
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): SketchMergeAgg[S] = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): SketchMergeAgg[S] = copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): SketchMergeAgg[S] = copy(child = c.head)
 }
 
 /** `req_sketch(col[, k[, hra]])` — REQ quantile sketch over a double column. */
@@ -46,7 +97,7 @@ case class ReqSketchAgg(
     hra: Boolean = true,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[ReqSketch] {
+) extends BinarySketchAgg[ReqSketch](ReqSketch) {
 
   override def prettyName: String = "req_sketch"
 
@@ -58,45 +109,9 @@ case class ReqSketchAgg(
     buf
   }
 
-  override def merge(buf: ReqSketch, other: ReqSketch): ReqSketch = buf.merge(other)
-  override def eval(buf: ReqSketch): Any = buf.serialize()
-  override def serialize(buf: ReqSketch): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): ReqSketch = ReqSketch.deserialize(bytes)
-
   override def withNewMutableAggBufferOffset(o: Int): ReqSketchAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): ReqSketchAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): ReqSketchAgg = copy(child = c.head)
-}
-
-/** Re-merge stored REQ sketches: `req_merge(sketch_col)`. */
-case class ReqMergeAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[ReqSketch] {
-
-  override def prettyName: String = "req_merge"
-  override def createAggregationBuffer(): ReqSketch = null.asInstanceOf[ReqSketch]
-
-  override def update(buf: ReqSketch, input: InternalRow): ReqSketch = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val other = ReqSketch.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) other else buf.merge(other)
-    }
-  }
-  override def merge(buf: ReqSketch, other: ReqSketch): ReqSketch =
-    if (buf == null) other else if (other == null) buf else buf.merge(other)
-  override def eval(buf: ReqSketch): Any =
-    (if (buf == null) ReqSketch() else buf).serialize()
-  override def serialize(buf: ReqSketch): Array[Byte] =
-    (if (buf == null) ReqSketch() else buf).serialize()
-  override def deserialize(bytes: Array[Byte]): ReqSketch = ReqSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): ReqMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ReqMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): ReqMergeAgg = copy(child = c.head)
 }
 
 /** `kll_sketch(col[, k])` — KLL quantile sketch (uniform eps) over doubles. */
@@ -105,7 +120,7 @@ case class KllSketchAgg(
     k: Int = KllSketch.DefaultK,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[KllSketch] {
+) extends BinarySketchAgg[KllSketch](KllSketch) {
 
   override def prettyName: String = "kll_sketch"
   override def createAggregationBuffer(): KllSketch = KllSketch(k)
@@ -115,10 +130,6 @@ case class KllSketchAgg(
     if (v != null) buf.update(v.asInstanceOf[Double])
     buf
   }
-  override def merge(buf: KllSketch, other: KllSketch): KllSketch = buf.merge(other)
-  override def eval(buf: KllSketch): Any = buf.serialize()
-  override def serialize(buf: KllSketch): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): KllSketch = KllSketch.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): KllSketchAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): KllSketchAgg = copy(inputAggBufferOffset = o)
@@ -151,7 +162,7 @@ case class ThetaSketchAgg(
     nominalEntries: Int = ThetaSketch.DefaultNominalEntries,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[ThetaSketch] {
+) extends BinarySketchAgg[ThetaSketch](ThetaSketch) {
 
   override def prettyName: String = "theta_sketch"
   override def createAggregationBuffer(): ThetaSketch = ThetaSketch(nominalEntries)
@@ -161,45 +172,10 @@ case class ThetaSketchAgg(
     if (v != null) buf.updateHash(SketchInput.hashOf(v))
     buf
   }
-  override def merge(buf: ThetaSketch, other: ThetaSketch): ThetaSketch = buf.merge(other)
-  override def eval(buf: ThetaSketch): Any = buf.serialize()
-  override def serialize(buf: ThetaSketch): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): ThetaSketch = ThetaSketch.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): ThetaSketchAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): ThetaSketchAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): ThetaSketchAgg = copy(child = c.head)
-}
-
-/** Union of stored theta sketches: `theta_union(sketch_col)`. */
-case class ThetaUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[ThetaSketch] {
-
-  override def prettyName: String = "theta_union"
-  override def createAggregationBuffer(): ThetaSketch = null.asInstanceOf[ThetaSketch]
-
-  override def update(buf: ThetaSketch, input: InternalRow): ThetaSketch = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val other = ThetaSketch.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) other else buf.merge(other)
-    }
-  }
-  override def merge(buf: ThetaSketch, other: ThetaSketch): ThetaSketch =
-    if (buf == null) other else if (other == null) buf else buf.merge(other)
-  override def eval(buf: ThetaSketch): Any =
-    (if (buf == null) ThetaSketch() else buf).serialize()
-  override def serialize(buf: ThetaSketch): Array[Byte] =
-    (if (buf == null) ThetaSketch() else buf).serialize()
-  override def deserialize(bytes: Array[Byte]): ThetaSketch = ThetaSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): ThetaUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ThetaUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): ThetaUnionAgg = copy(child = c.head)
 }
 
 /** `hll_sketch(col[, lgK])` — HyperLogLog distinct-count sketch. */
@@ -208,7 +184,7 @@ case class HllSketchAgg(
     lgK: Int = HllSketch.DefaultLgK,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[HllSketch] {
+) extends BinarySketchAgg[HllSketch](HllSketch) {
 
   override def prettyName: String = "hll_sketch"
   override def createAggregationBuffer(): HllSketch = HllSketch(lgK)
@@ -218,10 +194,6 @@ case class HllSketchAgg(
     if (v != null) buf.updateHash(SketchInput.hashOf(v))
     buf
   }
-  override def merge(buf: HllSketch, other: HllSketch): HllSketch = buf.merge(other)
-  override def eval(buf: HllSketch): Any = buf.serialize()
-  override def serialize(buf: HllSketch): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): HllSketch = HllSketch.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): HllSketchAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): HllSketchAgg = copy(inputAggBufferOffset = o)
@@ -237,7 +209,7 @@ case class FreqSketchAgg(
     maxMapSize: Int = FreqSketch.DefaultMaxMapSize,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[FreqSketch] {
+) extends BinarySketchAgg[FreqSketch](FreqSketch) {
 
   override def prettyName: String = "freq_sketch"
   override def createAggregationBuffer(): FreqSketch = FreqSketch(maxMapSize)
@@ -247,48 +219,10 @@ case class FreqSketchAgg(
     if (v != null) buf.update(v.asInstanceOf[UTF8String].toString)
     buf
   }
-  override def merge(buf: FreqSketch, other: FreqSketch): FreqSketch = buf.merge(other)
-  override def eval(buf: FreqSketch): Any = buf.serialize()
-  override def serialize(buf: FreqSketch): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): FreqSketch = FreqSketch.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): FreqSketchAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): FreqSketchAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): FreqSketchAgg = copy(child = c.head)
-}
-
-/** Re-merge stored frequent-items sketches: `freq_merge(sketch_col)`. */
-case class FreqMergeAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[FreqSketch] {
-
-  override def prettyName: String = "freq_merge"
-  override def createAggregationBuffer(): FreqSketch = null.asInstanceOf[FreqSketch]
-
-  override def update(buf: FreqSketch, input: InternalRow): FreqSketch = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val other = FreqSketch.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) other else buf.merge(other)
-    }
-  }
-  override def merge(buf: FreqSketch, other: FreqSketch): FreqSketch =
-    if (buf == null) other else if (other == null) buf else buf.merge(other)
-  override def eval(buf: FreqSketch): Any =
-    (if (buf == null) FreqSketch() else buf).serialize()
-  // empty-partition buffers shuffle as zero bytes — a default-capacity
-  // placeholder sketch would poison the merge's same-maxMapSize require
-  override def serialize(buf: FreqSketch): Array[Byte] =
-    if (buf == null) Array.emptyByteArray else buf.serialize()
-  override def deserialize(bytes: Array[Byte]): FreqSketch =
-    if (bytes.isEmpty) null.asInstanceOf[FreqSketch] else FreqSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): FreqMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): FreqMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): FreqMergeAgg = copy(child = c.head)
 }
 
 /** `cms_sketch(col[, depth[, width]])` — Count-Min frequency sketch over a
@@ -301,7 +235,7 @@ case class CmsSketchAgg(
     width: Int = CmsSketch.DefaultWidth,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[CmsSketch] {
+) extends BinarySketchAgg[CmsSketch](CmsSketch) {
 
   override def prettyName: String = "cms_sketch"
   override def createAggregationBuffer(): CmsSketch = CmsSketch(depth, width)
@@ -312,51 +246,10 @@ case class CmsSketchAgg(
       buf.updateHash(SketchInput.hashUtf8(v.asInstanceOf[UTF8String]), 1L)
     buf
   }
-  override def merge(buf: CmsSketch, other: CmsSketch): CmsSketch = buf.merge(other)
-  override def eval(buf: CmsSketch): Any = buf.serialize()
-  override def serialize(buf: CmsSketch): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): CmsSketch = CmsSketch.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): CmsSketchAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): CmsSketchAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CmsSketchAgg = copy(child = c.head)
-}
-
-/** Counter-wise union of stored CMS sketches: `cms_merge(sketch_col)` —
-  * linearity makes this the exact sum of the inputs' streams. */
-case class CmsMergeAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[CmsSketch] {
-
-  override def prettyName: String = "cms_merge"
-  // all-null/empty groups eval to NULL (no honest config to emit) — same
-  // convention as BloomMergeAgg: a placeholder table would poison later
-  // merges with its mismatched dims
-  override def nullable: Boolean = true
-  override def createAggregationBuffer(): CmsSketch = null.asInstanceOf[CmsSketch]
-
-  override def update(buf: CmsSketch, input: InternalRow): CmsSketch = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val other = CmsSketch.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) other else buf.merge(other)
-    }
-  }
-  override def merge(buf: CmsSketch, other: CmsSketch): CmsSketch =
-    if (buf == null) other else if (other == null) buf else buf.merge(other)
-  override def eval(buf: CmsSketch): Any =
-    if (buf == null) null else buf.serialize()
-  override def serialize(buf: CmsSketch): Array[Byte] =
-    if (buf == null) Array.emptyByteArray else buf.serialize()
-  override def deserialize(bytes: Array[Byte]): CmsSketch =
-    if (bytes.isEmpty) null.asInstanceOf[CmsSketch] else CmsSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): CmsMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CmsMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CmsMergeAgg = copy(child = c.head)
 }
 
 /** `bloom_agg(longCol, expectedItems, fpp)` — mergeable Bloom membership
@@ -369,7 +262,7 @@ case class BloomAgg(
     fpp: Double,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[BloomFilter] {
+) extends BinarySketchAgg[BloomFilter](BloomFilter) {
 
   override def prettyName: String = "bloom_agg"
   override def createAggregationBuffer(): BloomFilter = BloomFilter(expectedItems, fpp)
@@ -379,86 +272,10 @@ case class BloomAgg(
     if (v != null) buf.update(v.asInstanceOf[Long])
     buf
   }
-  override def merge(buf: BloomFilter, other: BloomFilter): BloomFilter = buf.merge(other)
-  override def eval(buf: BloomFilter): Any = buf.serialize()
-  override def serialize(buf: BloomFilter): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): BloomFilter = BloomFilter.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): BloomAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): BloomAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BloomAgg = copy(child = c.head)
-}
-
-/** OR-union of stored Bloom filters: `bloom_merge(filter_col)` — how an
-  * incremental pipeline appends each batch's survivors to the persisted
-  * corpus-membership filter without rebuilding it. */
-case class BloomMergeAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[BloomFilter] {
-
-  override def prettyName: String = "bloom_merge"
-  // all-null/empty groups eval to NULL (no honest config to emit)
-  override def nullable: Boolean = true
-  override def createAggregationBuffer(): BloomFilter = null.asInstanceOf[BloomFilter]
-
-  override def update(buf: BloomFilter, input: InternalRow): BloomFilter = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val other = BloomFilter.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) other else buf.merge(other)
-    }
-  }
-  override def merge(buf: BloomFilter, other: BloomFilter): BloomFilter =
-    if (buf == null) other else if (other == null) buf else buf.merge(other)
-  // SQL-aggregate convention for an all-null/empty group: NULL, never a
-  // placeholder — a persisted 64-bit placeholder filter would poison every
-  // later bloom_merge/merge with its mismatched config
-  override def eval(buf: BloomFilter): Any =
-    if (buf == null) null else buf.serialize()
-  // empty-partition buffers shuffle as zero bytes — a placeholder filter
-  // would poison the merge's same-config require
-  override def serialize(buf: BloomFilter): Array[Byte] =
-    if (buf == null) Array.emptyByteArray else buf.serialize()
-  override def deserialize(bytes: Array[Byte]): BloomFilter =
-    if (bytes.isEmpty) null.asInstanceOf[BloomFilter] else BloomFilter.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): BloomMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): BloomMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BloomMergeAgg = copy(child = c.head)
-}
-
-/** Union of stored HLL sketches: `hll_union(sketch_col)`. */
-case class HllUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[HllSketch] {
-
-  override def prettyName: String = "hll_union"
-  override def createAggregationBuffer(): HllSketch = null.asInstanceOf[HllSketch]
-
-  override def update(buf: HllSketch, input: InternalRow): HllSketch = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val other = HllSketch.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) other else buf.merge(other)
-    }
-  }
-  override def merge(buf: HllSketch, other: HllSketch): HllSketch =
-    if (buf == null) other else if (other == null) buf else buf.merge(other)
-  override def eval(buf: HllSketch): Any =
-    (if (buf == null) HllSketch() else buf).serialize()
-  override def serialize(buf: HllSketch): Array[Byte] =
-    (if (buf == null) HllSketch() else buf).serialize()
-  override def deserialize(bytes: Array[Byte]): HllSketch = HllSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): HllUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): HllUnionAgg = copy(child = c.head)
 }
 
 /** `cbloom_agg(longCol, expectedItems, fpp)` — mergeable COUNTING Bloom
@@ -473,7 +290,7 @@ case class CBloomAgg(
     numHashes: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[CountingBloomFilter] {
+) extends BinarySketchAgg[CountingBloomFilter](CountingBloomFilter) {
 
   override def prettyName: String = "cbloom_agg"
   override def createAggregationBuffer(): CountingBloomFilter =
@@ -484,12 +301,6 @@ case class CBloomAgg(
     if (v != null) buf.update(v.asInstanceOf[Long])
     buf
   }
-  override def merge(buf: CountingBloomFilter, other: CountingBloomFilter): CountingBloomFilter =
-    buf.merge(other)
-  override def eval(buf: CountingBloomFilter): Any = buf.serialize()
-  override def serialize(buf: CountingBloomFilter): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): CountingBloomFilter =
-    CountingBloomFilter.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): CBloomAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): CBloomAgg = copy(inputAggBufferOffset = o)
@@ -507,39 +318,3 @@ object CBloomAgg {
   }
 }
 
-/** Cell-wise-add union of stored counting filters: `cbloom_merge(col)` —
-  * appends each increment's survivors to the persisted corpus filter.
-  * NULL on all-null/empty groups (the `bloom_merge` convention: a
-  * placeholder filter would poison later merges with a mismatched config). */
-case class CBloomMergeAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0
-) extends BinarySketchAgg[CountingBloomFilter] {
-
-  override def prettyName: String = "cbloom_merge"
-  override def nullable: Boolean = true
-  override def createAggregationBuffer(): CountingBloomFilter =
-    null.asInstanceOf[CountingBloomFilter]
-
-  override def update(buf: CountingBloomFilter, input: InternalRow): CountingBloomFilter = {
-    val v = child.eval(input)
-    if (v == null) buf
-    else {
-      val other = CountingBloomFilter.deserialize(v.asInstanceOf[Array[Byte]])
-      if (buf == null) other else buf.merge(other)
-    }
-  }
-  override def merge(buf: CountingBloomFilter, other: CountingBloomFilter): CountingBloomFilter =
-    if (buf == null) other else if (other == null) buf else buf.merge(other)
-  override def eval(buf: CountingBloomFilter): Any =
-    if (buf == null) null else buf.serialize()
-  override def serialize(buf: CountingBloomFilter): Array[Byte] =
-    if (buf == null) Array.emptyByteArray else buf.serialize()
-  override def deserialize(bytes: Array[Byte]): CountingBloomFilter =
-    if (bytes.isEmpty) null.asInstanceOf[CountingBloomFilter] else CountingBloomFilter.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): CBloomMergeAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CBloomMergeAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CBloomMergeAgg = copy(child = c.head)
-}

@@ -1,8 +1,13 @@
 package graft.spark
 
-import graft.core.{HllSketch, ReqSketch, ThetaSketch}
+import graft.core.{FreqSketch, HllSketch, ReqSketch, ThetaSketch}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 import org.scalatest.funsuite.AnyFunSuite
+import scala.util.{Failure, Success, Try}
 
 /** Distributed-aggregation correctness of the sketch aggregates: the
   * partial(update)/shuffle(serialize)/final(merge) path across partitions
@@ -106,6 +111,58 @@ class SketchAggSpec extends AnyFunSuite with SparkSuiteBase {
     assert(math.abs(ts.estimate - 10000) / 10000 < 0.1)
     val hs = HllSketch.deserialize(re.getAs[Array[Byte]]("hs"))
     assert(math.abs(hs.estimate - 10000) / 10000 < 0.1)
+
+    // Every merge aggregate in the builder table, over stored sketches of a
+    // non-default config. Three rows spread over 8 partitions leave empty
+    // partials, which must not change the answer; an all-null group must
+    // evaluate to NULL and then re-merge with real sketches.
+    val builds = Map(
+      "req_merge" -> "req_sketch(v, 12, false)",
+      "theta_union" -> "theta_sketch(u, 32)",
+      "hll_union" -> "hll_sketch(u, 14)",
+      "freq_merge" -> "freq_sketch(u, 16)",
+      "cms_merge" -> "cms_sketch(u, 3, 64)",
+      "bloom_merge" -> "bloom_agg(k, 500, 0.05d)",
+      "cbloom_merge" -> "cbloom_agg(k, 500, 0.05d)")
+    val merges = GraftFunctions.aggregateBuilders.collect {
+      case (name, builder) if Try(builder(Seq(Literal(null, BinaryType)))).toOption.exists {
+        case ae: AggregateExpression => ae.aggregateFunction.isInstanceOf[SketchMergeAgg[_]]
+        case _ => false
+      } => name
+    }
+    assert(merges.toSet == builds.keySet, "every merge aggregate needs a stored-sketch input here")
+    // REQ and Freq answers depend on merge order; the other families are order-free
+    val summary: Map[String, Array[Byte] => Any] = Map(
+      "req_merge" -> { b => val s = ReqSketch.deserialize(b); (s.count, s.k, s.hra) },
+      "freq_merge" -> { b => val s = FreqSketch.deserialize(b); (s.streamWeight, s.maxMapSize) })
+    def answer(m: String, b: Array[Byte]): Any = summary.get(m).fold[Any](b.toSeq)(_(b))
+
+    val data = (1 to 6000).map(i => (i % 3, i.toDouble, s"u$i", i.toLong)).toDF("g", "v", "u", "k")
+    val buildCols = builds.toSeq.map { case (m, b) => expr(b).as(s"s_$m") }
+    val sketched = data.groupBy("g").agg(buildCols.head, buildCols.tail: _*)
+    val rows = sketched.collect().toSeq
+    // 3 rows in 8 slices land in slices 2, 5 and 7: empty partials come first
+    def stored(slices: Int): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), sketched.schema)
+    def problems(m: String): Seq[String] = {
+      val c = s"s_$m"
+      def remerge(df: DataFrame): Any = answer(m, df.agg(expr(s"$m($c)")).first().getAs[Array[Byte]](0))
+      val expected = remerge(stored(1))
+      val withNullGroup = stored(1).select(lit(1).as("g"), col(c))
+        .union(Seq(0, 0).toDF("g").select($"g", lit(null).cast(BinaryType).as(c)))
+      val grouped = withNullGroup.repartition(8).groupBy("g").agg(expr(s"$m($c)").as(c))
+      Seq(
+        "across empty partitions" -> Try(remerge(stored(8)) == expected),
+        "all-null group is NULL" -> Try(grouped.orderBy("g").first().isNullAt(1)),
+        "NULL group re-merged with real sketches" -> Try(remerge(grouped) == expected)
+      ).collect {
+        case (check, Success(false)) => s"$m $check: wrong answer"
+        case (check, Failure(e)) =>
+          s"$m $check: ${Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last.getMessage}"
+      }
+    }
+    val found = merges.flatMap(problems)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 
   test("freq_sketch across partitions keeps MG guarantees vs exact counts; freq_merge re-merges") {
