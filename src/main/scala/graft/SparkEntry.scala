@@ -569,10 +569,10 @@ object SparkEntry {
       // so mid-band pairs carry no LSH recall risk; mid-band near-dups are
       // injected by appending ~tokens/6 fresh filler tokens (Jaccard lands
       // around 6/7 — inside [0.5, 0.9)). The verify pass runs ONCE at the
-      // loose threshold with its overlap stats persisted; the fine edge
+      // loose threshold with its overlap stats materialized; the fine edge
       // set is a filter over the same stats (both CC runs materialize
-      // their edge input, so without the persist the expensive verify
-      // would run twice).
+      // their edge input, so without it the expensive verify would run
+      // twice).
       val base = t(s, dir, "documents").select("doc_id", "text")
         .filter(col("doc_id") < 300)
       // tokenize once for the filler-count expr (it evaluated the
@@ -588,20 +588,19 @@ object SparkEntry {
             expr("concat(text, ' ', array_join(transform(" +
               "sequence(0, cast(greatest(size(tk0) div 6, 4) as int) - 1), " +
               "x -> concat('f', cast(x as string))), ' '))").as("text"))))
-      val stats = NgramJaccard.pairs(corpus, "doc_id", "text",
-        n = 3, threshold = 0.5).persist()
+      val stats = mat(NgramJaccard.pairs(corpus, "doc_id", "text",
+        n = 3, threshold = 0.5))
       val fine = stats.filter(col("common_grams").cast("double") /
         (col("grams_a") + col("grams_b") - col("common_grams")) >= 0.9)
       // each assignment feeds SIX consumers inside bidirectional (member
-      // join + size aggregates, both directions) — persist the two narrow
-      // (id, label) tables once instead of re-deriving the CC compose join
-      // per consumer
+      // join + size aggregates, both directions) — materialize the two
+      // narrow (id, label) tables once instead of re-deriving the CC
+      // compose join per consumer
       def clusterOf(pairs: org.apache.spark.sql.DataFrame) =
-        ConnectedComponents
+        mat(ConnectedComponents
           .clustersWithSingletons(corpus, "doc_id",
             pairs.select("id_a", "id_b"))
-          .select(col("id"), col("component").as("cluster"))
-          .persist()
+          .select(col("id"), col("component").as("cluster")))
       ClusterStability.bidirectional(clusterOf(stats), clusterOf(fine))
         .orderBy("direction", "cluster_from")
     }),
@@ -2382,7 +2381,7 @@ object SparkEntry {
       // pages corpus is DERIVED FROM THE DOCUMENTS TABLE by arithmetic
       // (exact copies %10; one-token-appended near-dups %7 over >=400-char
       // docs), html wraps text so stage-0 extraction is byte-identical
-      // (validateExtraction raises per url otherwise), and each cluster is
+      // (the extraction check raises per url otherwise), and each cluster is
       // canonicalized to its minimum member url so labels are engine-
       // independent. DuckDB recomputes the truth: the three SQL-expressible
       // lane predicates (equal text; 5-gram shingle Jaccard >= 0.9; shared

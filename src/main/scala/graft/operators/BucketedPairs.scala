@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftBridge
-import graft.spark.{CappedIdsAgg, CappedIdsMergeAgg}
+import graft.spark.{CappedIdsAgg, CappedIdsMergeAgg, GraftFunctions}
 
 /** Candidate-edge generation from LSH-style bucket membership, skew-safe at
   * web scale (the "salted band-hash keys" collection the north rule names).
@@ -13,7 +13,7 @@ import graft.spark.{CappedIdsAgg, CappedIdsMergeAgg}
   *
   *   - small buckets (n <= cap): all C(n,2) pairs (complete — downstream
   *     verify decides),
-  *   - hot buckets (cap < n <= saltBuckets*(cap+1)): star edges to the
+  *   - hot buckets (cap < n <= SaltBuckets*(cap+1)): star edges to the
   *     bucket's minimum id, straight from the kept member list. A hot
   *     bucket emits n-1 edges instead of ~n^2/2; the hub keeps it
   *     connected for clustering, and every edge still passes the lane's
@@ -25,15 +25,13 @@ import graft.spark.{CappedIdsAgg, CappedIdsMergeAgg}
   *
   * Memory/skew structure (vs a plain `groupBy(key).agg(collect_list)`,
   * which materializes the whole bucket in one buffer before any cap):
-  * phase 1 aggregates per `(key, salt = xxhash64(id) % saltBuckets)` with
+  * phase 1 aggregates per `(key, salt = xxhash64(id) % SaltBuckets)` with
   * buffers capped at cap+1 ids, so a monster bucket's collection fans out
-  * over saltBuckets reduce tasks; phase 2 merges the (<= saltBuckets)
-  * slices per key keeping at most saltBuckets*(cap+1) ids — every buffer in
-  * both phases is bounded (e.g. 8KB at cap=64, salt=16).
+  * over SaltBuckets reduce tasks; phase 2 merges the (<= SaltBuckets)
+  * slices per key keeping at most SaltBuckets*(cap+1) ids — every buffer in
+  * both phases is bounded (e.g. 8KB at cap=64).
   *
-  * The bucket aggregate is computed ONCE and materialized (the
-  * localCheckpoint-rebuild pattern from ConnectedComponents; blocks are
-  * freed by the ContextCleaner when the result is dropped): its three
+  * The bucket aggregate is computed ONCE and materialized: its three
   * consumers — kept-pair explode, monster gate, monster-join build side —
   * read the stored blocks. The monster branch is gated driver-side because
   * the join's probe side re-computes the caller's band/probe projection
@@ -46,6 +44,9 @@ import graft.spark.{CappedIdsAgg, CappedIdsMergeAgg}
   */
 object BucketedPairs {
 
+  /** Salt slices per bucket key in phase 1. */
+  private val SaltBuckets = 16
+
   private def cappedIds(c: Column, keep: Int): Column =
     GraftBridge.column(CappedIdsAgg(GraftBridge.expression(c), keep).toAggregateExpression())
   private def cappedIdsMerge(c: Column, keep: Int): Column =
@@ -55,13 +56,13 @@ object BucketedPairs {
     * the incremental probe lane (MinHashLSH.incrementalNearDupPairs): one
     * row per key tuple with the bounded struct `s = (n, hub, ids)` —
     * `n` the true bucket size, `hub` its minimum id, `ids` the kept member
-    * list (NULL exactly when the bucket overflowed `saltBuckets*(cap+1)`
+    * list (NULL exactly when the bucket overflowed `SaltBuckets*(cap+1)`
     * or n < 2; a singleton's lone id IS its hub). Null-keyed rows are
     * dropped (they can't bucket). Every aggregation buffer in both phases
     * holds at most cap+1 ids regardless of bucket size — the skew story
     * from the object doc. */
   def cappedBuckets(members: DataFrame, keyCols: Seq[String], idCol: String,
-                    cap: Int, saltBuckets: Int = 16): DataFrame = {
+                    cap: Int): DataFrame = {
     require(cap >= 2, s"cap must be >= 2, got $cap")
     val keys = keyCols.map(col)
     // ids are longs end-to-end (CappedIds buffers, PairGen); cast here so an
@@ -72,14 +73,11 @@ object BucketedPairs {
     // from being the only branch with an isnotnull pushdown
     val rows = members.where(keys.map(_.isNotNull).reduce(_ && _))
 
-    if (saltBuckets <= 1)
-      rows.groupBy(keys: _*).agg(cappedIds(id, cap).as("s"))
-    else
-      rows
-        .groupBy(keys :+ pmod(xxhash64(id), lit(saltBuckets.toLong)).as("_salt"): _*)
-        .agg(cappedIds(id, cap).as("s"))
-        .groupBy(keys: _*)
-        .agg(cappedIdsMerge(col("s"), saltBuckets * (cap + 1)).as("s"))
+    rows
+      .groupBy(keys :+ pmod(xxhash64(id), lit(SaltBuckets.toLong)).as("_salt"): _*)
+      .agg(cappedIds(id, cap).as("s"))
+      .groupBy(keys: _*)
+      .agg(cappedIdsMerge(col("s"), SaltBuckets * (cap + 1)).as("s"))
   }
 
   /** Incremental-probe candidate generation shared by the stored-index
@@ -100,8 +98,7 @@ object BucketedPairs {
     // kernel over the batch (minhash/ICWS/winnow/simhash) — without
     // materialization every incremental lane runs that kernel twice per
     // probe (measured: the ICWS band build alone was 2×2.2 s of
-    // q_weighted_incremental's 5 s). Same localCheckpoint-rebuild pattern
-    // as `edges`; blocks are freed by the ContextCleaner.
+    // q_weighted_incremental's 5 s).
     val probes = GraftBridge.materialize(probes0)
     val touched = index.join(probes.select(keys: _*).distinct(), keyCols, "left_semi")
     val buckets = cappedBuckets(touched, keyCols, idCol, cap)
@@ -113,15 +110,13 @@ object BucketedPairs {
 
   /** Candidate edges (id_a < id_b), NOT deduplicated across keys — callers
     * `.distinct()` after unioning bands/probes. Eager (see object doc). */
-  def edges(members: DataFrame, keyCols: Seq[String], idCol: String, cap: Int,
-            saltBuckets: Int = 16): DataFrame = {
-    val spark = members.sparkSession
-    PairGen.register(spark)
+  def edges(members: DataFrame, keyCols: Seq[String], idCol: String, cap: Int): DataFrame = {
+    GraftFunctions.register(members.sparkSession)
     val keys = keyCols.map(col)
     val id = col(idCol).cast("long")
     val rows = members.where(keys.map(_.isNotNull).reduce(_ && _))
 
-    val slices = cappedBuckets(members, keyCols, idCol, cap, saltBuckets)
+    val slices = cappedBuckets(members, keyCols, idCol, cap)
 
     // one computation, three consumers (explode / gate / join build side);
     // the monster gate is an accumulator over the SAME pass: within rows

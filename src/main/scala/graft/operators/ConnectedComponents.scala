@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftBridge.materialize
 import org.apache.spark.sql.functions._
 
 /** Connected components over an undirected edge list via iterative
@@ -13,23 +14,12 @@ import org.apache.spark.sql.functions._
   *
   * Each iteration is two narrow (id, label) shuffles; convergence is
   * detected by an aggregate checksum instead of a full diff (one cheap
-  * action per round). `localCheckpoint` truncates lineage so plans stay
-  * O(1) per iteration instead of growing exponentially — on a real cluster
-  * with a checkpoint dir, swap for `checkpoint()` (reliable) to also get
-  * executor-failure resilience.
+  * action per round). `GraftBridge.materialize` truncates lineage so
+  * plans stay O(1) per iteration instead of growing exponentially — on a
+  * real cluster with a checkpoint dir, swap for `checkpoint()` (reliable)
+  * to also get executor-failure resilience.
   */
 object ConnectedComponents {
-
-  /** Materialize and FULLY truncate a DataFrame for iterative reuse.
-    * `localCheckpoint` alone is not enough on Spark 4: `LogicalRDD`
-    * propagates the source plan's `originStats` through the checkpoint, so
-    * in a loop the size-in-bytes estimates compound multiplicatively per
-    * round until Catalyst spends minutes multiplying million-digit BigInts
-    * (observed: iteration wall time 0.8s -> 5s -> 43s -> 300s). Rebuilding
-    * from the checkpointed RDD resets stats to defaults. Old checkpoint
-    * blocks are released by the ContextCleaner once unreferenced. */
-  private def materialize(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.localCheckpoint(true).rdd, df.schema)
 
   /** @param edges DataFrame with two long columns (src, dst)
     * @return (id, component) — component = min id reachable

@@ -51,7 +51,7 @@ object ExactDedup {
     * that genuinely want bigger groups raise the bound explicitly. */
   def pairs(docs: DataFrame, idCol: String, textCol: String,
             paranoid: Boolean = false, maxGroupSize: Int = 1 << 16): DataFrame = {
-    graft.operators.PairGen.register(docs.sparkSession)
+    graft.spark.GraftFunctions.register(docs.sparkSession)
     val hashed = docs.select(contentKey(textCol, paranoid).as("h"), col(idCol).as("id"))
     val grouped = hashed.groupBy("h").agg(collect_list("id").as("ids"))
       .filter(size(col("ids")) > 1)

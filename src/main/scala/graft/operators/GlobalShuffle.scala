@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -34,16 +34,13 @@ object GlobalShuffle {
     * (md5(id), id) order). */
   def withPositions(df: DataFrame, idCol: String): DataFrame = {
     val spark = df.sparkSession
-    // pin the sorted layout via rebuild-from-RDD (the count job and the
-    // zip job must see IDENTICAL partitions; bare localCheckpoint keeps a
-    // LogicalRDD whose originStats bloat downstream planning — same
-    // pattern as ConnectedComponents.materialize)
-    val sorted = df
+    // pin the sorted layout: the count job and the zip job must see
+    // IDENTICAL partitions
+    val keyed = GraftBridge.materialize(df
       .withColumn("_k", md5(col(idCol).cast("string")))
       .repartitionByRange(col("_k"), col(idCol))
-      .sortWithinPartitions(col("_k"), col(idCol))
-    val keyed = spark.createDataFrame(sorted.localCheckpoint(true).rdd, sorted.schema)
-    val counts = keyed.rdd.mapPartitionsWithIndex(
+      .sortWithinPartitions(col("_k"), col(idCol)))
+    val counts = GraftBridge.internalRows(keyed).mapPartitionsWithIndex(
       (i, it) => Iterator((i, it.size.toLong))).collect().sortBy(_._1).map(_._2)
     val offsets = counts.scanLeft(0L)(_ + _) // offsets(i) = rows before partition i
     val schema = StructType(keyed.schema.fields :+ StructField("pos", LongType, nullable = false))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftBridge.materialize
 import org.apache.spark.sql.functions._
 
 /** Host-graph PageRank as iterative DataFrame self-joins — the link-quality
@@ -30,19 +31,12 @@ import org.apache.spark.sql.functions._
   *    shuffle-on-dst sum. In production the edge table is bucketed by src
   *    so the join side of every iteration is exchange-free; ranks (the
   *    small, changing side) alone shuffle per round.
-  *  - `localCheckpoint` truncates lineage each round: without it,
+  *  - `GraftBridge.materialize` truncates lineage each round: without it,
   *    iteration k replans/re-executes all k-1 predecessors and the plan
   *    tree grows exponentially in optimizer time.
   *  - The only driver-side values are scalar counts (N), never rows.
   */
 object HostRank {
-
-  /** Rebuild-from-RDD materialization (NOT bare `localCheckpoint`): in an
-    * iterative loop Spark 4's LogicalRDD propagates originStats and
-    * planning cost blows up round over round — same pattern as
-    * `ConnectedComponents.materialize`. */
-  private def materialize(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.localCheckpoint(true).rdd, df.schema)
 
   def run(edges: DataFrame, srcCol: String, dstCol: String,
           iters: Int, scale: Long = 1000000000000L): DataFrame = {

@@ -62,33 +62,15 @@ object NgramJaccard {
   /** Candidate pairs (id_a < id_b) from the prefix-filter inverted index.
     * Superset of all pairs with n-gram Jaccard >= threshold (exact while no
     * gram exceeds `maxPostings`; with `dfOrdered` also exact for every
-    * pair sharing at least one non-hot gram).
-    *
-    * `prefixHotDf > 0` generalizes the hot-LAST order to a LOWER df bar
-    * than the capping one: grams with df > prefixHotDf sort behind the
-    * rare grams, so prefixes prefer rare grams and candidate buckets on
-    * df-skewed corpora shrink toward the true pair count. The prefix
-    * lemma holds under ANY consistent total order, and as long as
-    * prefixHotDf < maxPostings no hot-gram bucket can cap, so the
-    * candidate set stays COMPLETE and the verified output is unchanged
-    * (NgramJaccardSpec pins equality). The hot set is bounded by
-    * totalGramOccurrences / prefixHotDf — size it so that stays
-    * broadcastable. NOTE (r6 measurement): on the bench corpus the knob is
-    * a no-op — candidate volume there comes from ~19k df∈[8,16] grams
-    * (max df < 32), which no order can prune at t=0.5 — so the declared
-    * queries leave it off; it exists for genuinely df-skewed corpora. */
+    * pair sharing at least one non-hot gram). */
   def candidatePairs(docs: DataFrame, idCol: String, textCol: String,
                      n: Int, threshold: Double,
                      maxPostings: Int = 10000,
-                     dfOrdered: Boolean = false,
-                     prefixHotDf: Int = 0): DataFrame = {
+                     dfOrdered: Boolean = false): DataFrame = {
     require(n >= 1 && threshold > 0.0 && threshold <= 1.0,
       s"bad config n=$n t=$threshold")
-    require(prefixHotDf <= maxPostings,
-      s"prefixHotDf=$prefixHotDf above the posting cap $maxPostings would let hot buckets cap")
     val hot: Array[Long] =
-      if (prefixHotDf > 0) hotGrams(docs, textCol, n, prefixHotDf)
-      else if (dfOrdered) hotGrams(docs, textCol, n, maxPostings)
+      if (dfOrdered) hotGrams(docs, textCol, n, maxPostings)
       else Array.emptyLongArray
     val bcHot = docs.sparkSession.sparkContext.broadcast(hot)
     val prefix = udf { (t: String) =>
@@ -176,12 +158,10 @@ object NgramJaccard {
   def pairs(docs: DataFrame, idCol: String, textCol: String,
             n: Int = 3, threshold: Double = 0.5,
             maxPostings: Int = 10000,
-            dfOrdered: Boolean = false,
-            prefixHotDf: Int = 0): DataFrame = {
+            dfOrdered: Boolean = false): DataFrame = {
     val stats = memoStatsUdf(n)
     val texts = docs.select(col(idCol).as("id"), col(textCol).as("t"))
-    candidatePairs(docs, idCol, textCol, n, threshold, maxPostings, dfOrdered,
-        prefixHotDf)
+    candidatePairs(docs, idCol, textCol, n, threshold, maxPostings, dfOrdered)
       .join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("t", "t_a"), "id_a")
       .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("t", "t_b"), "id_b")
       .withColumn("st", stats(col("t_a"), col("t_b")))
@@ -285,16 +265,13 @@ object NgramJaccard {
     * the documented prefix-filter trade. */
   def topKSimilar(docs: DataFrame, idCol: String, textCol: String,
                   n: Int = 3, k: Int = 3, t10: Int = 3,
-                  maxPostings: Int = 10000,
-                  prefixHotDf: Int = 0): DataFrame = {
+                  maxPostings: Int = 10000): DataFrame = {
     require(k >= 1 && t10 >= 1 && t10 <= 10, s"bad config k=$k t10=$t10")
     // materialized: `p` feeds BOTH direction projections of the union
     // below — without this the whole candidate+verify pass (the expensive
-    // part of the query) runs twice (localCheckpoint-rebuild pattern;
-    // blocks freed by the ContextCleaner)
+    // part of the query) runs twice
     val p = org.apache.spark.sql.GraftBridge.materialize(
-      pairs(docs, idCol, textCol, n, t10 / 10.0 - 0.01, maxPostings,
-          dfOrdered = false, prefixHotDf = prefixHotDf)
+      pairs(docs, idCol, textCol, n, t10 / 10.0 - 0.01, maxPostings)
         .filter(expr(s"common_grams * 10 >= $t10 * (grams_a + grams_b - common_grams)"))
         .withColumn("score", expr(
           "CAST(common_grams AS BIGINT) * 1000000000L div " +

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-
 /** Candidate-pair generation inside LSH-style buckets, skew-safe.
   *
   * Buckets up to `cap` members emit all C(n,2) combinations; hotter buckets
@@ -11,6 +9,8 @@ import org.apache.spark.sql.SparkSession
   * verify lane + connected components) while bounding pair count linearly —
   * a 10^6-doc hot bucket emits 10^6 - 1 pairs instead of ~5*10^11.
   *
+  * Exposed to SQL as `pair_combos(ids, cap)`, registered once with the
+  * rest of the function surface (`GraftFunctions.register`).
   * Implemented as compiled Scala UDFs, NOT `transform`/`flatten`
   * higher-order functions: Catalyst HOF lambdas are interpreted per element
   * (CodegenFallback) and `slice` copies per outer element, which measured
@@ -52,8 +52,4 @@ object PairGen {
       out
     }
   }
-
-  /** Register `pair_combos(ids, cap)`. */
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("pair_combos", (ids: Seq[Long], cap: Int) => idPairs(ids, cap))
 }

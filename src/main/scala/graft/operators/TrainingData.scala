@@ -34,19 +34,15 @@ object Decontaminate {
     * Scale shape: both sides reduce to narrow (gram_hash) rows via the
     * same distinct-shingle kernel as the MinHash lane; benchmark suites
     * are tiny next to the corpus (10^4..10^6 rows), so the distinct
-    * benchmark grams BROADCAST and the corpus side never shuffles — set
-    * `broadcastBenchmark = false` to fall back to a shuffled equi-join
-    * when the contamination set is itself corpus-sized. */
+    * benchmark grams BROADCAST and the corpus side never shuffles. */
   def flagged(docs: DataFrame, idCol: String, textCol: String,
-              benchmark: DataFrame, benchTextCol: String, n: Int,
-              broadcastBenchmark: Boolean = true): DataFrame = {
+              benchmark: DataFrame, benchTextCol: String, n: Int): DataFrame = {
     require(n >= 1, s"bad n-gram size $n")
     val grams = udf((t: String) => TextOps.shingleHashes(t, n))
     val docGrams = docs.select(col(idCol).as("id"),
       explode(grams(col(textCol))).as("g"))
-    val benchGrams0 = benchmark
-      .select(explode(grams(col(benchTextCol))).as("g")).distinct()
-    val benchGrams = if (broadcastBenchmark) broadcast(benchGrams0) else benchGrams0
+    val benchGrams = broadcast(benchmark
+      .select(explode(grams(col(benchTextCol))).as("g")).distinct())
     docGrams.join(benchGrams, "g")
       .groupBy("id")
       // per-doc grams are already distinct (shingleHashes) and the bench
@@ -56,10 +52,8 @@ object Decontaminate {
 
   /** The corpus minus every contaminated document (left-anti on id). */
   def clean(docs: DataFrame, idCol: String, textCol: String,
-            benchmark: DataFrame, benchTextCol: String, n: Int,
-            broadcastBenchmark: Boolean = true): DataFrame = {
-    val bad = flagged(docs, idCol, textCol, benchmark, benchTextCol, n,
-      broadcastBenchmark)
+            benchmark: DataFrame, benchTextCol: String, n: Int): DataFrame = {
+    val bad = flagged(docs, idCol, textCol, benchmark, benchTextCol, n)
     docs.join(bad, docs(idCol) === bad("id"), "left_anti")
   }
 }

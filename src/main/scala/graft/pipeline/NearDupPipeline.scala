@@ -53,7 +53,6 @@ object NearDupPipeline {
       // O(bucket) edges instead of O(bucket^2) — at 10^12 docs a template
       // shared by 10^6 pages must never enumerate its pairs
       maxBucketSize: Int = 64,
-      validateExtraction: Boolean = true,
       // 64-bit doc ids expect ~27k birthday collisions at 10^12 urls —
       // each one silently merges two unrelated documents into one graph
       // node. With this flag the extracted stage computes a SECOND
@@ -84,8 +83,10 @@ object NearDupPipeline {
     // v2: MinHash permutation family changed to multiply-add (r2).
     // v3: collisionSafeIds added (r3) — it changes the id column, so old
     // committed stage outputs must not be resumed into new-config runs.
+    // `x=true`: the extraction check (always on); the literal keeps the
+    // fingerprints of stages committed under it resumable.
     val s = s"v3|j=${cfg.jaccardThreshold}|h=${cfg.simhashMaxDist}|" +
-      s"l=${cfg.minSubstringLen}|b=${cfg.maxBucketSize}|x=${cfg.validateExtraction}|" +
+      s"l=${cfg.minSubstringLen}|b=${cfg.maxBucketSize}|x=true|" +
       s"c=${cfg.collisionSafeIds}"
     java.lang.Long.toHexString(graft.core.ThetaSketch.hashBytes(
       s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
@@ -167,7 +168,7 @@ object NearDupPipeline {
       val hasText = pages.columns.contains("text")
       val base = pages.withColumn("extracted_text", expr("extract_text(html)"))
       val checked =
-        if (cfg.validateExtraction && hasText) {
+        if (hasText) {
           // hard invariant (BASELINE.json input_hint): fail loudly per url
           base.withColumn("_ok", col("extracted_text") === col("text"))
             .withColumn("extracted_text",

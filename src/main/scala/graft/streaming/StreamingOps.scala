@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.core.TextOps
 
 /** Structured Streaming surface of the engine (SURVEY.md §2.3 Streaming):
   * the same mergeable-sketch aggregates run under streaming group-bys —
@@ -69,15 +68,6 @@ object StreamingOps {
            count(lit(1)).as("n_tokens"))
   }
 
-  /** Streaming exact dedup: keep the first occurrence of each content hash.
-    * State is the 8-byte hash only (dropDuplicates state store). NOTE:
-    * `dropDuplicates` on the hash alone keeps one state row per distinct
-    * hash FOREVER (Spark only ages dedup state out when the event-time
-    * column is part of the key subset) — this unbounded variant matches the
-    * batch lane exactly but is for bounded replays. For infinite streams
-    * use `streamingExactDedupWithinWatermark`, which bounds state to the
-    * watermark horizon (duplicates farther apart than the horizon are then
-    * NOT collapsed — the standard streaming trade). */
   /** Gap-based sessionization on a stream: Spark's native `session_window`
     * (dynamic merging windows in the state store) + a watermark bounding
     * state. The SAME call shape runs in batch (session_window is a plain
@@ -374,6 +364,15 @@ object StreamingOps {
       .queryName(queryName)
       .start()
 
+  /** Streaming exact dedup: keep the first occurrence of each content hash.
+    * State is the 8-byte hash only (dropDuplicates state store). NOTE:
+    * `dropDuplicates` on the hash alone keeps one state row per distinct
+    * hash FOREVER (Spark only ages dedup state out when the event-time
+    * column is part of the key subset) — this unbounded variant matches the
+    * batch lane exactly but is for bounded replays. For infinite streams
+    * use `streamingExactDedupWithinWatermark`, which bounds state to the
+    * watermark horizon (duplicates farther apart than the horizon are then
+    * NOT collapsed — the standard streaming trade). */
   def streamingExactDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.withColumn("_h", xxhash64(col(textCol))).dropDuplicates("_h").drop("_h")
 
@@ -392,9 +391,7 @@ object StreamingOps {
     * never touch the confirm join — while maybe-duplicates are confirmed
     * with a stream-static LEFT ANTI join against the corpus's narrow
     * content-key table; within-stream copies collapse first-arrival-wins
-    * on the content hash (`dropDuplicates`, or the watermark-bounded
-    * variant for infinite streams — same state trade as
-    * [[streamingExactDedupWithinWatermark]]). False positives only add
+    * on the content hash (`dropDuplicates`). False positives only add
     * rows to the confirm join: the kept set is identical for ANY filter
     * contents, exactly like the batch operator.
     *
@@ -403,8 +400,7 @@ object StreamingOps {
     *                   anti-joins on) */
   def streamingIncrementalDedup(stream: DataFrame, textCol: String,
                                 corpusKeys: DataFrame, keyCol: String,
-                                bloomBytes: Array[Byte],
-                                withinWatermark: Boolean = false): DataFrame = {
+                                bloomBytes: Array[Byte]): DataFrame = {
     val spark = stream.sparkSession
     val bc = spark.sparkContext.broadcast(graft.core.BloomFilter.deserialize(bloomBytes))
     val mightContain = udf((h: Long) => bc.value.mightContain(h))
@@ -414,11 +410,7 @@ object StreamingOps {
     val confirmed = keyed.filter(col("_maybe")).drop("_maybe")
       .join(corpusKeys.select(col(keyCol).cast("long").as("_ck")),
         col("_h") === col("_ck"), "left_anti")
-    val all = fresh.unionByName(confirmed)
-    val dedup =
-      if (withinWatermark) all.dropDuplicatesWithinWatermark("_h")
-      else all.dropDuplicates("_h")
-    dedup.drop("_h")
+    fresh.unionByName(confirmed).dropDuplicates("_h").drop("_h")
   }
 
   /** One crawl snapshot of a url: event time + 64-bit content key (the
@@ -598,31 +590,29 @@ object StreamingOps {
         })
   }
 
+  /** A batch lane's `(id, key...)` index rows as the `(bucket, id)` rows
+    * every streaming bucket-state operator consumes: the streaming text
+    * faces run the batch lanes' own Catalyst projections, so a NULL text
+    * emits no rows exactly as in batch. */
+  private def bucketsOf(index: DataFrame, keyCol: String): Dataset[BandedDoc] = {
+    import index.sparkSession.implicits._
+    index.select(col(keyCol).as("bucket"), col("id")).as[BandedDoc]
+  }
+
   /** Convenience: text docs -> exploded band keys (for feeding
     * `streamingCandidatePairs`). Runs the full shingle->minhash->band chain
-    * map-side; only (bucket, id) narrow rows reach the stateful shuffle. */
-  def bandDocs(docs: DataFrame, idCol: String, textCol: String): Dataset[BandedDoc] = {
-    import docs.sparkSession.implicits._
-    docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-      .as[(Long, String)]
-      .flatMap { case (id, t) =>
-        TextOps.bandHashes(TextOps.minHash(t)).map(b => BandedDoc(b, id))
-      }
-  }
+    * map-side (`MinHashLSH.bandIndex`); only (bucket, id) narrow rows reach
+    * the stateful shuffle. */
+  def bandDocs(docs: DataFrame, idCol: String, textCol: String): Dataset[BandedDoc] =
+    bucketsOf(graft.operators.MinHashLSH.bandIndex(docs, idCol, textCol), "bh")
 
   /** WEIGHTED-lane streaming twin: docs -> exploded band keys over ICWS
     * weighted signatures, feeding [[streamingCandidatePairs]] — the
     * streaming face of `MinHashLSH.weightedNearDupPairs`, same map-side
     * signature chain and narrow (bucket, id) state rows as [[bandDocs]];
     * the exact Σmin/Σmax verify stays a downstream concern. */
-  def weightedBandDocs(docs: DataFrame, idCol: String, textCol: String): Dataset[BandedDoc] = {
-    import docs.sparkSession.implicits._
-    docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-      .as[(Long, String)]
-      .flatMap { case (id, t) =>
-        TextOps.bandHashes(TextOps.weightedMinHash(t)).map(b => BandedDoc(b, id))
-      }
-  }
+  def weightedBandDocs(docs: DataFrame, idCol: String, textCol: String): Dataset[BandedDoc] =
+    bucketsOf(graft.operators.MinHashLSH.weightedBandIndex(docs, idCol, textCol), "bh")
 
   /** CDC-lane streaming twin: docs -> (chunk-hash bucket, id) rows feeding
     * [[streamingCandidatePairs]] — a bucket here is one content-defined
@@ -659,14 +649,8 @@ object StreamingOps {
     * faces. With this, all five near-dup lanes (minhash, simhash via
     * probe-keys upstream, substring, cdc, embedding) run on the one shared
     * capped bucket-state operator. */
-  def fpDocs(docs: DataFrame, idCol: String, textCol: String): Dataset[BandedDoc] = {
-    import docs.sparkSession.implicits._
-    docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-      .as[(Long, String)]
-      .flatMap { case (id, t) =>
-        TextOps.winnowedFingerprints(t).map(fp => BandedDoc(fp, id))
-      }
-  }
+  def fpDocs(docs: DataFrame, idCol: String, textCol: String): Dataset[BandedDoc] =
+    bucketsOf(graft.operators.SubstringDedup.fpIndex(docs, idCol, textCol), "fp")
 
   /** SimHash-lane streaming twin: docs -> (Hamming probe key, id) rows
     * feeding [[streamingCandidatePairs]]. Probe keys split the 64-bit
@@ -676,15 +660,8 @@ object StreamingOps {
     * the streamed candidates over-approximate exactly like the batch
     * probe join and the exact Hamming verify stays downstream. */
   def simhashProbeDocs(docs: DataFrame, idCol: String, textCol: String,
-                       maxDist: Int = 3): Dataset[BandedDoc] = {
-    import docs.sparkSession.implicits._
-    docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-      .as[(Long, String)]
-      .flatMap { case (id, t) =>
-        TextOps.simHashProbeKeys(TextOps.simHash64(t), maxDist)
-          .map(k => BandedDoc(k, id))
-      }
-  }
+                       maxDist: Int = 3): Dataset[BandedDoc] =
+    bucketsOf(graft.operators.SimHashDedup.probeIndex(docs, idCol, textCol, maxDist), "probe")
 
   /** Embedding near-dup streaming twin: vectors -> auto-tuned sign-LSH band
     * keys (same `AnnSearch.tune` math as the batch lane), feeding

@@ -9,14 +9,24 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Eagerly compute `df` and rebuild a DataFrame over the stored blocks
-    * WITHOUT the InternalRow -> Row -> InternalRow double conversion that
-    * `createDataFrame(df.localCheckpoint.rdd, schema)` pays (boxing every
-    * array element — measured as the dominant cost for wide bucket rows).
-    * Also the Spark-4-safe alternative to plain `localCheckpoint`: the
-    * rebuilt plan carries no originStats, so iterative/multi-consumer use
-    * can't blow up Catalyst planning (see memory note + CC workaround).
-    * Blocks are freed by the ContextCleaner when the RDD is dropped. */
+  /** The engine's one materialize primitive: eagerly compute `df`, store
+    * its unsafe rows as local-checkpoint blocks, and rebuild a DataFrame
+    * over them. Every iterative loop (connected components, host rank) and
+    * every multi-consumer frame goes through here.
+    *
+    * Why not plain `df.localCheckpoint`: on Spark 4 the resulting
+    * `LogicalRDD` propagates the source plan's `originStats`, so in a loop
+    * the size estimates compound per round until Catalyst spends minutes
+    * multiplying million-digit BigInts (observed: iteration wall time
+    * 0.8 s -> 5 s -> 43 s -> 300 s). The rebuilt plan carries no stats.
+    *
+    * Why not `createDataFrame(df.localCheckpoint.rdd, schema)`: that
+    * rebuild converts every stored row InternalRow -> Row -> InternalRow on
+    * each read (boxing every array element — measured as the dominant cost
+    * for wide bucket rows); here rows are stored once and read directly.
+    *
+    * Blocks are freed by the ContextCleaner when the RDD is dropped; they
+    * are not recomputable after executor loss. */
   def materialize(df: Dataset[Row]): Dataset[Row] = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     val rdd = df.queryExecution.toRdd.map(_.copy()) // unsafe rows are reused buffers

@@ -11,9 +11,9 @@ class BucketedPairsSpec extends AnyFunSuite with SparkSuiteBase {
 
   import graft.spark.{CappedIds => CI}
 
-  private def edgesOf(members: Seq[(Long, Long)], cap: Int, salt: Int = 16): Set[(Long, Long)] = {
+  private def edgesOf(members: Seq[(Long, Long)], cap: Int): Set[(Long, Long)] = {
     import spark.implicits._
-    BucketedPairs.edges(members.toDF("k", "id"), Seq("k"), "id", cap, salt)
+    BucketedPairs.edges(members.toDF("k", "id"), Seq("k"), "id", cap)
       .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
@@ -29,8 +29,12 @@ class BucketedPairsSpec extends AnyFunSuite with SparkSuiteBase {
       for (i <- ids.indices; j <- (i + 1) until ids.size) yield (ids(i), ids(j))
     }.toSet
     assert(edgesOf(members, cap = 64) == expected)
-    assert(edgesOf(members, cap = 64, salt = 1) == expected)
-    assert(edgesOf(members, cap = 64, salt = 3) == expected)
+    // non-vacuous: buckets really do straddle the operator's 16 salt slices
+    import spark.implicits._
+    val straddling = members.toDF("k", "id").groupBy("k")
+      .agg(countDistinct(pmod(xxhash64(col("id")), lit(16L))).as("slices"))
+      .filter(col("slices") > 1).count()
+    assert(straddling > 0)
   }
 
   test("hot bucket (kept-list regime, cap < n <= salt*cap) emits exactly the star") {
@@ -55,6 +59,17 @@ class BucketedPairsSpec extends AnyFunSuite with SparkSuiteBase {
     val members = (0L until 64L).map(i => (1L, i))
     val got = edgesOf(members, cap = 64)
     assert(got.size == 64 * 63 / 2)
+  }
+
+  test("pair_combos stays null-safe after the lanes that expand pairs run") {
+    // both lanes register the SQL name; the one definition returns NULL
+    // for a NULL id array, whichever lane registered it last
+    import spark.implicits._
+    val docs = Seq((1L, "same"), (2L, "same"), (3L, "other")).toDF("doc_id", "text")
+    assert(ExactDedup.pairs(docs, "doc_id", "text").count() == 1)
+    assert(edgesOf(Seq((1L, 1L), (1L, 2L)), cap = 4) == Set((1L, 2L)))
+    val r = spark.sql("SELECT pair_combos(CAST(NULL AS ARRAY<BIGINT>), 4)").head()
+    assert(r.isNullAt(0))
   }
 
   test("CappedIds buffer never stores more than cap+1 ids and merges exactly") {

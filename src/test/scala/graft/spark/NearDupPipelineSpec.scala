@@ -104,6 +104,11 @@ class NearDupPipelineSpec extends AnyFunSuite with SparkSuiteBase {
     // committed empty snapshots rather than recompute
     val resumed = NearDupPipeline.run(spark, df, cfg2)
     assert(resumed.clusters.count() == 0, "committed stages were recomputed despite matching fingerprint")
+
+    // the default config's fingerprint is pinned: stages committed under
+    // it must stay resumable
+    assert(NearDupPipeline.configFingerprint(NearDupPipeline.Config(workDir = "x")) ==
+      "a874d09482f8d6d7")
   }
 
   test("resume: same workDir + config but DIFFERENT input recomputes all stages") {

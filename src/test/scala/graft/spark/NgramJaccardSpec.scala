@@ -33,28 +33,6 @@ class NgramJaccardSpec extends AnyFunSuite with SparkSuiteBase {
     assert(got == want)
   }
 
-  test("prefixHotDf (rare-first prefixes) == brute force and shrinks candidates") {
-    // the corpus has a genuinely hot token region (every doc shares the
-    // 'w..' vocabulary), so a low df bar moves real grams to the back of
-    // the order — output must be unchanged while candidates only shrink
-    val docs = corpus
-    import spark.implicits._
-    val df = docs.toDF("doc_id", "text")
-    for (t <- Seq(0.3, 0.5)) {
-      val got = NgramJaccard.pairs(df, "doc_id", "text", n = 3, threshold = t,
-          prefixHotDf = 4)
-        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val want = NgramJaccard.bruteForcePairs(docs, 3, t)
-      assert(want.nonEmpty, "oracle must be non-vacuous")
-      assert(got == want, s"prefixHotDf changed the verified output at t=$t")
-      val candsPlain = NgramJaccard.candidatePairs(df, "doc_id", "text", 3, t).count()
-      val candsHot = NgramJaccard.candidatePairs(df, "doc_id", "text", 3, t,
-        prefixHotDf = 4).count()
-      assert(candsHot <= candsPlain,
-        s"rare-first prefixes must never grow candidates ($candsHot > $candsPlain at t=$t)")
-    }
-  }
-
   test("candidates are a superset of true pairs (prefix lemma)") {
     val docs = corpus
     import spark.implicits._

@@ -157,6 +157,37 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuiteBase {
     } finally q.stop()
   }
 
+  test("streaming text faces skip a NULL text row like the batch kernels") {
+    val sq = spark
+    import sq.implicits._
+    import graft.core.TextOps
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    import StreamingOps.BandedDoc
+    val texts = graft.core.WebPages.generate(8, 31L).zipWithIndex
+      .map { case (p, i) => (i.toLong, p.text) }
+    val withNull = (texts :+ ((99L, null: String))).toDF("id", "text")
+    val nonNull = texts.toDF("id", "text")
+    // each face with the per-doc kernel it must agree with on non-NULL text
+    val faces = Seq[(String, DataFrame => Dataset[BandedDoc], String => Seq[Long])](
+      ("bandDocs", StreamingOps.bandDocs(_, "id", "text"),
+        t => TextOps.bandHashes(TextOps.minHash(t)).toSeq),
+      ("weightedBandDocs", StreamingOps.weightedBandDocs(_, "id", "text"),
+        t => TextOps.bandHashes(TextOps.weightedMinHash(t)).toSeq),
+      ("fpDocs", StreamingOps.fpDocs(_, "id", "text"),
+        t => TextOps.winnowedFingerprints(t).toSeq),
+      ("simhashProbeDocs", StreamingOps.simhashProbeDocs(_, "id", "text"),
+        t => TextOps.simHashProbeKeys(TextOps.simHash64(t), 3).toSeq))
+    def sorted(rows: Seq[BandedDoc]) = rows.sortBy(b => (b.id, b.bucket))
+    for ((name, face, kernel) <- faces) {
+      val got = sorted(face(withNull).collect().toSeq)
+      val want = sorted(face(nonNull).collect().toSeq)
+      assert(want.nonEmpty, s"$name: vacuous")
+      assert(got == want, s"$name: a NULL text row changed the output")
+      val ref = sorted(texts.flatMap { case (id, t) => kernel(t).map(BandedDoc(_, id)) })
+      assert(want == ref, s"$name: rows differ from the per-doc kernel")
+    }
+  }
+
   test("stateful streaming LSH candidate pairs match batch lane candidates") {
     val sq = spark
     import sq.implicits._
