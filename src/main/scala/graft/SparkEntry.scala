@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.pipeline.NearDupPipeline
+import graft.pipeline.NearDupPipeline.spread
 import graft.spark.GraftFunctions
 import graft.streaming.StreamingOps
 
@@ -19,23 +20,6 @@ object SparkEntry {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Scale-adaptive fan-out for a kernel-heavy frame (optimization guide
-    * §2.5, "one huge unsplittable file"): the driver's bench tables are
-    * single small parquet files, so their scan is ONE split and every
-    * downstream per-doc kernel (128-perm MinHash ~31 µs/doc, ICWS
-    * weighted MinHash ~2-4 ms/doc, gram explodes) runs on one core of the
-    * session. Deterministic hash repartition on the high-cardinality id
-    * column to the session's default parallelism — applied only to
-    * batch/fixture-sized frames (crawl increments, id-capped gate
-    * corpora, the bench documents table), which stay repartition-cheap at
-    * any scale; never to an unbounded corpus scan, which at production
-    * scale already carries >= cores splits. Results are unchanged: every
-    * consumer is an aggregation/join/orderBy whose output is
-    * partitioning-independent (integer/boolean/string outputs — queries
-    * with FP-sum aggregates in their output are deliberately NOT spread). */
-  private def spread(df: DataFrame, by: String = "doc_id"): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(by))
 
   /** Eager one-shot materialization for a subplan with multiple consumers
     * in one query (Spark reuses identical Exchanges but not arbitrary
@@ -59,11 +43,10 @@ object SparkEntry {
   private def minhashContractGate(s: SparkSession, dir: String, estSql: String,
                                   maxErr: Double, meanErr: Double,
                                   biasErr: Double): DataFrame = {
-    GraftFunctions.register(s)
     // spread: the whole gate is per-row kernel work (2 signatures + 2 gram
     // arrays + an intersect per doc) off a one-split scan — see `spread`
     val base = spread(t(s, dir, "documents").select(col("doc_id"), col("text"))
-      .filter(trim(col("text")) =!= "").filter(col("doc_id") % 5 === 0))
+      .filter(trim(col("text")) =!= "").filter(col("doc_id") % 5 === 0), "doc_id")
     val junk = expr("array_join(transform(sequence(1, 1 + CAST(doc_id % 50 AS INT)), " +
       "i -> concat('z', CAST(doc_id AS STRING), 'x', CAST(i AS STRING))), ' ')")
     // tokens land in their own projection FIRST: inlining the tokenizer
@@ -161,7 +144,15 @@ object SparkEntry {
         expr("cast(theta_estimate(th) as bigint)").as("distinct_sources"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every declared query, by name. Query bodies write graft functions as
+    * SQL text, so each query installs the function table on its session
+    * before its body runs. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    queryBodies.map { case (name, body) =>
+      name -> { (s: SparkSession, dir: String) => GraftFunctions.register(s); body(s, dir) }
+    }
+
+  private def queryBodies: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---------------------------------------------------- relational core
     "q1_agg" -> ((s, dir) => {
       t(s, dir, "lineitem")
@@ -279,7 +270,6 @@ object SparkEntry {
       // tests definitely-absent; a fp could mask any ONE key but the
       // fixture has ~dozens — deterministic for this data, verified at
       // both test SFs).
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents").select("doc_id", "text")
       val corpus = docs.filter(col("doc_id") < 300)
       val retired = corpus.filter(col("doc_id") % 10 === 3)
@@ -328,8 +318,8 @@ object SparkEntry {
       // scan (the probe side is materialized inside probeCandidates)
       val incoming = spread(docs.filter(col("doc_id") >= 250).unionByName(
         docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))))
-      val index = MinHashLSH.bandIndex(spread(corpus), "doc_id", "text")
+          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))), "doc_id")
+      val index = MinHashLSH.bandIndex(spread(corpus, "doc_id"), "doc_id", "text")
       MinHashLSH.incrementalNearDupPairs(index, corpus, incoming,
           "doc_id", "text", 0.9)
         .select("new_id", "corpus_id")
@@ -345,8 +335,8 @@ object SparkEntry {
       // join AND the final admission anti-join
       val incoming = mat(spread(docs.filter(col("doc_id") >= 250).unionByName(
         docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))))
-      val index = MinHashLSH.bandIndex(spread(corpus), "doc_id", "text")
+          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))), "doc_id"))
+      val index = MinHashLSH.bandIndex(spread(corpus, "doc_id"), "doc_id", "text")
       MinHashLSH.incrementalNovel(index, corpus, incoming,
           "doc_id", "text", 0.9)
         .select("doc_id").orderBy("doc_id")
@@ -364,8 +354,8 @@ object SparkEntry {
       // spread: batch + corpus feed the winnow kernel off one-split scans
       val incoming = spread(docs.filter(col("doc_id") >= 250).unionByName(
         docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))))
-      val index = SubstringDedup.fpIndex(spread(corpus), "doc_id", "text")
+          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))), "doc_id")
+      val index = SubstringDedup.fpIndex(spread(corpus, "doc_id"), "doc_id", "text")
       SubstringDedup.incrementalPairs(index, corpus, incoming,
           "doc_id", "text", minLen = 200)
         .orderBy("new_id", "corpus_id")
@@ -389,9 +379,8 @@ object SparkEntry {
       // corpus's bands: batch-lane + stored-index faces)
       val incoming = mat(spread(docs.filter(col("doc_id") >= 250).unionByName(
         docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))))
-      GraftFunctions.register(s)
-      val corpusBands = mat(spread(corpus)
+          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))), "doc_id"))
+      val corpusBands = mat(spread(corpus, "doc_id")
         .select(col("doc_id").as("id"), expr("minhash_bands(text)").as("bands")))
       val incomingBands = mat(incoming
         .select(col("doc_id").as("id"), expr("minhash_bands(text)").as("bands")))
@@ -440,7 +429,7 @@ object SparkEntry {
       // joins
       val incoming = spread(docs.filter(col("doc_id") >= 250).unionByName(
         docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))))
+          .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))), "doc_id")
       // content-key equi-join, never a text-payload shuffle (ExactDedup's
       // rationale; md5 here is the oracle-stable stand-in for its paranoid
       // 128-bit key)
@@ -448,7 +437,7 @@ object SparkEntry {
       val keyed = mat(incoming.withColumn("ck", md5(col("text"))))
       val exactDup = keyed.join(ck, Seq("ck"), "left_semi")
       val rest = mat(keyed.join(ck, Seq("ck"), "left_anti").drop("ck"))
-      val index = MinHashLSH.bandIndex(spread(corpus), "doc_id", "text")
+      val index = MinHashLSH.bandIndex(spread(corpus, "doc_id"), "doc_id", "text")
       val nearIds = mat(MinHashLSH
         .incrementalNearDupPairs(index, corpus, rest, "doc_id", "text", 0.9)
         .select(col("new_id").as("doc_id")).distinct())
@@ -477,9 +466,8 @@ object SparkEntry {
       // computed twice)
       val incoming = spread(docs.filter(col("doc_id") >= 300).unionByName(
         docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 3000000L).as("doc_id"), col("text"))))
-      GraftFunctions.register(s)
-      val corpusBands = mat(spread(corpus)
+          .select((col("doc_id") + 3000000L).as("doc_id"), col("text"))), "doc_id")
+      val corpusBands = mat(spread(corpus, "doc_id")
         .select(col("doc_id").as("id"), expr("minhash_bands(text)").as("bands")))
       val pairs = MinHashLSH.verifyPairs(
           MinHashLSH.candidatePairsFromBands(corpusBands, 1000),
@@ -514,10 +502,10 @@ object SparkEntry {
       // scans
       val incoming = spread(docs.filter(col("doc_id") >= 400).unionByName(
         docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 3000000L).as("doc_id"), col("text"))))
+          .select((col("doc_id") + 3000000L).as("doc_id"), col("text"))), "doc_id")
       val merged = MinHashLSH.mergeIndexes(
-        MinHashLSH.bandIndex(spread(crawl1), "doc_id", "text"),
-        MinHashLSH.bandIndex(spread(crawl2), "doc_id", "text"))
+        MinHashLSH.bandIndex(spread(crawl1, "doc_id"), "doc_id", "text"),
+        MinHashLSH.bandIndex(spread(crawl2, "doc_id"), "doc_id", "text"))
       MinHashLSH.incrementalNearDupPairs(merged, crawl1.unionByName(crawl2),
           incoming, "doc_id", "text", 0.9)
         .select("new_id", "corpus_id")
@@ -550,7 +538,7 @@ object SparkEntry {
       // spread + materialize: the chain corpus feeds the exact n-gram lane
       // (prefix kernel + verify), the clustering and the audit's two text
       // joins — off a one-split scan otherwise
-      val corpus = mat(spread(base.unionByName(d1).unionByName(d2)))
+      val corpus = mat(spread(base.unionByName(d1).unionByName(d2), "doc_id"))
       val edges = NgramJaccard.pairs(corpus, "doc_id", "text",
           n = 5, threshold = 0.9)
         .select("id_a", "id_b")
@@ -587,7 +575,7 @@ object SparkEntry {
           .select((col("doc_id") + 2000000L).as("doc_id"),
             expr("concat(text, ' ', array_join(transform(" +
               "sequence(0, cast(greatest(size(tk0) div 6, 4) as int) - 1), " +
-              "x -> concat('f', cast(x as string))), ' '))").as("text"))))
+              "x -> concat('f', cast(x as string))), ' '))").as("text"))), "doc_id")
       val stats = mat(NgramJaccard.pairs(corpus, "doc_id", "text",
         n = 3, threshold = 0.5))
       val fine = stats.filter(col("common_grams").cast("double") /
@@ -619,7 +607,7 @@ object SparkEntry {
       // spread (regex-normalize kernel off a one-split scan) + materialize
       // the narrow key table once — `normed` feeds the keeper aggregate AND
       // the verdict join, and text is not needed past the key
-      val normed = mat(spread(corpus).select(col("doc_id"),
+      val normed = mat(spread(corpus, "doc_id").select(col("doc_id"),
         md5(trim(regexp_replace(
           regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "), " +", " "))).as("nk")))
       val keeper = normed.groupBy("nk").agg(min("doc_id").as("keeper_id"))
@@ -653,7 +641,7 @@ object SparkEntry {
           .filter(col("doc_id") % 10 === 3 && length(col("text")) >= 400)
           .select((col("doc_id") + 2000000L).as("doc_id"),
             concat(col("text"), lit(" zz"),
-              col("doc_id").cast("string")).as("text")))))
+              col("doc_id").cast("string")).as("text"))), "doc_id"))
       // one narrow (id, n_tok, ck) pass serves the keeper aggregate, both
       // loser frames and the token sums (text is tokenized/md5'd once)
       val withTok = mat(corpus.select(col("doc_id"),
@@ -788,7 +776,7 @@ object SparkEntry {
       // lambda — the tokenizer would re-run per gram, measured 4× on this
       // exact shape) + spread off the one-split scan; gram values unchanged
       val toks = "filter(split(trim(text), '\\\\s+'), x -> x != '')"
-      val grams = spread(docsWithDups(s, dir))
+      val grams = spread(docsWithDups(s, dir), "doc_id")
         .withColumn("text", when(col("doc_id") % 2 === 0,
           concat(col("text"), lit(" share this page on social media now")))
           .otherwise(col("text")))
@@ -809,8 +797,7 @@ object SparkEntry {
       // floor (token count, stopword ratio) -> exact keep-one-copy dedup
       // -> per-doc stats. Every stage is SQL-mirrorable, so the whole
       // composition is hash-checked, not just its pieces.
-      GraftFunctions.register(s)
-      val scored = spread(docsWithDups(s, dir))
+      val scored = spread(docsWithDups(s, dir), "doc_id")
         .withColumn("lang", expr("lang_id(text)"))
         .withColumn("n_tokens", size(split(trim(col("text")), "\\s+")).cast("int"))
         .withColumn("n_stop", expr("stop_count(split(trim(text), '\\\\s+'))").cast("int"))
@@ -831,7 +818,7 @@ object SparkEntry {
       // overlapping token windows (64-token chunks every 48): map-only
       // generator; chunk text fingerprinted by md5 so the dump stays
       // narrow while pinning the exact chunk contents
-      DocChunker.chunks(spread(t(s, dir, "documents")), "doc_id", "text",
+      DocChunker.chunks(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text",
           windowTokens = 64, strideTokens = 48)
         .select(col("id").as("doc_id"), col("chunk_idx"), col("chunk_tokens"),
           md5(col("chunk_text")).as("chunk_md5"))
@@ -842,7 +829,7 @@ object SparkEntry {
       // — shift-robust dedup chunks; the oracle recomputes EVERY boundary
       // from the same window hashes, so cut positions and chunk contents
       // are pinned exactly
-      DocChunker.cdcChunks(spread(t(s, dir, "documents")), "doc_id", "text",
+      DocChunker.cdcChunks(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text",
           windowTokens = 4, divisor = 16)
         .select(col("id").as("doc_id"), col("chunk_idx"),
           col("chunk_tokens").cast("long").as("chunk_tokens"),
@@ -860,7 +847,7 @@ object SparkEntry {
           concat(lit("ins"), col("doc_id").cast("string"), lit(" x y "),
             col("text")).as("text"))
       // spread: per-doc CDC chunk kernel off a one-split scan
-      DocChunker.cdcSharedChunkPairs(spread(base.union(ins)), "doc_id", "text",
+      DocChunker.cdcSharedChunkPairs(spread(base.union(ins), "doc_id"), "doc_id", "text",
           minShared = 2)
         .orderBy("id_a", "id_b")
     }),
@@ -882,8 +869,8 @@ object SparkEntry {
         .unionByName(docs.filter(col("doc_id") % 4 === 0)
           .select((col("doc_id") + 6000000L).as("doc_id"), col("text")))
       // spread: per-doc CDC chunk kernel off one-split scans on both sides
-      val index = DocChunker.cdcChunkIndex(spread(corpus), "doc_id", "text")
-      DocChunker.cdcIncrementalPairs(index, spread(batch), "doc_id", "text",
+      val index = DocChunker.cdcChunkIndex(spread(corpus, "doc_id"), "doc_id", "text")
+      DocChunker.cdcIncrementalPairs(index, spread(batch, "doc_id"), "doc_id", "text",
           minShared = 2)
         .orderBy("new_id", "corpus_id")
     }),
@@ -904,7 +891,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val bench = docs.filter(col("doc_id") % 17 === 0)
       val corpus = docs.filter(col("doc_id") % 17 =!= 0)
-      Decontaminate.flagged(spread(corpus), "doc_id", "text", bench, "text", n = 5)
+      Decontaminate.flagged(spread(corpus, "doc_id"), "doc_id", "text", bench, "text", n = 5)
         .select(col("id").as("doc_id"), col("shared_grams"))
         .orderBy("doc_id")
     }),
@@ -941,7 +928,7 @@ object SparkEntry {
     }),
     "q_minhash_neardup" -> ((s, dir) =>
       // spread: one-split scan feeding the per-doc minhash kernel
-      MinHashLSH.nearDupPairs(spread(t(s, dir, "documents")), "doc_id", "text", 0.9)
+      MinHashLSH.nearDupPairs(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text", 0.9)
         .select("id_a", "id_b")
         .orderBy("id_a", "id_b")),
     "q_ngram_jaccard" -> ((s, dir) =>
@@ -949,14 +936,14 @@ object SparkEntry {
       // candidates + integer-exact verify; DuckDB brute-forces the truth
       // from the literal gram strings. spread: per-doc shingle/prefix
       // kernel off a one-split scan.
-      NgramJaccard.pairs(spread(t(s, dir, "documents")), "doc_id", "text",
+      NgramJaccard.pairs(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text",
           n = 3, threshold = 0.5)
         .orderBy("id_a", "id_b")),
     "q_ngram_jaccard_df" -> ((s, dir) =>
       // the df-ordered-prefix variant against the SAME truth: on a corpus
       // where no gram caps, the hot-last order must be result-invisible
       // (NgramJaccardSpec covers the capped case where the orders differ)
-      NgramJaccard.pairs(spread(t(s, dir, "documents")), "doc_id", "text",
+      NgramJaccard.pairs(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text",
           n = 3, threshold = 0.5, dfOrdered = true)
         .orderBy("id_a", "id_b")),
     "q_dedup_sweep" -> ((s, dir) => {
@@ -969,7 +956,7 @@ object SparkEntry {
       // (c*10 >= t10*u), so the sweep is drift-free across engines; at
       // corpus scale this is 1 shingle scan + 1 bucket join for the whole
       // sweep instead of one lane run per threshold.
-      val scored = NgramJaccard.pairs(spread(t(s, dir, "documents")), "doc_id", "text",
+      val scored = NgramJaccard.pairs(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text",
           n = 3, threshold = 0.5)
         .select(col("id_a"), col("id_b"),
           col("common_grams").cast("long").as("c"),
@@ -1003,7 +990,7 @@ object SparkEntry {
         .select((col("doc_id") + 1000000L).as("doc_id"),
           concat(col("_pfx"), lit(" zz"), col("doc_id").cast("string")).as("text"))
       // spread: one-split scan feeding the per-doc flagged-gram kernel
-      NgramJaccard.containmentPairs(spread(base.union(derived)), "doc_id", "text",
+      NgramJaccard.containmentPairs(spread(base.union(derived), "doc_id"), "doc_id", "text",
           n = 3, tNum = 4, tDen = 5)
         .orderBy("id_a", "id_b")
     }),
@@ -1022,12 +1009,11 @@ object SparkEntry {
       // pipeline actually ships with. The pair list itself stays
       // SQL-inexpressible (simhash64 kernel), so the lane emits its
       // claims, not its rows.
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents").filter(col("doc_id") < 2000)
       // one simhash pass (materialized) serves the brute-force self-join
       // AND the lane; lane + brute are materialized because the claim
       // aggregates below consume each 3-5 times
-      val sims = mat(spread(docs)
+      val sims = mat(spread(docs, "doc_id")
         .select(col("doc_id").as("id"), expr("simhash64(text)").as("sim")))
       val brute = mat(sims.select(col("id").as("id_a"), col("sim").as("sim_a"))
         .join(broadcast(sims.select(col("id").as("id_b"), col("sim").as("sim_b"))),
@@ -1058,11 +1044,10 @@ object SparkEntry {
       // match it pair-for-pair. Both directions are checked in-plan (the
       // simhash kernel itself is not SQL-expressible, so the oracle pins
       // the zero counts — q_ann_ivf-style self-verification).
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents").filter(col("doc_id") < 2000)
       // one simhash pass (materialized) serves the brute-force self-join
       // AND the lane; both claim frames consumed twice below
-      val sims = mat(spread(docs)
+      val sims = mat(spread(docs, "doc_id")
         .select(col("doc_id").as("id"), expr("simhash64(text)").as("sim")))
       val brute = mat(sims.select(col("id").as("id_a"), col("sim").as("sim_a"))
         .join(broadcast(sims.select(col("id").as("id_b"), col("sim").as("sim_b"))),
@@ -1089,7 +1074,6 @@ object SparkEntry {
       // the in-plan brute-force cross Hamming truth must match pair-for-
       // pair (q_simhash_complete-style self-verification; the simhash
       // kernel itself stays SQL-inexpressible, so the lane emits claims).
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents").select("doc_id", "text")
       val corpus = docs.filter(col("doc_id") < 250)
       val incoming = docs.filter(col("doc_id") >= 250).unionByName(
@@ -1099,9 +1083,9 @@ object SparkEntry {
       // scan): corpus hashes serve the brute-force cross AND the stored
       // probe index; batch hashes serve the cross AND the lane probe. The
       // lane is materialized — the three claim aggregates each consume it.
-      val simsC = mat(spread(corpus)
+      val simsC = mat(spread(corpus, "doc_id")
         .select(col("doc_id").as("id"), expr("simhash64(text)").as("sim")))
-      val simsI = mat(spread(incoming)
+      val simsI = mat(spread(incoming, "doc_id")
         .select(col("doc_id").as("new_id"), expr("simhash64(text)").as("sim_n")))
       val brute = simsI.select(col("new_id").as("nid"), col("sim_n").as("sn"))
         .crossJoin(broadcast(simsC.select(col("id").as("cid"), col("sim").as("sc"))))
@@ -1149,7 +1133,6 @@ object SparkEntry {
       // anchored wildcard, and an agent-specific vs * group split; the
       // path pattern cycles by doc_id and the oracle pins the expected
       // verdicts from the same arithmetic.
-      GraftFunctions.register(s)
       val robots =
         "User-agent: GraftBot\nDisallow: /private/\nAllow: /private/pub*\n" +
           "Disallow: /*.pdf$\n\nUser-agent: *\nDisallow: /\n"
@@ -1174,7 +1157,6 @@ object SparkEntry {
       // + math-sign variants); the oracle rebuilds the same text and
       // counts every class with the literal range regexes the kernel
       // ranges state
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .withColumn("_t", concat(col("text"), expr(
           "CASE CAST(doc_id % 4 AS INT) WHEN 1 THEN ' Привет мир'" +
@@ -1194,7 +1176,6 @@ object SparkEntry {
       // non-vacuous — the oracle pins all four booleans from the same
       // arithmetic. (The corpus fixture is pure ascii; suffix variant 1
       // adds CJK, variant 2 adds cp1252-range punctuation.)
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .withColumn("_dec", concat(col("text"), expr(
           "CASE CAST(doc_id % 3 AS INT) WHEN 1 THEN ' café 中文'" +
@@ -1219,14 +1200,12 @@ object SparkEntry {
       BigramLm.scoreInterpolated(d, "doc_id", "text", uni, bi, tri).orderBy("doc_id")
     }),
     "q_lang_id" -> ((s, dir) => {
-      GraftFunctions.register(s)
       t(s, dir, "documents").select(col("doc_id"), expr("lang_id(text)").as("lang_guess"))
     }),
     "q_quality" -> ((s, dir) => {
       // stopword counting via compiled UDF: Catalyst HOF lambdas (filter/
       // array_contains per token) are interpreted per element — the UDF loop
       // is the same pattern PairGen established
-      GraftFunctions.register(s)
       t(s, dir, "documents").select(
         col("doc_id"),
         length(col("text")).cast("int").as("n_chars_c"),
@@ -1240,7 +1219,6 @@ object SparkEntry {
       // evidence a training pipeline applies before dedup); exact integer
       // counts so DuckDB mirrors them verbatim. Map-only: one kernel pass
       // per document, no token-level shuffle at any corpus size.
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"), expr("rep_stats(text)").as("r"))
         .select(col("doc_id"),
@@ -1259,7 +1237,6 @@ object SparkEntry {
       // the same arithmetic — so the kernel must undo every mess exactly,
       // end-to-end, including the registrable-domain suffix logic
       // (site{N}.example.co.uk -> example.co.uk).
-      GraftFunctions.register(s)
       val i = col("doc_id")
       val raw = concat(
         when(i % 2 === 0, "HTTP").otherwise("https"), lit("://"),
@@ -1284,7 +1261,6 @@ object SparkEntry {
       // arithmetic; the oracle rebuilds the expected ordered link list
       // from the same arithmetic. posexplode pins the ORDER, not just the
       // set. Map-only at any corpus size.
-      GraftFunctions.register(s)
       t(s, dir, "documents").select(col("doc_id"), anchorHtml.as("html"))
         .select(col("doc_id"), posexplode(expr("outlinks(html)")))
         .select(col("doc_id"), col("pos").as("link_idx"), col("col").as("link"))
@@ -1297,7 +1273,7 @@ object SparkEntry {
       // CDC is what makes footers align across different-length docs. The
       // oracle recomputes chunks, host dfs, flags, and the cleaned text.
       // spread: per-doc CDC chunk + template construction off a one-split scan
-      val deco = spread(t(s, dir, "documents")).select(col("doc_id"),
+      val deco = spread(t(s, dir, "documents"), "doc_id").select(col("doc_id"),
         expr("concat('h', CAST(doc_id % 20 AS STRING))").as("host"),
         expr("concat(" +
           "array_join(transform(sequence(0, 47), j -> concat('b'," +
@@ -1316,7 +1292,6 @@ object SparkEntry {
       // link (publisher-declared dedup key) + robots index/follow gating,
       // composed with url_normalize into the actual canonical KEY; html
       // built from doc_id arithmetic, oracle rebuilds every field
-      GraftFunctions.register(s)
       t(s, dir, "documents").select(col("doc_id"), headHtml.as("html"))
         .select(col("doc_id"), expr("head_meta(html)").as("m"))
         .select(col("doc_id"), col("m.canonical").as("canonical"),
@@ -1330,7 +1305,6 @@ object SparkEntry {
       // keep the smallest doc_id — the cheapest dedup lane of a crawl
       // (no content touched at all); map-only extract + one narrow-key
       // aggregate
-      GraftFunctions.register(s)
       t(s, dir, "documents").select(col("doc_id"), headHtml.as("html"))
         .select(col("doc_id"), expr("head_meta(html).canonical").as("c"))
         .filter(col("c") =!= "")
@@ -1344,7 +1318,6 @@ object SparkEntry {
       // link analysis). Relative links have no host and drop out; the
       // oracle rebuilds the expected host histogram from the same
       // arithmetic as q_outlinks' anchors.
-      GraftFunctions.register(s)
       t(s, dir, "documents").select(col("doc_id"), anchorHtml.as("html"))
         .select(explode(expr("outlinks(html)")).as("link"))
         .select(expr("url_host(link)").as("host"))
@@ -1361,7 +1334,6 @@ object SparkEntry {
       //   2*n_tokens <= sum_word_len <= 12*n_tokens (mean word len in [2,12])
       //   100*n_stop >= 3*n_tokens                  (stopword ratio >= 3%)
       //   5*top_tok_cnt <= n_tokens                 (top token <= 20%)
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .withColumn("r", expr("rep_stats(text)"))
         .select(col("doc_id"),
@@ -1384,7 +1356,6 @@ object SparkEntry {
       // admitted. Over docsWithDups so the dup-loser arm actually fires
       // (every 10th doc re-appears under id+10^6 and must lose to its
       // original). The oracle recomputes every gate and the priority.
-      GraftFunctions.register(s)
       val d = docsWithDups(s, dir)
       val metaRaw = d.select(col("doc_id"), headHtml.as("html"))
         .select(col("doc_id"), expr("head_meta(html).noindex").as("noindex"))
@@ -1464,10 +1435,9 @@ object SparkEntry {
       // the same outlink arithmetic as q_host_graph, with src hosts from
       // doc_id arithmetic. All-integer iterate -> the oracle unrolls the
       // identical recurrence as chained CTEs and the compare is strict.
-      GraftFunctions.register(s)
       // spread: the outlinks html-parse kernel runs per doc off a
       // one-split scan
-      val edges = spread(t(s, dir, "documents"))
+      val edges = spread(t(s, dir, "documents"), "doc_id")
         .select(col("doc_id"), anchorHtml.as("html"))
         .select(
           concat(lit("src"), (col("doc_id") % 13).cast("string"),
@@ -1483,9 +1453,8 @@ object SparkEntry {
       // authority; a content site the reverse). Unnormalized int64 HITS,
       // 2 rounds, so like PageRank the iterate is order-free and the
       // oracle unrolls the identical recurrence as chained CTEs.
-      GraftFunctions.register(s)
       // spread: same one-split html-parse shape as q_host_rank
-      val edges = spread(t(s, dir, "documents"))
+      val edges = spread(t(s, dir, "documents"), "doc_id")
         .select(col("doc_id"), anchorHtml.as("html"))
         .select(
           concat(lit("src"), (col("doc_id") % 13).cast("string"),
@@ -1545,12 +1514,11 @@ object SparkEntry {
       // from integer HOF counts over the same token arrays the oracle
       // rebuilds — both engines sum the same integers and divide once, so
       // bucket boundaries are engine-identical by construction.
-      GraftFunctions.register(s)
       // spread (one-split scan, 2 ICWS signatures/row) + tokenize once (the
       // rep-prefix expr evaluated the tokenizer twice per row); values
       // unchanged — same expressions over the same token array
       val base = spread(t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .filter(trim(col("text")) =!= "").filter(col("doc_id") % 5 === 0))
+        .filter(trim(col("text")) =!= "").filter(col("doc_id") % 5 === 0), "doc_id")
       def toks(c: String) = s"filter(split(trim($c), '\\\\s+'), x -> x != '')"
       val junk = "array_join(transform(sequence(1, 1 + CAST(doc_id % 50 AS INT)), " +
         "i -> concat('z', CAST(doc_id AS STRING), 'x', CAST(i AS STRING))), ' ')"
@@ -1593,7 +1561,6 @@ object SparkEntry {
       // fallback cannot engage). The weighted kernel is not
       // SQL-expressible, so the oracle pins the zero counts
       // (q_simhash_complete-style).
-      GraftFunctions.register(s)
       // id cap 600 keeps the all-pairs brute force constant-size at every
       // sf (sf0.001/sf0.01 have 500 docs — rows unchanged); 150 planted
       // variants keep the gate far from vacuous
@@ -1608,7 +1575,7 @@ object SparkEntry {
       // spread (id-capped fixture, one-split scan, ICWS kernel per row) +
       // materialize: `all` feeds the lane's band build, both lane verify
       // sides, and both histogram sides of the brute-force truth
-      val all = mat(spread(docs0.unionByName(variants)))
+      val all = mat(spread(docs0.unionByName(variants), "doc_id"))
       val lane = MinHashLSH.weightedNearDupPairs(all, "doc_id", "text",
           threshold = 0.9, maxBucketSize = 8192)
         .select("id_a", "id_b")
@@ -1639,7 +1606,6 @@ object SparkEntry {
       // threshold 0.9 — the 16×8 S-curve's collision probability is
       // ≥ 0.9999 there, so row equality is a sound pin (at ~0.8 LSH
       // honestly loses a few percent and equality would pin luck).
-      GraftFunctions.register(s)
       val docs = t(s, dir, "documents").filter(trim(col("text")) =!= "")
         .select("doc_id", "text")
       val corpus = docs.filter(col("doc_id") < 250)
@@ -1658,8 +1624,8 @@ object SparkEntry {
       // spread both id-capped sides (one-split scans feeding the ICWS
       // kernel); materialize the batch — it feeds the lane's probe build,
       // the lane's verify side, and the brute-force histogram side
-      val incoming = mat(spread(incoming0))
-      val corpusS = spread(corpus)
+      val incoming = mat(spread(incoming0, "doc_id"))
+      val corpusS = spread(corpus, "doc_id")
       val lane = MinHashLSH.weightedIncrementalPairs(
           MinHashLSH.weightedBandIndex(corpusS, "doc_id", "text"),
           corpus, incoming, "doc_id", "text", threshold = 0.9,
@@ -1685,7 +1651,7 @@ object SparkEntry {
       // ALL-terms coverage, bounded top-10 per query by (tf desc, id asc)
       // via the MinNPair aggregate — integer scoring, strict oracle.
       import s.implicits._
-      val p = SearchIndex.postings(spread(t(s, dir, "documents")), "doc_id", "text")
+      val p = SearchIndex.postings(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text")
       val qs = Seq(
         (0L, Seq("customer", "window", "vector")),
         (1L, Seq("spark", "merge")),
@@ -1699,7 +1665,7 @@ object SparkEntry {
       // bounded MinNPair top-k — the oracle runs the IDENTICAL integer
       // formula, so rank order AND scores hash-match strictly.
       import s.implicits._
-      val p = SearchIndex.postings(spread(t(s, dir, "documents")), "doc_id", "text")
+      val p = SearchIndex.postings(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text")
       val qs = Seq(
         (0L, Seq("customer", "the")),          // rare + stopword-common mix
         (1L, Seq("spark", "window", "merge")),
@@ -1714,7 +1680,7 @@ object SparkEntry {
       // replace-count oracle would undercount self-overlapping phrases,
       // so the oracle recomputes positionally too)
       import s.implicits._
-      val pp = SearchIndex.positionalPostings(spread(t(s, dir, "documents")), "doc_id", "text")
+      val pp = SearchIndex.positionalPostings(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text")
       val phrases = Seq(
         (0L, Seq("batch", "batch")),       // dup term, self-overlapping
         (1L, Seq("scan", "merge")),
@@ -1730,7 +1696,7 @@ object SparkEntry {
       // copies lose ALL their chunks — keep/remove counts per doc. The
       // keeper choice is a min(struct) aggregate on the chunk hash, never
       // a per-hash window.
-      val ch = DocChunker.chunks(spread(docsWithDups(s, dir)), "doc_id", "text",
+      val ch = DocChunker.chunks(spread(docsWithDups(s, dir), "doc_id"), "doc_id", "text",
           windowTokens = 32, strideTokens = 32)
         .select(col("id").as("doc_id"), col("chunk_idx"),
           md5(col("chunk_text")).as("h"))
@@ -1791,14 +1757,13 @@ object SparkEntry {
       // windowed token co-occurrence (window 3, unordered pairs, top 50):
       // map-only per-doc pair generation, only (pair -> partial count)
       // rows shuffle; the oracle is the positional self-join definition
-      Cooccur.top(spread(t(s, dir, "documents")), "text", window = 3, k = 50)),
+      Cooccur.top(spread(t(s, dir, "documents"), "doc_id"), "text", window = 3, k = 50)),
     "q_anchor_text" -> ((s, dir) => {
       // anchor-text aggregation per target host (inlink descriptions —
       // the link-graph relevance signal): anchors() captures (href, text)
       // with inner markup stripped; relative links have no host and drop.
       // Anchor text synthesized from doc_id arithmetic, mirrored verbatim
       // in the oracle.
-      GraftFunctions.register(s)
       val i = col("doc_id")
       val html = concat(
         lit("""<p>intro</p><a href="https://out"""), (i * 7 % 20).cast("string"),
@@ -1818,7 +1783,7 @@ object SparkEntry {
       // the keep boundary is drift-free and the oracle runs the IDENTICAL
       // model. Swapping in trained weights = swapping the weight column
       // for a broadcast-joined lookup; the plan shape stays this one.
-      spread(t(s, dir, "documents"))
+      spread(t(s, dir, "documents"), "doc_id")
         .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
         .filter(col("tok") =!= "")
         .withColumn("w",
@@ -1867,7 +1832,7 @@ object SparkEntry {
       // bounded MinNPair cap keeps each arithmetic domain's top 3 by
       // (margin desc, id asc); oracle = the textbook window over the
       // identical margin model
-      val scored = spread(t(s, dir, "documents"))
+      val scored = spread(t(s, dir, "documents"), "doc_id")
         .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
         .filter(col("tok") =!= "")
         .withColumn("w",
@@ -1949,7 +1914,6 @@ object SparkEntry {
 
     // --------------------------------------------------- sketch operators
     "q_theta_distinct" -> ((s, dir) => {
-      GraftFunctions.register(s)
       t(s, dir, "events")
         .groupBy("event_type")
         .agg(expr("theta_sketch(user_id)").as("th"))
@@ -1957,7 +1921,6 @@ object SparkEntry {
           expr("cast(theta_estimate(th) as bigint)").as("distinct_users"))
     }),
     "q_req_stats" -> ((s, dir) => {
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .groupBy("lang")
         .agg(expr("req_sketch(n_chars)").as("sk"))
@@ -1975,7 +1938,6 @@ object SparkEntry {
     // TRUE — a bound violation (like r1's 3%-recall LSH lane) flips the
     // hash red instead of hiding behind a rows-only check.
     "q_req_quantiles" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val li = t(s, dir, "lineitem")
       val est = li.groupBy("l_returnflag")
         .agg(expr("req_sketch(l_extendedprice, 12, true)").as("sk"),
@@ -1998,7 +1960,6 @@ object SparkEntry {
           okCol("q99", "lb99", "ub99").as("p99_ok"))
     }),
     "q_kll_quantiles" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val li = t(s, dir, "lineitem")
       val est = li.groupBy("l_returnflag")
         .agg(expr("kll_sketch(l_extendedprice)").as("sk"), count(lit(1)).as("cnt"))
@@ -2016,7 +1977,6 @@ object SparkEntry {
           okCol("q95", 0.95).as("p95_ok"))
     }),
     "q_hll_distinct" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val rse = 1.04 / math.sqrt((1L << graft.core.HllSketch.DefaultLgK).toDouble)
       t(s, dir, "events")
         .groupBy("event_type")
@@ -2027,7 +1987,6 @@ object SparkEntry {
             greatest(lit(1.0), lit(3.0 * rse) * col("exact_users"))).as("hll_ok"))
     }),
     "q_theta_set_ops" -> ((s, dir) => {
-      GraftFunctions.register(s)
       val ev = t(s, dir, "events")
       val sketches = ev.filter(col("event_type").isin("click", "view"))
         .groupBy("event_type").agg(expr("theta_sketch(user_id)").as("th"))
@@ -2070,7 +2029,6 @@ object SparkEntry {
       // denominator from one theta pair per event-type pair; exact-mode
       // sketches at this SF ⇒ the oracle's exact distinct counts match
       // bit-for-bit (q_theta_set_ops precedent)
-      GraftFunctions.register(s)
       val ev = t(s, dir, "events")
       val sketches = ev.filter(col("event_type").isin("click", "view", "purchase"))
         .groupBy("event_type").agg(expr("theta_sketch(user_id)").as("th"))
@@ -2098,7 +2056,6 @@ object SparkEntry {
       // Heavy-hitter containment/topK exactness on skewed streams is pinned
       // in FreqSketchSpec (this corpus is near-uniform, so dominance is
       // structurally impossible at any m < nDistinct).
-      GraftFunctions.register(s)
       val m = 8
       val toks = t(s, dir, "documents")
         .select(col("lang"), explode(split(trim(col("text")), "\\s+")).as("tok"))
@@ -2135,7 +2092,6 @@ object SparkEntry {
       // The probabilistic eps bound lives in CmsSketchSpec; exact
       // distributivity (any merge schedule == single pass, byte-identical)
       // in CmsSketchSpec + SketchAggSpec.
-      GraftFunctions.register(s)
       val toks = t(s, dir, "documents")
         .select(col("lang"), explode(split(trim(col("text")), "\\s+")).as("tok"))
       val sk = toks.groupBy("lang")
@@ -2265,7 +2221,7 @@ object SparkEntry {
       // consumers below (each was re-running its whole subplan per
       // consumer)
       val e = mat(spread(embWithDups(s, dir)
-        .filter(col("vec_id") % 1000000L < 2000), by = "vec_id"))
+        .filter(col("vec_id") % 1000000L < 2000), "vec_id"))
       val thr = 0.85
       val cents = IvfIndex.fitCentroids(e, "vec_id", "v", k = 16, iters = 5)
       val ids = e.select(col("vec_id").cast("long").as("vec_id"))
@@ -2306,7 +2262,6 @@ object SparkEntry {
       // original column. (The north-rule pages generator's richer html —
       // entities, scripts, nested tags — is covered by HtmlTextSpec and the
       // pipeline's per-url raise_error invariant.)
-      GraftFunctions.register(s)
       t(s, dir, "documents")
         .withColumn("html",
           concat(lit("<html><head><title>t</title></head><body>\n  <p>"),
@@ -2329,7 +2284,7 @@ object SparkEntry {
       // brute-forces all gram-sharing pairs and replays the same integer
       // arithmetic, hash-exact. spread: one-split scan, per-doc prefix
       // kernel + per-pair verify.
-      NgramJaccard.topKSimilar(spread(t(s, dir, "documents")), "doc_id", "text",
+      NgramJaccard.topKSimilar(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text",
           n = 3, k = 3, t10 = 3)
         .orderBy("doc_id", "neighbor_id")),
     "q_incremental_excise" -> ((s, dir) => {
@@ -2364,7 +2319,7 @@ object SparkEntry {
       // most distinct docs, each with its lexicographically-minimal
       // (doc, 1-based pos) example — integer-only unique ordering, so the
       // oracle's literal-gram recompute hash-matches row for row
-      SpanExcision.topSpans(spread(t(s, dir, "documents")), "doc_id", "text",
+      SpanExcision.topSpans(spread(t(s, dir, "documents"), "doc_id"), "doc_id", "text",
         spanLen = 200, k = 20)),
     "q_span_excise" -> ((s, dir) =>
       // the REWRITE tier of substring dedup (Lee et al., ACL'22): every char

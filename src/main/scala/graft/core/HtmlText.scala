@@ -122,29 +122,9 @@ object HtmlText {
 
   def outlinks(html: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer[String]()
-    val n = html.length
-    var i = 0
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (html.startsWith("<!--", i)) {
-          val end = html.indexOf("-->", i + 4)
-          i = if (end < 0) n else end + 3
-        } else {
-          val close = html.indexOf('>', i)
-          if (close < 0) { i = n }
-          else {
-            val inner = html.substring(i + 1, close).trim
-            if (!inner.startsWith("/")) {
-              val sp = inner.indexWhere(ch => ch.isWhitespace || ch == '/')
-              val name = (if (sp < 0) inner else inner.substring(0, sp)).toLowerCase
-              if (name == "a") attrValue(inner, "href").filter(_.nonEmpty)
-                .foreach(v => out += v.replace("&amp;", "&"))
-            }
-            i = close + 1
-          }
-        }
-      } else i += 1
+    startTags(html) { (inner, name, _) =>
+      if (name == "a") attrValue(inner, "href").filter(_.nonEmpty)
+        .foreach(v => out += v.replace("&amp;", "&"))
     }
     out.toArray
   }
@@ -162,32 +142,12 @@ object HtmlText {
 
   def anchors(html: String): Array[(String, String)] = {
     val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    val n = html.length
-    var i = 0
-    while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
-        if (html.startsWith("<!--", i)) {
-          val end = html.indexOf("-->", i + 4)
-          i = if (end < 0) n else end + 3
-        } else {
-          val close = html.indexOf('>', i)
-          if (close < 0) { i = n }
-          else {
-            val inner = html.substring(i + 1, close).trim
-            if (!inner.startsWith("/")) {
-              val sp = inner.indexWhere(ch => ch.isWhitespace || ch == '/')
-              val name = (if (sp < 0) inner else inner.substring(0, sp)).toLowerCase
-              if (name == "a") attrValue(inner, "href").filter(_.nonEmpty).foreach { v =>
-                val textEnd = indexOfIgnoreCase(html, "</a", close + 1)
-                val raw = html.substring(close + 1, if (textEnd < 0) n else textEnd)
-                out += ((v.replace("&amp;", "&"), collapseText(raw)))
-              }
-            }
-            i = close + 1
-          }
-        }
-      } else i += 1
+    startTags(html) { (inner, name, close) =>
+      if (name == "a") attrValue(inner, "href").filter(_.nonEmpty).foreach { v =>
+        val textEnd = indexOfIgnoreCase(html, "</a", close + 1)
+        val raw = html.substring(close + 1, if (textEnd < 0) html.length else textEnd)
+        out += ((v.replace("&amp;", "&"), collapseText(raw)))
+      }
     }
     out.toArray
   }
@@ -212,47 +172,57 @@ object HtmlText {
     var canonical = ""
     var noindex = false
     var nofollow = false
+    startTags(html) { (inner, name, _) =>
+      if (name == "link") {
+        if (attrValue(inner, "rel").exists(_.trim.equalsIgnoreCase("canonical")) &&
+          canonical.isEmpty)
+          attrValue(inner, "href").filter(_.nonEmpty)
+            .foreach(v => canonical = v.replace("&amp;", "&"))
+      } else if (name == "meta") {
+        if (attrValue(inner, "name").exists(_.trim.equalsIgnoreCase("robots")))
+          attrValue(inner, "content").foreach { content =>
+            content.split(',').foreach { tok =>
+              tok.trim.toLowerCase match {
+                case "noindex"  => noindex = true
+                case "nofollow" => nofollow = true
+                case "none"     => noindex = true; nofollow = true
+                case _          => ()
+              }
+            }
+          }
+      }
+    }
+    HeadMeta(canonical, noindex, nofollow)
+  }
+
+  /** The one start-tag walk of [[outlinks]], [[anchors]] and [[headMeta]]:
+    * calls `f(inner, name, close)` for every start tag in document order,
+    * where `inner` is the trimmed text between `<` and the `>` at index
+    * `close`, and `name` the lower-cased tag name. Comments are skipped, end
+    * tags ignored, and scanning resumes right after each tag's `>`; an
+    * unterminated tag ends the walk. */
+  private def startTags(html: String)(f: (String, String, Int) => Unit): Unit = {
     val n = html.length
     var i = 0
     while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<') {
+      if (html.charAt(i) == '<') {
         if (html.startsWith("<!--", i)) {
           val end = html.indexOf("-->", i + 4)
           i = if (end < 0) n else end + 3
         } else {
           val close = html.indexOf('>', i)
-          if (close < 0) { i = n }
+          if (close < 0) i = n
           else {
             val inner = html.substring(i + 1, close).trim
             if (!inner.startsWith("/")) {
               val sp = inner.indexWhere(ch => ch.isWhitespace || ch == '/')
-              val name = (if (sp < 0) inner else inner.substring(0, sp)).toLowerCase
-              if (name == "link") {
-                if (attrValue(inner, "rel").exists(_.trim.equalsIgnoreCase("canonical")) &&
-                  canonical.isEmpty)
-                  attrValue(inner, "href").filter(_.nonEmpty)
-                    .foreach(v => canonical = v.replace("&amp;", "&"))
-              } else if (name == "meta") {
-                if (attrValue(inner, "name").exists(_.trim.equalsIgnoreCase("robots")))
-                  attrValue(inner, "content").foreach { content =>
-                    content.split(',').foreach { tok =>
-                      tok.trim.toLowerCase match {
-                        case "noindex"  => noindex = true
-                        case "nofollow" => nofollow = true
-                        case "none"     => noindex = true; nofollow = true
-                        case _          => ()
-                      }
-                    }
-                  }
-              }
+              f(inner, (if (sp < 0) inner else inner.substring(0, sp)).toLowerCase, close)
             }
             i = close + 1
           }
         }
       } else i += 1
     }
-    HeadMeta(canonical, noindex, nofollow)
   }
 
   private def indexOfIgnoreCase(s: String, needle: String, from: Int): Int = {

@@ -111,7 +111,6 @@ object BucketedPairs {
   /** Candidate edges (id_a < id_b), NOT deduplicated across keys — callers
     * `.distinct()` after unioning bands/probes. Eager (see object doc). */
   def edges(members: DataFrame, keyCols: Seq[String], idCol: String, cap: Int): DataFrame = {
-    GraftFunctions.register(members.sparkSession)
     val keys = keyCols.map(col)
     val id = col(idCol).cast("long")
     val rows = members.where(keys.map(_.isNotNull).reduce(_ && _))
@@ -131,7 +130,7 @@ object BucketedPairs {
     // handled inside the compiled pair_combos kernel
     val keptPairs = buckets
       .filter(col("s.ids").isNotNull)
-      .select(explode(expr(s"pair_combos(s.ids, $cap)")).as("p"))
+      .select(explode(GraftFunctions.call("pair_combos", col("s.ids"), lit(cap))).as("p"))
       .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
 
     if (monsterCount == 0L) keptPairs

@@ -308,15 +308,13 @@ object ConnectedComponents {
                     textCol: String, threshold: Double,
                     auditK: Int = 10): DataFrame = {
     require(auditK >= 2, s"auditK must be >= 2, got $auditK")
-    graft.spark.GraftFunctions.register(texts.sparkSession)
-    val minN = udaf(new DomainCap.MinNAgg(auditK),
-      org.apache.spark.sql.Encoders.scalaLong)
+    val minN = FixedSample.minN(new FixedSample.MinNPairAgg(auditK))
     // clusters carry the CC output contract (id, component); idCol/textCol
     // name the TEXT table's columns
     val cl = clusters.select(col("component").cast("long").as("component"),
       col("id").cast("long").as("id"))
     val audited = cl.groupBy("component")
-      .agg(count(lit(1)).as("size"), minN(col("id")).as("members"))
+      .agg(count(lit(1)).as("size"), minN(col("id"), col("id")).as("members"))
       .filter(col("size") >= 2)
     val m = audited.select(col("component"), col("size"),
       posexplode(col("members")).as(Seq("pos", "mid")))
@@ -328,7 +326,7 @@ object ConnectedComponents {
     pairs
       .join(t.withColumnRenamed("_tid", "id_a").withColumnRenamed("_t", "t_a"), "id_a")
       .join(t.withColumnRenamed("_tid", "id_b").withColumnRenamed("_t", "t_b"), "id_b")
-      .withColumn("j", expr("jaccard_shingles(t_a, t_b)"))
+      .withColumn("j", graft.spark.GraftFunctions.call("jaccard_shingles", col("t_a"), col("t_b")))
       .groupBy("component", "size")
       .agg(count(lit(1)).as("pairs_checked"),
         sum(when(col("j") < threshold, 1L).otherwise(0L)).as("pairs_below"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.spark.GraftFunctions.call
 
 /** Exact deduplication by content hash — the linear lane that also covers
   * whatever the LSH lane's hot-bucket cap drops (template/boilerplate
@@ -51,7 +52,6 @@ object ExactDedup {
     * that genuinely want bigger groups raise the bound explicitly. */
   def pairs(docs: DataFrame, idCol: String, textCol: String,
             paranoid: Boolean = false, maxGroupSize: Int = 1 << 16): DataFrame = {
-    graft.spark.GraftFunctions.register(docs.sparkSession)
     val hashed = docs.select(contentKey(textCol, paranoid).as("h"), col(idCol).as("id"))
     val grouped = hashed.groupBy("h").agg(collect_list("id").as("ids"))
       .filter(size(col("ids")) > 1)
@@ -63,7 +63,7 @@ object ExactDedup {
           lit(s"ExactDedup.pairs: duplicate group exceeds maxGroupSize=$maxGroupSize (size "),
           size(col("ids")),
           lit("); use starEdges for clustering or raise maxGroupSize")))).as("ids"))
-      .select(explode(expr(s"pair_combos(ids, ${Int.MaxValue})")).as("p"))
+      .select(explode(call("pair_combos", col("ids"), lit(Int.MaxValue))).as("p"))
       .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
   }
 
@@ -160,7 +160,7 @@ object ExactDedup {
   def corpusBloom(corpus: DataFrame, textCol: String,
                   expectedItems: Long, fpp: Double = 0.01): Array[Byte] =
     corpus.select(xxhash64(col(textCol)).as("_bh"))
-      .agg(graft.spark.GraftFunctions.bloom_agg(col("_bh"), expectedItems, fpp))
+      .agg(call("bloom_agg", col("_bh"), lit(expectedItems), lit(fpp)))
       .first().getAs[Array[Byte]](0)
 
   /** [[corpusBloom]]'s DELETABLE twin: a counting Bloom filter
@@ -174,7 +174,7 @@ object ExactDedup {
   def corpusCountingBloom(corpus: DataFrame, textCol: String,
                           expectedItems: Long, fpp: Double = 0.01): Array[Byte] =
     corpus.select(xxhash64(col(textCol)).as("_bh"))
-      .agg(graft.spark.GraftFunctions.cbloom_agg(col("_bh"), expectedItems, fpp))
+      .agg(call("cbloom_agg", col("_bh"), lit(expectedItems), lit(fpp)))
       .first().getAs[Array[Byte]](0)
 
   /** Retire a batch of INSERTED keys (survivor selection's cluster losers)
@@ -273,8 +273,7 @@ object ExactDedup {
     corpus.select(xxhash64(col(textCol)).as("_bh"))
       .withColumn("shard", col("_bh").bitwiseAND(lit((shards - 1).toLong)).cast("int"))
       .groupBy("shard")
-      .agg(graft.spark.GraftFunctions.bloom_agg(col("_bh"), expectedItemsPerShard, fpp)
-        .as("filter"))
+      .agg(call("bloom_agg", col("_bh"), lit(expectedItemsPerShard), lit(fpp)).as("filter"))
   }
 
   /** [[incrementalSurvivorsBloom]] without a broadcast: batch rows are

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.TextOps
+import graft.spark.GraftFunctions.call
 
 /** MinHash + LSH near-duplicate detection (north-rule lane 1:
   * 5-gram shingles → 128-perm MinHash → 16x8 banding → bucket candidate
@@ -34,11 +35,10 @@ object MinHashLSH {
   /** Candidate pairs (idA < idB) from LSH banding over `textCol`. */
   def candidatePairs(docs: DataFrame, idCol: String, textCol: String,
                      maxBucketSize: Int = 1000): DataFrame = {
-    graft.spark.GraftFunctions.register(docs.sparkSession)
     // id + 16 band keys per doc, signatures never materialized to a shuffle
     candidatePairsFromBands(
       docs.select(col(idCol).as("id"),
-        expr(s"minhash_bands($textCol)").as("bands")),
+        call("minhash_bands", col(textCol)).as("bands")),
       maxBucketSize)
   }
 
@@ -56,7 +56,7 @@ object MinHashLSH {
   }
 
   /** Exact verify join: candidates back to texts, decided by `kernel`
-    * (a registered symmetric text-similarity SQL function) so LSH can
+    * (the name of a symmetric text-similarity graft function) so LSH can
     * only lose recall, never create false positives. The default kernel
     * is exact shingle Jaccard; the weighted lane passes its Σmin/Σmax
     * multiset kernel through the SAME body — any fix to the join shape
@@ -65,12 +65,11 @@ object MinHashLSH {
                   textCol: String, threshold: Double,
                   kernel: String = "jaccard_shingles",
                   scoreCol: String = "jaccard"): DataFrame = {
-    graft.spark.GraftFunctions.register(texts0.sparkSession)
     val texts = texts0.select(col(idCol).as("id"), col(textCol).as("t"))
     cands
       .join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("t", "t_a"), "id_a")
       .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("t", "t_b"), "id_b")
-      .withColumn(scoreCol, expr(s"$kernel(t_a, t_b)"))
+      .withColumn(scoreCol, call(kernel, col("t_a"), col("t_b")))
       .filter(col(scoreCol) >= threshold)
       .select("id_a", "id_b", scoreCol)
   }
@@ -94,10 +93,8 @@ object MinHashLSH {
     * unchanged (`LshCalibration`). */
   def weightedNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                            threshold: Double, maxBucketSize: Int = 1000): DataFrame = {
-    graft.spark.GraftFunctions.register(docs.sparkSession)
     val cands = candidatePairsFromBands(
-      docs.select(col(idCol).as("id"),
-        expr(s"band_hashes(weighted_minhash($textCol))").as("bands")),
+      docs.select(col(idCol).as("id"), weightedBands(col(textCol)).as("bands")),
       maxBucketSize)
     verifyPairs(cands, docs, idCol, textCol, threshold,
       kernel = "weighted_jaccard", scoreCol = "wjaccard")
@@ -107,7 +104,11 @@ object MinHashLSH {
     * face of [[weightedNearDupPairs]], same 16-narrow-postings-per-doc
     * footprint and maintenance story as [[bandIndex]]. */
   def weightedBandIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    postings(docs, idCol, s"band_hashes(weighted_minhash($textCol))")
+    postings(docs, idCol, weightedBands(col(textCol)))
+
+  /** The 16 band keys of a text's ICWS weighted-MinHash signature. */
+  private def weightedBands(text: Column): Column =
+    call("band_hashes", call("weighted_minhash", text))
 
   /** Incremental WEIGHTED near-dup pairs `(new_id, corpus_id, wjaccard)`:
     * a batch probed against a stored [[weightedBandIndex]] through the
@@ -134,13 +135,12 @@ object MinHashLSH {
                                     incoming: DataFrame, idCol: String,
                                     textCol: String, threshold: Double,
                                     kernel: String, scoreCol: String): DataFrame = {
-    graft.spark.GraftFunctions.register(incoming.sparkSession)
     cands
       .join(corpusTexts.select(col(idCol).cast("long").as("corpus_id"),
         col(textCol).as("t_c")), "corpus_id")
       .join(incoming.select(col(idCol).cast("long").as("new_id"),
         col(textCol).as("t_n")), "new_id")
-      .withColumn(scoreCol, expr(s"$kernel(t_n, t_c)"))
+      .withColumn(scoreCol, call(kernel, col("t_n"), col("t_c")))
       .filter(col(scoreCol) >= threshold)
       .select("new_id", "corpus_id", scoreCol)
   }
@@ -157,7 +157,7 @@ object MinHashLSH {
     * batch's postings to; corpus TEXT is only read for the docs that
     * become verify candidates. */
   def bandIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    postings(docs, idCol, s"minhash_bands($textCol)")
+    postings(docs, idCol, call("minhash_bands", col(textCol)))
 
   /** Postings `(id, band, bh)` from a precomputed band-array frame
     * `(id, bands)` — lets a caller that already materialized the band
@@ -183,13 +183,10 @@ object MinHashLSH {
       kernel = "jaccard_shingles", scoreCol = "jaccard")
 
   /** Shared posting projection of [[bandIndex]]/[[weightedBandIndex]]:
-    * one `(id, band, bh)` row per document per band of `sigBandsExpr`. */
-  private def postings(docs: DataFrame, idCol: String,
-                       sigBandsExpr: String): DataFrame = {
-    graft.spark.GraftFunctions.register(docs.sparkSession)
+    * one `(id, band, bh)` row per document per band of `sigBands`. */
+  private def postings(docs: DataFrame, idCol: String, sigBands: Column): DataFrame = {
     docs
-      .select(col(idCol).cast("long").as("id"),
-        expr(sigBandsExpr).as("bands"))
+      .select(col(idCol).cast("long").as("id"), sigBands.as("bands"))
       .select(col("id"), posexplode(col("bands")).as(Seq("band", "bh")))
   }
 

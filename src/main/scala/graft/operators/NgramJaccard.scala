@@ -280,9 +280,7 @@ object NgramJaccard {
         col("id_b").cast("long").as("neighbor_id"), col("score"))
       .unionByName(p.select(col("id_b").cast("long").as("doc_id"),
         col("id_a").cast("long").as("neighbor_id"), col("score")))
-    val minN = udaf(new SearchIndex.MinNKeepPairsAgg(k),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong))
+    val minN = FixedSample.minN(new SearchIndex.MinNKeepPairsAgg(k))
     dir
       .groupBy("doc_id")
       .agg(minN((-col("score")).cast("long"), col("neighbor_id")).as("_pairs"))

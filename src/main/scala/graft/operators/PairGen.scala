@@ -9,8 +9,8 @@ package graft.operators
   * verify lane + connected components) while bounding pair count linearly —
   * a 10^6-doc hot bucket emits 10^6 - 1 pairs instead of ~5*10^11.
   *
-  * Exposed to SQL as `pair_combos(ids, cap)`, registered once with the
-  * rest of the function surface (`GraftFunctions.register`).
+  * Exposed as the graft function `pair_combos(ids, cap)`, one entry of the
+  * `GraftFunctions` table (`GraftFunctions.call("pair_combos", ...)`).
   * Implemented as compiled Scala UDFs, NOT `transform`/`flatten`
   * higher-order functions: Catalyst HOF lambdas are interpreted per element
   * (CodegenFallback) and `slice` copies per outer element, which measured

@@ -49,9 +49,7 @@ object SearchIndex {
       .select(col("query_id").cast("long").as("query_id"),
         explode(array_distinct(col("terms"))).as("term"))
     val qSize = qTerms.groupBy("query_id").agg(count(lit(1)).as("n_terms"))
-    val minN = udaf(new MinNKeepPairsAgg(k),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong))
+    val minN = FixedSample.minN(new MinNKeepPairsAgg(k))
     val perDoc = postingsDf
       .join(broadcast(qTerms), Seq("term"))
       .groupBy("query_id", "doc_id")
@@ -119,9 +117,7 @@ object SearchIndex {
       .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
       .groupBy("term").agg(count(lit(1)).as("df"))
     val docLen = postingsDf.groupBy("doc_id").agg(sum("tf").cast("long").as("dl"))
-    val minN = udaf(new MinNKeepPairsAgg(k),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong))
+    val minN = FixedSample.minN(new MinNKeepPairsAgg(k))
     // `div` (true integer division) only exists in SQL expression syntax;
     // float `/` + cast would silently lose exactness past 2^53
     val w = expr(

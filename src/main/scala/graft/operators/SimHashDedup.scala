@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.spark.GraftFunctions.call
 
 /** SimHash near-dup lane (north rule lane 2): 64-bit token-weighted
   * SimHash, candidate generation by Hamming-ball block probing, verified by
@@ -20,16 +21,13 @@ object SimHashDedup {
     * simhashes and distance. */
   def pairs(docs: DataFrame, idCol: String, textCol: String, maxDist: Int = 3,
             maxBucketSize: Int = 128): DataFrame = {
-    val spark = docs.sparkSession
-    graft.spark.GraftFunctions.register(spark)
-
     // materialized once (16 bytes/doc): consumed by probe generation, by
     // BucketedPairs' monster branch (this lane's 16-bit probe blocks DO
     // produce over-cap buckets on real corpora), and by both verify joins —
     // without this, the simhash kernel re-runs over the full corpus in
     // every consumer
     val hashed = org.apache.spark.sql.GraftBridge.materialize(
-      docs.select(col(idCol).as("id"), expr(s"simhash64($textCol)").as("sim")))
+      docs.select(col(idCol).as("id"), call("simhash64", col(textCol)).as("sim")))
     pairsFromHashes(hashed, maxDist, maxBucketSize)
   }
 
@@ -47,11 +45,10 @@ object SimHashDedup {
     * `MinHashLSH.bandIndex` — for the maintenance pattern). */
   def probeIndex(docs: DataFrame, idCol: String, textCol: String,
                  maxDist: Int = 3): DataFrame = {
-    graft.spark.GraftFunctions.register(docs.sparkSession)
     docs
-      .select(col(idCol).cast("long").as("id"), expr(s"simhash64($textCol)").as("sim"))
+      .select(col(idCol).cast("long").as("id"), call("simhash64", col(textCol)).as("sim"))
       .select(col("id"), col("sim"),
-        explode(expr(s"simhash_probes(sim, $maxDist)")).as("probe"))
+        explode(call("simhash_probes", col("sim"), lit(maxDist))).as("probe"))
   }
 
   /** Incremental pairs `(new_id, corpus_id, hamming)` of a batch against a
@@ -66,10 +63,9 @@ object SimHashDedup {
   def incrementalPairs(index: DataFrame, incoming: DataFrame, idCol: String,
                        textCol: String, maxDist: Int = 3,
                        maxPostings: Int = 128): DataFrame = {
-    graft.spark.GraftFunctions.register(incoming.sparkSession)
     val inc = org.apache.spark.sql.GraftBridge.materialize(
       incoming.select(col(idCol).cast("long").as("new_id"),
-        expr(s"simhash64($textCol)").as("sim_n")))
+        call("simhash64", col(textCol)).as("sim_n")))
     incrementalPairsFromHashes(index, inc, maxDist, maxPostings)
   }
 
@@ -79,9 +75,8 @@ object SimHashDedup {
   def incrementalPairsFromHashes(index: DataFrame, inc: DataFrame,
                                  maxDist: Int = 3,
                                  maxPostings: Int = 128): DataFrame = {
-    graft.spark.GraftFunctions.register(inc.sparkSession)
     val probes = inc.select(col("new_id"),
-      explode(expr(s"simhash_probes(sim_n, $maxDist)")).as("probe"))
+      explode(call("simhash_probes", col("sim_n"), lit(maxDist))).as("probe"))
     // touched buckets are read twice (capped collection + the sim lookup
     // for verify) — materialize so the index scan happens once
     val touched = org.apache.spark.sql.GraftBridge.materialize(
@@ -106,18 +101,16 @@ object SimHashDedup {
     * already materialized the simhash projection build the stored index
     * without re-running the kernel. Values identical by construction. */
   def probeIndexFromHashes(hashed: DataFrame, maxDist: Int = 3): DataFrame = {
-    graft.spark.GraftFunctions.register(hashed.sparkSession)
     hashed.select(col("id").cast("long").as("id"), col("sim"),
-      explode(expr(s"simhash_probes(sim, $maxDist)")).as("probe"))
+      explode(call("simhash_probes", col("sim"), lit(maxDist))).as("probe"))
   }
 
   /** Pairs from precomputed `(id, sim)` rows (the pipeline's one-pass
     * feature projection supplies these, already persisted — no text
     * rescan, no extra materialization). */
   def pairsFromHashes(hashed: DataFrame, maxDist: Int, maxBucketSize: Int): DataFrame = {
-    graft.spark.GraftFunctions.register(hashed.sparkSession)
     val probes = hashed.select(col("id"),
-      explode(expr(s"simhash_probes(sim, $maxDist)")).as("probe"))
+      explode(call("simhash_probes", col("sim"), lit(maxDist))).as("probe"))
 
     // salted, size-capped bucket collection per probe key; hot buckets
     // (boilerplate — near-identical simhashes) emit star pairs

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.spark.GraftFunctions.call
 
 /** Exact long-substring dedup lane (north rule: "a suffix-array pass for
   * exact long-substring dedup").
@@ -31,9 +32,8 @@ object SubstringDedup {
 
   def pairs(docs: DataFrame, idCol: String, textCol: String, minLen: Int = 200,
             maxBucketSize: Int = 1000): DataFrame = {
-    graft.spark.GraftFunctions.register(docs.sparkSession)
     pairsFromFingerprints(
-      docs.select(col(idCol).as("id"), expr(s"winnow_fps($textCol)").as("fps")),
+      docs.select(col(idCol).as("id"), call("winnow_fps", col(textCol)).as("fps")),
       docs, idCol, textCol, minLen, maxBucketSize)
   }
 
@@ -47,9 +47,8 @@ object SubstringDedup {
     * bucketed by fp), probe each batch against it, append the admitted
     * batch's rows — corpus text is only read for verify candidates. */
   def fpIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.spark.GraftFunctions.register(docs.sparkSession)
     docs
-      .select(col(idCol).cast("long").as("id"), expr(s"winnow_fps($textCol)").as("fps"))
+      .select(col(idCol).cast("long").as("id"), call("winnow_fps", col(textCol)).as("fps"))
       .select(col("id"), explode(col("fps")).as("fp"))
   }
 
@@ -65,7 +64,6 @@ object SubstringDedup {
                        minLen: Int = 200, maxPostings: Int = 1000): DataFrame = {
     require(minLen >= LosslessMinLen,
       s"minLen=$minLen below the winnowing guarantee ($LosslessMinLen)")
-    graft.spark.GraftFunctions.register(incoming.sparkSession)
     BucketedPairs.probeCandidates(index,
         fpIndex(incoming, idCol, textCol).withColumnRenamed("id", "new_id"),
         Seq("fp"), "id", "new_id", maxPostings)
@@ -73,7 +71,7 @@ object SubstringDedup {
         col(textCol).as("t_c")), "corpus_id")
       .join(incoming.select(col(idCol).cast("long").as("new_id"),
         col(textCol).as("t_n")), "new_id")
-      .filter(expr(s"common_substring_atleast(t_n, t_c, $minLen)"))
+      .filter(call("common_substring_atleast", col("t_n"), col("t_c"), lit(minLen)))
       .select("new_id", "corpus_id")
   }
 
@@ -87,8 +85,6 @@ object SubstringDedup {
     require(minLen >= LosslessMinLen,
       s"minLen=$minLen below the winnowing guarantee ($LosslessMinLen = " +
         s"gramLen $GramLen + window $Window - 1): the prefilter would silently lose recall")
-    // idempotent: standalone callers need the verify kernel registered
-    graft.spark.GraftFunctions.register(fpArrays.sparkSession)
 
     val fps = fpArrays.select(col("id"), explode(col("fps")).as("fp"))
 
@@ -105,7 +101,7 @@ object SubstringDedup {
     cands
       .join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("t", "t_a"), "id_a")
       .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("t", "t_b"), "id_b")
-      .filter(expr(s"common_substring_atleast(t_a, t_b, $minLen)"))
+      .filter(call("common_substring_atleast", col("t_a"), col("t_b"), lit(minLen)))
       .select("id_a", "id_b")
   }
 }

@@ -88,67 +88,23 @@ object StratifiedSample {
 /** Per-domain document caps — corpus balancing ("at most N pages per
   * domain/source") without the textbook `row_number` window, which would
   * serialize a hot domain (a 10^9-page template site) through ONE task.
-  * Instead a bounded typed aggregate keeps each domain's N smallest ids:
-  * the buffer is at most N longs regardless of domain size, partials
+  * Instead a bounded typed aggregate (FixedSample's MinNPair, keyed on the
+  * id itself) keeps each domain's N smallest ids: the buffer is at most 2N
+  * longs regardless of domain size, partials
   * combine map-side under ObjectHashAggregate, and the kept-id set
   * semi-joins the corpus back. Deterministic: smallest-N-by-id is a pure
   * function of the input set. */
 object DomainCap {
-
-  // private[graft] so the merge-schedule property test drives it directly
-  private[graft] class MinNAgg(n: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[Long, Array[Long], Array[Long]] {
-    override def zero: Array[Long] = Array.emptyLongArray
-    // buffer invariant: sorted ascending, length <= n
-    override def reduce(b: Array[Long], v: Long): Array[Long] = {
-      if (b.length < n) {
-        val out = new Array[Long](b.length + 1)
-        val at = {
-          val p = java.util.Arrays.binarySearch(b, v)
-          if (p >= 0) p else -(p + 1)
-        }
-        System.arraycopy(b, 0, out, 0, at)
-        out(at) = v
-        System.arraycopy(b, at, out, at + 1, b.length - at)
-        out
-      } else if (n > 0 && v < b(n - 1)) {
-        val at = {
-          val p = java.util.Arrays.binarySearch(b, 0, n - 1, v)
-          if (p >= 0) p else -(p + 1)
-        }
-        System.arraycopy(b, at, b, at + 1, n - 1 - at)
-        b(at) = v
-        b
-      } else b
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      if (a.isEmpty) return b
-      if (b.isEmpty) return a
-      val out = new Array[Long](math.min(n, a.length + b.length))
-      var i = 0; var j = 0; var w = 0
-      while (w < out.length) {
-        if (j >= b.length || (i < a.length && a(i) <= b(j))) { out(w) = a(i); i += 1 }
-        else { out(w) = b(j); j += 1 }
-        w += 1
-      }
-      out
-    }
-    override def finish(r: Array[Long]): Array[Long] = r
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  }
 
   /** The kept (domain, id) pairs: each domain's `n` smallest ids.
     * Requires a numeric (long-castable) id column. */
   def keptIds(docs: DataFrame, idCol: String, domainCol: String, n: Int): DataFrame = {
     require(n >= 1, s"bad cap $n")
     IdColumns.requireLongCastable(docs, idCol, "DomainCap")
-    val minN = udaf(new MinNAgg(n), org.apache.spark.sql.Encoders.scalaLong)
+    val minN = FixedSample.minN(new FixedSample.MinNPairAgg(n))
     docs.select(col(domainCol).as("_dom"), col(idCol).cast("long").as("_id"))
       .groupBy("_dom")
-      .agg(minN(col("_id")).as("_ids"))
+      .agg(minN(col("_id"), col("_id")).as("_ids"))
       .select(col("_dom"), explode(col("_ids")).as("_id"))
   }
 
@@ -170,9 +126,7 @@ object DomainCap {
                scoreCol: String, n: Int): DataFrame = {
     require(n >= 1, s"bad cap $n")
     IdColumns.requireLongCastable(docs, idCol, "DomainCap.keepBest")
-    val minN = udaf(new FixedSample.MinNPairAgg(n),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong))
+    val minN = FixedSample.minN(new FixedSample.MinNPairAgg(n))
     val kept = docs
       .select(col(domainCol).as("_dom"),
         (-col(scoreCol).cast("long")).as("_k"), col(idCol).cast("long").as("_id"))
@@ -259,6 +213,13 @@ object FixedSample {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   }
 
+  /** `agg` as a two-column aggregate `minN(key, id)`; pass key = id for
+    * plain smallest-n ids (ascending, duplicates kept). */
+  private[operators] def minN(agg: MinNPairAgg)
+      : org.apache.spark.sql.expressions.UserDefinedFunction =
+    udaf(agg, org.apache.spark.sql.Encoders.tuple(
+      org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong))
+
   /** The md5-derived 32-bit hash key (same construction as
     * [[StratifiedSample.uniformCol]]'s numerator, so the two samplers agree
     * on what "the document's uniform" is). */
@@ -270,9 +231,7 @@ object FixedSample {
   def sampledIds(docs: DataFrame, idCol: String, strataCol: String, k: Int): DataFrame = {
     require(k >= 1, s"bad sample size $k")
     IdColumns.requireLongCastable(docs, idCol, "FixedSample")
-    val minN = udaf(new MinNPairAgg(k),
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong))
+    val minN = FixedSample.minN(new MinNPairAgg(k))
     docs.select(col(strataCol).as("_st"), hashKeyCol(idCol).as("_u"),
         col(idCol).cast("long").as("_id"))
       .groupBy("_st")

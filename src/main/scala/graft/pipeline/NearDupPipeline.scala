@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.spark.GraftFunctions
+import graft.spark.GraftFunctions.call
 
 /** The north-rule pipeline: near-duplicate detection + clustering over a
   * Common-Crawl-style pages table `(url, warc_ts, html, text, lang)`.
@@ -144,13 +144,29 @@ object NearDupPipeline {
     cur
   }
 
+  /** Scale-adaptive fan-out for a kernel-heavy frame (optimization guide
+    * §2.5, "one huge unsplittable file"): a scan of fewer splits than the
+    * session's default parallelism runs every downstream per-doc kernel
+    * (128-perm MinHash ~31 µs/doc, ICWS weighted MinHash ~2-4 ms/doc, gram
+    * explodes) on that few cores, so it is hash-repartitioned on the
+    * high-cardinality `by` column to the default parallelism. A scan that
+    * already carries >= that many splits (a production-scale corpus) is
+    * returned as is — no full-corpus shuffle. Counting splits plans the
+    * scan but starts no job. Results are unchanged either way as long as
+    * every consumer is partitioning-independent (key-based joins and
+    * aggregates, integer/boolean/string outputs); frames whose outputs sum
+    * floating point or merge order-sensitive sketches must not be spread. */
+  def spread(df: DataFrame, by: String): DataFrame = {
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < p) df.repartition(p, col(by)) else df
+  }
+
   def run(spark: SparkSession, pages: DataFrame, cfg: Config): Result =
     run(spark, pages, cfg, new ParquetTableIO(spark, cfg.workDir))
 
   /** Variant over an explicit TableIO (Iceberg in production; tests can
     * substitute fault-injecting IO). */
   def run(spark: SparkSession, pages: DataFrame, cfg: Config, io: TableIO): Result = {
-    GraftFunctions.register(spark)
     // v3 fingerprint = config ⊕ input identity: re-running a workDir
     // against a DIFFERENT input table recomputes instead of silently
     // resuming committed stages (the r2 judge's top engine gap). The
@@ -166,7 +182,7 @@ object NearDupPipeline {
     // ---- stage 0: text extraction (invariant: byte-identical to `text`)
     val extractedSnapshot = m.stage("extracted") {
       val hasText = pages.columns.contains("text")
-      val base = pages.withColumn("extracted_text", expr("extract_text(html)"))
+      val base = pages.withColumn("extracted_text", call("extract_text", col("html")))
       val checked =
         if (hasText) {
           // hard invariant (BASELINE.json input_hint): fail loudly per url
@@ -188,23 +204,15 @@ object NearDupPipeline {
     // columnar batches once instead of re-reading the parquet snapshot
     // 6x (at bench scale that re-read was ~20GB of unscalable disk I/O)
     val extracted = extractedSnapshot.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Fan the FEATURES input out to the session's parallelism when the
-    // snapshot re-packs below it (a small corpus writes small stage files
-    // that re-pack into 1-2 scan splits, pinning the one heavy per-doc
-    // kernel of the pipeline to 1-2 cores — guide §2.5 "one huge
-    // unsplittable file" applied to the stage snapshot). Only the feature
-    // projection pays the (tiny) shuffle: every other consumer of
+    // Fan the FEATURES input out (`spread`): a small corpus writes small
+    // stage files that re-pack into 1-2 scan splits, which would pin the
+    // one heavy per-doc kernel of the pipeline to 1-2 cores. Only the
+    // feature projection pays the (tiny) shuffle: every other consumer of
     // `extracted` is joins/aggregates whose parallelism comes from their
-    // own shuffles, and stage outputs keep their small file counts. Gated
-    // on the actual split count, so a production-scale snapshot (>= cores
-    // splits) never shuffles. Partitioning never changes results: ids are
-    // deterministic url hashes, every downstream op is key-based.
-    val featuresInput = {
-      val p = spark.sparkContext.defaultParallelism
-      if (extractedSnapshot.rdd.getNumPartitions < p)
-        extracted.repartition(p, col("id"))
-      else extracted
-    }
+    // own shuffles, and stage outputs keep their small file counts.
+    // Partitioning never changes results: ids are deterministic url
+    // hashes, every downstream op is key-based.
+    val featuresInput = spread(extracted, "id")
 
     // ---- candidate + verify lanes. The four lanes are independent DAGs, so
     // they are submitted as CONCURRENT Spark jobs (scala.concurrent.Future):
@@ -246,7 +254,7 @@ object NearDupPipeline {
     // initialization across the lane futures.
     lazy val features = org.apache.spark.sql.GraftBridge.materialize(featuresInput
       .select(col("id"), xxhash64(col("text")).as("th"),
-        expr("doc_features(text)").as("f"))
+        call("doc_features", col("text")).as("f"))
       .select(col("id"), col("th"), col("f.bands").as("bands"),
         col("f.sim").as("sim"), col("f.fps").as("fps")))
     val texts = extracted.select(col("id"), col("text"))
@@ -327,14 +335,14 @@ object NearDupPipeline {
         .groupBy("component")
         .agg(
           count(lit(1)).as("size"),
-          expr("hll_sketch(url)").as("url_hll"),
-          expr("theta_sketch(id)").as("id_theta"),
-          expr("req_sketch(length(text))").as("len_req"))
+          call("hll_sketch", col("url")).as("url_hll"),
+          call("theta_sketch", col("id")).as("id_theta"),
+          call("req_sketch", length(col("text"))).as("len_req"))
         .select(col("component"), col("size"),
-          expr("cast(round(hll_estimate(url_hll)) as bigint)").as("distinct_urls"),
-          expr("cast(theta_estimate(id_theta) as bigint)").as("distinct_ids"),
-          expr("req_quantile(len_req, 0.5d)").as("p50_len"),
-          expr("req_quantile(len_req, 0.99d)").as("p99_len"))
+          round(call("hll_estimate", col("url_hll"))).cast("bigint").as("distinct_urls"),
+          call("theta_estimate", col("id_theta")).cast("bigint").as("distinct_ids"),
+          call("req_quantile", col("len_req"), lit(0.5)).as("p50_len"),
+          call("req_quantile", col("len_req"), lit(0.99)).as("p99_len"))
     }
 
     extracted.unpersist(false)

@@ -8,59 +8,41 @@ import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType}
 
-/** Registration surface for all graft sketch/text functions.
+/** The one table of graft SQL functions: every sketch aggregate, native
+  * text-kernel expression and compiled scalar UDF is a `name -> builder`
+  * entry of [[functions]], where a builder turns argument expressions into
+  * the Catalyst expression the name stands for.
   *
   * - Aggregates are native Catalyst `TypedImperativeAggregate`s.
   * - Scalar finishers / text kernels are compiled Scala UDFs over the shared
   *   `graft.core` kernels (one deserialization per call — they run once per
-  *   group/row at the end of a plan, never in the aggregation hot path).
+  *   group/row at the end of a plan, never in the aggregation hot path),
+  *   named so plans print `simhash_probes(...)`, not `UDF(...)`.
   *
-  * Both are defined ONCE (aggregateBuilders / scalarUdfs) and exposed on two
-  * equivalent paths:
-  *   - `GraftFunctions.register(spark)` — session FunctionRegistry, for
-  *     programmatic use;
-  *   - `spark.sql.extensions=graft.spark.GraftExtensions` — injected at
-  *     session build for spark-submit deployments; an extensions-only
-  *     session has the complete SQL surface (GraftExtensionsSpec).
+  * One install path puts the table in a session's FunctionRegistry for SQL
+  * text: `GraftFunctions.register(spark)` programmatically, or
+  * `spark.sql.extensions=graft.spark.GraftExtensions` at session build (an
+  * extensions-only session has the complete SQL surface,
+  * GraftExtensionsSpec). Scala code needs neither: `call(name, cols*)`
+  * builds the same expression straight from the table, so operators never
+  * touch the caller's session.
   */
 object GraftFunctions {
 
-  /** Column-API helpers (typed alternative to expr("req_sketch(x)")): each
-    * calls the SQL builder of the same name with literal parameters. */
-  def req_sketch(col: Column, k: Int = ReqSketch.DefaultK, hra: Boolean = true): Column =
-    aggregate("req_sketch", col, k, hra)
-  def req_merge(col: Column): Column = aggregate("req_merge", col)
-  def theta_sketch(col: Column, nominalEntries: Int = ThetaSketch.DefaultNominalEntries): Column =
-    aggregate("theta_sketch", col, nominalEntries)
-  def theta_union(col: Column): Column = aggregate("theta_union", col)
-  def hll_sketch(col: Column, lgK: Int = HllSketch.DefaultLgK): Column =
-    aggregate("hll_sketch", col, lgK)
-  def hll_union(col: Column): Column = aggregate("hll_union", col)
-  def kll_sketch(col: Column, k: Int = KllSketch.DefaultK): Column =
-    aggregate("kll_sketch", col, k)
-  def freq_sketch(col: Column, maxMapSize: Int = FreqSketch.DefaultMaxMapSize): Column =
-    aggregate("freq_sketch", col, maxMapSize)
-  def freq_merge(col: Column): Column = aggregate("freq_merge", col)
-  def cms_sketch(col: Column, depth: Int = CmsSketch.DefaultDepth,
-                 width: Int = CmsSketch.DefaultWidth): Column =
-    aggregate("cms_sketch", col, depth, width)
-  def cms_merge(col: Column): Column = aggregate("cms_merge", col)
-  def bloom_agg(col: Column, expectedItems: Long, fpp: Double = 0.01): Column =
-    aggregate("bloom_agg", col, expectedItems, fpp)
-  def bloom_merge(col: Column): Column = aggregate("bloom_merge", col)
-  def cbloom_agg(col: Column, expectedItems: Long, fpp: Double = 0.01): Column =
-    aggregate("cbloom_agg", col, expectedItems, fpp)
+  /** Column-API call of the graft function `name`; literal parameters are
+    * passed as `lit(...)` columns, exactly as SQL would pass them. */
+  def call(name: String, args: Column*): Column = {
+    val build = byName.getOrElse(name,
+      throw new IllegalArgumentException(s"no graft function named $name"))
+    GraftBridge.column(build(args.map(GraftBridge.expression)))
+  }
+
   /** Geometry-explicit counting-filter build — for retirement filters that
     * must share the persisted filter's exact cell layout. It has no SQL
-    * name, so it is the one helper that constructs its aggregate itself. */
+    * name, so it constructs its aggregate itself. */
   def cbloom_agg_config(col: Column, numCells: Long, numHashes: Int): Column =
     GraftBridge.column(CBloomAgg(Cast(GraftBridge.expression(col), LongType), numCells, numHashes)
       .toAggregateExpression())
-  def cbloom_merge(col: Column): Column = aggregate("cbloom_merge", col)
-
-  private lazy val aggregatesByName = aggregateBuilders.toMap
-  private def aggregate(name: String, col: Column, params: Any*): Column =
-    GraftBridge.column(aggregatesByName(name)(GraftBridge.expression(col) +: params.map(Literal(_))))
 
   private def arity(name: String, expected: String, args: Seq[Expression]): Nothing =
     throw new IllegalArgumentException(s"$name expects $expected, got ${args.length}")
@@ -86,9 +68,7 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(s"$what must be a boolean literal, got $other")
   }
 
-  /** Native scalar Catalyst expressions (codegen'd — no UDF boundary),
-    * name -> SQL expression builder (shared by register() and
-    * GraftExtensions). */
+  /** Native scalar Catalyst expressions (codegen'd — no UDF boundary). */
   private[spark] val expressionBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_sim" -> {
       case Seq(a, b) => CosineSimilarity(Cast(a, ArrayType(DoubleType)), Cast(b, ArrayType(DoubleType)))
@@ -111,8 +91,7 @@ object GraftFunctions {
       case args => arity("minhash_bands", "1 arg", args)
     })
 
-  /** Every aggregate, name -> SQL expression builder (shared by register(),
-    * GraftExtensions and the Column-API helpers). */
+  /** Every aggregate. */
   private[spark] val aggregateBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "req_sketch" -> {
       case Seq(c)        => ReqSketchAgg(Cast(c, DoubleType)).toAggregateExpression()
@@ -172,8 +151,7 @@ object GraftFunctions {
       case args => arity(name, "1 arg", args)
     }
 
-  /** Every scalar finisher / text kernel, name -> compiled UDF (shared by
-    * register() and GraftExtensions).
+  /** Every scalar finisher / text kernel, as a compiled UDF.
     *
     * NULL discipline: Spark auto-nulls UDF calls only for PRIMITIVE-typed
     * parameters; reference-typed ones (binary sketches, strings, arrays)
@@ -181,7 +159,7 @@ object GraftFunctions {
     * convention — null in, null out (via Option) — so e.g.
     * `req_quantile(s.len_sketch, 0.5)` over a LEFT JOIN's unmatched rows
     * yields NULL instead of killing the query with an NPE. */
-  private[spark] lazy val scalarUdfs: Seq[(String, UserDefinedFunction)] = Seq(
+  private lazy val scalarUdfs: Seq[(String, UserDefinedFunction)] = Seq(
     // ---- sketch finishers over serialized sketches (BinaryType) ----
     "req_quantile" -> udf((b: Array[Byte], r: Double) => Option(b).map(ReqSketch.deserialize(_).quantile(r))),
     "req_quantile_lte" -> udf((b: Array[Byte], r: Double) => Option(b).map(ReqSketch.deserialize(_).quantile(r, inclusive = true))),
@@ -312,33 +290,33 @@ object GraftFunctions {
     "pair_combos" -> udf((ids: Seq[Long], cap: Int) =>
       Option(ids).map(graft.operators.PairGen.idPairs(_, cap))))
 
-  /** Register everything on the given session. Idempotent. */
+  /** The whole table, name -> builder. */
+  private[spark] lazy val functions: Seq[(String, Seq[Expression] => Expression)] =
+    expressionBuilders ++ aggregateBuilders ++ scalarUdfs.map { case (name, f) =>
+      val named = f.withName(name)
+      name -> ((args: Seq[Expression]) => GraftBridge.scalaUDF(named, args))
+    }
+
+  private lazy val byName = functions.toMap
+
+  /** Install the table on the given session for SQL text. Idempotent. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    (expressionBuilders ++ aggregateBuilders).foreach { case (name, builder) =>
+    functions.foreach { case (name, builder) =>
       reg.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
-    scalarUdfs.foreach { case (name, f) => spark.udf.register(name, f) }
   }
 }
 
 /** `SparkSessionExtensions` hook for spark-submit deployments:
   * `--conf spark.sql.extensions=graft.spark.GraftExtensions` injects the
-  * COMPLETE function surface (all aggregates + all scalar finishers / text
-  * kernels) at session build time — an extensions-only session can both
-  * aggregate and query sketches (GraftExtensionsSpec). */
+  * whole function table at session build time. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def info(name: String) = new ExpressionInfo("graft", name)
-    (GraftFunctions.expressionBuilders ++ GraftFunctions.aggregateBuilders).foreach {
-      case (name, builder) =>
-        ext.injectFunction((FunctionIdentifier(name), info(name), builder))
-    }
-    GraftFunctions.scalarUdfs.foreach { case (name, f) =>
-      ext.injectFunction((FunctionIdentifier(name), info(name),
-        (exprs: Seq[Expression]) => GraftBridge.scalaUDF(f.withName(name), exprs)))
+    GraftFunctions.functions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))
     }
   }
 }

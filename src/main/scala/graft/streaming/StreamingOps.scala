@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.spark.GraftFunctions.call
 
 /** Structured Streaming surface of the engine (SURVEY.md §2.3 Streaming):
   * the same mergeable-sketch aggregates run under streaming group-bys —
@@ -18,11 +19,10 @@ object StreamingOps {
   def windowedReqSketch(events: DataFrame, tsCol: String, valueCol: String,
                         groupCol: String, windowDuration: String,
                         watermarkDelay: String): DataFrame = {
-    graft.spark.GraftFunctions.register(events.sparkSession)
     events
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDuration), col(groupCol))
-      .agg(expr(s"req_sketch($valueCol)").as("len_sketch"),
+      .agg(call("req_sketch", col(valueCol)).as("len_sketch"),
            count(lit(1)).as("n"))
   }
 
@@ -37,13 +37,12 @@ object StreamingOps {
                          groupCol: String, windowDuration: String,
                          watermarkDelay: String,
                          maxMapSize: Int = graft.core.FreqSketch.DefaultMaxMapSize): DataFrame = {
-    graft.spark.GraftFunctions.register(docs.sparkSession)
     docs
       .withWatermark(tsCol, watermarkDelay)
       .select(col(tsCol), col(groupCol),
         explode(split(trim(col(textCol)), "\\s+")).as("_tok"))
       .groupBy(window(col(tsCol), windowDuration), col(groupCol))
-      .agg(expr(s"freq_sketch(_tok, $maxMapSize)").as("tok_sketch"),
+      .agg(call("freq_sketch", col("_tok"), lit(maxMapSize)).as("tok_sketch"),
            count(lit(1)).as("n_tokens"))
   }
 
@@ -58,13 +57,12 @@ object StreamingOps {
                         watermarkDelay: String,
                         depth: Int = graft.core.CmsSketch.DefaultDepth,
                         width: Int = graft.core.CmsSketch.DefaultWidth): DataFrame = {
-    graft.spark.GraftFunctions.register(docs.sparkSession)
     docs
       .withWatermark(tsCol, watermarkDelay)
       .select(col(tsCol), col(groupCol),
         explode(split(trim(col(textCol)), "\\s+")).as("_tok"))
       .groupBy(window(col(tsCol), windowDuration), col(groupCol))
-      .agg(expr(s"cms_sketch(_tok, $depth, $width)").as("tok_cms"),
+      .agg(call("cms_sketch", col("_tok"), lit(depth), lit(width)).as("tok_cms"),
            count(lit(1)).as("n_tokens"))
   }
 

@@ -7,7 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * source tree). */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
-  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** `c` converted to a Catalyst expression now rather than at analysis,
+    * so a function builder sees `lit(4)` as `Literal(4)`, as SQL text
+    * hands it over. */
+  def expression(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
 
   /** The engine's one materialize primitive: eagerly compute `df`, store
     * its unsafe rows as local-checkpoint blocks, and rebuild a DataFrame

@@ -62,9 +62,10 @@ class BucketedPairsSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("pair_combos stays null-safe after the lanes that expand pairs run") {
-    // both lanes register the SQL name; the one definition returns NULL
-    // for a NULL id array, whichever lane registered it last
+    // the SQL name is the one table entry the lanes call; it returns NULL
+    // for a NULL id array before and after the lanes run
     import spark.implicits._
+    GraftFunctions.register(spark)
     val docs = Seq((1L, "same"), (2L, "same"), (3L, "other")).toDF("doc_id", "text")
     assert(ExactDedup.pairs(docs, "doc_id", "text").count() == 1)
     assert(edgesOf(Seq((1L, 1L), (1L, 2L)), cap = 4) == Set((1L, 2L)))

@@ -232,7 +232,7 @@ class DedupLanesSpec extends AnyFunSuite with SparkSuiteBase {
     val merged = ExactDedup.corpusBloomShards(halfA, "text", 4, 64L)
       .unionByName(ExactDedup.corpusBloomShards(halfB, "text", 4, 64L))
       .groupBy("shard")
-      .agg(graft.spark.GraftFunctions.bloom_merge(col("filter")).as("filter"))
+      .agg(GraftFunctions.call("bloom_merge", col("filter")).as("filter"))
     val whole = ExactDedup.corpusBloomShards(corpus, "text", 4, 64L)
     val mergedMap = merged.collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
     val wholeMap = whole.collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap

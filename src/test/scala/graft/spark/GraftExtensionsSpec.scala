@@ -1,6 +1,13 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import graft.core.{TextOps, WebPages}
+import graft.operators.{ExactDedup, MinHashLSH, SimHashDedup, SubstringDedup}
+import graft.pipeline.NearDupPipeline
+import graft.streaming.StreamingOps
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** An extensions-only deployment (`--conf spark.sql.extensions=
@@ -11,8 +18,9 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSuiteBase {
 
   private def extensionsOnlySession(): SparkSession = {
     // a genuinely new session (shared SparkContext) built through the
-    // extensions hook — getOrCreate would hand back the suite session
-    val saved = SparkSession.getActiveSession
+    // extensions hook — getOrCreate would hand back the suite session. The
+    // suite session is built first, so the extensions stay on this one.
+    val saved = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val s = SparkSession.builder()
@@ -21,8 +29,8 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSuiteBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    saved.foreach(SparkSession.setActiveSession)
-    saved.foreach(SparkSession.setDefaultSession)
+    SparkSession.setActiveSession(saved)
+    SparkSession.setDefaultSession(saved)
     s
   }
 
@@ -56,5 +64,67 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSuiteBase {
         |      FROM parquet.`/root/testdata/sf0.001/documents.parquet`
         |      GROUP BY lang)""".stripMargin).collect().head
     assert(u.getDouble(0) > 0 && u.getString(1) == "en")
+  }
+
+  test("operators leave the caller's session functions alone") {
+    // a fresh session that owns a `lang_id` of its own and no graft names:
+    // every lane, a streaming sketch face and the whole pipeline run on it
+    val s = spark.newSession()
+    import s.implicits._
+    s.udf.register("lang_id", (_: String) => "user")
+    def langId(): String = s.sql("SELECT lang_id('the quick brown fox and the dog')").head().getString(0)
+    assert(langId() == "user")
+
+    val pages = WebPages.generate(120, 21L)
+    val docs = pages.zipWithIndex.map { case (p, i) => (i.toLong, p.text) }.toDF("doc_id", "text")
+    assert(MinHashLSH.nearDupPairs(docs, "doc_id", "text", 0.9).count() >= 0)
+    assert(SimHashDedup.pairs(docs, "doc_id", "text").count() >= 0)
+    assert(SubstringDedup.pairs(docs, "doc_id", "text").count() >= 0)
+    assert(ExactDedup.pairs(docs, "doc_id", "text").count() >= 0)
+    val events = pages.take(20).map(p => (p.warc_ts, "g", p.text)).toDF("ts", "grp", "text")
+    assert(StreamingOps.windowedCmsSketch(events, "ts", "text", "grp",
+      "10 minutes", "5 minutes").count() > 0)
+    val work = java.nio.file.Files.createTempDirectory("graft-session").toString
+    val res = NearDupPipeline.run(s, s.createDataFrame(s.sparkContext.parallelize(pages, 4)),
+      NearDupPipeline.Config(workDir = work))
+    assert(res.clusters.count() > 0)
+
+    assert(langId() == "user", "an operator replaced the caller's lang_id")
+    assert(!s.catalog.functionExists("minhash128"), "an operator installed graft functions")
+  }
+
+  test("call builds aggregates, native expressions and UDFs straight from the table") {
+    val s = spark.newSession()
+    import s.implicits._
+    val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    // an RDD source, so the optimizer cannot fold the calls into constants
+    val df = s.sparkContext.parallelize(Seq((1L, text), (2L, text + " lambda"))).toDF("id", "text")
+    def expression(c: org.apache.spark.sql.Column) = GraftBridge.expression(c)
+
+    val hll = GraftFunctions.call("hll_sketch", col("id"))
+    assert(expression(hll).isInstanceOf[AggregateExpression])
+    val est = df.agg(hll.as("h")).select(GraftFunctions.call("hll_estimate", col("h"))).head()
+    assert(math.round(est.getDouble(0)) == 2L)
+
+    val bands = GraftFunctions.call("minhash_bands", col("text"))
+    assert(expression(bands).isInstanceOf[MinHashBands])
+    assert(df.select(bands).head().getSeq[Long](0) ==
+      TextOps.bandHashes(TextOps.minHash(text)).toSeq)
+
+    val sim = GraftFunctions.call("simhash64", col("text"))
+    assert(expression(sim).isInstanceOf[ScalaUDF])
+    assert(df.select(sim).head().getLong(0) == TextOps.simHash64(text))
+
+    // named UDFs: plans print the function name, exactly as the SQL path does
+    val probes = df.select(GraftFunctions.call("simhash_probes", sim, lit(3)).as("p"))
+    val plan = probes.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+    assert(plan.contains("simhash_probes(") && !plan.contains("UDF("), plan)
+    assert(!s.catalog.functionExists("simhash_probes"), "call must not install anything")
+    GraftFunctions.register(s)
+    def shape(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.optimizedPlan.toString.replaceAll("#\\d+", "")
+    assert(shape(probes) == shape(df.select(expr("simhash_probes(simhash64(text), 3)").as("p"))))
+
+    intercept[IllegalArgumentException](GraftFunctions.call("no_such_function", col("id")))
   }
 }

@@ -1,6 +1,7 @@
 package graft.spark
 
 import graft.SparkEntry
+import graft.pipeline.NearDupPipeline
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions for the 100TB-relevant properties that row
@@ -224,5 +225,33 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuiteBase {
     assert(fRow.getLong(1) == f0.sim)
     assert(fRow.getSeq[Long](2) == f0.fps.toSeq)
     assert(got(2).isNullAt(1) && got(2).isNullAt(2), "NULL in -> NULL out")
+  }
+
+  test("spread fans out a scan below the default parallelism, and only that, without a job") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val p = spark.sparkContext.defaultParallelism
+    val work = java.nio.file.Files.createTempDirectory("graft-spread").toString
+    spark.range(0, 400, 1, p).toDF("doc_id").write.parquet(s"$work/multi")
+    spark.range(0, 400, 1, 1).toDF("doc_id").write.parquet(s"$work/one")
+    val multi = spark.read.parquet(s"$work/multi")
+    val one = spark.read.parquet(s"$work/one")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (spreadMulti, spreadOne) =
+      try {
+        val built = (NearDupPipeline.spread(multi, "doc_id"), NearDupPipeline.spread(one, "doc_id"))
+        org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+        built
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"building the spread frames started ${jobs.get} job(s)")
+    def repartitions(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.collect { case r: RepartitionByExpression => r }
+    assert(multi.rdd.getNumPartitions >= p && one.rdd.getNumPartitions == 1)
+    assert(repartitions(spreadMulti).isEmpty, "a scan of >= defaultParallelism splits was reshuffled")
+    assert(repartitions(spreadOne).map(_.numPartitions) == Seq(p))
   }
 }

@@ -130,6 +130,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuiteBase {
       assert(last.getAs[Long]("n_tokens") == 450L)
       val streamed = last.getAs[Array[Byte]]("tok_cms")
       // batch truth over the same rows: linearity -> byte-identical
+      GraftFunctions.register(sq)
       val batch = rows.toDF("ts", "grp", "text")
         .select(explode(split(trim(col("text")), "\\s+")).as("_tok"))
         .agg(expr("cms_sketch(_tok, 4, 64)")).first().getAs[Array[Byte]](0)

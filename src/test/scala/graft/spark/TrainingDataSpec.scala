@@ -78,36 +78,6 @@ class TrainingDataSpec extends AnyFunSuite with SparkSuiteBase {
     assert(!plan.contains("Window"), plan.take(1500))
   }
 
-  test("MinN aggregate: any partitioning + merge order == sorted.take(n)") {
-    // direct property on the aggregator: random inputs split into random
-    // partitions, partials reduced in order, then merged under a random
-    // binary tree — the result must always be the n smallest, sorted.
-    // (Duplicates allowed: groups may legitimately repeat values.)
-    val rnd = new scala.util.Random(31)
-    for (trial <- 0 until 50) {
-      val n = 1 + rnd.nextInt(9)
-      val agg = new DomainCap.MinNAgg(n)
-      val xs = Seq.fill(rnd.nextInt(60))(rnd.nextInt(40).toLong)
-      val parts = scala.collection.mutable.ArrayBuffer[Array[Long]]()
-      var rest = xs
-      while (rest.nonEmpty) {
-        val k = 1 + rnd.nextInt(rest.length)
-        parts += rest.take(k).foldLeft(agg.zero)((b, v) => agg.reduce(b, v))
-        rest = rest.drop(k)
-      }
-      if (parts.isEmpty) parts += agg.zero
-      while (parts.length > 1) {
-        val i = rnd.nextInt(parts.length)
-        val a = parts.remove(i)
-        val j = rnd.nextInt(parts.length)
-        parts(j) = agg.merge(parts(j), a)
-      }
-      val got = agg.finish(parts.head).toSeq
-      val want = xs.sorted.take(n)
-      assert(got == want, s"trial $trial n=$n xs=$xs got=$got want=$want")
-    }
-  }
-
   test("bottom-k sample: bounded MinNPair aggregate == hash-window truth; no Window in plan") {
     import spark.implicits._
     // skewed strata: a hot one (800 docs) and small ones
@@ -129,13 +99,16 @@ class TrainingDataSpec extends AnyFunSuite with SparkSuiteBase {
     assert(!plan.contains("Window"), plan.take(1500))
   }
 
-  test("MinNPair aggregate: any partitioning + merge order == pairs.sorted.take(n)") {
-    val rnd = new scala.util.Random(47)
+  /** Direct property on the MinNPair aggregator: random inputs split into
+    * random partitions, partials reduced in order, then merged under a
+    * random binary tree — the result must always be the ids of the n
+    * smallest pairs, in pair order. */
+  private def checkMinNPair(rnd: scala.util.Random,
+      gen: scala.util.Random => Seq[(Long, Long)]): Unit =
     for (trial <- 0 until 50) {
       val n = 1 + rnd.nextInt(9)
       val agg = new FixedSample.MinNPairAgg(n)
-      // duplicate keys likely (small key space) so the id tie-break runs
-      val xs = Seq.fill(rnd.nextInt(60))((rnd.nextInt(12).toLong, rnd.nextInt(1000).toLong))
+      val xs = gen(rnd)
       val parts = scala.collection.mutable.ArrayBuffer[Array[Long]]()
       var rest = xs
       while (rest.nonEmpty) {
@@ -154,6 +127,18 @@ class TrainingDataSpec extends AnyFunSuite with SparkSuiteBase {
       val want = xs.sorted.take(n).map(_._2)
       assert(got == want, s"trial $trial n=$n xs=$xs got=$got want=$want")
     }
+
+  test("MinN aggregate: any partitioning + merge order == sorted.take(n)") {
+    // key = id, the smallest-n ids of DomainCap and cohesionAudit: values
+    // repeat, so duplicate pairs occur and must all be kept
+    checkMinNPair(new scala.util.Random(31),
+      rnd => Seq.fill(rnd.nextInt(60)) { val v = rnd.nextInt(40).toLong; (v, v) })
+  }
+
+  test("MinNPair aggregate: any partitioning + merge order == pairs.sorted.take(n)") {
+    // duplicate keys likely (small key space) so the id tie-break runs
+    checkMinNPair(new scala.util.Random(47),
+      rnd => Seq.fill(rnd.nextInt(60))((rnd.nextInt(12).toLong, rnd.nextInt(1000).toLong)))
   }
 
   test("doc chunker: windows/stride/contents match the sequential definition") {
