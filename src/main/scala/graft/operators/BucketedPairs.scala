@@ -89,7 +89,13 @@ object BucketedPairs {
     * semi-joined to the batch's distinct keys first — only touched buckets
     * ever aggregate (partition pruning's entry point on a bucketed index
     * table) — then postings collect through [[cappedBuckets]] (every
-    * buffer bounded) with over-cap buckets degrading to their hub. */
+    * buffer bounded) with over-cap buckets degrading to their hub.
+    *
+    * EAGER: the probe side is materialized here, so building (or merely
+    * explaining) the frame of any incremental lane that calls this runs
+    * Spark jobs at call time. The materialized blocks are local
+    * checkpoints: after an executor loss they cannot be recomputed from
+    * lineage and the query fails instead (see `GraftBridge.materialize`). */
   def probeCandidates(index: DataFrame, probes0: DataFrame, keyCols: Seq[String],
                       idCol: String, probeIdCol: String, cap: Int): DataFrame = {
     val keys = keyCols.map(col)
@@ -122,7 +128,7 @@ object BucketedPairs {
     // where n >= 2, a null kept-ids array means exactly "overflowed"
     // (CappedIds.result nulls ids only for overflow or n < 2)
     val sIdx = keyCols.length // schema after the agg: key columns, then `s`
-    val (buckets, monsterCount) = GraftBridge.materializeCounting(
+    val (buckets, _, monsterCount) = GraftBridge.materializeCounting(
       slices.filter(col("s.n") >= 2),
       row => row.getStruct(sIdx, 3).isNullAt(2))
 

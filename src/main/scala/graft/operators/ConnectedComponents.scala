@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.GraftBridge.materialize
+import org.apache.spark.sql.GraftBridge.{materialize, materializeCounting}
 import org.apache.spark.sql.functions._
 
 /** Connected components over an undirected edge list via iterative
@@ -51,7 +51,7 @@ object ConnectedComponents {
     import spark.implicits._
 
     // undirected symmetric closure; self-loops dropped, narrow (long, long)
-    val e0 = materialize(
+    val (e0, e0Count, _) = materializeCounting(
       edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
         .filter($"u" =!= $"v"))
 
@@ -60,11 +60,10 @@ object ConnectedComponents {
     // contraction exists to SHRINK a graph that is too big to collect, and
     // for a small graph its ~4 extra blocking job boundaries are pure
     // scheduler-latency overhead (the Amdahl-S term; r3 measured them
-    // amplified 13x under host pressure on a 500-edge input). One cheap
-    // count on the already-materialized e0 decides; the count is exact, so
-    // the collect in localFinish stays bounded. A 10^12-doc corpus takes
-    // the contraction path untouched.
-    val e0Count = e0.count()
+    // amplified 13x under host pressure on a 500-edge input). e0's row
+    // count, taken by its materialization pass, decides; the count is
+    // exact, so the collect in localFinish stays bounded. A 10^12-doc
+    // corpus takes the contraction path untouched.
     if (e0Count <= localFinishMaxEdges) {
       if (e0Count == 0) {
         // no edges: empty (id, component) — callers left-join singletons in
@@ -76,14 +75,13 @@ object ConnectedComponents {
         e0.select($"u".as("id"), $"v".as("nbr"))
           .union(e0.select($"v".as("id"), $"u".as("nbr")))
           .groupBy("id").agg(least(min("nbr"), first("id")).as("label")))
-      val e1 = materialize(
+      val (e1, e1Count, _) = materializeCounting(
         e0.join(l0.withColumnRenamed("id", "u").withColumnRenamed("label", "lu"), "u")
           .join(l0.withColumnRenamed("id", "v").withColumnRenamed("label", "lv"), "v")
           .select($"lu".as("u"), $"lv".as("v"))
           .filter($"u" =!= $"v")
           .distinct())
 
-      val e1Count = e1.count() // cheap: e1 is checkpointed
       if (e1Count == 0) {
         // every star was a whole component — no phase 2/3 work at all
         l0.select($"id", $"label".as("component"))
@@ -177,12 +175,13 @@ object ConnectedComponents {
   private def iterate(e0: DataFrame, maxIterations: Int): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    var labels = materialize(
+    val (labels0, labelRows, _) = materializeCounting(
       e0.select($"u".as("id"), $"v".as("nbr"))
         .union(e0.select($"v".as("id"), $"u".as("nbr")))
         .groupBy("id").agg(least(min("nbr"), first("id")).as("label")))
 
-    var converged = labels.isEmpty
+    var labels = labels0
+    var converged = labelRows == 0
     var iter = 0
     var lastSum: java.math.BigDecimal = null
     while (!converged && iter < maxIterations) {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.GraftBridge.materialize
+import org.apache.spark.sql.GraftBridge.{materialize, materializeCounting}
 import org.apache.spark.sql.functions._
 
 /** Host-graph PageRank as iterative DataFrame self-joins — the link-quality
@@ -43,9 +43,8 @@ object HostRank {
     require(iters >= 1, "iters must be >= 1")
     val e = materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
-    val nodes = materialize(
+    val (nodes, n, _) = materializeCounting(
       e.select(col("src").as("host")).union(e.select(col("dst").as("host"))).distinct())
-    val n = nodes.count()
     require(n > 0, "empty graph")
     val r0 = scale / n
     val base = (15L * r0) / 100L

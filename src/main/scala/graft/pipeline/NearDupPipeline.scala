@@ -381,6 +381,14 @@ object NearDupPipeline {
   * stage's write job via [[graft.spark.PartitionStatsTap]] — the stage
   * output is never re-read for metrics, so a fresh run issues exactly one
   * scan per stage input (asserted in NearDupPipelineSpec).
+  *
+  * Job budget: a stage costs only its compute-and-write jobs and its
+  * metrics append. Opening a stage table (`io.read`, after the write or
+  * on resume) and the metrics table launches none, because TableIO reads
+  * carry the stored schema instead of inferring it; so a fully committed
+  * resume launches no Spark job inside `NearDupPipeline.run`.
+  * NearDupPipelineSpec's job-budget tests pin that and a fresh run's
+  * total.
   */
 class Lineage(spark: SparkSession, io: TableIO, fingerprint: String) {
   private val done = scala.collection.mutable.ArrayBuffer[String]()

@@ -12,6 +12,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `commit` is the table commit, `snapshots` reads the snapshot log, and
   * `readAt` is `VERSION AS OF` time travel — the pipeline code is
   * identical.
+  *
+  * Reads carry the schema the table was written with: Iceberg keeps it in
+  * table metadata, and the parquet realization keeps it in a sidecar file
+  * next to the data. Neither infers a schema from data files, so opening a
+  * table launches no Spark job (parquet inference is one footer-reading
+  * job per read) and a fully committed resume launches none at all.
   */
 trait TableIO {
   /** Read the table HEAD (the latest written snapshot, committed or not —
@@ -121,13 +127,49 @@ trait TableIO {
   * highest-numbered version dir; an uncommitted head (crash before the
   * trailing commit) is simply rewritten by the next run's overwrite, so
   * committed history is never mutated. Append-mode tables (`_metrics`)
-  * stay flat parquet-append dirs — they are their own log. */
+  * stay flat parquet-append dirs — they are their own log.
+  *
+  * Schema sidecar: `overwrite` writes the frame's schema as JSON to
+  * `_graft_schema.json` in the version dir right after the data, and
+  * `append` writes it once at the root of the flat table. Every read
+  * (`read`, `readAt`, and through them `compact`, `upsert`, `diff`) hands
+  * that schema to the parquet reader instead of letting Spark infer it,
+  * because parquet inference runs one Spark job per read to fetch a
+  * footer. The underscore prefix keeps Spark's file index from listing
+  * the sidecar as data. A directory without a sidecar (written before the
+  * sidecar existed, or by a writer that died between data and sidecar)
+  * keeps the inferred read. */
 class ParquetTableIO(spark: SparkSession, root: String) extends TableIO {
   import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.types.{DataType, StructType}
   private val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def dir(table: String) = new Path(s"$root/$table")
   private def versionDir(table: String, v: Long) = new Path(s"$root/$table/v$v")
   private def commitLog(table: String) = new Path(s"$root/$table/_GRAFT_COMMITS")
+  private def schemaFile(d: Path) = new Path(d, "_graft_schema.json")
+
+  private def readUtf8(p: Path): String = {
+    val in = fs.open(p)
+    try {
+      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+      in.readFully(bytes)
+      new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+    } finally in.close()
+  }
+
+  private def writeUtf8(p: Path, s: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** Parquet read of `d` under its sidecar schema; inferred without one. */
+  private def load(d: Path): DataFrame = {
+    val f = schemaFile(d)
+    if (fs.exists(f))
+      spark.read.schema(DataType.fromJson(readUtf8(f)).asInstanceOf[StructType]).parquet(d.toString)
+    else spark.read.parquet(d.toString)
+  }
 
   /** Highest version dir present (written, not necessarily committed). */
   private def headVersion(table: String): Option[Long] = {
@@ -143,24 +185,14 @@ class ParquetTableIO(spark: SparkSession, root: String) extends TableIO {
   private def readLog(table: String): Seq[(Long, String)] = {
     val log = commitLog(table)
     if (!fs.exists(log)) Nil
-    else {
-      val in = fs.open(log)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(log).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").toSeq.filter(_.nonEmpty).map { line =>
-            val i = line.indexOf('\t')
-            (line.substring(0, i).toLong, line.substring(i + 1))
-          }
-      } finally in.close()
+    else readUtf8(log).split("\n").toSeq.filter(_.nonEmpty).map { line =>
+      val i = line.indexOf('\t')
+      (line.substring(0, i).toLong, line.substring(i + 1))
     }
   }
 
-  override def read(table: String): DataFrame = headVersion(table) match {
-    case Some(v) => spark.read.parquet(versionDir(table, v).toString)
-    case None    => spark.read.parquet(s"$root/$table") // flat append table
-  }
+  override def read(table: String): DataFrame =
+    load(headVersion(table).fold(dir(table))(versionDir(table, _))) // no version: flat append table
 
   override def overwrite(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
     // advance past the last committed snapshot; an uncommitted head from a
@@ -174,10 +206,13 @@ class ParquetTableIO(spark: SparkSession, root: String) extends TableIO {
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(versionDir(table, next).toString)
+    writeUtf8(schemaFile(versionDir(table, next)), df.schema.json)
   }
 
-  override def append(table: String, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).parquet(s"$root/$table")
+  override def append(table: String, df: DataFrame): Unit = {
+    df.write.mode(SaveMode.Append).parquet(dir(table).toString)
+    if (!fs.exists(schemaFile(dir(table)))) writeUtf8(schemaFile(dir(table)), df.schema.json)
+  }
 
   override def exists(table: String): Boolean = fs.exists(dir(table))
 
@@ -185,10 +220,7 @@ class ParquetTableIO(spark: SparkSession, root: String) extends TableIO {
     val head = headVersion(table).getOrElse(
       throw new IllegalStateException(s"commit($table): nothing written"))
     val entries = readLog(table).filterNot(_._1 == head) :+ (head -> fingerprint)
-    val out = fs.create(commitLog(table), true)
-    try out.write(entries.map { case (v, f) => s"$v\t$f" }.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeUtf8(commitLog(table), entries.map { case (v, f) => s"$v\t$f" }.mkString("", "\n", "\n"))
   }
 
   override def committedFingerprint(table: String): Option[String] =
@@ -219,7 +251,7 @@ class ParquetTableIO(spark: SparkSession, root: String) extends TableIO {
     require(readLog(table).exists(_._1 == snapshotId),
       s"readAt($table, $snapshotId): not a committed snapshot " +
         s"(committed: ${readLog(table).map(_._1).mkString(",")})")
-    spark.read.parquet(versionDir(table, snapshotId).toString)
+    load(versionDir(table, snapshotId))
   }
 
   override def compact(table: String, targetFiles: Int): Long = {

@@ -31,33 +31,30 @@ object GraftBridge {
     *
     * Blocks are freed by the ContextCleaner when the RDD is dropped; they
     * are not recomputable after executor loss. */
-  def materialize(df: Dataset[Row]): Dataset[Row] = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val rdd = df.queryExecution.toRdd.map(_.copy()) // unsafe rows are reused buffers
-    rdd.localCheckpoint()
-    rdd.count()
-    session.internalCreateDataFrame(rdd, df.schema)
-  }
+  def materialize(df: Dataset[Row]): Dataset[Row] = materializeCounting(df)._1
 
-  /** `materialize` that additionally counts rows matching `pred` DURING the
-    * one materialization pass (a long accumulator folded into the
-    * checkpoint's `count()` job) — callers that need a driver-side gate on
-    * "does any such row exist" (e.g. BucketedPairs' monster-bucket branch)
-    * get it without scheduling a second job over the stored blocks.
-    * Task retries can only OVER-count the accumulator (each successful
-    * attempt adds), never under-count — safe for existence gates, where a
-    * false positive merely runs a branch that then finds no rows. */
+  /** [[materialize]] plus the counts its one pass already takes:
+    * `(frame, rows, matched)`. `rows` is the checkpoint's own `count()`,
+    * so a caller that sizes or gates on the frame (connected components'
+    * edge count, host rank's node count) schedules no second job over the
+    * stored blocks. `matched` counts rows satisfying `pred` through a long
+    * accumulator folded into the same job (e.g. BucketedPairs' monster-
+    * bucket gate). Task retries can only OVER-count the accumulator (each
+    * successful attempt adds), never under-count — safe for existence
+    * gates, where a false positive merely runs a branch that then finds no
+    * rows; `rows` is exact. */
   def materializeCounting(df: Dataset[Row],
-                          pred: catalyst.InternalRow => Boolean): (Dataset[Row], Long) = {
+                          pred: catalyst.InternalRow => Boolean = _ => false)
+      : (Dataset[Row], Long, Long) = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     val acc = session.sparkContext.longAccumulator("graft.materialize.matched")
     val rdd = df.queryExecution.toRdd.map { r =>
       if (pred(r)) acc.add(1L)
-      r.copy()
+      r.copy() // unsafe rows are reused buffers
     }
     rdd.localCheckpoint()
-    rdd.count()
-    (session.internalCreateDataFrame(rdd, df.schema), acc.value)
+    val rows = rdd.count()
+    (session.internalCreateDataFrame(rdd, df.schema), rows, acc.value)
   }
 
   /** The physical-plan rows of `df` (UnsafeRow buffers ARE reused — copy

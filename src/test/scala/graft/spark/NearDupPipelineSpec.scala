@@ -23,6 +23,26 @@ class NearDupPipelineSpec extends AnyFunSuite with SparkSuiteBase {
   private def tmpDir(tag: String): String =
     Files.createTempDirectory(s"graft-$tag").toString
 
+  /** `body`'s result and the call site (final stage name) of every Spark
+    * job started while it ran, on any thread (lane futures and the lineage
+    * trailer launch jobs too). Suites run one at a time, so no other
+    * test's jobs interleave. */
+  private def jobsDuring[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+      (r, sites.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("pipeline recall >= 0.99 vs brute-force truth at reference config") {
     val (df, truth) = pagesDf(600, 42L)
     assert(truth.nonEmpty)
@@ -83,6 +103,37 @@ class NearDupPipelineSpec extends AnyFunSuite with SparkSuiteBase {
     val stages = second.metrics.select("stage").distinct().collect().map(_.getString(0)).toSet
     assert(stages == Set("extracted", "edges_exact", "edges_minhash",
       "edges_simhash", "edges_substring", "clusters", "cluster_stats"))
+  }
+
+  /** Jobs launched inside a fresh `run` and inside a fully committed
+    * resume of it (the caller's first action is outside both). */
+  private lazy val jobBudget: (Seq[String], Seq[String]) = {
+    val (df, _) = pagesDf(300, 9L)
+    val cfg = NearDupPipeline.Config(workDir = tmpDir("jobs"), inputSnapshotId = Some("snap-1"))
+    val (fresh, freshJobs) = jobsDuring(NearDupPipeline.run(spark, df, cfg))
+    val freshClusters = fresh.clusters.orderBy("url").collect().map(_.toSeq)
+    val (resumed, resumeJobs) = jobsDuring(NearDupPipeline.run(spark, df, cfg))
+    assert(resumed.clusters.orderBy("url").collect().map(_.toSeq).sameElements(freshClusters))
+    (freshJobs, resumeJobs)
+  }
+
+  test("job budget: a fully committed resume launches no Spark job") {
+    // before stage tables carried their schema, every read ran one parquet
+    // footer-inference job: 7 stage reads + `_metrics` = 8 on this resume
+    val resumeJobs = jobBudget._2
+    assert(resumeJobs.isEmpty, s"resume launched ${resumeJobs.size} jobs: ${resumeJobs.mkString("; ")}")
+  }
+
+  test("job budget: a fresh run launches at least 10 fewer jobs than before") {
+    // this fresh run launched 53 jobs before (54 when AQE's stage timing
+    // runs one more shuffle stage; 10 runs at aee32ae): the same 8
+    // inference jobs, plus 2 (AQE map + result) for connected components'
+    // edge recount, which the materialize pass now supplies. It now
+    // launches 43, or 44 under the same timing.
+    val ParentFreshJobs = 54
+    val freshJobs = jobBudget._1
+    assert(freshJobs.size <= ParentFreshJobs - 10,
+      s"fresh run launched ${freshJobs.size} jobs: ${freshJobs.mkString("; ")}")
   }
 
   test("resume: changed config invalidates committed stages (fingerprint mismatch)") {
