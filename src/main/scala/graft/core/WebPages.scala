@@ -182,12 +182,26 @@ object WebPages {
       .toDF()
   }
 
+  /** Largest corpus [[truthPairs]] accepts: its O(n²) loop runs on the
+    * driver, 12.5M pair checks at this size. */
+  val MaxTruthPages = 5000
+
+  /** Wall-clock bound on one [[truthPairs]] call. */
+  private val TruthPairsTimeout: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.Duration(10, "minutes")
+
   /** Brute-force truth pairs (url_a < url_b, kind) under `cfg` — the recall
     * oracle. Exact by construction: every pair is tested on the criterion
     * itself (winnowing-fingerprint prefilter for the substring lane is
-    * lossless for spans >= gramLen + window - 1 = 175 chars <= minLen). */
+    * lossless for spans >= gramLen + window - 1 = 175 chars <= minLen).
+    * Refuses more than [[MaxTruthPages]] pages before any pair work, and
+    * fails after 10 minutes: a corpus-sized input must not turn
+    * a fixture oracle into an unbounded driver loop. */
   def truthPairs(pages: Seq[Page], cfg: DedupConfig = DedupConfig()): Set[(String, String, String)] = {
     val n = pages.length
+    require(n <= MaxTruthPages,
+      s"truthPairs: $n pages exceeds the brute-force limit of $MaxTruthPages " +
+        "(an O(n^2) driver loop); sample the corpus first")
     val shingles = pages.map(p => TextOps.shingleHashes(p.text)).toArray // sorted by construction
     val sims = pages.map(p => TextOps.simHash64(p.text)).toArray
     val fps = pages.map(p => TextOps.winnowedFingerprints(p.text).toSet).toArray
@@ -197,14 +211,16 @@ object WebPages {
     }
     // the O(n²/2) pair loop parallelized over driver cores (r6: ~0.5 s
     // single-threaded at n=800 sat inside q_pages_recall's timed path per
-    // rep). Each thread owns a disjoint stripe of `i` and a private set;
-    // the union of disjoint per-pair verdicts is order-free, so the result
-    // set is identical to the sequential loop's.
+    // rep), on a pool of its own so it never starves or waits behind the
+    // shared global pool. Each thread owns a disjoint stripe of `i` and a
+    // private set; the union of disjoint per-pair verdicts is order-free,
+    // so the result set is identical to the sequential loop's.
     val threads = math.max(1, Runtime.getRuntime.availableProcessors())
     def stripe(s: Int): mutable.Set[(String, String, String)] = {
       val local = mutable.Set[(String, String, String)]()
       var i = s
-      while (i < n) {
+      // a timed-out call's shutdownNow interrupts the stripes
+      while (i < n && !Thread.currentThread().isInterrupted) {
         var j = i + 1
         while (j < n) {
           if (pages(i).text == pages(j).text) {
@@ -226,12 +242,16 @@ object WebPages {
       }
       local
     }
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val parts = Await.result(
-      Future.sequence((0 until threads).map(s => Future(stripe(s)))), Duration.Inf)
-    parts.reduce { (a, b) => a ++= b; a }.toSet
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads, r => {
+      val t = new Thread(r, "graft-truth-pairs"); t.setDaemon(true); t
+    })
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val parts = Await.result(
+        Future.sequence((0 until threads).map(s => Future(stripe(s)))), TruthPairsTimeout)
+      parts.reduce { (a, b) => a ++= b; a }.toSet
+    } finally pool.shutdownNow()
   }
 
   /** Jaccard of two sorted long arrays (delegates to the shared kernel). */

@@ -73,9 +73,6 @@ object NearDupPipeline {
 
   case class Result(clusters: DataFrame, clusterStats: DataFrame, metrics: DataFrame)
 
-  /** Run (or resume) the full pipeline. `pages` must have the north-rule
-    * schema; `text` may be null, in which case extraction output is used
-    * without the byte-identical cross-check. */
   /** Deterministic fingerprint of everything that changes stage outputs —
     * committed with each stage so resume never reuses a stage computed
     * under a different config. */
@@ -161,6 +158,15 @@ object NearDupPipeline {
     if (df.rdd.getNumPartitions < p) df.repartition(p, col(by)) else df
   }
 
+  /** Run (or resume) the full pipeline. `pages` must have the north-rule
+    * schema; `text` may be null, in which case extraction output is used
+    * without the byte-identical cross-check.
+    *
+    * Resume opens only what it uses: stage tables are lazy handles
+    * ([[Lineage.stage]]), and the frames built from them (the cached
+    * `extracted`, its spread feature input, the lane texts) are built only
+    * when a stage computes. A fully committed resume therefore opens just
+    * `clusters`, `cluster_stats` and `_metrics`, and caches nothing. */
   def run(spark: SparkSession, pages: DataFrame, cfg: Config): Result =
     run(spark, pages, cfg, new ParquetTableIO(spark, cfg.workDir))
 
@@ -202,8 +208,15 @@ object NearDupPipeline {
     }
     // all four lanes + clustering + stats scan this table; cache the
     // columnar batches once instead of re-reading the parquet snapshot
-    // 6x (at bench scale that re-read was ~20GB of unscalable disk I/O)
-    val extracted = extractedSnapshot.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // 6x (at bench scale that re-read was ~20GB of unscalable disk I/O).
+    // Like every frame below that feeds a stage's compute, it is built
+    // only when a computing stage first needs it: a fully committed resume
+    // opens, caches and plans none of it.
+    var extractedCached = false
+    lazy val extracted = {
+      extractedCached = true
+      extractedSnapshot().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
     // Fan the FEATURES input out (`spread`): a small corpus writes small
     // stage files that re-pack into 1-2 scan splits, which would pin the
     // one heavy per-doc kernel of the pipeline to 1-2 cores. Only the
@@ -212,7 +225,7 @@ object NearDupPipeline {
     // own shuffles, and stage outputs keep their small file counts.
     // Partitioning never changes results: ids are deterministic url
     // hashes, every downstream op is key-based.
-    val featuresInput = spread(extracted, "id")
+    lazy val featuresInput = spread(extracted, "id")
 
     // ---- candidate + verify lanes. The four lanes are independent DAGs, so
     // they are submitted as CONCURRENT Spark jobs (scala.concurrent.Future):
@@ -257,7 +270,7 @@ object NearDupPipeline {
         call("doc_features", col("text")).as("f"))
       .select(col("id"), col("th"), col("f.bands").as("bands"),
         col("f.sim").as("sim"), col("f.fps").as("fps")))
-    val texts = extracted.select(col("id"), col("text"))
+    lazy val texts = extracted.select(col("id"), col("text"))
 
     val laneFutures = Seq(
       // star edges, not C(n,2): a 10^6-member exact-dup group (soft-404 /
@@ -299,10 +312,10 @@ object NearDupPipeline {
     // of the corpus against that small side (AQE broadcasts it) — never a
     // corpus-vs-corpus shuffle join. Singletons take component = id.
     val clusters = m.stage("clusters") {
-      val edges = exact
-        .unionByName(minhash)
-        .unionByName(simhash)
-        .unionByName(substring)
+      val edges = exact()
+        .unionByName(minhash())
+        .unionByName(simhash())
+        .unionByName(substring())
         .distinct()
       val comps = ConnectedComponents.run(edges).withColumnRenamed("id", "cid")
       extracted.select(col("url"), col("id"))
@@ -324,7 +337,7 @@ object NearDupPipeline {
       // distinct component list. Only dup-cluster members — a small
       // fraction of the corpus — ever reach a shuffle or the text join;
       // AQE broadcasts the member side against the corpus-wide probe.
-      val nonRoot = clusters
+      val nonRoot = clusters()
         .filter(col("id") =!= col("component"))
         .select(col("component"), col("id"))
       val members = nonRoot.unionByName(
@@ -345,9 +358,9 @@ object NearDupPipeline {
           call("req_quantile", col("len_req"), lit(0.99)).as("p99_len"))
     }
 
-    extracted.unpersist(false)
+    if (extractedCached) extracted.unpersist(false)
     m.awaitCommits()
-    Result(clusters, stats, m.metrics)
+    Result(clusters(), stats(), m.metrics)
   }
 
   /** Dup-pair recall of a cluster assignment against a truth pair set —
@@ -389,6 +402,15 @@ object NearDupPipeline {
   * resume launches no Spark job inside `NearDupPipeline.run`.
   * NearDupPipelineSpec's job-budget tests pin that and a fresh run's
   * total.
+  *
+  * Stage handles are lazy. Every stage checks its committed fingerprint
+  * in call order, so which stages compute and the `snapshot_id` each
+  * lineage row carries do not depend on what gets opened. A computed
+  * stage reads its output back right after the write; a committed one is
+  * opened only when its handle is first called (by a downstream stage
+  * that computes, or for the returned result), so a fully committed
+  * resume opens only `clusters`, `cluster_stats` and `_metrics`
+  * (NearDupPipelineSpec counts the opens).
   */
 class Lineage(spark: SparkSession, io: TableIO, fingerprint: String) {
   private val done = scala.collection.mutable.ArrayBuffer[String]()
@@ -404,10 +426,12 @@ class Lineage(spark: SparkSession, io: TableIO, fingerprint: String) {
   private val pending = scala.collection.mutable.ArrayBuffer[java.util.concurrent.Future[_]]()
 
   /** Compute-or-load: if the stage output is committed under this run's
-    * fingerprint, read it (resume); otherwise compute, write, and trail the
-    * lineage row + commit. */
-  def stage(name: String)(compute: => DataFrame): DataFrame = {
-    if (!io.committedFingerprint(name).contains(fingerprint)) {
+    * fingerprint, hand back a lazy handle to it (resume); otherwise
+    * compute, write, read the output back, and trail the lineage row +
+    * commit. The handle is memoized, so a table is opened at most once. */
+  def stage(name: String)(compute: => DataFrame): () => DataFrame = {
+    val computes = !io.committedFingerprint(name).contains(fingerprint)
+    if (computes) {
       val t0 = System.nanoTime()
       // the write job itself produces the per-partition lineage stats via
       // a pass-through tap — no post-write re-read of the stage output
@@ -433,7 +457,9 @@ class Lineage(spark: SparkSession, io: TableIO, fingerprint: String) {
         })
       }
     } else synchronized { done += name }
-    io.read(name)
+    lazy val table = io.read(name)
+    if (computes) table
+    () => table
   }
 
   /** Join all trailing metrics/commit work (call before returning results). */

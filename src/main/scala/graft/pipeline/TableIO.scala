@@ -107,11 +107,12 @@ trait TableIO {
         case Some(d) => updates.join(d.select(keyCols.map(d(_)): _*), keyCols, "left_anti")
         case None    => updates
       })
-    overwrite(table, merged)
+    overwrite(table, merged, TableIO.partitionColumns(head))
   }
 
   /** Small-file maintenance (Iceberg's `rewrite_data_files`): rewrite the
-    * committed HEAD into `targetFiles` files as a NEW snapshot committed
+    * committed HEAD into `targetFiles` write tasks (files per partition
+    * value, for a partitioned head) as a NEW snapshot committed
     * under the SAME fingerprint — data-identical, so pipeline resume
     * still matches, while readers stop paying per-file open/footer cost.
     * At 10^12 docs the accumulated output of incremental runs is the
@@ -119,6 +120,19 @@ trait TableIO {
     * must never change query results — the spec + driver query pin
     * exactly that. Returns the new snapshot id. */
   def compact(table: String, targetFiles: Int): Long
+}
+
+object TableIO {
+  /** Partition columns of a table as opened by `read`/`readAt`: those of
+    * the file relation it scans, none for any other plan. A rewrite of the
+    * head (`upsert`, `compact`) lays the new snapshot out by them, so a
+    * partitioned table (IvfIndex's `cell`) keeps its partition pruning. */
+  private[pipeline] def partitionColumns(table: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    table.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.partitionSchema.fieldNames.toSeq }
+      .getOrElse(Nil)
+  }
 }
 
 /** Parquet-directory realization with snapshot history: each `overwrite`
@@ -266,9 +280,8 @@ class ParquetTableIO(spark: SparkSession, root: String) extends TableIO {
     val rewritten =
       if (nFiles >= targetFiles) head.coalesce(targetFiles)
       else head.repartition(targetFiles)
-    overwrite(table, rewritten)
+    overwrite(table, rewritten, TableIO.partitionColumns(head))
     commit(table, fp)
-    val v = headVersion(table).get
-    v
+    headVersion(table).get
   }
 }

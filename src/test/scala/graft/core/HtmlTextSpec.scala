@@ -113,6 +113,25 @@ class WebPagesSpec extends AnyFunSuite {
     assert(truth.size > 50)
   }
 
+  test("truthPairs refuses a corpus above its limit before any pair work") {
+    val oversized = new IndexedSeq[WebPages.Page] {
+      def length: Int = WebPages.MaxTruthPages + 1
+      def apply(i: Int): WebPages.Page = throw new AssertionError(s"page $i read")
+    }
+    val e = intercept[IllegalArgumentException](WebPages.truthPairs(oversized))
+    assert(e.getMessage.contains(s"${WebPages.MaxTruthPages + 1} pages exceeds the brute-force limit"),
+      e.getMessage)
+  }
+
+  test("truthPairs result set is pinned") {
+    // recorded when the pair loop ran on the global execution context
+    val truth = WebPages.truthPairs(WebPages.generate(400, 42L))
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(truth.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(16)
+    assert((truth.size, digest) == ((314, "b12913575e1f0072")))
+  }
+
   test("urls are unique") {
     val pages = WebPages.generate(500, 42L)
     assert(pages.map(_.url).distinct.length == pages.length)

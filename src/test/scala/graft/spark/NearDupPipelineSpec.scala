@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end north-rule pipeline correctness: dup-pair recall >= 0.99
   * against the brute-force truth oracle at the reference config, the
@@ -136,6 +137,100 @@ class NearDupPipelineSpec extends AnyFunSuite with SparkSuiteBase {
       s"fresh run launched ${freshJobs.size} jobs: ${freshJobs.mkString("; ")}")
   }
 
+  /** A parquet TableIO that counts `read` calls per table and notes how
+    * many plans the session's cache holds at every table open and resume
+    * check. */
+  private class CountingIO(dir: String) extends graft.pipeline.ParquetTableIO(spark, dir) {
+    val reads = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    val cachedAtCalls = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    private def noteCache(): Unit =
+      cachedAtCalls.add(org.apache.spark.sql.CacheProbe.cachedPlans(spark))
+    override def read(table: String): DataFrame = {
+      reads.synchronized { reads(table) += 1 }
+      noteCache()
+      super.read(table)
+    }
+    override def committedFingerprint(table: String): Option[String] = {
+      noteCache()
+      super.committedFingerprint(table)
+    }
+  }
+
+  private case class ResumeScope(
+      fullReads: Map[String, Int], cachedBefore: Int, fullCachedAtCalls: Seq[Int],
+      partialReads: Map[String, Int], sameClusters: Boolean,
+      freshSnapshotIds: Map[String, Set[Long]], partialSnapshotIds: Map[String, Set[Long]],
+      partialRecomputedRows: Map[String, Long])
+
+  /** A fresh run, a fully committed resume of it, and a resume after
+    * `clusters` and `cluster_stats` were deleted, each through its own
+    * CountingIO. Both resumes get an empty input frame, so whatever they
+    * return comes from committed tables. */
+  private lazy val resumeScope: ResumeScope = {
+    val (df, _) = pagesDf(300, 21L)
+    val dir = tmpDir("scope")
+    val cfg = NearDupPipeline.Config(workDir = dir, inputSnapshotId = Some("snap-1"))
+    def clusterRows(r: NearDupPipeline.Result) =
+      r.clusters.orderBy("url").collect().map(_.toSeq).toSeq
+    def snapshotIds(m: DataFrame) =
+      m.select("stage", "snapshot_id").distinct().collect()
+        .groupBy(_.getString(0)).map { case (k, rs) => k -> rs.map(_.getLong(1)).toSet }
+    val fresh = NearDupPipeline.run(spark, df, cfg, new CountingIO(dir))
+    val freshClusters = clusterRows(fresh)
+    val freshMetrics = fresh.metrics.collect().toSeq
+    val freshIds = snapshotIds(fresh.metrics)
+
+    val cachedBefore = org.apache.spark.sql.CacheProbe.cachedPlans(spark)
+    val full = new CountingIO(dir)
+    NearDupPipeline.run(spark, df.limit(0), cfg, full)
+
+    Seq("clusters", "cluster_stats").foreach { t =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+    val partial = new CountingIO(dir)
+    val resumed = NearDupPipeline.run(spark, df.limit(0), cfg, partial)
+    val recomputed = Seq("clusters", "cluster_stats")
+    val partialRows = resumed.metrics.filter(col("stage").isin(recomputed: _*))
+    ResumeScope(full.reads.toMap, cachedBefore, full.cachedAtCalls.asScala.toSeq,
+      partial.reads.toMap, clusterRows(resumed) == freshClusters,
+      freshIds, snapshotIds(partialRows),
+      recomputed.map(t => t -> (partialRows.filter(col("stage") === t).count() -
+        freshMetrics.count(_.getString(0) == t))).toMap)
+  }
+
+  test("resume scope: a fully committed resume opens only the tables it returns") {
+    assert(resumeScope.fullReads == Map("clusters" -> 1, "cluster_stats" -> 1, "_metrics" -> 1),
+      resumeScope.fullReads.toString)
+  }
+
+  test("resume scope: a fully committed resume caches nothing") {
+    // sampled at every table open and resume check, the last being the
+    // `_metrics` open on return: a plan cached and dropped inside the run
+    // shows only there
+    val s = resumeScope
+    assert(s.fullCachedAtCalls.nonEmpty)
+    assert(s.fullCachedAtCalls.forall(_ == s.cachedBefore),
+      s"cached plans during the resume: ${s.fullCachedAtCalls.mkString(",")} (before: ${s.cachedBefore})")
+  }
+
+  test("resume scope: a partial resume opens each input once and recomputes the same tail") {
+    val s = resumeScope
+    val stages = Seq("extracted", "edges_exact", "edges_minhash", "edges_simhash",
+      "edges_substring", "clusters", "cluster_stats")
+    assert(s.partialReads == (stages :+ "_metrics").map(_ -> 1).toMap, s.partialReads.toString)
+    assert(s.sameClusters, "partial resume changed cluster assignments")
+    // the recomputed stages appended a second set of lineage rows, under
+    // the snapshot ids the fresh run gave them
+    Seq("clusters", "cluster_stats").foreach { t =>
+      assert(s.partialRecomputedRows(t) > 0, s"$t appended no lineage rows")
+      assert(s.partialSnapshotIds(t) == s.freshSnapshotIds(t),
+        s"$t: ${s.partialSnapshotIds(t)} vs fresh ${s.freshSnapshotIds(t)}")
+    }
+    assert(s.freshSnapshotIds("clusters") == Set(6L) && s.freshSnapshotIds("cluster_stats") == Set(7L),
+      s.freshSnapshotIds.toString)
+  }
+
   test("resume: changed config invalidates committed stages (fingerprint mismatch)") {
     val (df, _) = pagesDf(200, 3L)
     val dir = tmpDir("fp")
@@ -179,20 +274,14 @@ class NearDupPipelineSpec extends AnyFunSuite with SparkSuiteBase {
   test("metrics come from the write job: one read per stage, schema + values intact") {
     val (df, _) = pagesDf(200, 17L)
     val dir = tmpDir("tap")
-    val reads = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
-    val io = new graft.pipeline.ParquetTableIO(spark, dir) {
-      override def read(table: String): DataFrame = {
-        reads.synchronized { reads(table) += 1 }
-        super.read(table)
-      }
-    }
+    val io = new CountingIO(dir)
     val cfg = NearDupPipeline.Config(workDir = dir)
     val res = NearDupPipeline.run(spark, df, cfg, io)
     val nClusters = res.clusters.count()
 
     // r2 re-read every stage output for metrics (2 reads of `extracted`
     // per fresh run); the tap must keep it at exactly one
-    assert(reads("extracted") == 1, s"extracted read ${reads("extracted")}x")
+    assert(io.reads("extracted") == 1, s"extracted read ${io.reads("extracted")}x")
 
     val m = res.metrics
     assert(m.columns.toSeq == Seq(

@@ -116,6 +116,58 @@ class TableIOCompactSpec extends AnyFunSuite with SparkSuiteBase {
     }
   }
 
+  test("compact and upsert keep a partitioned head partitioned (IvfIndex cell layout)") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import graft.operators.IvfIndex
+    val root = java.nio.file.Files.createTempDirectory("graft-compact-cells").toString
+    val io = new ParquetTableIO(spark, root)
+    val vecs = (0 until 400).map(i => (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 13) % 23).toDouble)))
+      .toDF("id", "v")
+    val cents = IvfIndex.buildStored(vecs, "id", "v", k = 4, io, "ivf_index", iters = 2)
+    val queries = vecs.filter(col("id") < 8)
+    def rows() = io.read("ivf_index").orderBy("neighbor_id").collect().map(_.toSeq).toSeq
+    def answers() = IvfIndex.topKStored(io, "ivf_index", queries, "id", "v",
+        kNeighbors = 5, cents, nProbe = 2)
+      .select("query_id", "neighbor_id", "rnk").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    def cellDirs(): Seq[String] = {
+      val head = io.snapshots("ivf_index").last._1
+      new java.io.File(s"$root/ivf_index/v$head").list().filter(_.startsWith("cell=")).sorted.toSeq
+    }
+    def cellPartitionFilters(): Seq[String] = {
+      val exec = io.read("ivf_index").filter(col("cell") === 1).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      exec.collect { case f: FileSourceScanExec => f.partitionFilters.map(_.sql) }.flatten
+    }
+    val rows0 = rows()
+    val answers0 = answers()
+    val cells0 = cellDirs()
+    assert(cells0.nonEmpty, "fixture index must be cell-partitioned")
+    assert(cellPartitionFilters().exists(_.contains("cell")))
+
+    io.compact("ivf_index", targetFiles = 2)
+    assert(io.snapshots("ivf_index").size == 2)
+    assert(cellDirs() == cells0, "compaction flattened the cell layout")
+    assert(cellPartitionFilters().exists(_.contains("cell")),
+      s"cell = 1 lost partition pruning after compact: ${cellPartitionFilters()}")
+    assert(rows() == rows0)
+    assert(answers() == answers0)
+
+    // re-upserting existing rows leaves the content unchanged
+    val head = io.read("ivf_index")
+    io.upsert("ivf_index", head.filter(col("neighbor_id") < 50), Seq("neighbor_id"))
+    io.commit("ivf_index", io.snapshots("ivf_index").last._2)
+    assert(io.snapshots("ivf_index").size == 3)
+    assert(cellDirs() == cells0, "upsert flattened the cell layout")
+    assert(cellPartitionFilters().exists(_.contains("cell")),
+      s"cell = 1 lost partition pruning after upsert: ${cellPartitionFilters()}")
+    assert(rows() == rows0)
+    assert(answers() == answers0)
+  }
+
   test("compact refuses an uncommitted head") {
     val root = java.nio.file.Files.createTempDirectory("graft-compact2").toString
     val io = new ParquetTableIO(spark, root)
