@@ -2487,11 +2487,6 @@ object SparkEntry {
       lit("</head><body><p>"), col("text"), lit("</p></body></html>")).cast("binary")
   }
 
-  /** Deterministic north-rule pages corpus (same shape as the 10^12-doc
-    * Iceberg table; 800 rows at test scale, seed 42). */
-  private def pagesDf(s: SparkSession): DataFrame =
-    s.createDataFrame(s.sparkContext.parallelize(graft.core.WebPages.generate(800, 42L), 8))
-
   /** Documents-derived north-rule pages corpus for the oracle-checked
     * pipeline query (q_pages_pipeline): exact copies (doc_id%10, +1e6) and
     * appended-token near-dups (doc_id%7 over >=400-char docs, +2e6 — long

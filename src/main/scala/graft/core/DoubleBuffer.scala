@@ -31,7 +31,6 @@ final class DoubleBuffer private (
 
   def count: Int = count0
   def isEmpty: Boolean = count0 == 0
-  def isSorted: Boolean = sorted0
   def capacity: Int = arr.length
   private def startIdx: Int = if (spaceAtBottom) arr.length - count0 else 0
 

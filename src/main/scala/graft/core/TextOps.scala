@@ -18,6 +18,10 @@ object TextOps {
   val NumBands = 16
   val RowsPerBand = 8
   require(NumBands * RowsPerBand == NumPerms)
+  /** Winnowing gram length (chars) and window (grams) of the substring
+    * lane's fingerprints. */
+  val WinnowGramLen = 48
+  val WinnowWindow = 128
 
   /** BPE-style pre-tokenization pattern (the GPT-2 shape: contractions,
     * letter runs, digit runs, symbol runs, whitespace), deliberately
@@ -61,10 +65,6 @@ object TextOps {
     val t = text.trim
     if (t.isEmpty) Array.empty else t.split("\\s+")
   }
-
-  def tokenCount(text: String): Int = tokenize(text).length
-
-  def hashToken(tok: String): Long = ThetaSketch.hashBytes(tok.getBytes("UTF-8"))
 
   /** `\s` of java regex (ASCII whitespace) — keeps parity with the
     * split-based tokenizer and the SQL oracle's regexp splits. */
@@ -210,11 +210,11 @@ object TextOps {
   /** Classic 128-perm MinHash over a shingle-hash set: sig(i) =
     * min over shingles of mix(shingle ^ permSeed(i)). Empty docs get
     * Long.MaxValue lanes (never collide with non-empty docs). */
-  def minHashSignature(shingles: Array[Long], numPerms: Int = NumPerms): Array[Long] =
-    minHashSignatureRange(shingles, shingles.length, numPerms)
+  def minHashSignature(shingles: Array[Long]): Array[Long] =
+    minHashSignatureRange(shingles, shingles.length)
 
-  private def minHashSignatureRange(shingles: Array[Long], n: Int, numPerms: Int): Array[Long] = {
-    val sig = Array.fill(numPerms)(Long.MaxValue)
+  private def minHashSignatureRange(shingles: Array[Long], n: Int): Array[Long] = {
+    val sig = Array.fill(NumPerms)(Long.MaxValue)
     val a = permA
     val b = permB
     // perms outer / shingles inner: the running min and the permutation
@@ -222,7 +222,7 @@ object TextOps {
     // sequentially — the inner loop is one load + mul + add + min per
     // element
     var i = 0
-    while (i < numPerms) {
+    while (i < NumPerms) {
       val ai = a(i)
       val bi = b(i)
       var m = Long.MaxValue
@@ -240,7 +240,7 @@ object TextOps {
 
   def minHash(text: String): Array[Long] = {
     val w = shingleHashesScratch(text, ShingleSize)
-    minHashSignatureRange(scratch.get().shingles, w, NumPerms)
+    minHashSignatureRange(scratch.get().shingles, w)
   }
 
   /** One-permutation MinHash (Li/Owen/Zhang, NIPS'12) with OPTIMAL
@@ -264,14 +264,11 @@ object TextOps {
     * the documented alternative for corpora whose doc length amortizes it.
     * Empty documents get Long.MaxValue lanes (never collide), mirroring
     * [[minHashSignature]]. */
-  def minHashOphSignature(shingles: Array[Long], k: Int = NumPerms): Array[Long] =
-    minHashOphSignatureRange(shingles, shingles.length, k)
+  def minHashOphSignature(shingles: Array[Long]): Array[Long] =
+    minHashOphSignatureRange(shingles, shingles.length)
 
-  private def minHashOphSignatureRange(shingles: Array[Long], n: Int, k: Int): Array[Long] = {
-    require(k > 0 && (k & (k - 1)) == 0, s"bin count $k must be a power of two")
-    // for k=1 the shift would be 64, which the JVM masks to a no-op and
-    // bin would mis-index; mask the shifted value to k-1 so the degenerate
-    // single-bin case stays in range (and the mask is free for real k)
+  private def minHashOphSignatureRange(shingles: Array[Long], n: Int): Array[Long] = {
+    val k = NumPerms
     val shift = 64 - java.lang.Integer.numberOfTrailingZeros(k)
     val binMask = k - 1
     val sig = Array.fill(k)(Long.MaxValue)
@@ -306,7 +303,7 @@ object TextOps {
 
   def minHashOph(text: String): Array[Long] = {
     val w = shingleHashesScratch(text, ShingleSize)
-    minHashOphSignatureRange(scratch.get().shingles, w, NumPerms)
+    minHashOphSignatureRange(scratch.get().shingles, w)
   }
 
   /** b-bit minwise hashing (Li & König, WWW'10): keep only the lowest `b`
@@ -335,7 +332,7 @@ object TextOps {
 
   def minHashBbit(text: String, b: Int): Array[Long] = {
     val w = shingleHashesScratch(text, ShingleSize)
-    minHashBbitPack(minHashSignatureRange(scratch.get().shingles, w, NumPerms), b)
+    minHashBbitPack(minHashSignatureRange(scratch.get().shingles, w), b)
   }
 
   /** Unbiased Jaccard estimate from two b-bit packed signatures of `k`
@@ -420,7 +417,7 @@ object TextOps {
   }
 
   /** ICWS weighted MinHash (Ioffe, "Improved Consistent Sampling, Weighted
-    * Minhash and L1 Sketching", ICDM'10): k independent consistent samples
+    * Minhash and L1 Sketching", ICDM'10): [[NumPerms]] independent consistent samples
     * from the token multiset, where P[slot_i(A) == slot_i(B)] equals the
     * weighted Jaccard EXACTLY — so the matched-slot comparator
     * ([[estimatedJaccard]]) estimates J_w unbiasedly with binomial
@@ -433,8 +430,8 @@ object TextOps {
     * ln a = ln c - r(t - β) - r; the argmin-a feature's (hash, t) pair is
     * the slot value. Weights are token counts ≥ 1 so ln w ≥ 0. Empty
     * documents get Long.MaxValue lanes, mirroring [[minHashSignature]]. */
-  def weightedMinHashSignature(hashes: Array[Long], weights: Array[Int],
-                               k: Int = NumPerms): Array[Long] = {
+  def weightedMinHashSignature(hashes: Array[Long], weights: Array[Int]): Array[Long] = {
+    val k = NumPerms
     val sig = Array.fill(k)(Long.MaxValue)
     if (hashes.length == 0) return sig
     val inv53 = 1.0 / (1L << 53).toDouble
@@ -469,20 +466,20 @@ object TextOps {
     sig
   }
 
-  def weightedMinHash(text: String, k: Int = NumPerms): Array[Long] = {
+  def weightedMinHash(text: String): Array[Long] = {
     val (h, c) = tokenHistogram(text)
-    weightedMinHashSignature(h, c, k)
+    weightedMinHashSignature(h, c)
   }
 
   /** LSH band keys: hash of each contiguous `RowsPerBand` slice of the
     * signature. Pairs that agree on any band are candidates. */
-  def bandHashes(sig: Array[Long], bands: Int = NumBands, rows: Int = RowsPerBand): Array[Long] = {
-    val out = new Array[Long](bands)
+  def bandHashes(sig: Array[Long]): Array[Long] = {
+    val out = new Array[Long](NumBands)
     var b = 0
-    while (b < bands) {
+    while (b < NumBands) {
       var h = 0xC2B2AE3D27D4EB4FL ^ b
       var r = 0
-      while (r < rows) { h = SplitMix64.mix(h ^ sig(b * rows + r)); r += 1 }
+      while (r < RowsPerBand) { h = SplitMix64.mix(h ^ sig(b * RowsPerBand + r)); r += 1 }
       out(b) = h
       b += 1
     }
@@ -500,7 +497,7 @@ object TextOps {
     val nTok = tokenHashesScratch(text)
     val sim = simHashFromScratchTokens(nTok)
     val nSh = shinglesFromScratchTokens(nTok, ShingleSize)
-    val bands = bandHashes(minHashSignatureRange(scratch.get().shingles, nSh, NumPerms))
+    val bands = bandHashes(minHashSignatureRange(scratch.get().shingles, nSh))
     DocFeatures(bands, sim, winnowedFingerprints(text))
   }
 
@@ -591,9 +588,11 @@ object TextOps {
 
   /** Rolling Karp-Rabin char-level fingerprints with winnowing (Schleimer
     * et al., "Winnowing: Local Algorithms for Document Fingerprinting"):
-    * hash every `gramLen`-char gram, keep the minimum in each `window` —
-    * candidates for the exact-long-substring dedup lane. */
-  def winnowedFingerprints(text: String, gramLen: Int = 48, window: Int = 128): Array[Long] = {
+    * hash every [[WinnowGramLen]]-char gram, keep the minimum in each
+    * [[WinnowWindow]] — candidates for the exact-long-substring dedup lane. */
+  def winnowedFingerprints(text: String): Array[Long] = {
+    val gramLen = WinnowGramLen
+    val window = WinnowWindow
     val n = text.length
     if (n < gramLen) {
       return if (n == 0) Array.empty else Array(ThetaSketch.hashBytes(text.getBytes("UTF-8")))

@@ -24,11 +24,12 @@ object WebPages {
 
   case class Page(url: String, warc_ts: Timestamp, html: Array[Byte], text: String, lang: String)
 
-  /** Dedup criterion config (matches the north rule's reference config). */
-  case class DedupConfig(
-      jaccardThreshold: Double = 0.9,   // 5-gram shingle Jaccard (MinHash lane)
-      simhashMaxDist: Int = 3,          // 64-bit SimHash Hamming (SimHash lane)
-      minSubstringLen: Int = 200)       // chars (suffix-array lane)
+  /** Dedup criterion of [[truthPairs]] (the north rule's reference
+    * config): 5-gram shingle Jaccard (MinHash lane), 64-bit SimHash
+    * Hamming (SimHash lane), common substring chars (suffix-array lane). */
+  val JaccardThreshold = 0.9
+  val SimhashMaxDist = 3
+  val MinSubstringLen = 200
 
   /** Frequent function words (drive langId markers + stopword stats). */
   private val functionWords: Map[String, Array[String]] = Map(
@@ -170,11 +171,9 @@ object WebPages {
   def generateDistributed(spark: org.apache.spark.sql.SparkSession, n: Int,
                           seed: Long = 42L, parts: Int = 64): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val chunkSizes = (0 until parts).map(i => n / parts + (if (i < n % parts) 1 else 0))
-    val offsets = chunkSizes.scanLeft(0)(_ + _)
-    val meta = (0 until parts).map(i => (i, chunkSizes(i), offsets(i)))
+    val meta = (0 until parts).map(i => (i, n / parts + (if (i < n % parts) 1 else 0)))
     spark.createDataset(meta).repartition(parts)
-      .flatMap { case (chunk, size, offset) =>
+      .flatMap { case (chunk, size) =>
         generate(size, seed + chunk * 0x9E3779B97F4A7C15L).map { p =>
           p.copy(url = p.url.replace(".example/p/", s".example/c$chunk/p/"))
         }
@@ -190,14 +189,15 @@ object WebPages {
   private val TruthPairsTimeout: scala.concurrent.duration.FiniteDuration =
     scala.concurrent.duration.Duration(10, "minutes")
 
-  /** Brute-force truth pairs (url_a < url_b, kind) under `cfg` — the recall
-    * oracle. Exact by construction: every pair is tested on the criterion
-    * itself (winnowing-fingerprint prefilter for the substring lane is
-    * lossless for spans >= gramLen + window - 1 = 175 chars <= minLen).
+  /** Brute-force truth pairs (url_a < url_b, kind) under the dedup
+    * criterion above — the recall oracle. Exact by construction: every
+    * pair is tested on the criterion itself (winnowing-fingerprint
+    * prefilter for the substring lane is lossless for spans >= gram length
+    * + window - 1 = 175 chars <= [[MinSubstringLen]]).
     * Refuses more than [[MaxTruthPages]] pages before any pair work, and
     * fails after 10 minutes: a corpus-sized input must not turn
     * a fixture oracle into an unbounded driver loop. */
-  def truthPairs(pages: Seq[Page], cfg: DedupConfig = DedupConfig()): Set[(String, String, String)] = {
+  def truthPairs(pages: Seq[Page]): Set[(String, String, String)] = {
     val n = pages.length
     require(n <= MaxTruthPages,
       s"truthPairs: $n pages exceeds the brute-force limit of $MaxTruthPages " +
@@ -227,12 +227,12 @@ object WebPages {
             val k = key(i, j); local += ((k._1, k._2, "exact"))
           } else {
             val jac = sortedJaccard(shingles(i), shingles(j))
-            if (jac >= cfg.jaccardThreshold) {
+            if (jac >= JaccardThreshold) {
               val k = key(i, j); local += ((k._1, k._2, "near"))
-            } else if (java.lang.Long.bitCount(sims(i) ^ sims(j)) <= cfg.simhashMaxDist) {
+            } else if (java.lang.Long.bitCount(sims(i) ^ sims(j)) <= SimhashMaxDist) {
               val k = key(i, j); local += ((k._1, k._2, "simhash"))
             } else if (fps(i).exists(fps(j).contains) &&
-                SuffixArray.longestCommonSubstring(pages(i).text, pages(j).text) >= cfg.minSubstringLen) {
+                SuffixArray.longestCommonSubstring(pages(i).text, pages(j).text) >= MinSubstringLen) {
               val k = key(i, j); local += ((k._1, k._2, "substring"))
             }
           }

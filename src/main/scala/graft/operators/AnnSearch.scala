@@ -29,6 +29,16 @@ import graft.core.SplitMix64
   */
 object AnnSearch {
 
+  /** Hyperplane seed shared by every band-key producer ([[nearDupPairs]],
+    * [[lshIndex]], its probe in [[incrementalPairs]] and
+    * `StreamingOps.bandVecs`): a stored index and its probe agree on the
+    * key space by construction. */
+  val Seed: Long = 0x9E377L
+  /** Table cap when a caller does not pass one. */
+  val MaxTables = 128
+  /** Bucket size above which candidate buckets are star-capped. */
+  val MaxBucketSize = 4096
+
   // ---------------------------------------------------------- kernels
 
   /** Deterministic Gaussian hyperplanes, cached per executor (computed once
@@ -190,16 +200,14 @@ object AnnSearch {
     * set; verify is a compiled kernel. */
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                    threshold: Double, targetRecall: Double = 0.95,
-                   maxTables: Int = 128, maxBucketSize: Int = 4096,
-                   seed: Long = 0x9E377L): DataFrame = {
-    val spark = corpus.sparkSession
+                   maxTables: Int = MaxTables): DataFrame = {
     val (rowsPerBand, tables) = tune(threshold, targetRecall, maxTables)
-    val bandsUdf = udf((v: Array[Double]) => bandKeys(v, tables, rowsPerBand, seed))
+    val bandsUdf = udf((v: Array[Double]) => bandKeys(v, tables, rowsPerBand, Seed))
 
     val vecs = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
     val bands = vecs.select(col("id"), explode(bandsUdf(col("v"))).as("bk"))
 
-    val cands = BucketedPairs.edges(bands, Seq("bk"), "id", maxBucketSize)
+    val cands = BucketedPairs.edges(bands, Seq("bk"), "id", MaxBucketSize)
       .distinct()
 
     cands
@@ -212,17 +220,17 @@ object AnnSearch {
 
   /** Stored sign-LSH band index for the embedding lane: `(bk, id)` narrow
     * postings, `tables` rows per vector. The banding config is derived
-    * deterministically from (threshold, targetRecall, maxTables, seed) —
-    * a probe MUST pass the same four values or its band keys live in a
-    * different key space and match nothing. Persist with TableIO and
-    * bucket by `bk`: the probe path below then never reshuffles it (the
+    * deterministically from (threshold, targetRecall, maxTables) and
+    * [[Seed]] — a probe MUST pass the same three values or its band
+    * keys live in a different key space and match nothing. Persist with
+    * TableIO and bucket by `bk`: the probe path below then never reshuffles it (the
     * plan contract SkewAndBucketingSpec proves for the text band index —
     * same probe machinery). */
   def lshIndex(corpus: DataFrame, idCol: String, vecCol: String,
                threshold: Double, targetRecall: Double = 0.95,
-               maxTables: Int = 128, seed: Long = 0x9E377L): DataFrame = {
+               maxTables: Int = MaxTables): DataFrame = {
     val (rowsPerBand, tables) = tune(threshold, targetRecall, maxTables)
-    val bandsUdf = udf((v: Array[Double]) => bandKeys(v, tables, rowsPerBand, seed))
+    val bandsUdf = udf((v: Array[Double]) => bandKeys(v, tables, rowsPerBand, Seed))
     corpus.select(col(idCol).cast("long").as("id"),
       explode(bandsUdf(col(vecCol).cast("array<double>"))).as("bk"))
   }
@@ -242,12 +250,11 @@ object AnnSearch {
   def incrementalPairs(index: DataFrame, corpusVecs: DataFrame,
                        incoming: DataFrame, idCol: String, vecCol: String,
                        threshold: Double, targetRecall: Double = 0.95,
-                       maxTables: Int = 128, maxBucketSize: Int = 4096,
-                       seed: Long = 0x9E377L): DataFrame = {
+                       maxTables: Int = MaxTables): DataFrame = {
     val probe = lshIndex(incoming, idCol, vecCol, threshold, targetRecall,
-      maxTables, seed).withColumnRenamed("id", "new_id")
+      maxTables).withColumnRenamed("id", "new_id")
     val cands = BucketedPairs.probeCandidates(index, probe,
-      Seq("bk"), "id", "new_id", maxBucketSize)
+      Seq("bk"), "id", "new_id", MaxBucketSize)
     cands
       .join(corpusVecs.select(col(idCol).cast("long").as("corpus_id"),
         col(vecCol).cast("array<double>").as("vc")), "corpus_id")

@@ -72,24 +72,29 @@ object BigramLm {
     docTrigrams(docs, idCol, textCol)
       .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("ct"))
 
+  /** Fixed-point unit of every per-transition score. */
+  val Scale = 1000000L
+  /** Jelinek–Mercer mixture weights (unigram, bigram, trigram) over
+    * [[MixtureDen]]; they sum to it. */
+  val Mixture: (Int, Int, Int) = (1, 3, 6)
+  val MixtureDen = 10
+
   /** Interpolated trigram scoring (Jelinek–Mercer with integer mixture
-    * weights λ = (lNum._1, lNum._2, lNum._3)/lDen over unigram, bigram,
+    * weights λ = [[Mixture]]/[[MixtureDen]] over unigram, bigram,
     * trigram contexts — the standard back-off-free interpolation), each
-    * add-one-smoothed conditional in its own fixed-point division:
+    * add-one-smoothed conditional in its own fixed-point division
+    * (S = [[Scale]], D = [[MixtureDen]]):
     *
-    *   s_i = (λ3·S·(c(w1w2w3)+1)) div (lDen·(c(w1w2)+V))
-    *       + (λ2·S·(c(w2w3)+1))   div (lDen·(c(w2)+V))
-    *       + (λ1·S·(c(w3)+1))     div (lDen·(T+V))
+    *   s_i = (λ3·S·(c(w1w2w3)+1)) div (D·(c(w1w2)+V))
+    *       + (λ2·S·(c(w2w3)+1))   div (D·(c(w2)+V))
+    *       + (λ1·S·(c(w3)+1))     div (D·(T+V))
     *
     * Per-term integer rounding is part of the definition (the oracle
     * states the identical three divisions). Docs with < 3 tokens score
     * (0, 0, 0); five narrow-key joins + one broadcast stats row. */
   def scoreInterpolated(docs: DataFrame, idCol: String, textCol: String,
-                        uni: DataFrame, bi: DataFrame, tri: DataFrame,
-                        lNum: (Int, Int, Int) = (1, 3, 6), lDen: Int = 10,
-                        scale: Long = 1000000L): DataFrame = {
-    require(scale >= 1 && lDen >= 1 && lNum._1 + lNum._2 + lNum._3 == lDen,
-      s"bad mixture $lNum / $lDen")
+                        uni: DataFrame, bi: DataFrame, tri: DataFrame): DataFrame = {
+    val (l1, l2, l3) = Mixture
     val stats = uni.agg(count(lit(1)).cast("long").as("V"),
       sum("cu").cast("long").as("T"))
     val scored = docTrigrams(docs, idCol, textCol)
@@ -100,12 +105,12 @@ object BigramLm {
       .join(uni.toDF("w3", "cu3"), Seq("w3"), "left")
       .crossJoin(broadcast(stats))
       .select(col("doc_id"), expr(
-        s"(${lNum._3}L * ${scale}L * (coalesce(ct, 0L) + 1L))" +
-          s" div (${lDen}L * (coalesce(c12, 0L) + V))" +
-          s" + (${lNum._2}L * ${scale}L * (coalesce(c23, 0L) + 1L))" +
-          s" div (${lDen}L * (coalesce(cu2, 0L) + V))" +
-          s" + (${lNum._1}L * ${scale}L * (coalesce(cu3, 0L) + 1L))" +
-          s" div (${lDen}L * (T + V))").as("s"))
+        s"(${l3}L * ${Scale}L * (coalesce(ct, 0L) + 1L))" +
+          s" div (${MixtureDen}L * (coalesce(c12, 0L) + V))" +
+          s" + (${l2}L * ${Scale}L * (coalesce(c23, 0L) + 1L))" +
+          s" div (${MixtureDen}L * (coalesce(cu2, 0L) + V))" +
+          s" + (${l1}L * ${Scale}L * (coalesce(cu3, 0L) + 1L))" +
+          s" div (${MixtureDen}L * (T + V))").as("s"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_trigrams"), sum("s").cast("long").as("score"))
     docs.select(col(idCol).cast("long").as("doc_id"))
@@ -122,15 +127,14 @@ object BigramLm {
     * absent from `uni` as 0 context count; self-scoring the training
     * corpus never takes either path. */
   def score(docs: DataFrame, idCol: String, textCol: String,
-            uni: DataFrame, bi: DataFrame, scale: Long = 1000000L): DataFrame = {
-    require(scale >= 1, s"bad scale $scale")
+            uni: DataFrame, bi: DataFrame): DataFrame = {
     val vrow = uni.agg(count(lit(1)).cast("long").as("V"))
     val scored = docBigrams(docs, idCol, textCol)
       .join(bi, Seq("w1", "w2"), "left")
       .join(uni.withColumnRenamed("w", "w1"), Seq("w1"), "left")
       .crossJoin(broadcast(vrow))
       .select(col("doc_id"), expr(
-        s"(${scale}L * (coalesce(cb, 0L) + 1L)) div (coalesce(cu, 0L) + V)").as("s"))
+        s"(${Scale}L * (coalesce(cb, 0L) + 1L)) div (coalesce(cu, 0L) + V)").as("s"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum("s").cast("long").as("score"))
     docs.select(col(idCol).cast("long").as("doc_id"))

@@ -21,6 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** Round bound of the distributed propagation loop (phase 3). */
+  val MaxIterations = 50
+
   /** @param edges DataFrame with two long columns (src, dst)
     * @return (id, component) — component = min id reachable
     *
@@ -46,7 +49,7 @@ object ConnectedComponents {
     *     the contracted graph until the label-sum checksum fixpoint.
     */
   def run(edges: DataFrame, srcCol: String = "id_a", dstCol: String = "id_b",
-          maxIterations: Int = 50, localFinishMaxEdges: Long = 4000000L): DataFrame = {
+          localFinishMaxEdges: Long = 4000000L): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -88,7 +91,7 @@ object ConnectedComponents {
       } else {
         val contracted =
           if (e1Count <= localFinishMaxEdges) localFinish(spark, e1)
-          else iterate(e1, maxIterations)
+          else iterate(e1)
         // compose: component(id) = component(l0(id)) in the contracted graph,
         // or l0(id) itself when its star was already a whole component
         l0.join(contracted.withColumnRenamed("id", "lid").withColumnRenamed("component", "comp"),
@@ -172,7 +175,7 @@ object ConnectedComponents {
   }
 
   /** Min-label propagation + pointer jumping to fixpoint over (u, v). */
-  private def iterate(e0: DataFrame, maxIterations: Int): DataFrame = {
+  private def iterate(e0: DataFrame): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
     val (labels0, labelRows, _) = materializeCounting(
@@ -184,7 +187,7 @@ object ConnectedComponents {
     var converged = labelRows == 0
     var iter = 0
     var lastSum: java.math.BigDecimal = null
-    while (!converged && iter < maxIterations) {
+    while (!converged && iter < MaxIterations) {
       val tIter = System.nanoTime()
       // pointer jumping (path halving): label <- label(label); labels are
       // node ids and every labelled node has its own row, so the self-join

@@ -21,6 +21,9 @@ import graft.spark.GraftFunctions.call
   */
 object ExactDedup {
 
+  /** Target false-positive rate of the corpus membership filters. */
+  val Fpp = 0.01
+
   /** Exact-lane grouping key: 64-bit codegen `xxhash64(text)`, or a
     * 128-bit struct of two xxhash64 lanes when `paranoid`. The second
     * lane prepends a constant 64-bit salt to the hashed input stream,
@@ -158,7 +161,7 @@ object ExactDedup {
     * ~1.2 GB per 10^9 docs at fpp 0.01; beyond ~10^10 shard the filter by
     * hash range and prefilter each shard's slice of the batch. */
   def corpusBloom(corpus: DataFrame, textCol: String,
-                  expectedItems: Long, fpp: Double = 0.01): Array[Byte] =
+                  expectedItems: Long, fpp: Double = Fpp): Array[Byte] =
     corpus.select(xxhash64(col(textCol)).as("_bh"))
       .agg(call("bloom_agg", col("_bh"), lit(expectedItems), lit(fpp)))
       .first().getAs[Array[Byte]](0)
@@ -172,7 +175,7 @@ object ExactDedup {
     * means rebuilding it over the whole surviving corpus each curation
     * epoch. */
   def corpusCountingBloom(corpus: DataFrame, textCol: String,
-                          expectedItems: Long, fpp: Double = 0.01): Array[Byte] =
+                          expectedItems: Long, fpp: Double = Fpp): Array[Byte] =
     corpus.select(xxhash64(col(textCol)).as("_bh"))
       .agg(call("cbloom_agg", col("_bh"), lit(expectedItems), lit(fpp)))
       .first().getAs[Array[Byte]](0)
@@ -192,8 +195,7 @@ object ExactDedup {
     // the deletes filter is built GEOMETRY-EXPLICIT from the persisted
     // filter's own cell layout, so cells line up by construction
     val deletes = retired.select(xxhash64(col(textCol)).as("_bh"))
-      .agg(graft.spark.GraftFunctions.cbloom_agg_config(
-        col("_bh"), main.numCells, main.numHashes))
+      .agg(call("cbloom_agg_config", col("_bh"), lit(main.numCells), lit(main.numHashes)))
       .first().getAs[Array[Byte]](0)
     main.subtract(graft.core.CountingBloomFilter.deserialize(deletes)).serialize()
   }
@@ -267,13 +269,13 @@ object ExactDedup {
     * probed co-partitioned (see [[incrementalSurvivorsBloomSharded]])
     * without the filter bytes ever leaving their shard's task. */
   def corpusBloomShards(corpus: DataFrame, textCol: String, shards: Int,
-                        expectedItemsPerShard: Long, fpp: Double = 0.01): DataFrame = {
+                        expectedItemsPerShard: Long): DataFrame = {
     require(shards >= 1 && (shards & (shards - 1)) == 0,
       s"shards must be a power of two, got $shards")
     corpus.select(xxhash64(col(textCol)).as("_bh"))
       .withColumn("shard", col("_bh").bitwiseAND(lit((shards - 1).toLong)).cast("int"))
       .groupBy("shard")
-      .agg(call("bloom_agg", col("_bh"), lit(expectedItemsPerShard), lit(fpp)).as("filter"))
+      .agg(call("bloom_agg", col("_bh"), lit(expectedItemsPerShard), lit(Fpp)).as("filter"))
   }
 
   /** [[incrementalSurvivorsBloom]] without a broadcast: batch rows are

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * iterative-join pattern the north star names for clustering.
   *
   * ALL-INTEGER arithmetic: ranks are carried as int64 fixed-point at
-  * `scale`. Integer sums are order-free and integer division is identical
+  * [[Scale]]. Integer sums are order-free and integer division is identical
   * on every engine, so the fixpoint iterate is byte-identical under any
   * partitioning, any merge order, and across Spark/DuckDB — which makes a
   * 4-iteration run exactly SQL-oracle-checkable (q_host_rank unrolls the
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * per aggregation order and be un-hashable across engines.
   *
   * The iterate (damping d = 85/100, N = |nodes appearing in edges|):
-  *   r0        = scale div N
+  *   r0        = Scale div N
   *   base      = (15 * r0) div 100
   *   r_{k+1}(v)= base + (85 * sum_{u->v} (r_k(u) div outdeg(u))) div 100
   * Dangling mass (nodes with no outlinks) is dropped, the common
@@ -38,15 +38,17 @@ import org.apache.spark.sql.functions._
   */
 object HostRank {
 
-  def run(edges: DataFrame, srcCol: String, dstCol: String,
-          iters: Int, scale: Long = 1000000000000L): DataFrame = {
+  /** Fixed-point unit of a rank, shared by [[run]] and [[oracleSql]]. */
+  val Scale = 1000000000000L
+
+  def run(edges: DataFrame, srcCol: String, dstCol: String, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val e = materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct())
     val (nodes, n, _) = materializeCounting(
       e.select(col("src").as("host")).union(e.select(col("dst").as("host"))).distinct())
     require(n > 0, "empty graph")
-    val r0 = scale / n
+    val r0 = Scale / n
     val base = (15L * r0) / 100L
     val outdeg = materialize(e.groupBy("src").agg(count(lit(1)).as("deg")))
     var ranks = nodes.withColumn("rank", lit(r0))
@@ -154,12 +156,12 @@ object HostRank {
     * loop — integer-exact, so the driver hash compare is strict equality.
     * Every sum is cast back to BIGINT (DuckDB widens sum(BIGINT) to
     * HUGEINT, which would change the compared schema). */
-  def oracleSql(edgesCte: String, iters: Int, scale: Long = 1000000000000L): String = {
+  def oracleSql(edgesCte: String, iters: Int): String = {
     val pre =
       s"""$edgesCte,
          |nodes AS (SELECT src AS host FROM edges UNION SELECT dst FROM edges),
-         |consts AS (SELECT ($scale // count(*)) AS r0,
-         |                  (15 * ($scale // count(*))) // 100 AS base FROM nodes),
+         |consts AS (SELECT ($Scale // count(*)) AS r0,
+         |                  (15 * ($Scale // count(*))) // 100 AS base FROM nodes),
          |outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
          |r0 AS (SELECT host, (SELECT r0 FROM consts) AS rank FROM nodes)""".stripMargin
     val rounds = (1 to iters).map { k =>

@@ -34,14 +34,15 @@ object LshCalibration {
   private def squareChain(c: Column, times: Int): Column =
     (1 to times).foldLeft(c)((x, _) => x * x)
 
-  /** `(bands, rows_per_band, pct, p_collide_ppb)` for t = pct/steps over
-    * pct in [1, steps). */
-  def curve(spark: SparkSession,
-            configs: Seq[(Int, Int)] = DefaultConfigs,
-            steps: Int = 100): DataFrame = {
-    val grid = spark.range(1, steps).select(col("id").cast("int").as("pct"))
-    configs.map { case (b, r) =>
-      val t = col("pct").cast("double") / lit(steps.toDouble)
+  /** Grid resolution of [[curve]]: t runs over pct/Steps. */
+  val Steps = 100
+
+  /** `(bands, rows_per_band, pct, p_collide_ppb)` for each of
+    * [[DefaultConfigs]] and t = pct/[[Steps]] over pct in [1, Steps). */
+  def curve(spark: SparkSession): DataFrame = {
+    val grid = spark.range(1, Steps).select(col("id").cast("int").as("pct"))
+    DefaultConfigs.map { case (b, r) =>
+      val t = col("pct").cast("double") / lit(Steps.toDouble)
       val u = lit(1.0) - squareChain(t, log2(r)) // 1 - t^r
       val p = lit(1.0) - squareChain(u, log2(b)) // 1 - (1 - t^r)^b
       grid.select(lit(b).as("bands"), lit(r).as("rows_per_band"), col("pct"),

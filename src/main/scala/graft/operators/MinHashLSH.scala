@@ -32,6 +32,10 @@ import graft.spark.GraftFunctions.call
   */
 object MinHashLSH {
 
+  /** Corpus postings per touched bucket above which an incremental probe
+    * degrades the bucket to its hub. */
+  val MaxPostings = 1000
+
   /** Candidate pairs (idA < idB) from LSH banding over `textCol`. */
   def candidatePairs(docs: DataFrame, idCol: String, textCol: String,
                      maxBucketSize: Int = 1000): DataFrame = {
@@ -120,7 +124,7 @@ object MinHashLSH {
   def weightedIncrementalPairs(index: DataFrame, corpusTexts: DataFrame,
                                incoming: DataFrame, idCol: String,
                                textCol: String, threshold: Double,
-                               maxPostings: Int = 1000): DataFrame =
+                               maxPostings: Int = MaxPostings): DataFrame =
     verifiedAgainstCorpus(
       BucketedPairs.probeCandidates(index,
         weightedBandIndex(incoming, idCol, textCol).withColumnRenamed("id", "new_id"),
@@ -174,11 +178,10 @@ object MinHashLSH {
   def incrementalNearDupPairsFromPostings(index: DataFrame, corpusTexts: DataFrame,
                                           incomingPostings: DataFrame,
                                           incomingTexts: DataFrame, idCol: String,
-                                          textCol: String, threshold: Double,
-                                          maxPostings: Int = 1000): DataFrame =
+                                          textCol: String, threshold: Double): DataFrame =
     verifiedAgainstCorpus(
       BucketedPairs.probeCandidates(index, incomingPostings,
-        Seq("band", "bh"), "id", "new_id", maxPostings),
+        Seq("band", "bh"), "id", "new_id", MaxPostings),
       corpusTexts, incomingTexts, idCol, textCol, threshold,
       kernel = "jaccard_shingles", scoreCol = "jaccard")
 
@@ -215,7 +218,7 @@ object MinHashLSH {
     *     boilerplate regime by construction. */
   def incrementalCandidates(index: DataFrame, incoming: DataFrame,
                             idCol: String, textCol: String,
-                            maxPostings: Int = 1000): DataFrame =
+                            maxPostings: Int = MaxPostings): DataFrame =
     BucketedPairs.probeCandidates(index,
       bandIndex(incoming, idCol, textCol).withColumnRenamed("id", "new_id"),
       Seq("band", "bh"), "id", "new_id", maxPostings)
@@ -229,7 +232,7 @@ object MinHashLSH {
   def incrementalNearDupPairs(index: DataFrame, corpusTexts: DataFrame,
                               incoming: DataFrame, idCol: String,
                               textCol: String, threshold: Double,
-                              maxPostings: Int = 1000): DataFrame =
+                              maxPostings: Int = MaxPostings): DataFrame =
     verifiedAgainstCorpus(
       incrementalCandidates(index, incoming, idCol, textCol, maxPostings),
       corpusTexts, incoming, idCol, textCol, threshold,
@@ -241,10 +244,10 @@ object MinHashLSH {
     * exact tier). */
   def incrementalNovel(index: DataFrame, corpusTexts: DataFrame,
                        incoming: DataFrame, idCol: String, textCol: String,
-                       threshold: Double, maxPostings: Int = 1000): DataFrame =
+                       threshold: Double): DataFrame =
     incoming.join(
       incrementalNearDupPairs(index, corpusTexts, incoming, idCol, textCol,
-          threshold, maxPostings)
+          threshold)
         .select(col("new_id").as(idCol)),
       Seq(idCol), "left_anti")
 

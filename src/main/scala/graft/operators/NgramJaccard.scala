@@ -44,6 +44,9 @@ import graft.core.TextOps
   */
 object NgramJaccard {
 
+  /** Gram document frequency above which a gram's bucket is star-capped. */
+  val MaxPostings = 10000
+
   /** Grams whose document frequency exceeds `maxPostings` — exactly the
     * set whose postings buckets would cap. One narrow (gram, df) aggregate
     * over distinct per-doc grams; the result is bounded by
@@ -65,7 +68,7 @@ object NgramJaccard {
     * pair sharing at least one non-hot gram). */
   def candidatePairs(docs: DataFrame, idCol: String, textCol: String,
                      n: Int, threshold: Double,
-                     maxPostings: Int = 10000,
+                     maxPostings: Int = MaxPostings,
                      dfOrdered: Boolean = false): DataFrame = {
     require(n >= 1 && threshold > 0.0 && threshold <= 1.0,
       s"bad config n=$n t=$threshold")
@@ -157,7 +160,7 @@ object NgramJaccard {
     * common/(a+b-common) >= threshold — all-integer output. */
   def pairs(docs: DataFrame, idCol: String, textCol: String,
             n: Int = 3, threshold: Double = 0.5,
-            maxPostings: Int = 10000,
+            maxPostings: Int = MaxPostings,
             dfOrdered: Boolean = false): DataFrame = {
     val stats = memoStatsUdf(n)
     val texts = docs.select(col(idCol).as("id"), col(textCol).as("t"))
@@ -195,8 +198,7 @@ object NgramJaccard {
     * with id_a < id_b, keeping rows where either direction holds. Ids must
     * fit 62 bits (checked per row) — the flag bit steals one. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, tNum: Int = 4, tDen: Int = 5,
-                       maxPostings: Int = 10000): DataFrame = {
+                       n: Int = 3, tNum: Int = 4, tDen: Int = 5): DataFrame = {
     require(n >= 1 && tNum >= 1 && tDen >= tNum,
       s"bad config n=$n t=$tNum/$tDen")
     val flagged = udf { (t: String) =>
@@ -213,7 +215,7 @@ object NgramJaccard {
       .select(col("id"), explode(flagged(col("t"))).as("g"))
       .select((col("id") * 2L + when(col("g._2"), 1L).otherwise(0L)).as("eid"),
         col("g._1").as("gram"))
-    val cand = BucketedPairs.edges(postings, Seq("gram"), "eid", maxPostings)
+    val cand = BucketedPairs.edges(postings, Seq("gram"), "eid", MaxPostings)
       // bit ops, not `/`: Column `/` is floating division and a 62-bit id
       // would lose low bits through the double round trip
       .select(shiftright(col("id_a"), 1).as("ida"),
@@ -264,14 +266,13 @@ object NgramJaccard {
     * knob: lower floors grow prefixes (~(1−t)·|A| postings/doc), which is
     * the documented prefix-filter trade. */
   def topKSimilar(docs: DataFrame, idCol: String, textCol: String,
-                  n: Int = 3, k: Int = 3, t10: Int = 3,
-                  maxPostings: Int = 10000): DataFrame = {
+                  n: Int = 3, k: Int = 3, t10: Int = 3): DataFrame = {
     require(k >= 1 && t10 >= 1 && t10 <= 10, s"bad config k=$k t10=$t10")
     // materialized: `p` feeds BOTH direction projections of the union
     // below — without this the whole candidate+verify pass (the expensive
     // part of the query) runs twice
     val p = org.apache.spark.sql.GraftBridge.materialize(
-      pairs(docs, idCol, textCol, n, t10 / 10.0 - 0.01, maxPostings)
+      pairs(docs, idCol, textCol, n, t10 / 10.0 - 0.01)
         .filter(expr(s"common_grams * 10 >= $t10 * (grams_a + grams_b - common_grams)"))
         .withColumn("score", expr(
           "CAST(common_grams AS BIGINT) * 1000000000L div " +

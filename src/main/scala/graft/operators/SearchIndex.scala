@@ -29,6 +29,9 @@ import org.apache.spark.sql.functions._
   */
 object SearchIndex {
 
+  /** Fixed-point unit S of [[searchRanked]]'s term weights. */
+  val Scale = 100000L
+
   /** (term, doc_id, tf) posting rows; tokenization mirrors
     * `TextOps.tokenize` (trim + split `\s+`) for SQL-oracle parity. */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -101,8 +104,7 @@ object SearchIndex {
     * is stored (like the IVF index) with (dl, A, N) persisted beside it —
     * here the stats derive from `postingsDf` itself so blank-doc semantics
     * can't diverge from the index. */
-  def searchRanked(postingsDf: DataFrame, queries: DataFrame, k: Int,
-                   scale: Long = 100000L): DataFrame = {
+  def searchRanked(postingsDf: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"bad k $k")
     val qTerms = queries
       .select(col("query_id").cast("long").as("query_id"),
@@ -121,7 +123,7 @@ object SearchIndex {
     // `div` (true integer division) only exists in SQL expression syntax;
     // float `/` + cast would silently lose exactness past 2^53
     val w = expr(
-      s"((2L * (N - df) + 1L) * ((${scale}L * 44L * A * tf)" +
+      s"((2L * (N - df) + 1L) * ((${Scale}L * 44L * A * tf)" +
         " div (20L * A * tf + 6L * A + 18L * dl * N))) div (2L * df + 1L)")
     val perDoc = postingsDf
       .join(broadcast(qTerms), Seq("term"))

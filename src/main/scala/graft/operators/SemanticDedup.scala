@@ -22,13 +22,16 @@ import org.apache.spark.sql.functions._
   */
 object SemanticDedup {
 
+  /** Cell size above which a cell's pairs fall back to a star. */
+  val MaxCellSize = 4096
+
   /** Within-cell near-dup pairs: (id_a < id_b, cos >= threshold). Exact
     * within a cell as long as the cell fits `maxCellSize`; beyond it the
     * star fallback keeps the duplicate graph connected through the cell's
     * hub (clustering-equivalent, same discipline as the SimHash lane). */
   def pairs(emb: DataFrame, idCol: String, vecCol: String,
             centroids: Array[Array[Double]], threshold: Double,
-            maxCellSize: Int = 4096): DataFrame = {
+            maxCellSize: Int = MaxCellSize): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"bad threshold $threshold")
     val vecs = emb.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("v"))
@@ -46,7 +49,7 @@ object SemanticDedup {
     * doc's within-cell duplicate group (singletons map to themselves). */
   def clusters(emb: DataFrame, idCol: String, vecCol: String,
                centroids: Array[Array[Double]], threshold: Double,
-               maxCellSize: Int = 4096): DataFrame = {
+               maxCellSize: Int = MaxCellSize): DataFrame = {
     val ids = emb.select(col(idCol).cast("long").as(idCol))
     ConnectedComponents.clustersWithSingletons(ids, idCol,
       pairs(emb, idCol, vecCol, centroids, threshold, maxCellSize))
@@ -55,9 +58,8 @@ object SemanticDedup {
   /** The deduplicated corpus: one representative (min id) per duplicate
     * group, all singletons kept. */
   def survivors(emb: DataFrame, idCol: String, vecCol: String,
-                centroids: Array[Array[Double]], threshold: Double,
-                maxCellSize: Int = 4096): DataFrame = {
-    val comp = clusters(emb, idCol, vecCol, centroids, threshold, maxCellSize)
+                centroids: Array[Array[Double]], threshold: Double): DataFrame = {
+    val comp = clusters(emb, idCol, vecCol, centroids, threshold)
       .filter(col("id") === col("component"))
       .select(col("id"))
     emb.join(comp, emb(idCol).cast("long") === comp("id"), "left_semi")

@@ -17,10 +17,12 @@ import graft.spark.GraftFunctions.call
   */
 object SimHashDedup {
 
+  /** Probe-block bucket size above which [[pairs]] star-caps a bucket. */
+  val MaxBucketSize = 128
+
   /** Pairs (id_a < id_b) with Hamming distance <= maxDist. Includes the
     * simhashes and distance. */
-  def pairs(docs: DataFrame, idCol: String, textCol: String, maxDist: Int = 3,
-            maxBucketSize: Int = 128): DataFrame = {
+  def pairs(docs: DataFrame, idCol: String, textCol: String, maxDist: Int = 3): DataFrame = {
     // materialized once (16 bytes/doc): consumed by probe generation, by
     // BucketedPairs' monster branch (this lane's 16-bit probe blocks DO
     // produce over-cap buckets on real corpora), and by both verify joins —
@@ -28,7 +30,7 @@ object SimHashDedup {
     // every consumer
     val hashed = org.apache.spark.sql.GraftBridge.materialize(
       docs.select(col(idCol).as("id"), call("simhash64", col(textCol)).as("sim")))
-    pairsFromHashes(hashed, maxDist, maxBucketSize)
+    pairsFromHashes(hashed, maxDist, MaxBucketSize)
   }
 
   // ------------------------------------------------------------------

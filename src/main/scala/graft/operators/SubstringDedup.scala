@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.TextOps
 import graft.spark.GraftFunctions.call
 
 /** Exact long-substring dedup lane (north rule: "a suffix-array pass for
@@ -23,18 +24,19 @@ import graft.spark.GraftFunctions.call
   */
 object SubstringDedup {
 
-  /** Pairs (id_a < id_b) sharing an exact substring of >= minLen chars. */
-  /** Winnowing params behind the `winnow_fps` UDF (TextOps defaults); the
-    * prefilter is lossless only for spans >= gramLen + window - 1. */
-  private val GramLen = 48
-  private val Window = 128
-  val LosslessMinLen: Int = GramLen + Window - 1
+  /** The `winnow_fps` prefilter is lossless only for spans >= gram length
+    * + window - 1. */
+  val LosslessMinLen: Int = TextOps.WinnowGramLen + TextOps.WinnowWindow - 1
 
-  def pairs(docs: DataFrame, idCol: String, textCol: String, minLen: Int = 200,
-            maxBucketSize: Int = 1000): DataFrame = {
+  /** Fingerprint bucket size above which a bucket is star-capped, in the
+    * batch lane and in the incremental probe alike. */
+  val MaxBucketSize = 1000
+
+  /** Pairs (id_a < id_b) sharing an exact substring of >= minLen chars. */
+  def pairs(docs: DataFrame, idCol: String, textCol: String, minLen: Int = 200): DataFrame = {
     pairsFromFingerprints(
       docs.select(col(idCol).as("id"), call("winnow_fps", col(textCol)).as("fps")),
-      docs, idCol, textCol, minLen, maxBucketSize)
+      docs, idCol, textCol, minLen, MaxBucketSize)
   }
 
   // ------------------------------------------------------------------
@@ -61,12 +63,12 @@ object SubstringDedup {
     * lossless below the cap, and the Rabin-Karp verify is exact. */
   def incrementalPairs(index: DataFrame, corpusTexts: DataFrame,
                        incoming: DataFrame, idCol: String, textCol: String,
-                       minLen: Int = 200, maxPostings: Int = 1000): DataFrame = {
+                       minLen: Int = 200): DataFrame = {
     require(minLen >= LosslessMinLen,
       s"minLen=$minLen below the winnowing guarantee ($LosslessMinLen)")
     BucketedPairs.probeCandidates(index,
         fpIndex(incoming, idCol, textCol).withColumnRenamed("id", "new_id"),
-        Seq("fp"), "id", "new_id", maxPostings)
+        Seq("fp"), "id", "new_id", MaxBucketSize)
       .join(corpusTexts.select(col(idCol).cast("long").as("corpus_id"),
         col(textCol).as("t_c")), "corpus_id")
       .join(incoming.select(col(idCol).cast("long").as("new_id"),
@@ -84,7 +86,7 @@ object SubstringDedup {
     val texts0 = texts1.select(col(idCol).as("id"), col(textCol).as("t"))
     require(minLen >= LosslessMinLen,
       s"minLen=$minLen below the winnowing guarantee ($LosslessMinLen = " +
-        s"gramLen $GramLen + window $Window - 1): the prefilter would silently lose recall")
+        s"gramLen ${TextOps.WinnowGramLen} + window ${TextOps.WinnowWindow} - 1): the prefilter would silently lose recall")
 
     val fps = fpArrays.select(col("id"), explode(col("fps")).as("fp"))
 

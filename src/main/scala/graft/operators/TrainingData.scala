@@ -253,6 +253,14 @@ object FixedSample {
   * external engine mirrors exactly. */
 object DocChunker {
 
+  /** CDC window (tokens) and boundary divisor of every stored or probed
+    * CDC chunk: [[cdcChunkIndex]] and the probe of [[cdcIncrementalPairs]]
+    * cut the same chunks by construction. */
+  val WindowTokens = 4
+  val Divisor = 16
+  /** Chunk document frequency above which a CDC bucket is star-capped. */
+  val MaxPostings = 10000
+
   def chunks(docs: DataFrame, idCol: String, textCol: String,
              windowTokens: Int = 64, strideTokens: Int = 48): DataFrame = {
     require(windowTokens >= 1 && strideTokens >= 1 && strideTokens <= windowTokens,
@@ -284,21 +292,18 @@ object DocChunker {
     * as every other lane; output (id_a, id_b, shared_chunks).
     *
     * Completeness caveat (same approximation as [[NgramJaccard]]'s lanes):
-    * once a chunk's document frequency exceeds `maxPostings`, the capped
+    * once a chunk's document frequency exceeds [[MaxPostings]], the capped
     * bucket emits star edges instead of all pairs, so that chunk stops
     * contributing to every pair's count — `shared_chunks` is a LOWER BOUND
     * past the cap, and pairs whose overlap lives entirely in hot
-    * (template/boilerplate) chunks can be missed. Raise `maxPostings` for
-    * exactness on small corpora; at web scale a >10k-doc chunk is
-    * boilerplate by definition and dropping it is the desired behavior. */
+    * (template/boilerplate) chunks can be missed. At web scale a >10k-doc
+    * chunk is boilerplate by definition and dropping it is the desired
+    * behavior. */
   def cdcSharedChunkPairs(docs: DataFrame, idCol: String, textCol: String,
-                          windowTokens: Int = 4, divisor: Int = 16,
-                          minShared: Int = 2, maxPostings: Int = 10000): DataFrame = {
+                          minShared: Int = 2): DataFrame = {
     require(minShared >= 1, s"bad minShared $minShared")
-    val ch = cdcChunks(docs, idCol, textCol, windowTokens, divisor)
-      .select(md5(col("chunk_text")).as("h"), col("id"))
-      .distinct() // a chunk repeated within one doc counts once
-    BucketedPairs.edges(ch, Seq("h"), "id", maxPostings)
+    val ch = cdcChunkIndex(docs, idCol, textCol) // a chunk repeated within one doc counts once
+    BucketedPairs.edges(ch, Seq("h"), "id", MaxPostings)
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("shared_chunks"))
       .filter(col("shared_chunks") >= minShared)
@@ -309,9 +314,8 @@ object DocChunker {
     * increment; bucket by `h` on disk and the probe path never reshuffles
     * it, see SkewAndBucketingSpec's band-index plan proof for the shared
     * machinery). ~1 row per `divisor` tokens per doc. */
-  def cdcChunkIndex(docs: DataFrame, idCol: String, textCol: String,
-                    windowTokens: Int = 4, divisor: Int = 16): DataFrame =
-    cdcChunks(docs, idCol, textCol, windowTokens, divisor)
+  def cdcChunkIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    cdcChunks(docs, idCol, textCol)
       .select(md5(col("chunk_text")).as("h"), col("id"))
       .distinct()
 
@@ -320,7 +324,7 @@ object DocChunker {
     * the minhash/simhash/substring lanes already have: an incoming batch
     * is chunked, candidates come from the stored [[cdcChunkIndex]] through
     * the SAME probe helper as every other tier (touched-bucket semi-join →
-    * salted capped collection → hub degradation past `maxPostings`), and
+    * salted capped collection → hub degradation past [[MaxPostings]]), and
     * `shared_chunks` is then recounted EXACTLY from the index postings of
     * the candidate pairs — no corpus text is ever read; probe AND verify
     * run entirely against the stored index. Candidate completeness is a
@@ -329,13 +333,12 @@ object DocChunker {
     * itself is exact for every listed candidate. */
   def cdcIncrementalPairs(chunkIndex: DataFrame, incoming: DataFrame,
                           idCol: String, textCol: String,
-                          windowTokens: Int = 4, divisor: Int = 16,
-                          minShared: Int = 2, maxPostings: Int = 10000): DataFrame = {
+                          minShared: Int = 2): DataFrame = {
     require(minShared >= 1, s"bad minShared $minShared")
-    val probe = cdcChunkIndex(incoming, idCol, textCol, windowTokens, divisor)
+    val probe = cdcChunkIndex(incoming, idCol, textCol)
       .withColumnRenamed("id", "new_id")
     val cands = BucketedPairs.probeCandidates(chunkIndex, probe,
-      Seq("h"), "id", "new_id", maxPostings)
+      Seq("h"), "id", "new_id", MaxPostings)
     cands
       .join(chunkIndex.withColumnRenamed("id", "corpus_id"), "corpus_id")
       .join(probe, Seq("h", "new_id"))
@@ -369,7 +372,7 @@ object DocChunker {
     * Map-only: one generator row per chunk, no shuffle; compiled UDF
     * (interpreted HOF per-position md5 would be strictly slower). */
   def cdcChunks(docs: DataFrame, idCol: String, textCol: String,
-                windowTokens: Int = 4, divisor: Int = 16,
+                windowTokens: Int = WindowTokens, divisor: Int = Divisor,
                 minTokens: Int = 0, maxTokens: Int = 0): DataFrame = {
     require(windowTokens >= 1 && divisor >= 1,
       s"bad cdc config window=$windowTokens divisor=$divisor")

@@ -36,6 +36,16 @@ import graft.spark.GraftFunctions.call
   */
 object NearDupPipeline {
 
+  /** Substring-lane threshold (chars): the recall oracle's own value. */
+  val MinSubstringLen: Int = graft.core.WebPages.MinSubstringLen
+  /** Hot LSH buckets switch from all-pairs to star joins above this size
+    * (PairGen): template cliques stay connected through the hub with
+    * O(bucket) edges instead of O(bucket^2) — at 10^12 docs a template
+    * shared by 10^6 pages must never enumerate its pairs. */
+  val MaxBucketSize = 64
+  /** Remap rounds [[resolveIdCollisions]] runs before failing loudly. */
+  val IdCollisionRounds = 3
+
   case class Config(
       workDir: String,
       jaccardThreshold: Double = 0.9,
@@ -47,12 +57,6 @@ object NearDupPipeline {
       // lane SQL cannot express. The lane itself stays oracle-gated via
       // q_simhash_neardup / q_simhash_complete.
       simhashMaxDist: Int = 3,
-      minSubstringLen: Int = 200,
-      // hot LSH buckets switch from all-pairs to star joins above this size
-      // (PairGen): template cliques stay connected through the hub with
-      // O(bucket) edges instead of O(bucket^2) — at 10^12 docs a template
-      // shared by 10^6 pages must never enumerate its pairs
-      maxBucketSize: Int = 64,
       // 64-bit doc ids expect ~27k birthday collisions at 10^12 urls —
       // each one silently merges two unrelated documents into one graph
       // node. With this flag the extracted stage computes a SECOND
@@ -83,7 +87,7 @@ object NearDupPipeline {
     // `x=true`: the extraction check (always on); the literal keeps the
     // fingerprints of stages committed under it resumable.
     val s = s"v3|j=${cfg.jaccardThreshold}|h=${cfg.simhashMaxDist}|" +
-      s"l=${cfg.minSubstringLen}|b=${cfg.maxBucketSize}|x=true|" +
+      s"l=$MinSubstringLen|b=$MaxBucketSize|x=true|" +
       s"c=${cfg.collisionSafeIds}"
     java.lang.Long.toHexString(graft.core.ThetaSketch.hashBytes(
       s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
@@ -115,13 +119,12 @@ object NearDupPipeline {
     * the pass repeats until clean — 2 rounds w.h.p. at 10^12 docs. Each
     * round is one narrow (id, tie) aggregate + one equi-join; the
     * collision-group side is tiny (~27k rows at 10^12), so AQE broadcasts
-    * it. Fails loudly if collisions survive `maxRounds` (never observed;
-    * would mean adversarial input). */
-  def resolveIdCollisions(rows: DataFrame, idCol: String, tieCol: String,
-                          maxRounds: Int = 3): DataFrame = {
+    * it. Fails loudly if collisions survive [[IdCollisionRounds]] (never
+    * observed; would mean adversarial input). */
+  def resolveIdCollisions(rows: DataFrame, idCol: String, tieCol: String): DataFrame = {
     var cur = rows
     var round = 0
-    while (round < maxRounds) {
+    while (round < IdCollisionRounds) {
       val groups = cur.groupBy(idCol)
         .agg(min(tieCol).as("_keep_tie"), count(lit(1)).as("_n"))
         .filter(col("_n") > 1)
@@ -137,7 +140,7 @@ object NearDupPipeline {
     // verify the final round left no collisions — raise in-plan otherwise
     val leftover = cur.groupBy(idCol).agg(count(lit(1)).as("_n")).filter(col("_n") > 1)
     require(leftover.isEmpty,
-      s"resolveIdCollisions: collisions survive $maxRounds rounds")
+      s"resolveIdCollisions: collisions survive $IdCollisionRounds rounds")
     cur
   }
 
@@ -284,7 +287,7 @@ object NearDupPipeline {
       "edges_minhash" -> Future(inPool("graft-lanes")(m.stage("edges_minhash") {
         MinHashLSH.verifyPairs(
             MinHashLSH.candidatePairsFromBands(
-              features.select("id", "bands"), cfg.maxBucketSize),
+              features.select("id", "bands"), MaxBucketSize),
             texts, "id", "text", cfg.jaccardThreshold)
           .select("id_a", "id_b")
       })),
@@ -293,12 +296,12 @@ object NearDupPipeline {
           spark.range(0).select(col("id").as("id_a"), col("id").as("id_b"))
         else
           SimHashDedup.pairsFromHashes(features.select("id", "sim"),
-              cfg.simhashMaxDist, cfg.maxBucketSize)
+              cfg.simhashMaxDist, MaxBucketSize)
             .select("id_a", "id_b")
       })),
       "edges_substring" -> Future(inPool("graft-lanes")(m.stage("edges_substring") {
         SubstringDedup.pairsFromFingerprints(features.select("id", "fps"),
-            texts, "id", "text", cfg.minSubstringLen, cfg.maxBucketSize)
+            texts, "id", "text", MinSubstringLen, MaxBucketSize)
           .select("id_a", "id_b")
       })))
     val Seq(exact, minhash, simhash, substring) =

@@ -53,14 +53,17 @@ object WarcIO {
     i.getEpochSecond * 1000000L + i.getNano / 1000L
   }
 
+  /** HTTP status every serialized response record carries. */
+  val RecordStatus = 200
+
   /** Serialize one response record (WARC headers + HTTP/1.1 envelope +
     * payload + record terminator). Deterministic: the record id is derived
     * from (url, tsUs), not a random UUID, so re-serialization is
     * byte-identical — required for the oracle round trip and for
     * idempotent re-writes on task retry. */
-  def record(url: String, tsUs: Long, payload: Array[Byte], status: Int = 200): Array[Byte] = {
+  def record(url: String, tsUs: Long, payload: Array[Byte]): Array[Byte] = {
     val http = new ByteArrayOutputStream()
-    http.write((s"HTTP/1.1 $status OK" + CRLF +
+    http.write((s"HTTP/1.1 $RecordStatus OK" + CRLF +
       "Content-Type: text/html" + CRLF +
       s"Content-Length: ${payload.length}" + CRLF + CRLF).getBytes(US_ASCII))
     http.write(payload)
@@ -174,12 +177,6 @@ object WarcIO {
   }
 
   // ------------------------------------------------------- Spark surface
-
-  private val rowSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("url", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("ts_us", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("status", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.BinaryType)))
 
   /** `warc_parse(bytes) -> array<struct<url,ts_us,status,payload>>` — one
     * segment blob to its response rows; compose with `explode` for the

@@ -37,13 +37,6 @@ object GraftFunctions {
     GraftBridge.column(build(args.map(GraftBridge.expression)))
   }
 
-  /** Geometry-explicit counting-filter build — for retirement filters that
-    * must share the persisted filter's exact cell layout. It has no SQL
-    * name, so it constructs its aggregate itself. */
-  def cbloom_agg_config(col: Column, numCells: Long, numHashes: Int): Column =
-    GraftBridge.column(CBloomAgg(Cast(GraftBridge.expression(col), LongType), numCells, numHashes)
-      .toAggregateExpression())
-
   private def arity(name: String, expected: String, args: Seq[Expression]): Nothing =
     throw new IllegalArgumentException(s"$name expects $expected, got ${args.length}")
 
@@ -134,6 +127,14 @@ object GraftFunctions {
       case Seq(c, n)    => CBloomAgg.sized(Cast(c, LongType), longLit(n, "expectedItems"), 0.01).toAggregateExpression()
       case Seq(c, n, p) => CBloomAgg.sized(Cast(c, LongType), longLit(n, "expectedItems"), doubleLit(p, "fpp")).toAggregateExpression()
       case args => arity("cbloom_agg", "2-3 args", args)
+    },
+    // geometry-explicit counting-filter build: a retirement filter must
+    // share the persisted filter's exact cell layout
+    "cbloom_agg_config" -> {
+      case Seq(c, cells, hashes) =>
+        CBloomAgg(Cast(c, LongType), longLit(cells, "numCells"), intLit(hashes, "numHashes"))
+          .toAggregateExpression()
+      case args => arity("cbloom_agg_config", "3 args", args)
     },
     mergeBuilder("req_merge", ReqSketch),
     mergeBuilder("theta_union", ThetaSketch),

@@ -66,6 +66,9 @@ object StreamingOps {
            count(lit(1)).as("n_tokens"))
   }
 
+  /** Event-time lateness [[sessionize]] tolerates on a stream. */
+  val SessionWatermark = "0 seconds"
+
   /** Gap-based sessionization on a stream: Spark's native `session_window`
     * (dynamic merging windows in the state store) + a watermark bounding
     * state. The SAME call shape runs in batch (session_window is a plain
@@ -73,9 +76,9 @@ object StreamingOps {
     * stream ≡ batch over arbitrary micro-batch splits. Output: one row
     * per closed (user, session) with event count + bounds. */
   def sessionize(events: DataFrame, tsCol: String, userCol: String,
-                 gap: String = "30 minutes", watermark: String = "0 seconds"): DataFrame = {
+                 gap: String = "30 minutes"): DataFrame = {
     import org.apache.spark.sql.functions._
-    val base = if (events.isStreaming) events.withWatermark(tsCol, watermark) else events
+    val base = if (events.isStreaming) events.withWatermark(tsCol, SessionWatermark) else events
     base
       .groupBy(col(userCol).as("user_id"), session_window(col(tsCol), gap).as("sw"))
       .agg(count(lit(1)).as("n_events"),
@@ -367,20 +370,13 @@ object StreamingOps {
     * `dropDuplicates` on the hash alone keeps one state row per distinct
     * hash FOREVER (Spark only ages dedup state out when the event-time
     * column is part of the key subset) — this unbounded variant matches the
-    * batch lane exactly but is for bounded replays. For infinite streams
-    * use `streamingExactDedupWithinWatermark`, which bounds state to the
-    * watermark horizon (duplicates farther apart than the horizon are then
-    * NOT collapsed — the standard streaming trade). */
+    * batch lane exactly but is for bounded replays. For infinite streams,
+    * watermark the input upstream and dedup with Spark's
+    * `dropDuplicatesWithinWatermark` on the same hash, which bounds state
+    * to the watermark horizon (duplicates farther apart than the horizon
+    * are then NOT collapsed — the standard streaming trade). */
   def streamingExactDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.withColumn("_h", xxhash64(col(textCol))).dropDuplicates("_h").drop("_h")
-
-  /** Watermark-bounded streaming exact dedup: the caller sets
-    * `withWatermark` upstream; state for a hash is dropped once it falls
-    * beyond the lateness horizon. */
-  def streamingExactDedupWithinWatermark(docs: DataFrame, idCol: String,
-                                         textCol: String): DataFrame =
-    docs.withColumn("_h", xxhash64(col(textCol)))
-      .dropDuplicatesWithinWatermark("_h").drop("_h")
 
   /** Streaming twin of `ExactDedup.incrementalSurvivorsBloom`: a live
     * crawl stream dedupped against a STATIC committed corpus. The
@@ -420,6 +416,9 @@ object StreamingOps {
   case class UrlRefresh(url: String, kept_ts: Long, kept_ck: Long,
                         n_snapshots: Long, n_versions: Int, changed: Boolean)
 
+  /** Distinct content keys [[streamingUrlRefresh]] keeps per url. */
+  val UrlMaxVersions = 64
+
   /** Streaming twin of the batch crawl-refresh query (`q_url_refresh`):
     * latest-snapshot-wins per url with change tracking. Every micro-batch
     * in which a url sees arrivals emits the url's CURRENT refresh row
@@ -431,15 +430,14 @@ object StreamingOps {
     * key); the kept snapshot and version set are replay-idempotent.
     *
     * State per url is O(1) plus the sorted distinct content-key set,
-    * capped at `maxVersions` (real pages have few versions; past the cap
+    * capped at [[UrlMaxVersions]] (real pages have few versions; past the cap
     * `n_versions` degrades to a lower bound, same documented trade as the
     * capped-bucket lanes). Keyed state shards by url across executors —
     * the same partitioning the batch group-by shuffles on, so the
     * operator holds at crawl scale; for infinite streams compose with a
     * watermark upstream and swap NoTimeout for an event-time TTL exactly
     * like [[streamingCandidatePairsExpiring]]. */
-  def streamingUrlRefresh(snaps: Dataset[UrlSnap],
-                          maxVersions: Int = 64): Dataset[UrlRefresh] = {
+  def streamingUrlRefresh(snaps: Dataset[UrlSnap]): Dataset[UrlRefresh] = {
     import snaps.sparkSession.implicits._
     snaps.groupByKey(_.url)
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout())(
@@ -448,7 +446,7 @@ object StreamingOps {
             UrlRefreshState(Long.MinValue, 0L, 0L, Array.emptyLongArray))
           rows.foreach { r =>
             var vs = st.versions
-            if (vs.length < maxVersions) {
+            if (vs.length < UrlMaxVersions) {
               val idx = java.util.Arrays.binarySearch(vs, r.ck)
               if (idx < 0) {
                 val ins = -idx - 1
@@ -555,8 +553,7 @@ object StreamingOps {
   }
 
   /** Event-time-expiring streaming LSH candidate pairs — the infinite-
-    * stream twin of [[streamingCandidatePairs]], mirroring the watermark
-    * story of `streamingExactDedupWithinWatermark`: the caller watermarks
+    * stream twin of [[streamingCandidatePairs]]: the caller watermarks
     * the input on `ts`, and a bucket that stays idle until the watermark
     * passes (last event time + `ttlMs`) has its whole state DROPPED, so
     * live state is bounded by the buckets active inside the horizon.
@@ -625,10 +622,9 @@ object StreamingOps {
     * Jaccard verification in the MinHash lane): candidates over-approximate
     * by design, the stored-index recount (`cdcIncrementalPairs`) or a
     * batch recount decides. */
-  def cdcBandDocs(docs: DataFrame, idCol: String, textCol: String,
-                  windowTokens: Int = 4, divisor: Int = 16): Dataset[BandedDoc] = {
+  def cdcBandDocs(docs: DataFrame, idCol: String, textCol: String): Dataset[BandedDoc] = {
     import docs.sparkSession.implicits._
-    graft.operators.DocChunker.cdcChunks(docs, idCol, textCol, windowTokens, divisor)
+    graft.operators.DocChunker.cdcChunks(docs, idCol, textCol)
       .select(xxhash64(md5(col("chunk_text"))).as("bucket"),
         col("id").cast("long").as("id"))
       .as[BandedDoc]
@@ -666,14 +662,14 @@ object StreamingOps {
     * `streamingCandidatePairs`; candidates are verified downstream with the
     * compiled cosine kernel against a static/stored vector table. */
   def bandVecs(vecs: DataFrame, idCol: String, vecCol: String, threshold: Double,
-               targetRecall: Double = 0.95, maxTables: Int = 128,
-               seed: Long = 0x9E377L): Dataset[BandedDoc] = {
+               targetRecall: Double = 0.95): Dataset[BandedDoc] = {
     import vecs.sparkSession.implicits._
-    val (rowsPerBand, tables) = graft.operators.AnnSearch.tune(threshold, targetRecall, maxTables)
+    import graft.operators.AnnSearch
+    val (rowsPerBand, tables) = AnnSearch.tune(threshold, targetRecall, AnnSearch.MaxTables)
     vecs.select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("v"))
       .as[(Long, Array[Double])]
       .flatMap { case (id, v) =>
-        graft.operators.AnnSearch.bandKeys(v, tables, rowsPerBand, seed)
+        AnnSearch.bandKeys(v, tables, rowsPerBand, AnnSearch.Seed)
           .map(k => BandedDoc(k, id))
       }
   }

@@ -257,6 +257,14 @@ class NearDupPipelineSpec extends AnyFunSuite with SparkSuiteBase {
       "a874d09482f8d6d7")
   }
 
+  test("resume: fingerprints of the default and the simhash-off config are pinned") {
+    // recorded while the substring length and bucket cap were Config
+    // fields: stages committed under either config must stay resumable
+    val base = NearDupPipeline.Config(workDir = "x")
+    assert(NearDupPipeline.configFingerprint(base) == "a874d09482f8d6d7")
+    assert(NearDupPipeline.configFingerprint(base.copy(simhashMaxDist = -1)) == "df0f01b6f63539")
+  }
+
   test("resume: same workDir + config but DIFFERENT input recomputes all stages") {
     val (df, _) = pagesDf(150, 13L)
     val dir = tmpDir("inputfp")
