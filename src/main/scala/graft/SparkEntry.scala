@@ -144,10 +144,11 @@ object SparkEntry {
         expr("cast(theta_estimate(th) as bigint)").as("distinct_sources"))
   }
 
-  /** Every declared query, by name. Query bodies write graft functions as
-    * SQL text, so each query installs the function table on its session
-    * before its body runs. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** Every declared query, by name, built once. Query bodies write graft
+    * functions as SQL text, so each query installs the function table on
+    * its session before its body runs (a no-op on a session that already
+    * holds it). */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     queryBodies.map { case (name, body) =>
       name -> { (s: SparkSession, dir: String) => GraftFunctions.register(s); body(s, dir) }
     }
@@ -292,10 +293,10 @@ object SparkEntry {
       val batchN = batch.agg(count(lit(1)).cast("long").as("batch_count"))
       val retiredN = retired.agg(count(lit(1)).cast("long").as("retired_count"))
       val nfn = batch.join(survTexts, batch("text") === col("stext"), "left_semi")
-        .select(call_udf("cbloom_contains", mb, xxhash64(col("text"))).as("c"))
+        .select(GraftFunctions.call("cbloom_contains", mb, xxhash64(col("text"))).as("c"))
         .agg(coalesce(expr("bool_and(c)"), lit(true)).as("no_false_negative"))
       val robs = retired.join(survTexts, retired("text") === col("stext"), "left_anti")
-        .select(call_udf("cbloom_contains", mb, xxhash64(col("text"))).as("c"))
+        .select(GraftFunctions.call("cbloom_contains", mb, xxhash64(col("text"))).as("c"))
         .agg(coalesce(expr("bool_or(NOT c)"), lit(false)).as("retirement_observable"))
       // driver-side deterministic check (the filter is a driver-held model
       // artifact here, same as corpusBloom's .first() contract)
@@ -1009,17 +1010,9 @@ object SparkEntry {
       // pipeline actually ships with. The pair list itself stays
       // SQL-inexpressible (simhash64 kernel), so the lane emits its
       // claims, not its rows.
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 2000)
-      // one simhash pass (materialized) serves the brute-force self-join
-      // AND the lane; lane + brute are materialized because the claim
-      // aggregates below consume each 3-5 times
-      val sims = mat(spread(docs, "doc_id")
-        .select(col("doc_id").as("id"), expr("simhash64(text)").as("sim")))
-      val brute = mat(sims.select(col("id").as("id_a"), col("sim").as("sim_a"))
-        .join(broadcast(sims.select(col("id").as("id_b"), col("sim").as("sim_b"))),
-          col("id_a") < col("id_b"))
-        .filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 3)
-        .select("id_a", "id_b"))
+      // lane + brute are materialized because the claim aggregates below
+      // consume each 3-5 times
+      val (sims, brute) = simhashTruth(s, dir)
       val lane = mat(SimHashDedup.pairsFromHashes(sims, maxDist = 3,
           maxBucketSize = 128)
         .select("id_a", "id_b"))
@@ -1044,16 +1037,8 @@ object SparkEntry {
       // match it pair-for-pair. Both directions are checked in-plan (the
       // simhash kernel itself is not SQL-expressible, so the oracle pins
       // the zero counts — q_ann_ivf-style self-verification).
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 2000)
-      // one simhash pass (materialized) serves the brute-force self-join
-      // AND the lane; both claim frames consumed twice below
-      val sims = mat(spread(docs, "doc_id")
-        .select(col("doc_id").as("id"), expr("simhash64(text)").as("sim")))
-      val brute = mat(sims.select(col("id").as("id_a"), col("sim").as("sim_a"))
-        .join(broadcast(sims.select(col("id").as("id_b"), col("sim").as("sim_b"))),
-          col("id_a") < col("id_b"))
-        .filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 3)
-        .select("id_a", "id_b"))
+      // both claim frames consumed twice below
+      val (sims, brute) = simhashTruth(s, dir)
       // bucket cap > the capped id range so the exactness claim is
       // UNCONDITIONAL here: no probe bucket can ever exceed the corpus
       // subset, so the star fallback (which would drop non-hub pairs that
@@ -1328,24 +1313,8 @@ object SparkEntry {
     "q_gopher_filter" -> ((s, dir) => {
       // Gopher-style document-quality gate (arXiv:2112.11446 Table A1
       // subset) over the exact kernels already attested one-by-one; the
-      // keep decision uses ALL-INTEGER arithmetic (no float thresholds) so
-      // the composed boolean is drift-free across engines:
-      //   30 <= n_tokens <= 50000
-      //   2*n_tokens <= sum_word_len <= 12*n_tokens (mean word len in [2,12])
-      //   100*n_stop >= 3*n_tokens                  (stopword ratio >= 3%)
-      //   5*top_tok_cnt <= n_tokens                 (top token <= 20%)
-      t(s, dir, "documents")
-        .withColumn("r", expr("rep_stats(text)"))
-        .select(col("doc_id"),
-          col("r.nTokens").as("n_tokens"),
-          length(regexp_replace(trim(col("text")), "\\s+", "")).cast("int").as("sum_wl"),
-          expr("stop_count(split(trim(text), '\\\\s+'))").cast("int").as("n_stop"),
-          col("r.topTokenCount").as("top_tok_cnt"))
-        .withColumn("keep",
-          col("n_tokens") >= 30 && col("n_tokens") <= 50000 &&
-          col("sum_wl") >= col("n_tokens") * 2 && col("sum_wl") <= col("n_tokens") * 12 &&
-          col("n_stop") * 100 >= col("n_tokens") * 3 &&
-          col("top_tok_cnt") * 5 <= col("n_tokens"))
+      // all-integer keep rule is `gopherQuality`'s
+      gopherQuality(t(s, dir, "documents"), "keep")
     }),
     "q_admission" -> ((s, dir) => {
       // the corpus ADMISSION POLICY, end to end: one reason-coded verdict
@@ -1361,19 +1330,7 @@ object SparkEntry {
         .select(col("doc_id"), expr("head_meta(html).noindex").as("noindex"))
       val firstIds = d.groupBy(col("text").as("_t"))
         .agg(min("doc_id").as("_first"))
-      val quality = d
-        .withColumn("r", expr("rep_stats(text)"))
-        .select(col("doc_id"),
-          col("r.nTokens").as("n_tokens"),
-          length(regexp_replace(trim(col("text")), "\\s+", "")).cast("int").as("sum_wl"),
-          expr("stop_count(split(trim(text), '\\\\s+'))").cast("int").as("n_stop"),
-          col("r.topTokenCount").as("top_tok_cnt"))
-        .withColumn("q_ok",
-          col("n_tokens") >= 30 && col("n_tokens") <= 50000 &&
-            col("sum_wl") >= col("n_tokens") * 2 && col("sum_wl") <= col("n_tokens") * 12 &&
-            col("n_stop") * 100 >= col("n_tokens") * 3 &&
-            col("top_tok_cnt") * 5 <= col("n_tokens"))
-        .select("doc_id", "q_ok")
+      val quality = gopherQuality(d, "q_ok").select("doc_id", "q_ok")
       d.select(col("doc_id"), col("text"),
           expr("concat('h', CAST(doc_id % 20 AS STRING))").as("host"))
         .join(metaRaw, Seq("doc_id"))
@@ -1435,17 +1392,7 @@ object SparkEntry {
       // the same outlink arithmetic as q_host_graph, with src hosts from
       // doc_id arithmetic. All-integer iterate -> the oracle unrolls the
       // identical recurrence as chained CTEs and the compare is strict.
-      // spread: the outlinks html-parse kernel runs per doc off a
-      // one-split scan
-      val edges = spread(t(s, dir, "documents"), "doc_id")
-        .select(col("doc_id"), anchorHtml.as("html"))
-        .select(
-          concat(lit("src"), (col("doc_id") % 13).cast("string"),
-            lit(".example.com")).as("src"),
-          explode(expr("outlinks(html)")).as("link"))
-        .select(col("src"), expr("url_host(link)").as("dst"))
-        .filter(col("dst") =!= "")
-      HostRank.run(edges, "src", "dst", iters = 4).orderBy("host")
+      HostRank.run(hostEdges(s, dir), "src", "dst", iters = 4).orderBy("host")
     }),
     "q_hits" -> ((s, dir) => {
       // hubs/authorities over the same host graph — the complement signal
@@ -1453,16 +1400,7 @@ object SparkEntry {
       // authority; a content site the reverse). Unnormalized int64 HITS,
       // 2 rounds, so like PageRank the iterate is order-free and the
       // oracle unrolls the identical recurrence as chained CTEs.
-      // spread: same one-split html-parse shape as q_host_rank
-      val edges = spread(t(s, dir, "documents"), "doc_id")
-        .select(col("doc_id"), anchorHtml.as("html"))
-        .select(
-          concat(lit("src"), (col("doc_id") % 13).cast("string"),
-            lit(".example.com")).as("src"),
-          explode(expr("outlinks(html)")).as("link"))
-        .select(col("src"), expr("url_host(link)").as("dst"))
-        .filter(col("dst") =!= "")
-      HostRank.hits(edges, "src", "dst", iters = 2).orderBy("host")
+      HostRank.hits(hostEdges(s, dir), "src", "dst", iters = 2).orderBy("host")
     }),
     "q_minhash_accuracy" -> ((s, dir) =>
       // estimator-contract gate for the 128-perm MinHash kernel — the
@@ -2057,15 +1995,10 @@ object SparkEntry {
       // in FreqSketchSpec (this corpus is near-uniform, so dominance is
       // structurally impossible at any m < nDistinct).
       val m = 8
-      val toks = t(s, dir, "documents")
-        .select(col("lang"), explode(split(trim(col("text")), "\\s+")).as("tok"))
+      val toks = langTokens(s, dir)
       val sk = toks.groupBy("lang")
         .agg(expr(s"freq_sketch(tok, $m)").as("fsk"), count(lit(1)).as("n_tokens"))
-      val exactTop = toks.groupBy("lang", "tok").agg(count(lit(1)).as("c"))
-        .groupBy("lang").agg(countDistinct("tok").as("n_distinct"),
-          max(struct(col("c"), col("tok"))).as("top"))
-        .select(col("lang"), col("n_distinct"),
-          col("top.c").as("top_cnt"), col("top.tok").as("top_tok"))
+      val exactTop = exactTopToken(toks)
       sk.join(broadcast(exactTop), "lang").select(
         col("lang"), col("n_tokens"), col("n_distinct"),
         col("top_tok"), col("top_cnt"),
@@ -2092,15 +2025,10 @@ object SparkEntry {
       // The probabilistic eps bound lives in CmsSketchSpec; exact
       // distributivity (any merge schedule == single pass, byte-identical)
       // in CmsSketchSpec + SketchAggSpec.
-      val toks = t(s, dir, "documents")
-        .select(col("lang"), explode(split(trim(col("text")), "\\s+")).as("tok"))
+      val toks = langTokens(s, dir)
       val sk = toks.groupBy("lang")
         .agg(expr("cms_sketch(tok, 5, 64)").as("csk"), count(lit(1)).as("n_tokens"))
-      val exactTop = toks.groupBy("lang", "tok").agg(count(lit(1)).as("c"))
-        .groupBy("lang").agg(countDistinct("tok").as("n_distinct"),
-          max(struct(col("c"), col("tok"))).as("top"))
-        .select(col("lang"), col("n_distinct"),
-          col("top.c").as("top_cnt"), col("top.tok").as("top_tok"))
+      val exactTop = exactTopToken(toks)
       sk.join(broadcast(exactTop), "lang").select(
         col("lang"), col("n_tokens"), col("n_distinct"),
         col("top_tok"), col("top_cnt"),
@@ -2230,7 +2158,7 @@ object SparkEntry {
       val removed = comp.filter(col("id") =!= col("component")).select("id")
       // independent truth: brute-force within-cell near-dup pairs
       val assigned = mat(IvfIndex.assign(
-        e.select(col("vec_id").cast("long").as("id"), col("v")), "id", "v", cents))
+        e.select(col("vec_id").cast("long").as("id"), col("v")), "v", cents))
       val bf = mat(assigned.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
         .join(broadcast(assigned.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))), Seq("cell"))
         .filter(col("id_a") < col("id_b"))
@@ -2360,7 +2288,7 @@ object SparkEntry {
       res.clusters.join(mins, "component")
         .select(col("url"), col("cluster_url")).orderBy("url")
     }),
-    "q_pages_recall" -> ((s, dir) => {
+    "q_pages_recall" -> ((s, _) => {
       // The north rule's core claim (dup-pair recall >= 0.99 vs brute-force
       // truth at the reference shingle/signature config) surfaced as a
       // driver-checkable result: run the full pipeline on the deterministic
@@ -2389,7 +2317,7 @@ object SparkEntry {
     // hash match verifies the real byte path end-to-end: BMP/WAV/AVI
     // encode -> header decode (featurize) and AVI chunk-tree demux
     // (sampleFrames) must reproduce the generator's parameters exactly.
-    "q_media_features" -> ((s, dir) =>
+    "q_media_features" -> ((s, _) =>
       Multimodal.featurize(Multimodal.mediaTable(s, 300), dim = 32).toDF()
         .select(col("media_id"), col("kind"),
           col("meta.width").as("width"), col("meta.height").as("height"),
@@ -2400,12 +2328,12 @@ object SparkEntry {
           (abs(aggregate(col("embedding").cast("array<double>"), lit(0.0d),
             (acc, x) => acc + x * x) - 1.0d) < 0.001d).as("emb_unit_norm"))
         .orderBy("media_id")),
-    "q_frame_sample" -> ((s, dir) =>
+    "q_frame_sample" -> ((s, _) =>
       Multimodal.sampleFrames(Multimodal.mediaTable(s, 300), framesPerVideo = 4)
         .groupBy("media_id").agg(count(lit(1)).as("n_frames"),
           sum(length(col("frame_bytes"))).as("bytes"))
         .orderBy("media_id")),
-    "q_media_resize" -> ((s, dir) =>
+    "q_media_resize" -> ((s, _) =>
       // real pixel-resample round trip, driver-checked: images resize to
       // 8x8 and their REWRITTEN BMP bytes must decode back to exactly
       // 8x8; audio/video pass through untouched (their generator-
@@ -2432,6 +2360,73 @@ object SparkEntry {
           (x, i) => x + lit(0.02) * sin(col("vec_id") * 131 + i * 7)).as("v"))
     base.unionByName(dups)
   }
+
+  /** The SimHash gates' shared frames over documents with doc_id < 2000:
+    * `(id, sim)` hashes and the brute-force Hamming <= 3 truth
+    * `(id_a, id_b)`, both materialized. One simhash pass serves the
+    * brute-force self-join AND the lane. */
+  private def simhashTruth(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val docs = t(s, dir, "documents").filter(col("doc_id") < 2000)
+    val sims = mat(spread(docs, "doc_id")
+      .select(col("doc_id").as("id"), expr("simhash64(text)").as("sim")))
+    val brute = mat(sims.select(col("id").as("id_a"), col("sim").as("sim_a"))
+      .join(broadcast(sims.select(col("id").as("id_b"), col("sim").as("sim_b"))),
+        col("id_a") < col("id_b"))
+      .filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 3)
+      .select("id_a", "id_b"))
+    (sims, brute)
+  }
+
+  /** `(src, dst)` host-graph edges of q_host_rank and q_hits: the
+    * q_host_graph outlink arithmetic, with src hosts from doc_id
+    * arithmetic. Spread: the outlinks html-parse kernel runs per doc off a
+    * one-split scan. */
+  private def hostEdges(s: SparkSession, dir: String): DataFrame =
+    spread(t(s, dir, "documents"), "doc_id")
+      .select(col("doc_id"), anchorHtml.as("html"))
+      .select(
+        concat(lit("src"), (col("doc_id") % 13).cast("string"),
+          lit(".example.com")).as("src"),
+        explode(expr("outlinks(html)")).as("link"))
+      .select(col("src"), expr("url_host(link)").as("dst"))
+      .filter(col("dst") =!= "")
+
+  /** The Gopher quality columns of q_gopher_filter and q_admission —
+    * `(doc_id, n_tokens, sum_wl, n_stop, top_tok_cnt, <keepCol>)` — with
+    * the keep decision in ALL-INTEGER arithmetic (no float thresholds), so
+    * the composed boolean is drift-free across engines:
+    *   30 <= n_tokens <= 50000
+    *   2*n_tokens <= sum_word_len <= 12*n_tokens (mean word len in [2,12])
+    *   100*n_stop >= 3*n_tokens                  (stopword ratio >= 3%)
+    *   5*top_tok_cnt <= n_tokens                 (top token <= 20%) */
+  private def gopherQuality(docs: DataFrame, keepCol: String): DataFrame =
+    docs
+      .withColumn("r", expr("rep_stats(text)"))
+      .select(col("doc_id"),
+        col("r.nTokens").as("n_tokens"),
+        length(regexp_replace(trim(col("text")), "\\s+", "")).cast("int").as("sum_wl"),
+        expr("stop_count(split(trim(text), '\\\\s+'))").cast("int").as("n_stop"),
+        col("r.topTokenCount").as("top_tok_cnt"))
+      .withColumn(keepCol,
+        col("n_tokens") >= 30 && col("n_tokens") <= 50000 &&
+          col("sum_wl") >= col("n_tokens") * 2 && col("sum_wl") <= col("n_tokens") * 12 &&
+          col("n_stop") * 100 >= col("n_tokens") * 3 &&
+          col("top_tok_cnt") * 5 <= col("n_tokens"))
+
+  /** `(lang, tok)`: the per-lang token stream of q_freq_tokens and
+    * q_cms_tokens. */
+  private def langTokens(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "documents")
+      .select(col("lang"), explode(split(trim(col("text")), "\\s+")).as("tok"))
+
+  /** `(lang, n_distinct, top_cnt, top_tok)`: the exact distinct count and
+    * top token (count desc, then the larger token) of each lang's stream. */
+  private def exactTopToken(toks: DataFrame): DataFrame =
+    toks.groupBy("lang", "tok").agg(count(lit(1)).as("c"))
+      .groupBy("lang").agg(countDistinct("tok").as("n_distinct"),
+        max(struct(col("c"), col("tok"))).as("top"))
+      .select(col("lang"), col("n_distinct"),
+        col("top.c").as("top_cnt"), col("top.tok").as("top_tok"))
 
   private val allVecsCte =
     """WITH all_vecs AS (

@@ -17,7 +17,6 @@ package graft.core
 final class ReqCompactor(
     val lgWeight: Byte,
     val hra: Boolean,
-    seed: Long,
     private var state0: Long,
     private var sectionSizeFlt0: Double,
     private var sectionSize0: Int,
@@ -123,7 +122,7 @@ object ReqCompactor {
     val sectionSize = k
     val nomCap = NomCapMult * InitNumberOfSections * sectionSize
     new ReqCompactor(
-      lgWeight, hra, seed,
+      lgWeight, hra,
       state0 = 0L,
       sectionSizeFlt0 = sectionSize.toDouble,
       sectionSize0 = sectionSize,
@@ -135,14 +134,14 @@ object ReqCompactor {
   }
 
   /** Rehydrate from serialized state. */
-  def restore(lgWeight: Byte, hra: Boolean, seed: Long, state: Long,
+  def restore(lgWeight: Byte, hra: Boolean, state: Long,
               sectionSizeFlt: Double, sectionSize: Int, numSections: Int,
               coin: Boolean, items: Array[Double], rngState: Long): ReqCompactor = {
     val nomCap = NomCapMult * numSections * sectionSize
     val buf = DoubleBuffer(math.max(2 * nomCap, items.length), nomCap, hra)
     var i = 0
     while (i < items.length) { buf.append(items(i)); i += 1 }
-    new ReqCompactor(lgWeight, hra, seed, state, sectionSizeFlt, sectionSize,
+    new ReqCompactor(lgWeight, hra, state, sectionSizeFlt, sectionSize,
       numSections, coin, buf, rngState)
   }
 }

@@ -263,7 +263,7 @@ object ReqSketch extends SketchFormat[ReqSketch] {
       buf.position(buf.position() + 8 * n)
       // rngState re-derived from (seed, lgWeight, state) — deterministic
       val rng = SplitMix64.mix(seed ^ (0x9E3779B97F4A7C15L * (lgW + 1)) ^ state)
-      comps += ReqCompactor.restore(lgW, hra, seed, state, ssf, ss, ns, coin, items, rng)
+      comps += ReqCompactor.restore(lgW, hra, state, ssf, ss, ns, coin, items, rng)
       h += 1
     }
     val s = new ReqSketch(k, hra, seed, totalN, minV, maxV, sumV, 0, 0, comps)

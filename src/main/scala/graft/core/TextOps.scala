@@ -1,7 +1,5 @@
 package graft.core
 
-import scala.collection.mutable
-
 /** Deterministic text primitives shared by the Spark functions
   * (graft.spark.GraftFunctions) and the Scala-side brute-force oracles in
   * tests. Everything here is pure, allocation-light, and has no Spark

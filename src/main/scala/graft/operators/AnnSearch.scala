@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.SplitMix64
@@ -29,10 +29,10 @@ import graft.core.SplitMix64
   */
 object AnnSearch {
 
-  /** Hyperplane seed shared by every band-key producer ([[nearDupPairs]],
-    * [[lshIndex]], its probe in [[incrementalPairs]] and
-    * `StreamingOps.bandVecs`): a stored index and its probe agree on the
-    * key space by construction. */
+  /** Hyperplane seed of [[lshIndex]], the one band-key producer: the batch
+    * lane ([[nearDupPairs]]), the probe in [[incrementalPairs]] and
+    * `StreamingOps.bandVecs` all read their keys from it, so a stored index
+    * and its probe agree on the key space by construction. */
   val Seed: Long = 0x9E377L
   /** Table cap when a caller does not pass one. */
   val MaxTables = 128
@@ -48,7 +48,7 @@ object AnnSearch {
   private val planeCache =
     new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int), Array[Array[Double]]]
 
-  private[operators] def planes(seed: Long, nPlanes: Int, dim: Int): Array[Array[Double]] =
+  private def planes(seed: Long, nPlanes: Int, dim: Int): Array[Array[Double]] =
     planeCache.computeIfAbsent((seed, nPlanes, dim), { key =>
       val (s, np, d) = key
       Array.tabulate(np) { p =>
@@ -80,8 +80,8 @@ object AnnSearch {
 
   /** Band keys for one vector: `tables` keys, each packing the signs of
     * `rowsPerBand` hyperplanes with the table index (so tables never mix). */
-  private[graft] def bandKeys(v: Array[Double], tables: Int, rowsPerBand: Int,
-                              seed: Long): Array[Long] = {
+  private def bandKeys(v: Array[Double], tables: Int, rowsPerBand: Int,
+                       seed: Long): Array[Long] = {
     val pl = planes(seed, tables * rowsPerBand, v.length)
     val out = new Array[Long](tables)
     var t = 0
@@ -201,11 +201,9 @@ object AnnSearch {
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                    threshold: Double, targetRecall: Double = 0.95,
                    maxTables: Int = MaxTables): DataFrame = {
-    val (rowsPerBand, tables) = tune(threshold, targetRecall, maxTables)
-    val bandsUdf = udf((v: Array[Double]) => bandKeys(v, tables, rowsPerBand, Seed))
-
-    val vecs = corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val bands = vecs.select(col("id"), explode(bandsUdf(col("v"))).as("bk"))
+    val vecs = corpus.select(col(idCol).cast("long").as("id"),
+      col(vecCol).cast("array<double>").as("v"))
+    val bands = lshIndex(corpus, idCol, vecCol, threshold, targetRecall, maxTables)
 
     val cands = BucketedPairs.edges(bands, Seq("bk"), "id", MaxBucketSize)
       .distinct()

@@ -251,8 +251,17 @@ object ExactDedup {
     // pays exactly one probe per row total
     val keyed = incoming.withColumn("_bh", xxhash64(col(textCol)))
       .withColumn("_maybe", mightContain(col("_bh")))
-    val definiteFresh = keyed.filter(!col("_maybe")).drop("_maybe")
-    val maybe = keyed.filter(col("_maybe")).drop("_maybe")
+    confirmedSurvivors(corpus, keyed.filter(!col("_maybe")).drop("_maybe"),
+      keyed.filter(col("_maybe")).drop("_maybe"), idCol, textCol, paranoid)
+  }
+
+  /** Shared tail of the prefiltered faces: the `maybe` rows are confirmed
+    * fresh by a left-anti join against the corpus content keys, the
+    * `definiteFresh` rows skip it, and [[survivors]] dedups their union.
+    * Both frames carry the prefilter hash `_bh`, dropped here. */
+  private def confirmedSurvivors(corpus: DataFrame, definiteFresh: DataFrame,
+                                 maybe: DataFrame, idCol: String, textCol: String,
+                                 paranoid: Boolean): DataFrame = {
     val corpusKeys = corpus.select(contentKey(textCol, paranoid).as("_ch"))
     val maybeKeyed = maybe.withColumn("_ik", contentKey(textCol, paranoid))
     val confirmedFresh = maybeKeyed
@@ -313,11 +322,6 @@ object ExactDedup {
     }.toDF("_mid")
     val maybe = keyed.join(maybeIds, keyed(idCol).cast("long") === maybeIds("_mid"), "left_semi")
     val definiteFresh = keyed.join(maybeIds, keyed(idCol).cast("long") === maybeIds("_mid"), "left_anti")
-    val corpusKeys = corpus.select(contentKey(textCol, paranoid).as("_ch"))
-    val maybeKeyed = maybe.withColumn("_ik", contentKey(textCol, paranoid))
-    val confirmedFresh = maybeKeyed
-      .join(corpusKeys, maybeKeyed("_ik") === corpusKeys("_ch"), "left_anti")
-      .drop("_ik")
-    survivors(definiteFresh.unionByName(confirmedFresh).drop("_bh"), idCol, textCol, paranoid)
+    confirmedSurvivors(corpus, definiteFresh, maybe, idCol, textCol, paranoid)
   }
 }

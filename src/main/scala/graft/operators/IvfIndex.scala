@@ -175,10 +175,10 @@ object IvfIndex {
     } finally vecs.unpersist(false)
   }
 
-  /** Cell assignment for the corpus: (idCol, vecCol columns preserved) +
-    * `cell`. At scale this is what you bucket/partition the stored index
-    * table by. */
-  def assign(corpus: DataFrame, idCol: String, vecCol: String,
+  /** Cell assignment for the corpus: every column preserved, plus the
+    * `cell` of `vecCol`. At scale this is what you bucket/partition the
+    * stored index table by. */
+  def assign(corpus: DataFrame, vecCol: String,
              centroids: Array[Array[Double]]): DataFrame = {
     val bc = corpus.sparkSession.sparkContext.broadcast(centroids)
     val cellUdf = udf((v: Array[Double]) => nearestCell(v, bc.value))
@@ -206,7 +206,7 @@ object IvfIndex {
     val assigned = assign(
       corpus.select(col(idCol).cast("long").as("neighbor_id"),
         col(vecCol).cast("array<double>").as("cv")),
-      "neighbor_id", "cv", cents)
+      "cv", cents)
     io.overwrite(table, assigned, partitionBy = Seq("cell"))
     io.commit(table, fp)
     val spark = corpus.sparkSession
@@ -267,7 +267,7 @@ object IvfIndex {
     // path must agree on the cell function
     val cells = assign(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("cv")),
-      "neighbor_id", "cv", centroids)
+      "cv", centroids)
     // queries are small by contract: broadcast (query, probed cell) rows so
     // the corpus-side join is map-only against its cell partitioning
     val q = broadcast(queries

@@ -49,8 +49,7 @@ object MinHashLSH {
   /** Candidate pairs from precomputed band-key arrays `(id, bands)` (the
     * pipeline's one-pass feature projection supplies these). */
   def candidatePairsFromBands(bandArrays: DataFrame, maxBucketSize: Int): DataFrame = {
-    val bands = bandArrays.select(col("id"),
-      posexplode(col("bands")).as(Seq("band", "bh")))
+    val bands = bandRows(bandArrays, col("id"))
     // salted, size-capped bucket collection per (band, band_hash); hot
     // buckets (boilerplate) fall back to star pairs — linear, keeps the
     // bucket connected for clustering, and no aggregation buffer ever holds
@@ -169,8 +168,7 @@ object MinHashLSH {
     * index face of one query) explode it without re-running the signature
     * kernel. Values identical to [[bandIndex]] by construction. */
   def postingsFromBands(bandArrays: DataFrame): DataFrame =
-    bandArrays.select(col("id").cast("long").as("id"),
-      posexplode(col("bands")).as(Seq("band", "bh")))
+    bandRows(bandArrays, col("id").cast("long").as("id"))
 
   /** [[incrementalNearDupPairs]] over a precomputed probe-side posting
     * frame `(new_id, band, bh)` (see [[postingsFromBands]]) — same verify
@@ -187,11 +185,13 @@ object MinHashLSH {
 
   /** Shared posting projection of [[bandIndex]]/[[weightedBandIndex]]:
     * one `(id, band, bh)` row per document per band of `sigBands`. */
-  private def postings(docs: DataFrame, idCol: String, sigBands: Column): DataFrame = {
-    docs
-      .select(col(idCol).cast("long").as("id"), sigBands.as("bands"))
-      .select(col("id"), posexplode(col("bands")).as(Seq("band", "bh")))
-  }
+  private def postings(docs: DataFrame, idCol: String, sigBands: Column): DataFrame =
+    bandRows(docs.select(col(idCol).cast("long").as("id"), sigBands.as("bands")), col("id"))
+
+  /** The lane's one posting explode: `(id, band, bh)` rows, one per band of
+    * a `(id..., bands)` frame's band-key array, with `id` as the id column. */
+  private def bandRows(bandArrays: DataFrame, id: Column): DataFrame =
+    bandArrays.select(id, posexplode(col("bands")).as(Seq("band", "bh")))
 
   /** Candidate (new_id, corpus_id) pairs for an incoming batch against a
     * stored [[bandIndex]] — the daily-crawl-increment shape: NO corpus

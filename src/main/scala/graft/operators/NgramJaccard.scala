@@ -281,15 +281,7 @@ object NgramJaccard {
         col("id_b").cast("long").as("neighbor_id"), col("score"))
       .unionByName(p.select(col("id_b").cast("long").as("doc_id"),
         col("id_a").cast("long").as("neighbor_id"), col("score")))
-    val minN = FixedSample.minN(new SearchIndex.MinNKeepPairsAgg(k))
-    dir
-      .groupBy("doc_id")
-      .agg(minN((-col("score")).cast("long"), col("neighbor_id")).as("_pairs"))
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(_pairs) div 2 - 1)," +
-          " i -> struct(-_pairs[2*i] AS score, _pairs[2*i+1] AS neighbor_id))")).as("h"))
-      .select(col("doc_id"), col("h.neighbor_id").as("neighbor_id"),
-        col("h.score").as("score"))
+    SearchIndex.topK(dir, "doc_id", "neighbor_id", k)
   }
 
   def bruteForceContainment(docs: Seq[(Long, String)], n: Int,

@@ -52,23 +52,13 @@ object SearchIndex {
       .select(col("query_id").cast("long").as("query_id"),
         explode(array_distinct(col("terms"))).as("term"))
     val qSize = qTerms.groupBy("query_id").agg(count(lit(1)).as("n_terms"))
-    val minN = FixedSample.minN(new MinNKeepPairsAgg(k))
     val perDoc = postingsDf
       .join(broadcast(qTerms), Seq("term"))
       .groupBy("query_id", "doc_id")
       .agg(count(lit(1)).as("n_hit"), sum("tf").as("score"))
       .join(broadcast(qSize), Seq("query_id"))
       .filter(col("n_hit") === col("n_terms"))
-    // top-k: MinNPair on key = -score (largest scores sort first), ties
-    // to the smaller doc_id — bounded buffers, no window; the variant
-    // keeps the keys so the score comes back without re-joining perDoc
-    perDoc
-      .groupBy("query_id")
-      .agg(minN((-col("score")).cast("long"), col("doc_id")).as("_pairs"))
-      .select(col("query_id"), explode(expr(
-        "transform(sequence(0, size(_pairs) div 2 - 1)," +
-          " i -> struct(-_pairs[2*i] AS score, _pairs[2*i+1] AS doc_id))")).as("h"))
-      .select(col("query_id"), col("h.doc_id").as("doc_id"), col("h.score").as("score"))
+    topK(perDoc, "query_id", "doc_id", k)
   }
 
   /** Disjunctive (OR) ranked retrieval with BM25-SHAPED weighting in
@@ -119,7 +109,6 @@ object SearchIndex {
       .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
       .groupBy("term").agg(count(lit(1)).as("df"))
     val docLen = postingsDf.groupBy("doc_id").agg(sum("tf").cast("long").as("dl"))
-    val minN = FixedSample.minN(new MinNKeepPairsAgg(k))
     // `div` (true integer division) only exists in SQL expression syntax;
     // float `/` + cast would silently lose exactness past 2^53
     val w = expr(
@@ -132,13 +121,25 @@ object SearchIndex {
       .crossJoin(broadcast(stats))
       .groupBy("query_id", "doc_id")
       .agg(sum(w).cast("long").as("score"))
-    perDoc
-      .groupBy("query_id")
-      .agg(minN((-col("score")).cast("long"), col("doc_id")).as("_pairs"))
-      .select(col("query_id"), explode(expr(
+    topK(perDoc, "query_id", "doc_id", k)
+  }
+
+  /** `(group, item, score)`: the `k` best rows of each `group` of
+    * `(group, item, score)` rows, by score desc, ties to the smaller item.
+    * MinNPair on key = -score (largest scores sort first) — bounded
+    * buffers of <= 2k longs, no window; the variant keeps the keys so the
+    * score comes back without re-joining the input. Shared with
+    * [[NgramJaccard.topKSimilar]]'s per-doc neighbor queue. */
+  private[operators] def topK(rows: DataFrame, group: String, item: String,
+                              k: Int): DataFrame = {
+    val minN = FixedSample.minN(new MinNKeepPairsAgg(k))
+    rows
+      .groupBy(group)
+      .agg(minN((-col("score")).cast("long"), col(item)).as("_pairs"))
+      .select(col(group), explode(expr(
         "transform(sequence(0, size(_pairs) div 2 - 1)," +
-          " i -> struct(-_pairs[2*i] AS score, _pairs[2*i+1] AS doc_id))")).as("h"))
-      .select(col("query_id"), col("h.doc_id").as("doc_id"), col("h.score").as("score"))
+          s" i -> struct(-_pairs[2*i] AS score, _pairs[2*i+1] AS $item))")).as("h"))
+      .select(col(group), col(s"h.$item").as(item), col("h.score").as("score"))
   }
 
   /** Positional posting rows (term, doc_id, positions: sorted int array)
@@ -185,9 +186,8 @@ object SearchIndex {
 
   /** [[FixedSample.MinNPairAgg]] that keeps the sorted flat (key, id)
     * pairs in `finish` (the base class drops the keys) — here the key IS
-    * the negated score, which the caller needs back. Shared with
-    * [[NgramJaccard.topKSimilar]]'s per-doc neighbor queue. */
-  private[operators] class MinNKeepPairsAgg(n: Int) extends FixedSample.MinNPairAgg(n) {
+    * the negated score, which [[topK]] needs back. */
+  private class MinNKeepPairsAgg(n: Int) extends FixedSample.MinNPairAgg(n) {
     override def finish(r: Array[Long]): Array[Long] = r
   }
 }

@@ -35,7 +35,7 @@ object SemanticDedup {
     require(threshold > 0.0 && threshold <= 1.0, s"bad threshold $threshold")
     val vecs = emb.select(col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("v"))
-    val assigned = IvfIndex.assign(vecs, "id", "v", centroids)
+    val assigned = IvfIndex.assign(vecs, "v", centroids)
     val cand = BucketedPairs.edges(assigned.select("cell", "id"),
       Seq("cell"), "id", cap = maxCellSize)
     cand

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.spark.GraftFunctions.call
 
@@ -46,12 +46,9 @@ object SimHashDedup {
     * postings to keep the index current (see the MinHash twin —
     * `MinHashLSH.bandIndex` — for the maintenance pattern). */
   def probeIndex(docs: DataFrame, idCol: String, textCol: String,
-                 maxDist: Int = 3): DataFrame = {
-    docs
-      .select(col(idCol).cast("long").as("id"), call("simhash64", col(textCol)).as("sim"))
-      .select(col("id"), col("sim"),
-        explode(call("simhash_probes", col("sim"), lit(maxDist))).as("probe"))
-  }
+                 maxDist: Int = 3): DataFrame =
+    probeRows(docs.select(col(idCol).cast("long").as("id"),
+      call("simhash64", col(textCol)).as("sim")), "sim", maxDist, col("id"), col("sim"))
 
   /** Incremental pairs `(new_id, corpus_id, hamming)` of a batch against a
     * stored [[probeIndex]]: batch hashed once (materialized — probes and
@@ -77,8 +74,7 @@ object SimHashDedup {
   def incrementalPairsFromHashes(index: DataFrame, inc: DataFrame,
                                  maxDist: Int = 3,
                                  maxPostings: Int = 128): DataFrame = {
-    val probes = inc.select(col("new_id"),
-      explode(call("simhash_probes", col("sim_n"), lit(maxDist))).as("probe"))
+    val probes = probeRows(inc, "sim_n", maxDist, col("new_id"))
     // touched buckets are read twice (capped collection + the sim lookup
     // for verify) — materialize so the index scan happens once
     val touched = org.apache.spark.sql.GraftBridge.materialize(
@@ -102,17 +98,14 @@ object SimHashDedup {
   /** [[probeIndex]] from precomputed `(id, sim)` rows — lets a caller that
     * already materialized the simhash projection build the stored index
     * without re-running the kernel. Values identical by construction. */
-  def probeIndexFromHashes(hashed: DataFrame, maxDist: Int = 3): DataFrame = {
-    hashed.select(col("id").cast("long").as("id"), col("sim"),
-      explode(call("simhash_probes", col("sim"), lit(maxDist))).as("probe"))
-  }
+  def probeIndexFromHashes(hashed: DataFrame, maxDist: Int = 3): DataFrame =
+    probeRows(hashed, "sim", maxDist, col("id").cast("long").as("id"), col("sim"))
 
   /** Pairs from precomputed `(id, sim)` rows (the pipeline's one-pass
     * feature projection supplies these, already persisted — no text
     * rescan, no extra materialization). */
   def pairsFromHashes(hashed: DataFrame, maxDist: Int, maxBucketSize: Int): DataFrame = {
-    val probes = hashed.select(col("id"),
-      explode(call("simhash_probes", col("sim"), lit(maxDist))).as("probe"))
+    val probes = probeRows(hashed, "sim", maxDist, col("id"))
 
     // salted, size-capped bucket collection per probe key; hot buckets
     // (boilerplate — near-identical simhashes) emit star pairs
@@ -127,4 +120,11 @@ object SimHashDedup {
       .filter(col("hamming") <= maxDist)
       .select("id_a", "id_b", "hamming")
   }
+
+  /** The lane's one probe explode: `keep` columns plus one `probe` row per
+    * Hamming probe key of the simhash column `sim`. */
+  private def probeRows(hashes: DataFrame, sim: String, maxDist: Int,
+                        keep: Column*): DataFrame =
+    hashes.select(keep :+
+      explode(call("simhash_probes", col(sim), lit(maxDist))).as("probe"): _*)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.SplitMix64
@@ -130,12 +130,10 @@ object SpanExcision {
     * are idempotent under the same distinct-compaction as the band
     * index). Size is O(distinct gram contents) — the honest footprint of
     * exact substring matching, the same order a suffix array stores. */
-  def keyIndex(docs: DataFrame, textCol: String, spanLen: Int = 200): DataFrame = {
-    val keyUdf = udf((t: String) => gramKeys(t, spanLen))
-    docs.select(explode(keyUdf(col(textCol))).as("g"))
+  def keyIndex(docs: DataFrame, textCol: String, spanLen: Int = 200): DataFrame =
+    docs.select(explode(grams(col(textCol), spanLen)).as("g"))
       .select(col("g.h1").as("h1"), col("g.h2").as("h2"))
       .distinct()
-  }
 
   /** Incremental excision: rewrite each document of an incoming batch
     * removing every char covered by a `spanLen`-char span the CORPUS
@@ -150,23 +148,11 @@ object SpanExcision {
   def exciseAgainstIndex(index: DataFrame, incoming: DataFrame,
                          idCol: String, textCol: String,
                          spanLen: Int = 200): DataFrame = {
-    val keyUdf = udf((t: String) => gramKeys(t, spanLen))
-    val cutUdf = udf((t: String, starts: Seq[Int]) =>
-      cut(t, Option(starts).getOrElse(Seq.empty), spanLen))
     val base = incoming.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-    val pos = base
-      .select(col("id"), explode(keyUdf(col("t"))).as("g"))
-      .select(col("id"), col("g.i").as("i"), col("g.h1").as("h1"), col("g.h2").as("h2"))
-    val dupStarts = pos.join(index.select("h1", "h2"), Seq("h1", "h2"), "left_semi")
+    val dupStarts = positions(base, spanLen)
+      .join(index.select("h1", "h2"), Seq("h1", "h2"), "left_semi")
       .select("id", "i")
-    val perDoc = dupStarts.groupBy("id")
-      .agg(sort_array(collect_list(col("i"))).as("starts"))
-    base.join(perDoc, Seq("id"), "left")
-      .select(col("id"),
-        cutUdf(col("t"), coalesce(col("starts"),
-          array().cast("array<int>"))).as("e"))
-      .select(col("id"), col("e.clean_text").as("clean_text"),
-        col("e.removed_chars").as("removed_chars"))
+    cutAt(base, dupStarts, spanLen)
   }
 
   /** Top-k most-duplicated exact spans — the curation datasheet companion
@@ -183,12 +169,8 @@ object SpanExcision {
     * materialization); only k rows join back to text. */
   def topSpans(docs: DataFrame, idCol: String, textCol: String,
                spanLen: Int = 200, k: Int = 20): DataFrame = {
-    val keyUdf = udf((t: String) => gramKeys(t, spanLen))
     val base = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-    val pos = base
-      .select(col("id"), explode(keyUdf(col("t"))).as("g"))
-      .select(col("id"), col("g.i").as("i"), col("g.h1").as("h1"), col("g.h2").as("h2"))
-    val agg = pos.groupBy("h1", "h2")
+    val agg = positions(base, spanLen).groupBy("h1", "h2")
       .agg(countDistinct(col("id")).as("n_docs"),
         min(struct(col("id"), col("i"))).as("rep"))
       .filter(col("n_docs") >= 2)
@@ -212,9 +194,6 @@ object SpanExcision {
     * full text with `removed_chars = 0`. */
   def excise(docs: DataFrame, idCol: String, textCol: String,
              spanLen: Int = 200): DataFrame = {
-    val keyUdf = udf((t: String) => gramKeys(t, spanLen))
-    val cutUdf = udf((t: String, starts: Seq[Int]) =>
-      cut(t, Option(starts).getOrElse(Seq.empty), spanLen))
     val base = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
     // two plan branches consume the positions (the dup-key aggregate and
     // the flagged-starts join) — materialize (eager checkpoint-rebuild,
@@ -222,16 +201,31 @@ object SpanExcision {
     // blocks are freed by the ContextCleaner when the frame drops: the
     // r5 verdict flagged the persist here as a long-lived-session leak
     // (nothing ever unpersisted it)
-    val pos = org.apache.spark.sql.GraftBridge.materialize(base
-      .select(col("id"), explode(keyUdf(col("t"))).as("g"))
-      .select(col("id"), col("g.i").as("i"), col("g.h1").as("h1"), col("g.h2").as("h2")))
+    val pos = org.apache.spark.sql.GraftBridge.materialize(positions(base, spanLen))
     // a key is cross-document iff its id range is non-degenerate — one
     // bounded aggregate, no position-table self-join
     val dupKeys = pos.groupBy("h1", "h2")
       .agg(min("id").as("mn"), max("id").as("mx"))
       .filter(col("mn") =!= col("mx"))
       .select("h1", "h2")
-    val dupStarts = pos.join(dupKeys, Seq("h1", "h2")).select("id", "i")
+    cutAt(base, pos.join(dupKeys, Seq("h1", "h2")).select("id", "i"), spanLen)
+  }
+
+  /** The `(i, h1, h2)` gram keys of a text column, as an array column. */
+  private def grams(text: Column, spanLen: Int): Column =
+    udf((t: String) => gramKeys(t, spanLen)).apply(text)
+
+  /** `(id, i, h1, h2)`: one row per gram start of each `(id, t)` row. */
+  private def positions(base: DataFrame, spanLen: Int): DataFrame =
+    base.select(col("id"), explode(grams(col("t"), spanLen)).as("g"))
+      .select(col("id"), col("g.i").as("i"), col("g.h1").as("h1"), col("g.h2").as("h2"))
+
+  /** `(id, clean_text, removed_chars)` for every `(id, t)` row of `base`:
+    * the chars covered by the `(id, i)` gram starts of `dupStarts` are cut,
+    * and a document without starts keeps its full text. */
+  private def cutAt(base: DataFrame, dupStarts: DataFrame, spanLen: Int): DataFrame = {
+    val cutUdf = udf((t: String, starts: Seq[Int]) =>
+      cut(t, Option(starts).getOrElse(Seq.empty), spanLen))
     // per-doc buffer bounded by the doc's own char count (< one row width)
     val perDoc = dupStarts.groupBy("id")
       .agg(sort_array(collect_list(col("i"))).as("starts"))

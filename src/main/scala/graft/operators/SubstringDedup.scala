@@ -48,11 +48,14 @@ object SubstringDedup {
     * `SimHashDedup.probeIndex`: persist once (TableIO, partitioned or
     * bucketed by fp), probe each batch against it, append the admitted
     * batch's rows — corpus text is only read for verify candidates. */
-  def fpIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    docs
-      .select(col(idCol).cast("long").as("id"), call("winnow_fps", col(textCol)).as("fps"))
-      .select(col("id"), explode(col("fps")).as("fp"))
-  }
+  def fpIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    fpRows(docs.select(col(idCol).cast("long").as("id"),
+      call("winnow_fps", col(textCol)).as("fps")))
+
+  /** The lane's one fingerprint explode: `(id, fp)` rows, one per winnowed
+    * fingerprint of an `(id, fps)` frame. */
+  private def fpRows(fpArrays: DataFrame): DataFrame =
+    fpArrays.select(col("id"), explode(col("fps")).as("fp"))
 
   /** Incremental pairs `(new_id, corpus_id)` of a batch against a stored
     * [[fpIndex]]: batch docs sharing an exact substring of >= minLen chars
@@ -83,12 +86,12 @@ object SubstringDedup {
   def pairsFromFingerprints(fpArrays: DataFrame, texts1: DataFrame, idCol: String,
                             textCol: String, minLen: Int,
                             maxBucketSize: Int): DataFrame = {
-    val texts0 = texts1.select(col(idCol).as("id"), col(textCol).as("t"))
+    val texts = texts1.select(col(idCol).as("id"), col(textCol).as("t"))
     require(minLen >= LosslessMinLen,
       s"minLen=$minLen below the winnowing guarantee ($LosslessMinLen = " +
         s"gramLen ${TextOps.WinnowGramLen} + window ${TextOps.WinnowWindow} - 1): the prefilter would silently lose recall")
 
-    val fps = fpArrays.select(col("id"), explode(col("fps")).as("fp"))
+    val fps = fpRows(fpArrays)
 
     // salted, size-capped bucket collection per fingerprint (winnowed fps
     // are already distinct per doc, so (fp, id) rows are unique); hot
@@ -99,7 +102,6 @@ object SubstringDedup {
     // verify: exact Rabin-Karp decision at the threshold, O(|a|+|b|) per
     // pair (the O(n log^2 n) suffix-array LCS stays available as sa_lcs for
     // exact-length queries; the lane only needs the boolean)
-    val texts = texts0
     cands
       .join(texts.withColumnRenamed("id", "id_a").withColumnRenamed("t", "t_a"), "id_a")
       .join(texts.withColumnRenamed("id", "id_b").withColumnRenamed("t", "t_b"), "id_b")

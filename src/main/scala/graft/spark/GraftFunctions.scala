@@ -2,6 +2,7 @@ package graft.spark
 
 import graft.core._
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
@@ -300,11 +301,15 @@ object GraftFunctions {
 
   private lazy val byName = functions.toMap
 
-  /** Install the table on the given session for SQL text. Idempotent. */
+  /** Install the table on the given session for SQL text. Idempotent: a
+    * name already bound to this table's builder is left as it is, so a
+    * repeat call replaces (and logs) nothing; a caller's own function
+    * under a graft name is replaced. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+      if (!reg.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
   }
 }
@@ -314,7 +319,6 @@ object GraftFunctions {
   * whole function table at session build time. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
     GraftFunctions.functions.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))

@@ -375,7 +375,7 @@ object StreamingOps {
     * `dropDuplicatesWithinWatermark` on the same hash, which bounds state
     * to the watermark horizon (duplicates farther apart than the horizon
     * are then NOT collapsed — the standard streaming trade). */
-  def streamingExactDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+  def streamingExactDedup(docs: DataFrame, textCol: String): DataFrame =
     docs.withColumn("_h", xxhash64(col(textCol))).dropDuplicates("_h").drop("_h")
 
   /** Streaming twin of `ExactDedup.incrementalSurvivorsBloom`: a live
@@ -658,19 +658,11 @@ object StreamingOps {
     bucketsOf(graft.operators.SimHashDedup.probeIndex(docs, idCol, textCol, maxDist), "probe")
 
   /** Embedding near-dup streaming twin: vectors -> auto-tuned sign-LSH band
-    * keys (same `AnnSearch.tune` math as the batch lane), feeding
+    * keys (the batch lane's own `AnnSearch.lshIndex` projection), feeding
     * `streamingCandidatePairs`; candidates are verified downstream with the
     * compiled cosine kernel against a static/stored vector table. */
   def bandVecs(vecs: DataFrame, idCol: String, vecCol: String, threshold: Double,
-               targetRecall: Double = 0.95): Dataset[BandedDoc] = {
-    import vecs.sparkSession.implicits._
-    import graft.operators.AnnSearch
-    val (rowsPerBand, tables) = AnnSearch.tune(threshold, targetRecall, AnnSearch.MaxTables)
-    vecs.select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("v"))
-      .as[(Long, Array[Double])]
-      .flatMap { case (id, v) =>
-        AnnSearch.bandKeys(v, tables, rowsPerBand, AnnSearch.Seed)
-          .map(k => BandedDoc(k, id))
-      }
-  }
+               targetRecall: Double = 0.95): Dataset[BandedDoc] =
+    bucketsOf(graft.operators.AnnSearch.lshIndex(vecs, idCol, vecCol, threshold,
+      targetRecall), "bk")
 }

@@ -127,4 +127,64 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSuiteBase {
 
     intercept[IllegalArgumentException](GraftFunctions.call("no_such_function", col("id")))
   }
+
+  /** Spark's "replaced a previously registered function" WARNs logged
+    * while `body` runs, seen by an appender on the function registry's
+    * logger (raised to WARN for the duration: the suite session logs at
+    * ERROR). */
+  private def replacementWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-replacement-probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger(classOf[org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry].getName)
+      .asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+      .filter(_.contains("replaced a previously registered function"))
+  }
+
+  test("the function table installs once per session; a caller's own graft name is replaced") {
+    val s = spark.newSession()
+    // building a catalog query reads only its input's schema
+    val dir = java.nio.file.Files.createTempDirectory("graft-install").toString
+    s.createDataFrame(Seq((1L, "en", "alpha beta"))).toDF("doc_id", "lang", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    // a new session holds only Spark's built-ins: the first install
+    // replaces just the built-ins whose names the table shares
+    val shared = GraftFunctions.functions.map(_._1).filter(name =>
+      org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin
+        .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+    val first = replacementWarnings(graft.SparkEntry.queries("q_freq_tokens")(s, dir))
+    assert(first.size == shared.size && shared.forall(n => first.exists(_.contains(s" $n "))),
+      s"first install: $first, shared built-in names: $shared")
+    val quiet = replacementWarnings {
+      graft.SparkEntry.queries("q_cms_tokens")(s, dir)
+      GraftFunctions.register(s)
+    }
+    assert(quiet.isEmpty, s"${quiet.size} replacement WARNs, first: ${quiet.headOption}")
+    assert(graft.SparkEntry.queries eq graft.SparkEntry.queries, "queries is rebuilt per access")
+
+    s.udf.register("simhash64", (_: String) => 0L)
+    val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    assert(s.sql(s"SELECT simhash64('$text')").head().getLong(0) == 0L)
+    val replaced = replacementWarnings(GraftFunctions.register(s))
+    assert(replaced.size == 1 && replaced.head.contains("simhash64"), replaced)
+    assert(s.sql(s"SELECT simhash64('$text')").head().getLong(0) == TextOps.simHash64(text))
+  }
 }

@@ -136,7 +136,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuiteBase {
     val vecs = clusteredVecs(300, 16, 4, 37L)
     val df = toDf(vecs)
     val cents = IvfIndex.fitCentroids(df, "id", "v", k = 8, iters = 2)
-    val cells = IvfIndex.assign(df, "id", "v", cents)
+    val cells = IvfIndex.assign(df, "v", cents)
     assert(cells.count() == 300)
     val range = cells.select("cell").distinct().collect().map(_.getInt(0))
     assert(range.forall(c => c >= 0 && c < 8))

@@ -146,7 +146,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuiteBase {
     implicit val ctx = sq.sqlContext
     val input = MemoryStream[(Long, String)]
     val df = input.toDF().toDF("id", "text")
-    val q = StreamingOps.streamingExactDedup(df, "id", "text")
+    val q = StreamingOps.streamingExactDedup(df, "text")
       .writeStream.format("memory").queryName("sdedup").outputMode("append").start()
     try {
       input.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha"))

@@ -5,8 +5,8 @@
     python3 tools/param_census.py --unset    # only those no call site passes
 
 A defaulted parameter is a `name: Type = default` entry of a `def` or
-`case class` parameter list under `src/main/scala`, outside `Bench`,
-`Verify` and `Stress`. With `--unset`, every call site of the owner's name
+`case class` parameter list under `src/main/scala`, outside `Bench` and
+`Verify`. With `--unset`, every call site of the owner's name
 under `src/main/scala`, `src/test/scala` and `perfbench/src` (plus
 `.copy(...)` for case classes) is parsed, and a parameter counts as set
 when some call passes it by position or by name. Overloads that share a
@@ -20,7 +20,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DECL_ROOTS = ["src/main/scala"]
 CALL_ROOTS = ["src/main/scala", "src/test/scala", "perfbench/src"]
-EXCLUDED = {"Bench", "Verify", "Stress"}
+EXCLUDED = {"Bench", "Verify"}
 PARAM = re.compile(r"\s*(?:implicit\s+)?(?:(?:private|protected|override|final|val|var)\s+)*"
                    r"([A-Za-z_]\w*)\s*:(.*)$", re.S)
 NAMED_ARG = re.compile(r"\s*[A-Za-z_]\w*\s*=(?![=>])")
