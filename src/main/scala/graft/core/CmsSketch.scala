@@ -27,15 +27,37 @@ import java.nio.ByteBuffer
   * The eps = e/width error bound holds per row in expectation and over the
   * depth rows with probability 1 - e^-depth — probabilistic, so it lives in
   * the spec as a generous assertion, not in the hash-checked query.
+  *
+  * Storage. A sketch that has set few cells keeps them in a small
+  * open-addressing table (cell -> count) and switches to the dense
+  * depth x width array once more than 1/16 of the cells are set
+  * ([[sparseLimit]]: 320 at the default 5 x 1024). A group of a
+  * many-group aggregate typically touches a few dozen cells, so its buffer
+  * is a few hundred bytes instead of 40 KB. The mode never shows in the
+  * bytes: `serialize()` writes the dense v1 image in both, so equal
+  * streams serialize byte-identically whatever path built them. Only the
+  * partial image (`CmsSketch.partialImage`, an aggregate's own shuffle and
+  * spill buffers) writes (cell, count) pairs while the sketch is sparse.
   */
 final class CmsSketch private (
     val depth: Int,
     val width: Int,
-    private val table: Array[Long], // row-major depth x width
+    private var table: Array[Long], // dense: row-major depth x width; null while sparse
+    private var cells: Array[Int],  // sparse: cell index + 1 per slot, 0 = empty; null once dense
+    private var counts: Array[Long], // sparse: the count of each slot's cell
+    private var used: Int,           // sparse: occupied slots
     private var _streamWeight: Long
 ) extends Mergeable[CmsSketch] with Serializable {
+  import CmsSketch._
 
   def streamWeight: Long = _streamWeight
+
+  /** Cells a sparse sketch holds before it switches to the dense table. */
+  def sparseLimit: Int = depth * width / 16
+
+  // width - 1 for a power-of-two width (the default), where masking equals
+  // the non-negative remainder; -1 selects the division
+  private val widthMask: Long = if ((width & (width - 1)) == 0) width - 1L else -1L
 
   /** Per-row seeds: splitmix64 of the row index — deterministic and
     * identical across JVMs, so sketches built anywhere merge. */
@@ -46,7 +68,8 @@ final class CmsSketch private (
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
     z ^= (z >>> 31)
-    ((z & Long.MaxValue) % width).toInt
+    val nonNegative = z & Long.MaxValue
+    (if (widthMask >= 0) nonNegative & widthMask else nonNegative % width).toInt
   }
 
   def update(item: String): Unit = update(item, 1L)
@@ -59,7 +82,7 @@ final class CmsSketch private (
     _streamWeight += weight
     var r = 0
     while (r < depth) {
-      table(r * width + bucket(r, itemHash)) += weight
+      add(r * width + bucket(r, itemHash), weight)
       r += 1
     }
   }
@@ -72,7 +95,7 @@ final class CmsSketch private (
     var min = Long.MaxValue
     var r = 0
     while (r < depth) {
-      val c = table(r * width + bucket(r, itemHash))
+      val c = counter(r * width + bucket(r, itemHash))
       if (c < min) min = c
       r += 1
     }
@@ -81,15 +104,18 @@ final class CmsSketch private (
 
   /** Conservation invariant: every row's counters sum to streamWeight. */
   def rowsConserved: Boolean = {
-    var r = 0
-    while (r < depth) {
-      var s = 0L
-      var c = 0
-      while (c < width) { s += table(r * width + c); c += 1 }
-      if (s != _streamWeight) return false
-      r += 1
+    val sums = new Array[Long](depth)
+    if (table != null) {
+      var i = 0
+      while (i < table.length) { sums(i / width) += table(i); i += 1 }
+    } else {
+      var i = 0
+      while (i < cells.length) {
+        if (cells(i) != 0) sums((cells(i) - 1) / width) += counts(i)
+        i += 1
+      }
     }
-    true
+    sums.forall(_ == _streamWeight)
   }
 
   /** The a-priori per-row error scale eps*W = e/width * W (the bound the
@@ -100,18 +126,109 @@ final class CmsSketch private (
   def merge(other: CmsSketch): CmsSketch = {
     require(other.depth == depth && other.width == width,
       s"cannot merge CmsSketch ${depth}x$width with ${other.depth}x${other.width}")
-    var i = 0
-    while (i < table.length) { table(i) += other.table(i); i += 1 }
+    if (other.table != null) {
+      if (table == null) densify()
+      var i = 0
+      while (i < table.length) { table(i) += other.table(i); i += 1 }
+    } else {
+      if (table == null) reserve(math.min(used + other.used, sparseLimit))
+      val oc = other.cells
+      var i = 0
+      while (i < oc.length) {
+        if (oc(i) != 0) add(oc(i) - 1, other.counts(i))
+        i += 1
+      }
+    }
     _streamWeight += other._streamWeight
     this
   }
 
   /** Big-endian [version:1][depth:4][width:4][weight:8][table:8*depth*width]. */
   def serialize(): Array[Byte] = {
-    val buf = ByteBuffer.allocate(CmsSketch.HeaderBytes + table.length * 8)
-    buf.put(1.toByte).putInt(depth).putInt(width).putLong(_streamWeight)
-    buf.asLongBuffer().put(table)
+    val buf = ByteBuffer.allocate(HeaderBytes + depth * width * 8)
+    writeCanonical(buf)
     buf.array()
+  }
+
+  private def writeCanonical(buf: ByteBuffer): Unit = {
+    buf.put(1.toByte).putInt(depth).putInt(width).putLong(_streamWeight)
+    if (table != null) buf.asLongBuffer().put(table)
+    else {
+      // the buffer is zeroed: write the set cells at their dense offsets
+      val base = buf.position()
+      var i = 0
+      while (i < cells.length) {
+        if (cells(i) != 0) buf.putLong(base + (cells(i) - 1) * 8, counts(i))
+        i += 1
+      }
+    }
+  }
+
+  private def counter(cell: Int): Long =
+    if (table != null) table(cell)
+    else {
+      val i = slotOf(cell)
+      if (cells(i) == 0) 0L else counts(i)
+    }
+
+  /** Adds `w` to `cell`; a sparse sketch that would set more than
+    * [[sparseLimit]] cells switches to the dense table first. */
+  private def add(cell: Int, w: Long): Unit = {
+    if (table == null) {
+      if (2 * used >= cells.length && used < sparseLimit) rehash(2 * cells.length)
+      val i = slotOf(cell)
+      if (cells(i) != 0) { counts(i) += w; return }
+      if (used < sparseLimit) {
+        cells(i) = cell + 1
+        counts(i) = w
+        used += 1
+        return
+      }
+      densify()
+    }
+    table(cell) += w
+  }
+
+  /** The sparse slot that holds `cell`, or the empty slot where it goes. */
+  private def slotOf(cell: Int): Int = {
+    val key = cell + 1
+    val mask = cells.length - 1
+    var i = slot(cell) & mask
+    while (cells(i) != 0 && cells(i) != key) i = (i + 1) & mask
+    i
+  }
+
+  /** Grows the sparse table, before a bulk insert, to hold `n` cells at a
+    * load of at most one half. */
+  private def reserve(n: Int): Unit = {
+    val cap = capacityFor(n)
+    if (cap > cells.length) rehash(cap)
+  }
+
+  private def rehash(cap: Int): Unit = {
+    val (oldCells, oldCounts) = (cells, counts)
+    cells = new Array[Int](cap)
+    counts = new Array[Long](cap)
+    var j = 0
+    while (j < oldCells.length) {
+      if (oldCells(j) != 0) {
+        val i = slotOf(oldCells(j) - 1)
+        cells(i) = oldCells(j)
+        counts(i) = oldCounts(j)
+      }
+      j += 1
+    }
+  }
+
+  private def densify(): Unit = {
+    table = new Array[Long](depth * width)
+    var i = 0
+    while (i < cells.length) {
+      if (cells(i) != 0) table(cells(i) - 1) = counts(i)
+      i += 1
+    }
+    cells = null
+    counts = null
   }
 }
 
@@ -119,15 +236,36 @@ object CmsSketch extends SketchFormat[CmsSketch] {
   val DefaultDepth = 5
   val DefaultWidth = 1024
   private val HeaderBytes = 1 + 4 + 4 + 8
+  // partial-image tags
+  private val DenseImage: Byte = 0
+  private val SparseImage: Byte = 1
+  private val MinCapacity = 16
 
   def apply(depth: Int = DefaultDepth, width: Int = DefaultWidth): CmsSketch = {
     require(depth >= 1 && depth <= 32, s"depth must be in [1, 32], got $depth")
     require(width >= 2, s"width must be >= 2, got $width")
-    new CmsSketch(depth, width, new Array[Long](depth * width), 0L)
+    sparse(depth, width, 0, 0L)
   }
 
-  def deserialize(bytes: Array[Byte]): CmsSketch = {
-    val buf = ByteBuffer.wrap(bytes)
+  private def sparse(depth: Int, width: Int, expectedCells: Int, weight: Long): CmsSketch = {
+    val cap = capacityFor(expectedCells)
+    new CmsSketch(depth, width, null, new Array[Int](cap), new Array[Long](cap), 0, weight)
+  }
+
+  /** Smallest power-of-two slot count that holds `n` cells at load <= 1/2. */
+  private def capacityFor(n: Int): Int =
+    math.max(MinCapacity, Integer.highestOneBit(math.max(2 * n - 1, 1)) << 1)
+
+  /** Slot hash of a cell index: Fibonacci multiply, then fold the high
+    * bits down so a power-of-two mask sees all of them. */
+  @inline private def slot(cell: Int): Int = {
+    val h = cell * 0x9e3779b9
+    h ^ (h >>> 16)
+  }
+
+  def deserialize(bytes: Array[Byte]): CmsSketch = readCanonical(ByteBuffer.wrap(bytes))
+
+  private def readCanonical(buf: ByteBuffer): CmsSketch = {
     val version = buf.get()
     require(version == 1, s"unknown CmsSketch version $version")
     val depth = buf.getInt()
@@ -135,6 +273,45 @@ object CmsSketch extends SketchFormat[CmsSketch] {
     val weight = buf.getLong()
     val table = new Array[Long](depth * width)
     buf.asLongBuffer().get(table)
-    new CmsSketch(depth, width, table, weight)
+    new CmsSketch(depth, width, table, null, null, 0, weight)
+  }
+
+  /** Sparse: [1][depth:4][width:4][weight:8][n:4] then n x [cell:4][count:8];
+    * dense: [0] followed by the `serialize()` bytes. */
+  override def partialImage(s: CmsSketch): Array[Byte] =
+    if (s.table != null) {
+      val buf = ByteBuffer.allocate(1 + HeaderBytes + s.depth * s.width * 8)
+      buf.put(DenseImage)
+      s.writeCanonical(buf)
+      buf.array()
+    } else {
+      val buf = ByteBuffer.allocate(1 + 4 + 4 + 8 + 4 + 12 * s.used)
+      buf.put(SparseImage).putInt(s.depth).putInt(s.width).putLong(s._streamWeight).putInt(s.used)
+      var i = 0
+      while (i < s.cells.length) {
+        if (s.cells(i) != 0) buf.putInt(s.cells(i) - 1).putLong(s.counts(i))
+        i += 1
+      }
+      buf.array()
+    }
+
+  override def readPartialImage(bytes: Array[Byte]): CmsSketch = {
+    val buf = ByteBuffer.wrap(bytes)
+    val tag = buf.get()
+    if (tag == DenseImage) readCanonical(buf)
+    else {
+      require(tag == SparseImage, s"unknown CmsSketch partial image tag $tag")
+      val depth = buf.getInt()
+      val width = buf.getInt()
+      val weight = buf.getLong()
+      val n = buf.getInt()
+      val s = sparse(depth, width, n, weight)
+      var i = 0
+      while (i < n) {
+        s.add(buf.getInt(), buf.getLong())
+        i += 1
+      }
+      s
+    }
   }
 }

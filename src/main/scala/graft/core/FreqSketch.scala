@@ -1,6 +1,8 @@
 package graft.core
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{ByteArrayInputStream, DataInputStream}
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
 /** Frequent-items (heavy-hitters) sketch — the Misra–Gries family member of
@@ -113,27 +115,26 @@ final class FreqSketch private (
     this
   }
 
+  /** Big-endian [version:1 = 2][maxMapSize:4][offset:8][weight:8][n:4]
+    * then n x [itemBytes:4][item UTF-8][count:8], items in sorted order. */
   def serialize(): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeByte(2) // version (v2: length-prefixed UTF-8 items)
-    out.writeInt(maxMapSize)
-    out.writeLong(_offset)
-    out.writeLong(_streamWeight)
-    out.writeInt(counts.size)
     // deterministic order so equal sketches serialize byte-identically.
     // Items are length-prefixed raw UTF-8, NOT writeUTF: a whitespace-split
     // web corpus contains "tokens" over 64 KiB (minified JS, base64 blobs)
     // and writeUTF throws UTFDataFormatException at 65535 bytes — crashing
     // the aggregate at shuffle-serialize time.
-    counts.toArray.sortBy(_._1).foreach { case (item, c) =>
-      val b = item.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out.writeInt(b.length)
-      out.write(b)
-      out.writeLong(c)
+    val entries = counts.toArray.sortBy(_._1)
+    val items = entries.map(_._1.getBytes(StandardCharsets.UTF_8))
+    var size = 1 + 4 + 8 + 8 + 4 + entries.length * (4 + 8)
+    items.foreach(b => size += b.length)
+    val buf = ByteBuffer.allocate(size)
+    buf.put(2.toByte).putInt(maxMapSize).putLong(_offset).putLong(_streamWeight).putInt(entries.length)
+    var i = 0
+    while (i < entries.length) {
+      buf.putInt(items(i).length).put(items(i)).putLong(entries(i)._2)
+      i += 1
     }
-    out.flush()
-    bos.toByteArray
+    buf.array()
   }
 }
 
@@ -149,9 +150,29 @@ object FreqSketch extends SketchFormat[FreqSketch] {
   }
 
   def deserialize(bytes: Array[Byte]): FreqSketch = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val version = in.readByte()
+    val version = bytes(0)
     require(version == 1 || version == 2, s"unknown FreqSketch version $version")
+    if (version == 1) return readV1(new DataInputStream(new ByteArrayInputStream(bytes, 1, bytes.length - 1)))
+    val buf = ByteBuffer.wrap(bytes, 1, bytes.length - 1)
+    val maxMapSize = buf.getInt()
+    val offset = buf.getLong()
+    val weight = buf.getLong()
+    val n = buf.getInt()
+    val m = mutable.HashMap.empty[String, Long]
+    var i = 0
+    while (i < n) {
+      val len = buf.getInt()
+      val item = new String(bytes, buf.position(), len, StandardCharsets.UTF_8)
+      buf.position(buf.position() + len)
+      m(item) = buf.getLong()
+      i += 1
+    }
+    new FreqSketch(maxMapSize, m, offset, weight)
+  }
+
+  /** v1: the v2 layout with items written by `writeUTF` (no longer written;
+    * stored v1 sketches still read). */
+  private def readV1(in: DataInputStream): FreqSketch = {
     val maxMapSize = in.readInt()
     val offset = in.readLong()
     val weight = in.readLong()
@@ -159,15 +180,7 @@ object FreqSketch extends SketchFormat[FreqSketch] {
     val m = mutable.HashMap.empty[String, Long]
     var i = 0
     while (i < n) {
-      val item =
-        if (version == 1) in.readUTF()
-        else {
-          val len = in.readInt()
-          val b = new Array[Byte](len)
-          in.readFully(b)
-          new String(b, java.nio.charset.StandardCharsets.UTF_8)
-        }
-      m(item) = in.readLong()
+      m(in.readUTF()) = in.readLong()
       i += 1
     }
     new FreqSketch(maxMapSize, m, offset, weight)

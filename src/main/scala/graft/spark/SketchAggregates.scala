@@ -2,7 +2,7 @@ package graft.spark
 
 import graft.core._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,13 +29,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * (128) groups per task; above that it falls back to sort-based
   * aggregation, which creates a fresh buffer for every group it meets and
   * serializes and deserializes every partial buffer again. At thousands of
-  * groups `createAggregationBuffer` and `deserialize` therefore run about
-  * once per input group per task, so both must cost O(retained), not
-  * O(capacity). Theta and CMS are the cases that matter: `ThetaSketch`
-  * grows its hash buffer with what it holds instead of allocating 2 x 4096
-  * hashes per buffer, and the fixed 5 x 1024 CMS table crosses serde as one
-  * bulk copy. Every sketch moves its arrays through bulk `ByteBuffer` or
+  * groups `createAggregationBuffer`, `serialize` and `deserialize`
+  * therefore run about once per input group per task, so all three must
+  * cost in proportion to what a group holds, not to its sketch's config.
+  * `ThetaSketch` grows its hash buffer with what it holds; `CmsSketch`
+  * keeps its set cells in a small table until 1/16 of them are set; and
+  * the shuffle and spill buffers carry the family's
+  * [[SketchFormat.partialImage]], which for CMS ((cell, count) pairs) and
+  * HLL (set registers) is sized to the group, not to the 40 KB table or
+  * the 4 KB register array. Partial images never leave an aggregate:
+  * `eval`, and so every stored column, is the canonical `serialize()`.
+  * Every sketch moves its arrays through bulk `ByteBuffer` or
   * `System.arraycopy` copies, never element by element through a stream.
+  *
+  * A build aggregate whose child is a plain column (a `BoundReference`
+  * once the plan is bound) reads the field at [[inputOrdinal]] straight
+  * from the row, unboxed; any other child goes through `child.eval`.
   */
 abstract class BinarySketchAgg[S <: Mergeable[S]](format: SketchFormat[S])
     extends TypedImperativeAggregate[S] with Serializable { // ships `format` with the plan
@@ -44,15 +53,21 @@ abstract class BinarySketchAgg[S <: Mergeable[S]](format: SketchFormat[S])
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
 
+  /** The child's ordinal in the input row when it is a bound column, else -1. */
+  @transient protected final lazy val inputOrdinal: Int = child match {
+    case b: BoundReference => b.ordinal
+    case _                 => -1
+  }
+
   // A null buffer exists only under SketchMergeAgg (its empty-group policy);
   // build aggregates always start from a real sketch and never take it.
   override def merge(buf: S, other: S): S =
     if (buf == null) other else if (other == null) buf else buf.merge(other)
   override def eval(buf: S): Any = if (buf == null) null else buf.serialize()
   override def serialize(buf: S): Array[Byte] =
-    if (buf == null) Array.emptyByteArray else buf.serialize()
+    if (buf == null) Array.emptyByteArray else format.partialImage(buf)
   override def deserialize(bytes: Array[Byte]): S =
-    if (bytes.isEmpty) null.asInstanceOf[S] else format.deserialize(bytes)
+    if (bytes.isEmpty) null.asInstanceOf[S] else format.readPartialImage(bytes)
 }
 
 /** Re-merge a column of stored sketches of one family: `req_merge`,
@@ -104,8 +119,9 @@ case class ReqSketchAgg(
   override def createAggregationBuffer(): ReqSketch = ReqSketch(k, hra)
 
   override def update(buf: ReqSketch, input: InternalRow): ReqSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[Double])
+    val o = inputOrdinal
+    if (o >= 0) { if (!input.isNullAt(o)) buf.update(input.getDouble(o)) }
+    else { val v = child.eval(input); if (v != null) buf.update(v.asInstanceOf[Double]) }
     buf
   }
 
@@ -126,8 +142,9 @@ case class KllSketchAgg(
   override def createAggregationBuffer(): KllSketch = KllSketch(k)
 
   override def update(buf: KllSketch, input: InternalRow): KllSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[Double])
+    val o = inputOrdinal
+    if (o >= 0) { if (!input.isNullAt(o)) buf.update(input.getDouble(o)) }
+    else { val v = child.eval(input); if (v != null) buf.update(v.asInstanceOf[Double]) }
     buf
   }
 
@@ -153,6 +170,16 @@ private[spark] object SketchInput {
   /** `ThetaSketch.hashBytes` of the string's UTF-8 bytes, read in place. */
   def hashUtf8(s: UTF8String): Long = ThetaSketch.hashBytes(s.getBaseObject, s.getBaseOffset, s.numBytes)
 
+  /** `hashOf` the non-null field `ordinal` of type `dt`, read from the row
+    * without boxing for the common column types. */
+  def hashAt(row: InternalRow, ordinal: Int, dt: DataType): Long = dt match {
+    case LongType      => ThetaSketch.hashLong(row.getLong(ordinal))
+    case IntegerType   => ThetaSketch.hashLong(row.getInt(ordinal).toLong)
+    case _: StringType => hashUtf8(row.getUTF8String(ordinal))
+    case DoubleType    => ThetaSketch.hashLong(java.lang.Double.doubleToLongBits(row.getDouble(ordinal) + 0.0))
+    case _             => hashOf(row.get(ordinal, dt))
+  }
+
 }
 
 /** `theta_sketch(col[, nominalEntries])` — Theta sketch for distinct counts
@@ -168,8 +195,9 @@ case class ThetaSketchAgg(
   override def createAggregationBuffer(): ThetaSketch = ThetaSketch(nominalEntries)
 
   override def update(buf: ThetaSketch, input: InternalRow): ThetaSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.updateHash(SketchInput.hashOf(v))
+    val o = inputOrdinal
+    if (o >= 0) { if (!input.isNullAt(o)) buf.updateHash(SketchInput.hashAt(input, o, child.dataType)) }
+    else { val v = child.eval(input); if (v != null) buf.updateHash(SketchInput.hashOf(v)) }
     buf
   }
 
@@ -190,8 +218,9 @@ case class HllSketchAgg(
   override def createAggregationBuffer(): HllSketch = HllSketch(lgK)
 
   override def update(buf: HllSketch, input: InternalRow): HllSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.updateHash(SketchInput.hashOf(v))
+    val o = inputOrdinal
+    if (o >= 0) { if (!input.isNullAt(o)) buf.updateHash(SketchInput.hashAt(input, o, child.dataType)) }
+    else { val v = child.eval(input); if (v != null) buf.updateHash(SketchInput.hashOf(v)) }
     buf
   }
 
@@ -215,8 +244,9 @@ case class FreqSketchAgg(
   override def createAggregationBuffer(): FreqSketch = FreqSketch(maxMapSize)
 
   override def update(buf: FreqSketch, input: InternalRow): FreqSketch = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[UTF8String].toString)
+    val o = inputOrdinal
+    if (o >= 0) { if (!input.isNullAt(o)) buf.update(input.getUTF8String(o).toString) }
+    else { val v = child.eval(input); if (v != null) buf.update(v.asInstanceOf[UTF8String].toString) }
     buf
   }
 
@@ -241,9 +271,9 @@ case class CmsSketchAgg(
   override def createAggregationBuffer(): CmsSketch = CmsSketch(depth, width)
 
   override def update(buf: CmsSketch, input: InternalRow): CmsSketch = {
-    val v = child.eval(input)
-    if (v != null)
-      buf.updateHash(SketchInput.hashUtf8(v.asInstanceOf[UTF8String]), 1L)
+    val o = inputOrdinal
+    if (o >= 0) { if (!input.isNullAt(o)) buf.updateHash(SketchInput.hashUtf8(input.getUTF8String(o)), 1L) }
+    else { val v = child.eval(input); if (v != null) buf.updateHash(SketchInput.hashUtf8(v.asInstanceOf[UTF8String]), 1L) }
     buf
   }
 
@@ -268,8 +298,9 @@ case class BloomAgg(
   override def createAggregationBuffer(): BloomFilter = BloomFilter(expectedItems, fpp)
 
   override def update(buf: BloomFilter, input: InternalRow): BloomFilter = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[Long])
+    val o = inputOrdinal
+    if (o >= 0) { if (!input.isNullAt(o)) buf.update(input.getLong(o)) }
+    else { val v = child.eval(input); if (v != null) buf.update(v.asInstanceOf[Long]) }
     buf
   }
 
@@ -297,8 +328,9 @@ case class CBloomAgg(
     CountingBloomFilter.withConfig(numCells, numHashes)
 
   override def update(buf: CountingBloomFilter, input: InternalRow): CountingBloomFilter = {
-    val v = child.eval(input)
-    if (v != null) buf.update(v.asInstanceOf[Long])
+    val o = inputOrdinal
+    if (o >= 0) { if (!input.isNullAt(o)) buf.update(input.getLong(o)) }
+    else { val v = child.eval(input); if (v != null) buf.update(v.asInstanceOf[Long]) }
     buf
   }
 

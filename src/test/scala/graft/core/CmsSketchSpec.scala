@@ -1,8 +1,12 @@
 package graft.core
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
+
 import org.scalatest.funsuite.AnyFunSuite
 
 class CmsSketchSpec extends AnyFunSuite {
+  import CmsSketchSpec._
 
   private def zipf(n: Int, distinct: Int, seed: Long): Seq[String] = {
     val rnd = new scala.util.Random(seed)
@@ -93,5 +97,101 @@ class CmsSketchSpec extends AnyFunSuite {
     assert(c.estimate("x") >= 7L)
     assert(c.streamWeight == 7L)
     intercept[IllegalArgumentException] { c.update("x", 0L) }
+  }
+
+  test("sparse and dense storage serialize the dense reference bytes across the sparse limit") {
+    for ((depth, width) <- Seq((5, 1024), (4, 1000), (3, 64))) {
+      val limit = CmsSketch(depth, width).sparseLimit
+      assert(limit == depth * width / 16)
+      // n distinct items set about depth * n cells: step n across the limit
+      for (n <- (0 to 3 * limit / depth) by math.max(1, limit / depth / 8)) {
+        val items = (0 until n).map(i => s"item$i") ++ (0 until n by 3).map(i => s"item$i")
+        val sk = CmsSketch(depth, width)
+        val ref = new DenseCms(depth, width)
+        items.foreach { i => sk.update(i); ref.update(i) }
+        val label = s"${depth}x$width n=$n"
+        assert(sk.serialize().sameElements(ref.bytes), label)
+        assert(sk.rowsConserved, label)
+        (items.distinct :+ "absent").foreach(i => assert(sk.estimate(i) == ref.estimate(i), s"$label $i"))
+      }
+    }
+  }
+
+  test("merges of sparse and dense sketches equal the single-pass bytes") {
+    val (depth, width) = (5, 1024)
+    def build(items: Seq[String]): CmsSketch = { val s = CmsSketch(depth, width); items.foreach(s.update(_)); s }
+    def items(from: Int, n: Int): Seq[String] = (from until from + n).map(i => s"tok$i")
+    val limit = CmsSketch(depth, width).sparseLimit
+    val small1 = items(0, 10)                   // sparse
+    val small2 = items(5, 20)                   // sparse, overlapping
+    val nearLimit = items(100, limit / depth - 4) // sparse, two of them cross the limit
+    val big = items(1000, 3 * limit)            // dense
+    for ((a, b, kind) <- Seq(
+           (small1, small2, "sparse + sparse"),
+           (nearLimit, items(500, limit / depth - 4), "sparse + sparse crossing the limit"),
+           (small1, big, "sparse + dense"),
+           (big, small1, "dense + sparse"),
+           (big, items(9000, 2 * limit), "dense + dense"))) {
+      val single = build(a ++ b).serialize()
+      assert(build(a).merge(build(b)).serialize().sameElements(single), kind)
+      // through partial images too, as a shuffled aggregate buffer is
+      val viaImages = CmsSketch.readPartialImage(CmsSketch.partialImage(build(a)))
+        .merge(CmsSketch.readPartialImage(CmsSketch.partialImage(build(b))))
+      assert(viaImages.serialize().sameElements(single), s"$kind via partial images")
+      // and into a sketch read back from canonical bytes (dense)
+      assert(CmsSketch.deserialize(build(a).serialize()).merge(build(b)).serialize().sameElements(single),
+        s"$kind into a deserialized sketch")
+    }
+  }
+
+  test("partial images round-trip to the original bytes, sparse and dense-tag fallback") {
+    for ((depth, width) <- Seq((5, 1024), (3, 100)); n <- Seq(0, 1, 7, 40, 63, 64, 65, 66, 200, 3000)) {
+      val sk = CmsSketch(depth, width)
+      (0 until n).foreach(i => sk.update(s"w$i", 1L + i % 3))
+      val canonical = sk.serialize()
+      val image = CmsSketch.partialImage(sk)
+      val back = CmsSketch.readPartialImage(image)
+      val label = s"${depth}x$width n=$n"
+      assert(back.serialize().sameElements(canonical), label)
+      assert(back.streamWeight == sk.streamWeight && back.rowsConserved, label)
+      val cells = ByteBuffer.wrap(canonical, 17, canonical.length - 17).asLongBuffer()
+      val set = Iterator.range(0, depth * width).count(cells.get(_) != 0)
+      if (set <= sk.sparseLimit) { // sparse: (cell, count) pairs after a 21-byte header
+        assert(image(0) == 1 && image.length == 1 + 20 + 12 * set, label)
+      } else {                     // dense: a tag byte plus the canonical bytes
+        assert(image(0) == 0 && image.drop(1).sameElements(canonical), label)
+      }
+    }
+  }
+}
+
+object CmsSketchSpec {
+  /** The dense Count-Min of the original implementation, restated: one
+    * depth x width table, `%` bucketing, the v1 byte layout. */
+  final class DenseCms(depth: Int, width: Int) {
+    private val table = new Array[Long](depth * width)
+    private var weight = 0L
+
+    private def cell(r: Int, h: Long): Int = {
+      var z = h + (r + 1) * 0x9e3779b97f4a7c15L
+      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+      z ^= (z >>> 31)
+      r * width + ((z & Long.MaxValue) % width).toInt
+    }
+    private def hash(item: String) = ThetaSketch.hashBytes(item.getBytes(StandardCharsets.UTF_8))
+
+    def update(item: String): Unit = {
+      val h = hash(item)
+      weight += 1
+      (0 until depth).foreach(r => table(cell(r, h)) += 1)
+    }
+    def estimate(item: String): Long = { val h = hash(item); (0 until depth).map(r => table(cell(r, h))).min }
+    def bytes: Array[Byte] = {
+      val buf = ByteBuffer.allocate(17 + 8 * table.length)
+      buf.put(1.toByte).putInt(depth).putInt(width).putLong(weight)
+      table.foreach(buf.putLong)
+      buf.array()
+    }
   }
 }

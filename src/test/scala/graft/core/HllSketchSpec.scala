@@ -46,4 +46,54 @@ class HllSketchSpec extends AnyFunSuite {
         s"n=$n estimate=${s.estimate} bounds=[${s.lowerBound(3)}, ${s.upperBound(3)}]")
     }
   }
+
+  /** The dense HLL of the original implementation, restated: the
+    * register update of every key, then the v1 byte layout. */
+  private def denseReference(vs: Array[Long], lgK: Int): Array[Byte] = {
+    val regs = new Array[Byte](1 << lgK)
+    vs.foreach { v =>
+      val h = ThetaSketch.hashLong(v)
+      val idx = (h >>> (64 - lgK)).toInt
+      val rank = (java.lang.Long.numberOfLeadingZeros((h << lgK) | (1L << (lgK - 1))) + 1).toByte
+      if (rank > regs(idx)) regs(idx) = rank
+    }
+    Array[Byte](1, lgK.toByte) ++ regs
+  }
+
+  private def setRegisters(s: HllSketch): Int = s.serialize().drop(2).count(_ != 0)
+
+  test("serialize equals the dense reference, and partial images round-trip, across the sparse-image limit") {
+    for (lgK <- Seq(4, 12); n <- Seq(0, 1, 2, 3, 4, 5, 10, 100, 700, 850, 900, 950, 1000, 1100, 20000)) {
+      val vs = keys(n, 7L + n)
+      val s = sketchOf(vs, lgK)
+      val label = s"lgK=$lgK n=$n"
+      val canonical = s.serialize()
+      assert(canonical.sameElements(denseReference(vs, lgK)), label)
+      val image = HllSketch.partialImage(s)
+      assert(HllSketch.readPartialImage(image).serialize().sameElements(canonical), label)
+      val set = setRegisters(s)
+      if (set < (1 << lgK) / 5) { // sparse: one 4-byte entry per set register
+        assert(image(0) == 1 && image.length == 6 + 4 * set, label)
+      } else {                    // dense: a tag byte plus the canonical bytes
+        assert(image(0) == 0 && image.drop(1).sameElements(canonical), label)
+      }
+    }
+  }
+
+  test("merges of sketches from sparse and dense images equal the single-pass bytes") {
+    val small1 = keys(200, 11L)                // sparse image
+    val small2 = keys(300, 12L) ++ small1.take(50)
+    val big = keys(30000, 13L)                 // dense image
+    def viaImage(vs: Array[Long]): HllSketch = HllSketch.readPartialImage(HllSketch.partialImage(sketchOf(vs)))
+    assert(HllSketch.partialImage(sketchOf(small1))(0) == 1 && HllSketch.partialImage(sketchOf(big))(0) == 0)
+    for ((a, b, kind) <- Seq(
+           (small1, small2, "sparse + sparse"),
+           (small1, big, "sparse + dense"),
+           (big, small1, "dense + sparse"),
+           (big, keys(9000, 14L), "dense + dense"))) {
+      val single = sketchOf(a ++ b).serialize()
+      assert(viaImage(a).merge(viaImage(b)).serialize().sameElements(single), kind)
+      assert(viaImage(a).merge(sketchOf(b)).serialize().sameElements(single), s"$kind, image into live")
+    }
+  }
 }

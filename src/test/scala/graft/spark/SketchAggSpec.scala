@@ -1,11 +1,13 @@
 package graft.spark
 
-import graft.core.{FreqSketch, HllSketch, ReqSketch, ThetaSketch}
+import graft.core.{BloomFilter, CmsSketch, CountingBloomFilter, FreqSketch, HllSketch, KllSketch, Mergeable, ReqSketch, ThetaSketch}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Concat, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.{Failure, Success, Try}
 
@@ -265,5 +267,110 @@ class SketchAggSpec extends AnyFunSuite with SparkSuiteBase {
     assert(!a.isNullAt(1) && a.getDouble(1) == 2.0)
     assert(b.isNullAt(1) && b.isNullAt(2) && b.isNullAt(3) && b.isNullAt(4) &&
       b.isNullAt(5) && b.isNullAt(6), s"unmatched row not all-null: $b")
+  }
+
+  test("2,048 groups over 4 partitions (sort-based fallback): CMS/HLL bytes equal single builds") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    // Above 128 groups per task ObjectHashAggregate falls back to sort-based
+    // aggregation: every partial buffer is serialized, sorted and merged
+    // back through the partial images. Group 0 is heavy (24,000 distinct
+    // items and ids), so its CMS and HLL partials take the dense image.
+    val groups = 2048
+    val light = spark.range(0, groups * 16L).select(
+      (col("id") % groups).cast("int").as("gk"),
+      (col("id") * 7919 % 1000).cast("double").as("v"),
+      (col("id") * 31 % 5000).as("u"),
+      concat(lit("t"), (col("id") / groups % 5).cast("long").cast("string")).as("item"))
+    val heavy = spark.range(0, 24000L).select(lit(0).as("gk"), col("id").cast("double").as("v"),
+      (col("id") + 100000L).as("u"), concat(lit("h"), col("id").cast("string")).as("item"))
+    val data = light.union(heavy).repartition(4)
+    val sketched = data.groupBy("gk").agg(
+      expr("cms_sketch(item)").as("cms"), expr("hll_sketch(u)").as("hll"),
+      expr("req_sketch(v)").as("req"), expr("kll_sketch(v)").as("kll"), expr("theta_sketch(u)").as("theta"))
+    val got = sketched.collect().map(r => r.getInt(0) -> r).toMap
+    assert(got.size == groups)
+
+    val byGroup = data.collect().groupBy(_.getInt(0))
+    val problems = Seq.newBuilder[String]
+    byGroup.foreach { case (g, rows) =>
+      val r = got(g)
+      val cms = CmsSketch()
+      val hll = HllSketch()
+      rows.foreach { row => cms.update(row.getString(3)); hll.update(row.getLong(2)) }
+      if (!r.getAs[Array[Byte]]("cms").sameElements(cms.serialize())) problems += s"cms[$g]"
+      if (!r.getAs[Array[Byte]]("hll").sameElements(hll.serialize())) problems += s"hll[$g]"
+      val vs = rows.map(_.getDouble(1)).sorted
+      val n = vs.length
+      def exactRank(x: Double) = vs.count(_ < x).toDouble / n
+      val req = ReqSketch.deserialize(r.getAs[Array[Byte]]("req"))
+      val kll = KllSketch.deserialize(r.getAs[Array[Byte]]("kll"))
+      if (req.count != n || req.minimum != vs.head || req.maximum != vs.last) problems += s"req[$g] count/min/max"
+      if (kll.count != n || kll.minimum != vs.head || kll.maximum != vs.last) problems += s"kll[$g] count/min/max"
+      for (p <- Seq(0.1, 0.5, 0.9)) {
+        val x = vs((p * (n - 1)).toInt)
+        val est = req.rank(x)
+        if (exactRank(x) < req.rankLowerBound(est, 3) - 1e-9 || exactRank(x) > req.rankUpperBound(est, 3) + 1e-9)
+          problems += s"req[$g] rank($x) = $est, exact ${exactRank(x)}"
+        if (math.abs(kll.rank(x) - exactRank(x)) > kll.normalizedRankError + 1e-9)
+          problems += s"kll[$g] rank($x) = ${kll.rank(x)}, exact ${exactRank(x)}"
+      }
+      val distinct = rows.map(_.getLong(2)).distinct.length
+      val theta = ThetaSketch.deserialize(r.getAs[Array[Byte]]("theta"))
+      if (distinct < theta.lowerBound(3) || distinct > theta.upperBound(3))
+        problems += s"theta[$g] estimate ${theta.estimate}, exact $distinct"
+    }
+    val found = problems.result()
+    assert(found.isEmpty, found.take(20).mkString("\n", "\n", ""))
+
+    // cms_merge / hll_union of the 2,048 group sketches == a 16-group build
+    val rolled = sketched.groupBy(($"gk" % 16).as("g16"))
+      .agg(expr("cms_merge(cms)").as("cms"), expr("hll_union(hll)").as("hll"))
+      .collect().map(r => r.getInt(0) -> r).toMap
+    val direct = data.groupBy(($"gk" % 16).as("g16"))
+      .agg(expr("cms_sketch(item)").as("cms"), expr("hll_sketch(u)").as("hll"))
+      .collect()
+    assert(direct.length == 16 && rolled.size == 16)
+    direct.foreach { r =>
+      val g = r.getInt(0)
+      assert(rolled(g).getAs[Array[Byte]]("cms").sameElements(r.getAs[Array[Byte]]("cms")), s"cms_merge[$g]")
+      assert(rolled(g).getAs[Array[Byte]]("hll").sameElements(r.getAs[Array[Byte]]("hll")), s"hll_union[$g]")
+    }
+  }
+
+  test("build aggregates read a bound column in place: same sketch as a computed child, NULLs included") {
+    // columns: double, long, string, int; every 7th row is all NULL
+    val rows: Seq[InternalRow] = (0 until 3000).map { i =>
+      if (i % 7 == 0) InternalRow(null, null, null, null)
+      else InternalRow((i * 37 % 1001).toDouble, (i % 500).toLong, UTF8String.fromString(s"s${i % 300}"), i % 400)
+    }
+    def col(o: Int, dt: DataType) = BoundReference(o, dt, nullable = true)
+    val (d, l, str, int) = (col(0, DoubleType), col(1, LongType), col(2, StringType), col(3, IntegerType))
+    // computed children of the same value: eval, not an in-place read
+    val computed: Map[Expression, Expression] = Map(
+      d -> Add(d, Literal(0.0)), l -> Add(l, Literal(0L)), int -> Add(int, Literal(0)),
+      str -> Concat(Seq(str, Literal(""))))
+    def sketch[S <: Mergeable[S]](agg: BinarySketchAgg[S]): Array[Byte] = {
+      var buf = agg.createAggregationBuffer()
+      rows.foreach(r => buf = agg.update(buf, r))
+      agg.eval(buf).asInstanceOf[Array[Byte]]
+    }
+    def same[S <: Mergeable[S]](name: String, build: Expression => BinarySketchAgg[S], in: Expression): Unit = {
+      val bound = sketch(build(in))
+      assert(bound.sameElements(sketch(build(computed(in)))), s"$name over ${in.dataType}")
+      val empty = build(in)
+      assert(!bound.sameElements(empty.eval(empty.createAggregationBuffer()).asInstanceOf[Array[Byte]]),
+        s"$name over ${in.dataType} took no rows")
+    }
+    same[ReqSketch]("req_sketch", ReqSketchAgg(_), d)
+    same[KllSketch]("kll_sketch", KllSketchAgg(_), d)
+    Seq(d, l, str, int).foreach { in =>
+      same[ThetaSketch]("theta_sketch", ThetaSketchAgg(_), in)
+      same[HllSketch]("hll_sketch", HllSketchAgg(_), in)
+    }
+    same[FreqSketch]("freq_sketch", FreqSketchAgg(_), str)
+    same[CmsSketch]("cms_sketch", CmsSketchAgg(_), str)
+    same[BloomFilter]("bloom_agg", BloomAgg(_, 1000L, 0.01), l)
+    same[CountingBloomFilter]("cbloom_agg", CBloomAgg.sized(_, 1000L, 0.01), l)
   }
 }
