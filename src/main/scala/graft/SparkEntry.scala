@@ -163,7 +163,7 @@ object SparkEntry {
     "q2_join_agg" -> ((s, dir) => {
       val orders = t(s, dir, "orders")
       val customer = t(s, dir, "customer")
-      orders.join(broadcast(customer), col("o_custkey") === col("c_custkey"))
+      orders.join(customer, col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("order_cnt"),
              countDistinct("o_custkey").as("cust_cnt"))
@@ -1073,7 +1073,7 @@ object SparkEntry {
       val simsI = mat(spread(incoming, "doc_id")
         .select(col("doc_id").as("new_id"), expr("simhash64(text)").as("sim_n")))
       val brute = simsI.select(col("new_id").as("nid"), col("sim_n").as("sn"))
-        .crossJoin(broadcast(simsC.select(col("id").as("cid"), col("sim").as("sc"))))
+        .crossJoin(simsC.select(col("id").as("cid"), col("sim").as("sc")))
         .filter(bit_count(col("sn").bitwiseXOR(col("sc"))) <= 3)
         .select(col("nid").as("new_id"), col("cid").as("corpus_id"))
       val lane = mat(SimHashDedup.incrementalPairsFromHashes(
@@ -1521,7 +1521,7 @@ object SparkEntry {
       val hists = mat(all.select(col("doc_id").as("id"),
         expr("token_hist(text)").as("h")))
       val brute = hists.select(col("id").as("id_a"), col("h").as("h_a"))
-        .join(broadcast(hists.select(col("id").as("id_b"), col("h").as("h_b"))),
+        .join(hists.select(col("id").as("id_b"), col("h").as("h_b")),
           col("id_a") < col("id_b"))
         .filter(expr("weighted_jaccard_hist(h_a._1, h_a._2, h_b._1, h_b._2)") >= 0.9)
         .select("id_a", "id_b")
@@ -1573,7 +1573,7 @@ object SparkEntry {
         expr("token_hist(text)").as("h_c"))
       val brute = incoming.select(col("doc_id").as("new_id"),
           expr("token_hist(text)").as("h_n"))
-        .crossJoin(broadcast(hc))
+        .crossJoin(hc)
         .filter(expr("weighted_jaccard_hist(h_n._1, h_n._2, h_c._1, h_c._2)") >= 0.9)
         .select("new_id", "corpus_id")
       brute.withColumn("in_b", lit(1))
@@ -1890,7 +1890,7 @@ object SparkEntry {
       def okCol(q: String, lb: String, ub: String) =
         (sum(when(col("l_extendedprice") <= col(q), 1L).otherwise(0L)) / first(col("cnt")) >= first(col(lb))) &&
         (sum(when(col("l_extendedprice") < col(q), 1L).otherwise(0L)) / first(col("cnt")) <= first(col(ub)))
-      li.join(broadcast(est), "l_returnflag")
+      li.join(est, "l_returnflag")
         .groupBy("l_returnflag")
         .agg(first(col("cnt")).as("cnt"),
           okCol("q50", "lb50", "ub50").as("p50_ok"),
@@ -1908,7 +1908,7 @@ object SparkEntry {
       def okCol(q: String, r: Double) =
         (sum(when(col("l_extendedprice") <= col(q), 1L).otherwise(0L)) / first(col("cnt")) >= lit(r) - lit(3) * first(col("eps"))) &&
         (sum(when(col("l_extendedprice") < col(q), 1L).otherwise(0L)) / first(col("cnt")) <= lit(r) + lit(3) * first(col("eps")))
-      li.join(broadcast(est), "l_returnflag")
+      li.join(est, "l_returnflag")
         .groupBy("l_returnflag")
         .agg(first(col("cnt")).as("cnt"),
           okCol("q50", 0.5).as("p50_ok"),
@@ -1995,19 +1995,13 @@ object SparkEntry {
       // in FreqSketchSpec (this corpus is near-uniform, so dominance is
       // structurally impossible at any m < nDistinct).
       val m = 8
-      val toks = langTokens(s, dir)
-      val sk = toks.groupBy("lang")
-        .agg(expr(s"freq_sketch(tok, $m)").as("fsk"), count(lit(1)).as("n_tokens"))
-      val exactTop = exactTopToken(toks)
-      sk.join(broadcast(exactTop), "lang").select(
-        col("lang"), col("n_tokens"), col("n_distinct"),
-        col("top_tok"), col("top_cnt"),
-        (expr("freq_lb(fsk, top_tok)") <= col("top_cnt") &&
-          col("top_cnt") <= expr("freq_ub(fsk, top_tok)")).as("bounds_ok"),
-        (expr("freq_error(fsk)") * lit(m + 1) <= lit(2L) * col("n_tokens")).as("apriori_ok"),
-        (expr("freq_total(fsk)") === col("n_tokens")).as("weight_ok"),
+      tokenSketchClaims(s, dir, s"freq_sketch(tok, $m)",
+        (expr("freq_lb(sk, top_tok)") <= col("top_cnt") &&
+          col("top_cnt") <= expr("freq_ub(sk, top_tok)")).as("bounds_ok"),
+        (expr("freq_error(sk)") * lit(m + 1) <= lit(2L) * col("n_tokens")).as("apriori_ok"),
+        (expr("freq_total(sk)") === col("n_tokens")).as("weight_ok"),
         (col("top_cnt") * lit(m + 1) <= lit(2L) * col("n_tokens") ||
-          expr("freq_contains(fsk, top_tok)")).as("covered_ok"))
+          expr("freq_contains(sk, top_tok)")).as("covered_ok"))
     }),
 
     "q_cms_tokens" -> ((s, dir) => {
@@ -2025,16 +2019,10 @@ object SparkEntry {
       // The probabilistic eps bound lives in CmsSketchSpec; exact
       // distributivity (any merge schedule == single pass, byte-identical)
       // in CmsSketchSpec + SketchAggSpec.
-      val toks = langTokens(s, dir)
-      val sk = toks.groupBy("lang")
-        .agg(expr("cms_sketch(tok, 5, 64)").as("csk"), count(lit(1)).as("n_tokens"))
-      val exactTop = exactTopToken(toks)
-      sk.join(broadcast(exactTop), "lang").select(
-        col("lang"), col("n_tokens"), col("n_distinct"),
-        col("top_tok"), col("top_cnt"),
-        (expr("cms_estimate(csk, top_tok)") >= col("top_cnt")).as("ge_ok"),
-        (expr("cms_total(csk)") === col("n_tokens")).as("weight_ok"),
-        expr("cms_conserved(csk)").as("conserved_ok"))
+      tokenSketchClaims(s, dir, "cms_sketch(tok, 5, 64)",
+        (expr("cms_estimate(sk, top_tok)") >= col("top_cnt")).as("ge_ok"),
+        (expr("cms_total(sk)") === col("n_tokens")).as("weight_ok"),
+        expr("cms_conserved(sk)").as("conserved_ok"))
     }),
 
     // ----------------------------------------------------- vector search
@@ -2160,7 +2148,7 @@ object SparkEntry {
       val assigned = mat(IvfIndex.assign(
         e.select(col("vec_id").cast("long").as("id"), col("v")), "v", cents))
       val bf = mat(assigned.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
-        .join(broadcast(assigned.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))), Seq("cell"))
+        .join(assigned.select(col("cell"), col("id").as("id_b"), col("v").as("vb")), Seq("cell"))
         .filter(col("id_a") < col("id_b"))
         .filter(AnnSearch.cosine(col("va"), col("vb")) >= thr)
         .select("id_a", "id_b"))
@@ -2370,7 +2358,7 @@ object SparkEntry {
     val sims = mat(spread(docs, "doc_id")
       .select(col("doc_id").as("id"), expr("simhash64(text)").as("sim")))
     val brute = mat(sims.select(col("id").as("id_a"), col("sim").as("sim_a"))
-      .join(broadcast(sims.select(col("id").as("id_b"), col("sim").as("sim_b"))),
+      .join(sims.select(col("id").as("id_b"), col("sim").as("sim_b")),
         col("id_a") < col("id_b"))
       .filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= 3)
       .select("id_a", "id_b"))
@@ -2413,20 +2401,24 @@ object SparkEntry {
           col("n_stop") * 100 >= col("n_tokens") * 3 &&
           col("top_tok_cnt") * 5 <= col("n_tokens"))
 
-  /** `(lang, tok)`: the per-lang token stream of q_freq_tokens and
-    * q_cms_tokens. */
-  private def langTokens(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
+  /** q_freq_tokens and q_cms_tokens: each lang's token stream summarized
+    * by the sketch aggregate `sketch` (as `sk`, beside `n_tokens`) and by
+    * its exact distinct count and top token (count desc, then the larger
+    * token), with the `claims` the sketch must meet against them. */
+  private def tokenSketchClaims(s: SparkSession, dir: String, sketch: String,
+                                claims: Column*): DataFrame = {
+    val toks = t(s, dir, "documents")
       .select(col("lang"), explode(split(trim(col("text")), "\\s+")).as("tok"))
-
-  /** `(lang, n_distinct, top_cnt, top_tok)`: the exact distinct count and
-    * top token (count desc, then the larger token) of each lang's stream. */
-  private def exactTopToken(toks: DataFrame): DataFrame =
-    toks.groupBy("lang", "tok").agg(count(lit(1)).as("c"))
+    val exactTop = toks.groupBy("lang", "tok").agg(count(lit(1)).as("c"))
       .groupBy("lang").agg(countDistinct("tok").as("n_distinct"),
         max(struct(col("c"), col("tok"))).as("top"))
       .select(col("lang"), col("n_distinct"),
         col("top.c").as("top_cnt"), col("top.tok").as("top_tok"))
+    toks.groupBy("lang").agg(expr(sketch).as("sk"), count(lit(1)).as("n_tokens"))
+      .join(exactTop, "lang")
+      .select(Seq(col("lang"), col("n_tokens"), col("n_distinct"),
+        col("top_tok"), col("top_cnt")) ++ claims: _*)
+  }
 
   private val allVecsCte =
     """WITH all_vecs AS (

@@ -7,8 +7,8 @@ import graft.core.SplitMix64
 
 /** Similarity search over an embedding column (`array<float>`/`array<double>`).
   *
-  * - `bruteForceTopK` — exact cosine top-k: broadcast the (small) query set
-  *   against the corpus; one corpus scan, map-side scoring with a COMPILED
+  * - `bruteForceTopK` — exact cosine top-k: the (small) query set against
+  *   the corpus; one corpus scan, map-side scoring with a COMPILED
   *   cosine UDF (Catalyst higher-order-function lambdas are interpreted at
   *   ~17us/element — measured in r1, BASELINE.md — so the kernels here are
   *   plain while-loops over primitive arrays), then a per-query top-k
@@ -176,17 +176,24 @@ object AnnSearch {
 
   /** Exact top-k neighbors for each query vector.
     * @param corpus  (idCol, vecCol) — the full embedding table
-    * @param queries (idCol, vecCol) — small query set (broadcast)
+    * @param queries (idCol, vecCol) — small query set
     * @return (query_id, neighbor_id, cos, rnk) with rnk in 1..k */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-      .select("query_id", "neighbor_id", "cos")
+    topKByCosine(c.join(q, col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** The `k` best neighbors per query of (query_id, qv, neighbor_id, cv)
+    * candidate rows: (query_id, neighbor_id, cos, rnk) by cosine desc,
+    * ties to the smaller neighbor id. Shared with [[IvfIndex]]'s searches. */
+  private[operators] def topKByCosine(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+    candidates
+      .select(col("query_id"), col("neighbor_id"), cosine(col("qv"), col("cv")).as("cos"))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
   }
 
   /** All pairs with cosine >= threshold via banded multi-table sign-LSH +

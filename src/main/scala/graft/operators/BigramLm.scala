@@ -103,7 +103,7 @@ object BigramLm {
       .join(bi.toDF("w2", "w3", "c23"), Seq("w2", "w3"), "left")
       .join(uni.toDF("w2", "cu2"), Seq("w2"), "left")
       .join(uni.toDF("w3", "cu3"), Seq("w3"), "left")
-      .crossJoin(broadcast(stats))
+      .crossJoin(stats)
       .select(col("doc_id"), expr(
         s"(${l3}L * ${Scale}L * (coalesce(ct, 0L) + 1L))" +
           s" div (${MixtureDen}L * (coalesce(c12, 0L) + V))" +
@@ -111,14 +111,7 @@ object BigramLm {
           s" div (${MixtureDen}L * (coalesce(cu2, 0L) + V))" +
           s" + (${l1}L * ${Scale}L * (coalesce(cu3, 0L) + 1L))" +
           s" div (${MixtureDen}L * (T + V))").as("s"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_trigrams"), sum("s").cast("long").as("score"))
-    docs.select(col(idCol).cast("long").as("doc_id"))
-      .join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
-        coalesce(col("score"), lit(0L)).as("score"))
-      .withColumn("avg_fp", expr("score div greatest(n_trigrams, 1L)"))
+    perDoc(docs, idCol, scored, "n_trigrams")
   }
 
   /** Per-document LM score over the given count tables. Every input doc
@@ -132,16 +125,20 @@ object BigramLm {
     val scored = docBigrams(docs, idCol, textCol)
       .join(bi, Seq("w1", "w2"), "left")
       .join(uni.withColumnRenamed("w", "w1"), Seq("w1"), "left")
-      .crossJoin(broadcast(vrow))
+      .crossJoin(vrow)
       .select(col("doc_id"), expr(
         s"(${Scale}L * (coalesce(cb, 0L) + 1L)) div (coalesce(cu, 0L) + V)").as("s"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum("s").cast("long").as("score"))
-    docs.select(col(idCol).cast("long").as("doc_id"))
-      .join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("score"), lit(0L)).as("score"))
-      .withColumn("avg_fp", expr("score div greatest(n_bigrams, 1L)"))
+    perDoc(docs, idCol, scored, "n_bigrams")
   }
+
+  /** Every doc of `docs` with its `(doc_id, s)` term scores summed:
+    * (doc_id, `nCol` = terms scored, score, avg_fp), zeros when it has none. */
+  private def perDoc(docs: DataFrame, idCol: String, termScores: DataFrame,
+                     nCol: String): DataFrame =
+    docs.select(col(idCol).cast("long").as("doc_id"))
+      .join(termScores.groupBy("doc_id")
+        .agg(count(lit(1)).as(nCol), sum("s").cast("long").as("score")), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col(nCol), lit(0L)).as(nCol),
+        coalesce(col("score"), lit(0L)).as("score"))
+      .withColumn("avg_fp", expr(s"score div greatest($nCol, 1L)"))
 }

@@ -74,10 +74,7 @@ object ConnectedComponents {
       } else localFinish(spark, e0)
     } else {
       // phase 1: one-hop min labels, then contract
-      val l0 = materialize(
-        e0.select($"u".as("id"), $"v".as("nbr"))
-          .union(e0.select($"v".as("id"), $"u".as("nbr")))
-          .groupBy("id").agg(least(min("nbr"), first("id")).as("label")))
+      val (l0, _, _) = minLabels(e0)
       val (e1, e1Count, _) = materializeCounting(
         e0.join(l0.withColumnRenamed("id", "u").withColumnRenamed("label", "lu"), "u")
           .join(l0.withColumnRenamed("id", "v").withColumnRenamed("label", "lv"), "v")
@@ -174,14 +171,18 @@ object ConnectedComponents {
       .toDF("id", "component")
   }
 
+  /** One-hop min labels over the symmetric closure of (u, v):
+    * (id, least(min neighbor, id)), materialized and counted. */
+  private def minLabels(e: DataFrame) = materializeCounting(
+    e.select(col("u").as("id"), col("v").as("nbr"))
+      .union(e.select(col("v").as("id"), col("u").as("nbr")))
+      .groupBy("id").agg(least(min("nbr"), first("id")).as("label")))
+
   /** Min-label propagation + pointer jumping to fixpoint over (u, v). */
   private def iterate(e0: DataFrame): DataFrame = {
     val spark = e0.sparkSession
     import spark.implicits._
-    val (labels0, labelRows, _) = materializeCounting(
-      e0.select($"u".as("id"), $"v".as("nbr"))
-        .union(e0.select($"v".as("id"), $"u".as("nbr")))
-        .groupBy("id").agg(least(min("nbr"), first("id")).as("label")))
+    val (labels0, labelRows, _) = minLabels(e0)
 
     var labels = labels0
     var converged = labelRows == 0

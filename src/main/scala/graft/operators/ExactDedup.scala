@@ -215,8 +215,8 @@ object ExactDedup {
                                 idCol: String, textCol: String,
                                 bloomBytes: Array[Byte],
                                 paranoid: Boolean = false): DataFrame =
-    incrementalSurvivorsPrefiltered(corpus, incoming, idCol, textCol,
-      graft.core.BloomFilter.deserialize(bloomBytes), paranoid)
+    confirmedSurvivors(corpus, bloomSplit(incoming, textCol, "_bh",
+      graft.core.BloomFilter.deserialize(bloomBytes)), idCol, textCol, paranoid)
 
   /** [[incrementalSurvivorsBloom]] probing the COUNTING corpus filter
     * ([[corpusCountingBloom]]) — same row-identical-to-exact contract for
@@ -227,41 +227,42 @@ object ExactDedup {
                                         idCol: String, textCol: String,
                                         cbloomBytes: Array[Byte],
                                         paranoid: Boolean = false): DataFrame =
-    incrementalSurvivorsPrefiltered(corpus, incoming, idCol, textCol,
-      graft.core.CountingBloomFilter.deserialize(cbloomBytes), paranoid)
+    confirmedSurvivors(corpus, bloomSplit(incoming, textCol, "_bh",
+      graft.core.CountingBloomFilter.deserialize(cbloomBytes)), idCol, textCol, paranoid)
 
-  private def incrementalSurvivorsPrefiltered(
-      corpus: DataFrame, incoming: DataFrame,
-      idCol: String, textCol: String,
-      filter: graft.core.MembershipFilter with Serializable,
-      paranoid: Boolean): DataFrame = {
-    val spark = incoming.sparkSession
-    // Broadcast lifecycle: the filter rides the returned (lazy) DataFrame's
-    // plan, so it cannot be destroyed here; Spark's ContextCleaner reclaims
-    // executor copies once the caller drops the DataFrame. A driver loop
-    // re-invoking this daily with GB-scale filters should hold only the
-    // current increment's DataFrame so the previous broadcast becomes
-    // collectable before the next one ships.
-    val bc = spark.sparkContext.broadcast(filter)
+  /** The Bloom prefilter split shared by the batch and streaming faces:
+    * `df` gains `hashCol = xxhash64(textCol)` and splits map-side into
+    * `(definitely fresh, maybe in the corpus)` by a broadcast of `filter`.
+    * Each face confirms the maybe rows its own way. */
+  private[graft] def bloomSplit(df: DataFrame, textCol: String, hashCol: String,
+                                filter: graft.core.MembershipFilter with Serializable)
+      : (DataFrame, DataFrame) = {
+    // Broadcast lifecycle: the filter rides the returned (lazy) DataFrames'
+    // plans, so it cannot be destroyed here; Spark's ContextCleaner reclaims
+    // executor copies once the caller drops them. A driver loop re-invoking
+    // this daily with GB-scale filters should hold only the current
+    // increment's frames so the previous broadcast becomes collectable
+    // before the next one ships.
+    val bc = df.sparkSession.sparkContext.broadcast(filter)
     // deserialize once per executor via the broadcast — never per row
     val mightContain = org.apache.spark.sql.functions.udf((h: Long) => bc.value.mightContain(h))
     // single `_maybe` projection feeding both branches (instead of the UDF
     // written out in two complementary filters): each branch's scan probes a
-    // row once, and a caller that persists `keyed` (the daily-driver shape)
-    // pays exactly one probe per row total
-    val keyed = incoming.withColumn("_bh", xxhash64(col(textCol)))
-      .withColumn("_maybe", mightContain(col("_bh")))
-    confirmedSurvivors(corpus, keyed.filter(!col("_maybe")).drop("_maybe"),
-      keyed.filter(col("_maybe")).drop("_maybe"), idCol, textCol, paranoid)
+    // row once
+    val keyed = df.withColumn(hashCol, xxhash64(col(textCol)))
+      .withColumn("_maybe", mightContain(col(hashCol)))
+    (keyed.filter(!col("_maybe")).drop("_maybe"), keyed.filter(col("_maybe")).drop("_maybe"))
   }
 
-  /** Shared tail of the prefiltered faces: the `maybe` rows are confirmed
-    * fresh by a left-anti join against the corpus content keys, the
-    * `definiteFresh` rows skip it, and [[survivors]] dedups their union.
-    * Both frames carry the prefilter hash `_bh`, dropped here. */
-  private def confirmedSurvivors(corpus: DataFrame, definiteFresh: DataFrame,
-                                 maybe: DataFrame, idCol: String, textCol: String,
+  /** Shared tail of the prefiltered faces over a `(definiteFresh, maybe)`
+    * split: the `maybe` rows are confirmed fresh by a left-anti join
+    * against the corpus content keys, the `definiteFresh` rows skip it, and
+    * [[survivors]] dedups their union. Both frames carry the prefilter
+    * hash `_bh`, dropped here. */
+  private def confirmedSurvivors(corpus: DataFrame, split: (DataFrame, DataFrame),
+                                 idCol: String, textCol: String,
                                  paranoid: Boolean): DataFrame = {
+    val (definiteFresh, maybe) = split
     val corpusKeys = corpus.select(contentKey(textCol, paranoid).as("_ch"))
     val maybeKeyed = maybe.withColumn("_ik", contentKey(textCol, paranoid))
     val confirmedFresh = maybeKeyed
@@ -322,6 +323,6 @@ object ExactDedup {
     }.toDF("_mid")
     val maybe = keyed.join(maybeIds, keyed(idCol).cast("long") === maybeIds("_mid"), "left_semi")
     val definiteFresh = keyed.join(maybeIds, keyed(idCol).cast("long") === maybeIds("_mid"), "left_anti")
-    confirmedSurvivors(corpus, definiteFresh, maybe, idCol, textCol, paranoid)
+    confirmedSurvivors(corpus, (definiteFresh, maybe), idCol, textCol, paranoid)
   }
 }

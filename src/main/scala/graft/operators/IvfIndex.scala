@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** IVF (inverted-file) approximate nearest-neighbor index: a deterministic
   * k-means coarse quantizer partitions the corpus into `k` cells; a query
@@ -241,15 +240,10 @@ object IvfIndex {
       nearestCells(qv, centroids, nProbe).map(c => (qid, qv.toSeq, c))
     }
     val probedCells = probeRows.map(_._3).distinct
-    val q = broadcast(probeRows.toDF("query_id", "qv", "cell"))
+    val q = probeRows.toDF("query_id", "qv", "cell")
     val cells = io.read(table).filter(col("cell").isin(probedCells: _*))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cells.join(q, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", AnnSearch.cosine(col("qv"), col("cv")))
-      .select("query_id", "neighbor_id", "cos")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= kNeighbors)
+    AnnSearch.topKByCosine(
+      cells.join(q, "cell").filter(col("query_id") =!= col("neighbor_id")), kNeighbors)
   }
 
   /** Approximate top-k neighbors for each query vector.
@@ -268,18 +262,10 @@ object IvfIndex {
     val cells = assign(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("cv")),
       "cv", centroids)
-    // queries are small by contract: broadcast (query, probed cell) rows so
-    // the corpus-side join is map-only against its cell partitioning
-    val q = broadcast(queries
+    val q = queries
       .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("cell", explode(probesUdf(col("qv")))))
-
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cells.join(q, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", AnnSearch.cosine(col("qv"), col("cv")))
-      .select("query_id", "neighbor_id", "cos")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= kNeighbors)
+      .withColumn("cell", explode(probesUdf(col("qv"))))
+    AnnSearch.topKByCosine(
+      cells.join(q, "cell").filter(col("query_id") =!= col("neighbor_id")), kNeighbors)
   }
 }

@@ -244,7 +244,6 @@ object NgramJaccard {
       .filter(col("a_in_b") || col("b_in_a"))
   }
 
-  /** Brute-force containment oracle (tests only — O(n^2), small n). */
   /** Per-doc top-k most-similar OTHER docs by exact n-gram Jaccard with a
     * completeness floor — the dedup REVIEW QUEUE face: "what would this
     * doc collide with, ranked", the corpus-ops surface the pair lanes
@@ -259,8 +258,8 @@ object NgramJaccard {
     * boundary — decides membership, and the candidate set is complete
     * above the floor below the posting cap.
     *
-    * Scale shape: one extra narrow (doc, neighbor, score) projection per
-    * verified pair (each pair serves both endpoints' queues), then a
+    * Scale shape: each verified pair explodes into two narrow (doc,
+    * neighbor, score) rows, one per endpoint's queue, then a
     * bounded MinNPair aggregate — <= 2k longs per doc under
     * ObjectHashAggregate, never a ranking window. The floor is the volume
     * knob: lower floors grow prefixes (~(1−t)·|A| postings/doc), which is
@@ -268,22 +267,22 @@ object NgramJaccard {
   def topKSimilar(docs: DataFrame, idCol: String, textCol: String,
                   n: Int = 3, k: Int = 3, t10: Int = 3): DataFrame = {
     require(k >= 1 && t10 >= 1 && t10 <= 10, s"bad config k=$k t10=$t10")
-    // materialized: `p` feeds BOTH direction projections of the union
-    // below — without this the whole candidate+verify pass (the expensive
-    // part of the query) runs twice
-    val p = org.apache.spark.sql.GraftBridge.materialize(
-      pairs(docs, idCol, textCol, n, t10 / 10.0 - 0.01)
-        .filter(expr(s"common_grams * 10 >= $t10 * (grams_a + grams_b - common_grams)"))
-        .withColumn("score", expr(
-          "CAST(common_grams AS BIGINT) * 1000000000L div " +
-            "(grams_a + grams_b - common_grams)")))
-    val dir = p.select(col("id_a").cast("long").as("doc_id"),
-        col("id_b").cast("long").as("neighbor_id"), col("score"))
-      .unionByName(p.select(col("id_b").cast("long").as("doc_id"),
-        col("id_a").cast("long").as("neighbor_id"), col("score")))
+    val a = col("id_a").cast("long")
+    val b = col("id_b").cast("long")
+    val dir = pairs(docs, idCol, textCol, n, t10 / 10.0 - 0.01)
+      .filter(expr(s"common_grams * 10 >= $t10 * (grams_a + grams_b - common_grams)"))
+      .withColumn("score", expr(
+        "CAST(common_grams AS BIGINT) * 1000000000L div " +
+          "(grams_a + grams_b - common_grams)"))
+      // one pass over the verified pairs serves both endpoints' queues
+      .select(explode(array(
+        struct(a.as("doc_id"), b.as("neighbor_id"), col("score")),
+        struct(b.as("doc_id"), a.as("neighbor_id"), col("score")))).as("d"))
+      .select("d.*")
     SearchIndex.topK(dir, "doc_id", "neighbor_id", k)
   }
 
+  /** Brute-force containment oracle (tests only — O(n^2), small n). */
   def bruteForceContainment(docs: Seq[(Long, String)], n: Int,
                             tNum: Int, tDen: Int): Set[(Long, Long, Boolean, Boolean)] = {
     (for {

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *  - `postings` is the classic narrow-row index: one full-text scan
   *    explodes tokens and aggregates (term, doc_id) -> tf. At 10^12 docs
   *    the posting table dwarfs the vocabulary, so everything downstream
-  *    joins ON TERM against a tiny broadcast query set — the corpus text
-  *    is never touched again.
-  *  - `searchAll` broadcasts the (query_id, term) pairs, semi-restricts
+  *    joins ON TERM against a tiny query set, which Catalyst broadcasts by
+  *    size — the corpus text is never touched again.
+  *  - `searchAll` joins the small (query_id, term) pairs, semi-restricts
   *    the postings in the scan (predicate on term pushes down when the
   *    posting table is stored term-partitioned), and reduces per
   *    (query_id, doc): a doc matches when it covers EVERY term of the
@@ -53,10 +53,10 @@ object SearchIndex {
         explode(array_distinct(col("terms"))).as("term"))
     val qSize = qTerms.groupBy("query_id").agg(count(lit(1)).as("n_terms"))
     val perDoc = postingsDf
-      .join(broadcast(qTerms), Seq("term"))
+      .join(qTerms, Seq("term"))
       .groupBy("query_id", "doc_id")
       .agg(count(lit(1)).as("n_hit"), sum("tf").as("score"))
-      .join(broadcast(qSize), Seq("query_id"))
+      .join(qSize, Seq("query_id"))
       .filter(col("n_hit") === col("n_terms"))
     topK(perDoc, "query_id", "doc_id", k)
   }
@@ -99,14 +99,14 @@ object SearchIndex {
     val qTerms = queries
       .select(col("query_id").cast("long").as("query_id"),
         explode(array_distinct(col("terms"))).as("term"))
-    // corpus stats: one aggregate row, cross-joined (broadcast) not collected
+    // corpus stats: one aggregate row, cross-joined not collected
     val stats = postingsDf
       .agg(sum("tf").cast("long").as("A"),
         countDistinct("doc_id").cast("long").as("N"))
     // df only for query terms: per-term distinct-doc counts restricted by a
-    // broadcast semi-join — vocabulary-sized df tables never materialize
+    // join on the query terms — vocabulary-sized df tables never materialize
     val dfq = postingsDf
-      .join(broadcast(qTerms.select("term").distinct()), Seq("term"))
+      .join(qTerms.select("term").distinct(), Seq("term"))
       .groupBy("term").agg(count(lit(1)).as("df"))
     val docLen = postingsDf.groupBy("doc_id").agg(sum("tf").cast("long").as("dl"))
     // `div` (true integer division) only exists in SQL expression syntax;
@@ -115,10 +115,10 @@ object SearchIndex {
       s"((2L * (N - df) + 1L) * ((${Scale}L * 44L * A * tf)" +
         " div (20L * A * tf + 6L * A + 18L * dl * N))) div (2L * df + 1L)")
     val perDoc = postingsDf
-      .join(broadcast(qTerms), Seq("term"))
-      .join(broadcast(dfq), Seq("term"))
+      .join(qTerms, Seq("term"))
+      .join(dfq, Seq("term"))
       .join(docLen, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
+      .crossJoin(stats)
       .groupBy("query_id", "doc_id")
       .agg(sum(w).cast("long").as("score"))
     topK(perDoc, "query_id", "doc_id", k)
@@ -171,12 +171,12 @@ object SearchIndex {
         posexplode(col("terms")).as(Seq("off", "term")))
     val pLen = pTerms.groupBy("phrase_id").agg(count(lit(1)).as("k"))
     posPostings
-      .join(broadcast(pTerms), Seq("term"))
+      .join(pTerms, Seq("term"))
       .select(col("phrase_id"), col("doc_id"),
         expr("transform(positions, p -> p - off)").as("shifted"))
       .groupBy("phrase_id", "doc_id")
       .agg(count(lit(1)).as("n_hit"), collect_list("shifted").as("ls"))
-      .join(broadcast(pLen), Seq("phrase_id"))
+      .join(pLen, Seq("phrase_id"))
       .filter(col("n_hit") === col("k")) // every phrase slot found in the doc
       .select(col("phrase_id"), col("doc_id"),
         expr("size(aggregate(slice(ls, 2, size(ls) - 1), ls[0]," +

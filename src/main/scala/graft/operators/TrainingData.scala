@@ -41,8 +41,8 @@ object Decontaminate {
     val grams = udf((t: String) => TextOps.shingleHashes(t, n))
     val docGrams = docs.select(col(idCol).as("id"),
       explode(grams(col(textCol))).as("g"))
-    val benchGrams = broadcast(benchmark
-      .select(explode(grams(col(benchTextCol))).as("g")).distinct())
+    val benchGrams = benchmark
+      .select(explode(grams(col(benchTextCol))).as("g")).distinct()
     docGrams.join(benchGrams, "g")
       .groupBy("id")
       // per-doc grams are already distinct (shingleHashes) and the bench

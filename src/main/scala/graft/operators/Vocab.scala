@@ -49,7 +49,7 @@ object Vocab {
         posexplode(split(trim(col(textCol)), "\\s+")).as(Seq("pos", "token")))
       .filter(col("token") =!= "")
     toks
-      .join(broadcast(vocab.select("token", "id")), Seq("token"), "left")
+      .join(vocab.select("token", "id"), Seq("token"), "left")
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("n_tokens"),

@@ -395,13 +395,9 @@ object StreamingOps {
   def streamingIncrementalDedup(stream: DataFrame, textCol: String,
                                 corpusKeys: DataFrame, keyCol: String,
                                 bloomBytes: Array[Byte]): DataFrame = {
-    val spark = stream.sparkSession
-    val bc = spark.sparkContext.broadcast(graft.core.BloomFilter.deserialize(bloomBytes))
-    val mightContain = udf((h: Long) => bc.value.mightContain(h))
-    val keyed = stream.withColumn("_h", xxhash64(col(textCol)))
-      .withColumn("_maybe", mightContain(col("_h")))
-    val fresh = keyed.filter(!col("_maybe")).drop("_maybe")
-    val confirmed = keyed.filter(col("_maybe")).drop("_maybe")
+    val (fresh, maybe) = graft.operators.ExactDedup.bloomSplit(stream, textCol, "_h",
+      graft.core.BloomFilter.deserialize(bloomBytes))
+    val confirmed = maybe
       .join(corpusKeys.select(col(keyCol).cast("long").as("_ck")),
         col("_h") === col("_ck"), "left_anti")
     fresh.unionByName(confirmed).dropDuplicates("_h").drop("_h")

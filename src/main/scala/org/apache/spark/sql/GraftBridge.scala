@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 
 /** Bridge to `private[sql]` Column <-> Expression conversions (the standard
   * pattern for Catalyst-level Spark extensions living outside the Spark
@@ -16,13 +17,16 @@ object GraftBridge {
   /** The engine's one materialize primitive: eagerly compute `df`, store
     * its unsafe rows as local-checkpoint blocks, and rebuild a DataFrame
     * over them. Every iterative loop (connected components, host rank) and
-    * every multi-consumer frame goes through here.
+    * every multi-consumer frame goes through here. The rebuilt plan carries
+    * the exact row count and byte size of the stored rows (no column
+    * stats), so Catalyst's broadcast threshold applies to real sizes.
     *
     * Why not plain `df.localCheckpoint`: on Spark 4 the resulting
-    * `LogicalRDD` propagates the source plan's `originStats`, so in a loop
-    * the size estimates compound per round until Catalyst spends minutes
-    * multiplying million-digit BigInts (observed: iteration wall time
-    * 0.8 s -> 5 s -> 43 s -> 300 s). The rebuilt plan carries no stats.
+    * `LogicalRDD` propagates the source plan's ESTIMATED `originStats`, so
+    * in a loop the join estimates multiply per round until Catalyst spends
+    * minutes multiplying million-digit BigInts (observed: iteration wall
+    * time 0.8 s -> 5 s -> 43 s -> 300 s). Here each pass measures the rows
+    * it stored, so a round's stats never inherit the previous estimate.
     *
     * Why not `createDataFrame(df.localCheckpoint.rdd, schema)`: that
     * rebuild converts every stored row InternalRow -> Row -> InternalRow on
@@ -37,24 +41,33 @@ object GraftBridge {
     * `(frame, rows, matched)`. `rows` is the checkpoint's own `count()`,
     * so a caller that sizes or gates on the frame (connected components'
     * edge count, host rank's node count) schedules no second job over the
-    * stored blocks. `matched` counts rows satisfying `pred` through a long
-    * accumulator folded into the same job (e.g. BucketedPairs' monster-
-    * bucket gate). Task retries can only OVER-count the accumulator (each
-    * successful attempt adds), never under-count — safe for existence
-    * gates, where a false positive merely runs a branch that then finds no
-    * rows; `rows` is exact. */
+    * stored blocks. `matched` counts rows satisfying `pred`, and the byte
+    * size sums row sizes, through long accumulators folded into the same
+    * job (e.g. BucketedPairs' monster-bucket gate). Task retries can only
+    * OVER-count an accumulator (each successful attempt adds), never
+    * under-count — safe for existence gates, where a false positive merely
+    * runs a branch that then finds no rows, and for the byte size, where it
+    * can only make a broadcast less likely; `rows` is exact. */
   def materializeCounting(df: Dataset[Row],
                           pred: catalyst.InternalRow => Boolean = _ => false)
       : (Dataset[Row], Long, Long) = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val acc = session.sparkContext.longAccumulator("graft.materialize.matched")
+    val matched = session.sparkContext.longAccumulator("graft.materialize.matched")
+    val bytes = session.sparkContext.longAccumulator("graft.materialize.bytes")
+    val attrs = catalyst.types.DataTypeUtils.toAttributes(df.schema)
     val rdd = df.queryExecution.toRdd.map { r =>
-      if (pred(r)) acc.add(1L)
-      r.copy() // unsafe rows are reused buffers
+      if (pred(r)) matched.add(1L)
+      // physical rows are reused UnsafeRow buffers (Spark's own shuffle
+      // serializer makes the same cast)
+      val c = r.copy()
+      bytes.add(c.asInstanceOf[UnsafeRow].getSizeInBytes)
+      c
     }
     rdd.localCheckpoint()
     val rows = rdd.count()
-    (session.internalCreateDataFrame(rdd, df.schema), rows, acc.value)
+    val stats = Statistics(sizeInBytes = BigInt(bytes.value), rowCount = Some(BigInt(rows)))
+    val plan = execution.LogicalRDD(attrs, rdd)(session, Some(stats))
+    (classic.Dataset.ofRows(session, plan), rows, matched.value)
   }
 
   /** The physical-plan rows of `df` (UnsafeRow buffers ARE reused — copy

@@ -179,6 +179,41 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuiteBase {
     }
   }
 
+  test("queries whose broadcast hints were deleted plan no CartesianProduct") {
+    // No join in src/main carries a broadcast hint: materialized frames
+    // report their exact size, and Catalyst's threshold picks the build
+    // side. A frame sized at spark.sql.defaultSizeInBytes would turn each
+    // non-equi join below into a cartesian product. Joins inside eager
+    // materializations run while the query is built, so they are caught
+    // by the RDDs of the jobs they launch; the rest by the final plan.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val unhinted = Seq("q2_join_agg", "q_decontaminate", "q_simhash_neardup",
+      "q_simhash_complete", "q_simhash_incremental", "q_lm_score", "q_lm_trigram",
+      "q_weighted_neardup", "q_weighted_incremental", "q_search_conjunctive",
+      "q_search_ranked", "q_phrase_search", "q_vocab_encode", "q_req_quantiles",
+      "q_kll_quantiles", "q_freq_tokens", "q_cms_tokens", "q_ann_topk", "q_ann_ivf",
+      "q_semantic_dedup")
+    val rddNames = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(_.rddInfos.foreach(r => rddNames.add(r.name)))
+    }
+    for (q <- unhinted) {
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+      rddNames.clear()
+      spark.sparkContext.addSparkListener(listener)
+      val p =
+        try {
+          val built = plan(q)
+          org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+          built
+        } finally spark.sparkContext.removeSparkListener(listener)
+      assert(!p.contains("CartesianProduct"), s"$q plans a cartesian product:\n${p.take(2000)}")
+      val ranCartesian = rddNames.contains("UnsafeCartesianRDD")
+      assert(!ranCartesian, s"$q ran a cartesian product while building")
+    }
+  }
+
   test("pipeline text kernels are native expressions — no ScalaUDF in the features scan") {
     // r4 judge item #3: extract_text + doc_features dominate the dedup
     // pipeline's per-row CPU and must not pay the ScalaUDF converter

@@ -19,15 +19,6 @@ import org.apache.spark.sql.functions._
 class SkewAndBucketingSpec extends AnyFunSuite with SparkSuiteBase {
   import spark.implicits._
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits a skewed sort-merge join partition at runtime; results unchanged") {
     // one monster key (80% of the fact side) + a long tail; the pad is
     // hash noise so shuffle compression cannot shrink the hot partition

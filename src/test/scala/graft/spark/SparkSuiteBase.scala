@@ -12,6 +12,16 @@ trait SparkSuiteBase extends BeforeAndAfterAll { self: Suite =>
 
   lazy val spark: SparkSession = SparkSuiteBase.session
 
+  /** Run `body` with the session confs `pairs` set, restoring them after. */
+  protected def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 
