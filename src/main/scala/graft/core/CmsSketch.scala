@@ -28,16 +28,25 @@ import java.nio.ByteBuffer
   * depth rows with probability 1 - e^-depth — probabilistic, so it lives in
   * the spec as a generous assertion, not in the hash-checked query.
   *
-  * Storage. A sketch that has set few cells keeps them in a small
-  * open-addressing table (cell -> count) and switches to the dense
-  * depth x width array once more than 1/16 of the cells are set
-  * ([[sparseLimit]]: 320 at the default 5 x 1024). A group of a
-  * many-group aggregate typically touches a few dozen cells, so its buffer
-  * is a few hundred bytes instead of 40 KB. The mode never shows in the
-  * bytes: `serialize()` writes the dense v1 image in both, so equal
-  * streams serialize byte-identically whatever path built them. Only the
-  * partial image (`CmsSketch.partialImage`, an aggregate's own shuffle and
-  * spill buffers) writes (cell, count) pairs while the sketch is sparse.
+  * Storage, in three modes that a sketch passes through in order:
+  *  - items: while it has seen at most [[itemLimit]] distinct items
+  *    (`sparseLimit / depth`: 64 at the default 5 x 1024) it counts by item
+  *    hash in a small open-addressing table, one probe per update;
+  *  - sparse cells: the next new item spreads the counted items into an
+  *    open-addressing table of set cells (cell -> count), which holds them
+  *    all, and updates go to the depth cells of their item;
+  *  - dense: once more than 1/16 of the cells are set ([[sparseLimit]]:
+  *    320 at 5 x 1024) the cells move to the depth x width array.
+  * A group of a many-group aggregate typically holds a few dozen items, so
+  * its buffer is a few hundred bytes instead of 40 KB. Counters are linear,
+  * so counting an item's updates before spreading them sets the same cells
+  * to the same counts. Every reader of cells (estimates, merges,
+  * `rowsConserved`, `serialize()` and the partial image) spreads first, and
+  * the mode never shows in the bytes: `serialize()` writes the dense v1
+  * image in every mode, so equal streams serialize byte-identically
+  * whatever path built them. Only the partial image
+  * (`CmsSketch.partialImage`, an aggregate's own shuffle and spill
+  * buffers) writes (cell, count) pairs while the sketch is sparse.
   */
 final class CmsSketch private (
     val depth: Int,
@@ -46,6 +55,9 @@ final class CmsSketch private (
     private var cells: Array[Int],  // sparse: cell index + 1 per slot, 0 = empty; null once dense
     private var counts: Array[Long], // sparse: the count of each slot's cell
     private var used: Int,           // sparse: occupied slots
+    private var itemHashes: Array[Long], // items: each slot's item hash; null once spread
+    private var itemCounts: Array[Long], // items: each slot's count, 0 = empty
+    private var items: Int,              // items: occupied slots
     private var _streamWeight: Long
 ) extends Mergeable[CmsSketch] with Serializable {
   import CmsSketch._
@@ -54,6 +66,10 @@ final class CmsSketch private (
 
   /** Cells a sparse sketch holds before it switches to the dense table. */
   def sparseLimit: Int = depth * width / 16
+
+  /** Distinct items counted by hash before they spread into cells; they
+    * then set at most [[sparseLimit]] cells, so the cell table stays sparse. */
+  val itemLimit: Int = sparseLimit / depth
 
   // width - 1 for a power-of-two width (the default), where masking equals
   // the non-negative remainder; -1 selects the division
@@ -80,6 +96,7 @@ final class CmsSketch private (
   def updateHash(itemHash: Long, weight: Long): Unit = {
     require(weight > 0, s"weight must be positive, got $weight")
     _streamWeight += weight
+    if (itemCounts != null && countItem(itemHash, weight)) return
     var r = 0
     while (r < depth) {
       add(r * width + bucket(r, itemHash), weight)
@@ -92,6 +109,7 @@ final class CmsSketch private (
     estimateHash(ThetaSketch.hashBytes(item.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
   def estimateHash(itemHash: Long): Long = {
+    spread()
     var min = Long.MaxValue
     var r = 0
     while (r < depth) {
@@ -104,6 +122,7 @@ final class CmsSketch private (
 
   /** Conservation invariant: every row's counters sum to streamWeight. */
   def rowsConserved: Boolean = {
+    spread()
     val sums = new Array[Long](depth)
     if (table != null) {
       var i = 0
@@ -126,6 +145,8 @@ final class CmsSketch private (
   def merge(other: CmsSketch): CmsSketch = {
     require(other.depth == depth && other.width == width,
       s"cannot merge CmsSketch ${depth}x$width with ${other.depth}x${other.width}")
+    spread()
+    other.spread()
     if (other.table != null) {
       if (table == null) densify()
       var i = 0
@@ -151,6 +172,7 @@ final class CmsSketch private (
   }
 
   private def writeCanonical(buf: ByteBuffer): Unit = {
+    spread()
     buf.put(1.toByte).putInt(depth).putInt(width).putLong(_streamWeight)
     if (table != null) buf.asLongBuffer().put(table)
     else {
@@ -188,6 +210,66 @@ final class CmsSketch private (
     }
     table(cell) += w
   }
+
+  /** Item mode: adds `w` to the count of the item hashed `h`. A new item
+    * past [[itemLimit]] spreads the table into cells and returns false: the
+    * caller then adds it to its cells. */
+  private def countItem(h: Long, w: Long): Boolean = {
+    if (2 * items >= itemCounts.length && items < itemLimit) rehashItems(2 * itemCounts.length)
+    val i = itemSlotOf(h)
+    if (itemCounts(i) != 0) { itemCounts(i) += w; return true }
+    if (items < itemLimit) {
+      itemHashes(i) = h
+      itemCounts(i) = w
+      items += 1
+      return true
+    }
+    spread()
+    false
+  }
+
+  /** The item slot that holds hash `h`, or the empty slot where it goes. */
+  private def itemSlotOf(h: Long): Int = {
+    val mask = itemCounts.length - 1
+    var i = (h ^ (h >>> 32)).toInt & mask
+    while (itemCounts(i) != 0 && itemHashes(i) != h) i = (i + 1) & mask
+    i
+  }
+
+  private def rehashItems(cap: Int): Unit = {
+    val (oldHashes, oldCounts) = (itemHashes, itemCounts)
+    itemHashes = new Array[Long](cap)
+    itemCounts = new Array[Long](cap)
+    var j = 0
+    while (j < oldCounts.length) {
+      if (oldCounts(j) != 0) {
+        val i = itemSlotOf(oldHashes(j))
+        itemHashes(i) = oldHashes(j)
+        itemCounts(i) = oldCounts(j)
+      }
+      j += 1
+    }
+  }
+
+  /** Leaves item mode: adds each counted item to its depth cells. A no-op
+    * once spread. */
+  private def spread(): Unit =
+    if (itemCounts != null) {
+      val (hs, cs) = (itemHashes, itemCounts)
+      itemHashes = null
+      itemCounts = null
+      val cap = capacityFor(math.min(items * depth, sparseLimit))
+      cells = new Array[Int](cap)
+      counts = new Array[Long](cap)
+      var s = 0
+      while (s < cs.length) {
+        if (cs(s) != 0) {
+          var r = 0
+          while (r < depth) { add(r * width + bucket(r, hs(s)), cs(s)); r += 1 }
+        }
+        s += 1
+      }
+    }
 
   /** The sparse slot that holds `cell`, or the empty slot where it goes. */
   private def slotOf(cell: Int): Int = {
@@ -244,12 +326,13 @@ object CmsSketch extends SketchFormat[CmsSketch] {
   def apply(depth: Int = DefaultDepth, width: Int = DefaultWidth): CmsSketch = {
     require(depth >= 1 && depth <= 32, s"depth must be in [1, 32], got $depth")
     require(width >= 2, s"width must be >= 2, got $width")
-    sparse(depth, width, 0, 0L)
+    new CmsSketch(depth, width, null, null, null, 0,
+      new Array[Long](MinCapacity), new Array[Long](MinCapacity), 0, 0L)
   }
 
   private def sparse(depth: Int, width: Int, expectedCells: Int, weight: Long): CmsSketch = {
     val cap = capacityFor(expectedCells)
-    new CmsSketch(depth, width, null, new Array[Int](cap), new Array[Long](cap), 0, weight)
+    new CmsSketch(depth, width, null, new Array[Int](cap), new Array[Long](cap), 0, null, null, 0, weight)
   }
 
   /** Smallest power-of-two slot count that holds `n` cells at load <= 1/2. */
@@ -273,12 +356,13 @@ object CmsSketch extends SketchFormat[CmsSketch] {
     val weight = buf.getLong()
     val table = new Array[Long](depth * width)
     buf.asLongBuffer().get(table)
-    new CmsSketch(depth, width, table, null, null, 0, weight)
+    new CmsSketch(depth, width, table, null, null, 0, null, null, 0, weight)
   }
 
   /** Sparse: [1][depth:4][width:4][weight:8][n:4] then n x [cell:4][count:8];
     * dense: [0] followed by the `serialize()` bytes. */
-  override def partialImage(s: CmsSketch): Array[Byte] =
+  override def partialImage(s: CmsSketch): Array[Byte] = {
+    s.spread()
     if (s.table != null) {
       val buf = ByteBuffer.allocate(1 + HeaderBytes + s.depth * s.width * 8)
       buf.put(DenseImage)
@@ -294,6 +378,7 @@ object CmsSketch extends SketchFormat[CmsSketch] {
       }
       buf.array()
     }
+  }
 
   override def readPartialImage(bytes: Array[Byte]): CmsSketch = {
     val buf = ByteBuffer.wrap(bytes)

@@ -18,13 +18,26 @@ import java.util.Arrays
   * Logical index i (0-based, ascending when sorted) maps to physical index
   * `startIdx + i` where `startIdx = if (spaceAtBottom) capacity - count else 0`.
   *
-  * Sortedness is tracked lazily: `sort()` is a no-op when already sorted
-  * (`DoubleBuffer.hs:225-237`).
+  * Sortedness is tracked as the length of a sorted run, which generalizes
+  * the reference's lazy flag (`DoubleBuffer.hs:225-237`): the run is the
+  * logical-low `sortedCount` items for LRA and the logical-high ones for
+  * HRA, i.e. the physical items that were already there before the latest
+  * appends. `sort()` sorts only the items appended since the last sort
+  * ([[BucketSort]]) and merges them into the run, so a REQ level-0
+  * compaction costs a sort of what is new plus one linear merge instead of
+  * a sort of the whole buffer. The merge orders -0.0 before 0.0, so the
+  * result equals `Arrays.sort` of the whole buffer bit for bit.
+  *
+  * [[mergeSortIn]] keeps the reference's `<=`/`>` merge, which may place
+  * 0.0 before -0.0. Such a run stays as it is until the next append; the
+  * next `sort()` then sorts the whole buffer, as the reference does, so
+  * every serialized byte is the reference's.
   */
 final class DoubleBuffer private (
     private var arr: Array[Double],
     private var count0: Int,
-    private var sorted0: Boolean,
+    private var sortedCount: Int,   // length of the sorted run (see above)
+    private var zerosInverted: Boolean, // the run may hold 0.0 before -0.0
     val growthIncrement: Int,
     val spaceAtBottom: Boolean
 ) {
@@ -46,7 +59,6 @@ final class DoubleBuffer private (
       arr(count0) = v
     }
     count0 += 1
-    sorted0 = false
   }
 
   /** Make room for `space` more items, repacking in the storage direction. */
@@ -68,18 +80,51 @@ final class DoubleBuffer private (
     arr = na
   }
 
+  /** Sorts the active items ascending: sorts the items appended since the
+    * last sort and merges them into the sorted run (module doc). */
   def sort(): Unit =
-    if (!sorted0) {
+    if (sortedCount < count0) {
       val s = startIdx
-      Arrays.sort(arr, s, s + count0)
-      sorted0 = true
+      val fresh = count0 - sortedCount
+      if (zerosInverted || sortedCount == 0) BucketSort.sort(arr, s, s + count0)
+      else if (spaceAtBottom) {
+        // fresh items at physical [s, s + fresh), the run above them
+        BucketSort.sort(arr, s, s + fresh)
+        val tmp = Arrays.copyOfRange(arr, s, s + fresh)
+        val end = arr.length
+        var i = s + fresh // run cursor (ascending)
+        var j = 0         // fresh cursor (ascending)
+        var k = s
+        while (j < fresh) {
+          if (i < end && BucketSort.totalLess(arr(i), tmp(j))) { arr(k) = arr(i); i += 1 }
+          else { arr(k) = tmp(j); j += 1 }
+          k += 1
+        }
+      } else {
+        // run at physical [0, sortedCount), fresh items above it
+        BucketSort.sort(arr, sortedCount, count0)
+        val tmp = Arrays.copyOfRange(arr, sortedCount, count0)
+        var i = sortedCount - 1 // run cursor (descending)
+        var j = fresh - 1       // fresh cursor (descending)
+        var k = count0 - 1
+        while (j >= 0) {
+          if (i >= 0 && BucketSort.totalLess(tmp(j), arr(i))) { arr(k) = arr(i); i -= 1 }
+          else { arr(k) = tmp(j); j -= 1 }
+          k -= 1
+        }
+      }
+      sortedCount = count0
+      zerosInverted = false
     }
 
   /** Keep only `newCount` items of the non-compacted region: for
     * spaceAtBottom keep the logical-HIGH items, else the logical-LOW items
     * (`DoubleBuffer.hs:320-321` + direction semantics). */
   def trimCount(newCount: Int): Unit =
-    if (newCount < count0) count0 = newCount
+    if (newCount < count0) {
+      count0 = newCount
+      sortedCount = math.min(sortedCount, newCount)
+    }
 
   /** Count of active items `< v` (or `<= v` when inclusive). Sorts first.
     * Throws on non-finite probe (`DoubleBuffer.hs:150-165`). */
@@ -140,13 +185,48 @@ final class DoubleBuffer private (
       }
     }
     count0 = total
-    sorted0 = true
+    sortedCount = total
+    zerosInverted = zeroBlockInverted()
+  }
+
+  /** Whether the zeros of the sorted active items hold a 0.0 before a
+    * -0.0. Zeros compare equal under `<`, so they are one block: a binary
+    * search finds it, and only the block is scanned. */
+  private def zeroBlockInverted(): Boolean = {
+    val s = startIdx
+    var lo = s
+    var hi = s + count0
+    while (lo < hi) { // first item >= 0.0 (-0.0 included)
+      val mid = (lo + hi) >>> 1
+      if (arr(mid) < 0.0) lo = mid + 1 else hi = mid
+    }
+    var positive = false
+    while (lo < s + count0 && arr(lo) == 0.0) {
+      if (java.lang.Double.doubleToRawLongBits(arr(lo)) == 0L) positive = true
+      else if (positive) return true
+      lo += 1
+    }
+    false
   }
 
   /** Merge another sorted DoubleBuffer into this one. */
   def mergeSortIn(other: DoubleBuffer): Unit = {
     other.sort()
     mergeSortIn(other.toArray, other.count)
+  }
+
+  /** A sorted copy of this buffer whose capacity and growth increment equal
+    * its item count. A run that may hold 0.0 before -0.0 is sorted again,
+    * as the reference's copy-then-sort does. */
+  def sortedCopy(): DoubleBuffer = {
+    sort()
+    val items = toArray
+    if (zerosInverted) Arrays.sort(items)
+    val b = DoubleBuffer(items.length, items.length, spaceAtBottom)
+    System.arraycopy(items, 0, b.arr, if (spaceAtBottom) b.arr.length - items.length else 0, items.length)
+    b.count0 = items.length
+    b.sortedCount = items.length
+    b
   }
 
   /** Copy of the active region in logical (ascending-when-sorted) order. */
@@ -162,7 +242,7 @@ final class DoubleBuffer private (
 
 object DoubleBuffer {
   def apply(capacity: Int, growthIncrement: Int, spaceAtBottom: Boolean): DoubleBuffer =
-    new DoubleBuffer(new Array[Double](math.max(capacity, 1)), 0, true, growthIncrement, spaceAtBottom)
+    new DoubleBuffer(new Array[Double](math.max(capacity, 1)), 0, 0, false, growthIncrement, spaceAtBottom)
 
   def fromArray(items: Array[Double], spaceAtBottom: Boolean): DoubleBuffer = {
     val b = apply(items.length, items.length, spaceAtBottom)

@@ -96,9 +96,8 @@ final class ReqCompactor(
     val ob = other.buf0
     ob.sort()
     if (ob.count > buf0.count) {
-      // merge the smaller (this) into a copy of the bigger (other)
-      val bigger = DoubleBuffer.fromArray(ob.toArray, hra)
-      bigger.sort()
+      // merge the smaller (this) into a sorted copy of the bigger (other)
+      val bigger = ob.sortedCopy()
       bigger.mergeSortIn(buf0)
       buf0 = bigger
     } else {

@@ -26,19 +26,31 @@ import org.apache.spark.unsafe.Platform
   * rebuild (sort, dedupe, theta jump) still fires only when a full 2x-nominal
   * buffer fills, which keeps theta and the retained hashes independent of
   * the buffer's growth.
+  *
+  * The buffer is a sorted, distinct prefix (what the last rebuild left)
+  * followed by the hashes appended since. A rebuild sorts only the appended
+  * ones ([[BucketSort]]: hashes are uniform below theta) and merges them
+  * into the prefix, dropping duplicates and hashes at or above theta as it
+  * goes; `merge` only appends, and the partial image writes the buffer as
+  * it is. Every observer (`retained`, `thetaLong`,
+  * `isEstimationMode`, the estimate, its bounds, the set expressions and
+  * `serialize`) rebuilds first, so each reads the same state a serialized
+  * copy would. A rebuild is canonical (the k smallest distinct hashes below
+  * the least theta seen), so when it runs never shows in the bytes.
   */
 final class ThetaSketch private (
     val nominalEntries: Int,
     private var theta: Long,            // exclusive upper bound, in [1, Long.MaxValue]
-    private var hashes: Array[Long],    // unsorted buffer of retained hashes < theta
-    private var n: Int                  // number of valid entries in `hashes`
+    private var hashes: Array[Long],    // sorted distinct prefix, then appended hashes
+    private var n: Int,                 // number of valid entries in `hashes`
+    private var sortedN: Int            // length of the sorted distinct prefix
 ) extends Mergeable[ThetaSketch] with Serializable {
   import ThetaSketch._
 
-  def retained: Int = n
-  def thetaLong: Long = theta
-  def thetaFraction: Double = theta.toDouble / Long.MaxValue.toDouble
-  def isEstimationMode: Boolean = theta != Long.MaxValue
+  def retained: Int = { rebuild(); n }
+  def thetaLong: Long = { rebuild(); theta }
+  def thetaFraction: Double = thetaLong.toDouble / Long.MaxValue.toDouble
+  def isEstimationMode: Boolean = thetaLong != Long.MaxValue
 
   /** Update with a pre-hashed 64-bit value (must be uniform; use
     * [[ThetaSketch.hashLong]] / [[ThetaSketch.hashBytes]]). */
@@ -67,23 +79,30 @@ final class ThetaSketch private (
   def update(s: String): Unit = updateHash(hashBytes(s.getBytes("UTF-8")))
   def update(d: Double): Unit = updateHash(hashLong(java.lang.Double.doubleToLongBits(d + 0.0)))
 
-  /** Sort, dedupe, and if still over nominal capacity jump theta to the
-    * (k+1)-th smallest, trimming the rest. */
+  /** Sort the hashes appended since the last rebuild, merge them into the
+    * sorted prefix (deduping, dropping entries at/above theta, which a merge
+    * may have lowered after they were buffered), and if still over nominal
+    * capacity jump theta to the (k+1)-th smallest, trimming the rest. */
   private def rebuild(): Unit = {
-    Arrays.sort(hashes, 0, n)
-    // dedupe in place, dropping entries at/above theta (theta may have been
-    // lowered by a merge after they were buffered)
+    if (sortedN == n && (n == 0 || hashes(n - 1) < theta)) return
+    BucketSort.sort(hashes, sortedN, n)
+    val prefix = Arrays.copyOf(hashes, sortedN)
+    var i = 0       // prefix cursor
+    var r = sortedN // appended cursor; the write cursor w never passes it
     var w = 0
-    var r = 0
-    while (r < n && hashes(r) < theta) {
-      if (w == 0 || hashes(r) != hashes(w - 1)) { hashes(w) = hashes(r); w += 1 }
-      r += 1
+    while ((i < prefix.length && prefix(i) < theta) || (r < n && hashes(r) < theta)) {
+      val h =
+        if (r >= n || hashes(r) >= theta || (i < prefix.length && prefix(i) <= hashes(r))) {
+          i += 1; prefix(i - 1)
+        } else { r += 1; hashes(r - 1) }
+      if (w == 0 || h != hashes(w - 1)) { hashes(w) = h; w += 1 }
     }
     n = w
     if (n > nominalEntries) {
       theta = hashes(nominalEntries) // (k+1)-th smallest, exclusive bound
       n = nominalEntries
     }
+    sortedN = n
     // keep capacity bounded at 2x nominal
     if (hashes.length > 2 * nominalEntries) hashes = Arrays.copyOf(hashes, 2 * nominalEntries)
   }
@@ -92,10 +111,8 @@ final class ThetaSketch private (
   def compact(): ThetaSketch = { rebuild(); this }
 
   /** Distinct-count estimate: exact when theta == MAX, else retained/theta. */
-  def estimate: Double = {
-    rebuild()
+  def estimate: Double =
     if (!isEstimationMode) n.toDouble else n.toDouble / thetaFraction
-  }
 
   /** +/- numStdDev RSE bounds (RSE = 1/sqrt(retained - 1)). */
   def lowerBound(numStdDev: Int): Double =
@@ -105,21 +122,20 @@ final class ThetaSketch private (
     if (!isEstimationMode) estimate
     else estimate * (1.0 + numStdDev / math.sqrt(math.max(n - 1, 1).toDouble))
 
-  /** In-place union (the mergeable-aggregator combine step). */
+  /** In-place union (the mergeable-aggregator combine step): takes the
+    * lower theta and appends the other's buffered hashes below it; the next
+    * rebuild dedupes them and drops this sketch's own entries at or above
+    * the lowered theta. Neither sketch is rebuilt here. */
   def merge(other: ThetaSketch): ThetaSketch = {
-    other.rebuild()
-    if (other.theta < theta) {
-      theta = other.theta
-      // drop own entries now above the lowered theta (handled by rebuild)
-    }
-    grow(n + other.n) // one copy instead of repeated doubling
+    if (other.theta < theta) theta = other.theta
+    val on = other.n
+    grow(n + on) // one copy instead of repeated doubling
     var i = 0
-    while (i < other.n) {
+    while (i < on) {
       val h = other.hashes(i)
       if (h < theta) append(h)
       i += 1
     }
-    rebuild()
     this
   }
 
@@ -143,12 +159,13 @@ object ThetaSketch extends SketchFormat[ThetaSketch] {
   /** Hash-buffer length of a fresh sketch; it doubles up to 2x nominal. */
   val InitialCapacity = 16
   private val HeaderBytes = 1 + 4 + 8 + 4
+  private val PartialHeaderBytes = 4 + 8 + 4 + 4
   private val NativeBigEndian = java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.BIG_ENDIAN
 
   def apply(nominalEntries: Int = DefaultNominalEntries): ThetaSketch = {
     require(nominalEntries >= 16 && (nominalEntries & (nominalEntries - 1)) == 0,
       s"nominalEntries must be a power of 2 >= 16, got $nominalEntries")
-    new ThetaSketch(nominalEntries, Long.MaxValue, new Array[Long](InitialCapacity), 0)
+    new ThetaSketch(nominalEntries, Long.MaxValue, new Array[Long](InitialCapacity), 0, 0)
   }
 
   def deserialize(bytes: Array[Byte]): ThetaSketch = {
@@ -159,7 +176,28 @@ object ThetaSketch extends SketchFormat[ThetaSketch] {
     val n = buf.getInt()
     val arr = new Array[Long](math.max(n, InitialCapacity))
     buf.asLongBuffer().get(arr, 0, n)
-    new ThetaSketch(nom, theta, arr, n)
+    new ThetaSketch(nom, theta, arr, n, n) // serialized hashes are sorted and distinct
+  }
+
+  /** [nominal:4][theta:8][n:4][sortedN:4][hashes:8*n]: the buffer as it
+    * is, unsorted tail and duplicates included, so writing a partial costs
+    * no sort; the final `serialize()` rebuilds once. */
+  override def partialImage(s: ThetaSketch): Array[Byte] = {
+    val buf = ByteBuffer.allocate(PartialHeaderBytes + 8 * s.n)
+    buf.putInt(s.nominalEntries).putLong(s.theta).putInt(s.n).putInt(s.sortedN)
+    buf.asLongBuffer().put(s.hashes, 0, s.n)
+    buf.array()
+  }
+
+  override def readPartialImage(bytes: Array[Byte]): ThetaSketch = {
+    val buf = ByteBuffer.wrap(bytes)
+    val nom = buf.getInt()
+    val theta = buf.getLong()
+    val n = buf.getInt()
+    val sortedN = buf.getInt()
+    val arr = new Array[Long](math.max(n, InitialCapacity))
+    buf.asLongBuffer().get(arr, 0, n)
+    new ThetaSketch(nom, theta, arr, n, sortedN)
   }
 
   /** Intersection estimate over compacted sketches: common entries below

@@ -301,27 +301,35 @@ object GraftFunctions {
 
   private lazy val byName = functions.toMap
 
-  /** Install the table on the given session for SQL text. Idempotent: a
+  /** Install the table on the given session for SQL text, and the
+    * [[SketchBundle]] rule among its extra optimizations. Idempotent: a
     * name already bound to this table's builder is left as it is, so a
     * repeat call replaces (and logs) nothing; a caller's own function
-    * under a graft name is replaced. */
+    * under a graft name is replaced; the rule is added once. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     functions.foreach { case (name, builder) =>
       if (!reg.lookupFunctionBuilder(FunctionIdentifier(name)).exists(_ eq builder))
         reg.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+    val experimental = spark.experimental
+    experimental.synchronized {
+      if (!experimental.extraOptimizations.contains(SketchBundle))
+        experimental.extraOptimizations = experimental.extraOptimizations :+ SketchBundle
+    }
   }
 }
 
 /** `SparkSessionExtensions` hook for spark-submit deployments:
   * `--conf spark.sql.extensions=graft.spark.GraftExtensions` injects the
-  * whole function table at session build time. */
+  * whole function table and the [[SketchBundle]] rule at session build
+  * time. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
     GraftFunctions.functions.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))
     }
+    ext.injectOptimizerRule(_ => SketchBundle)
   }
 }

@@ -37,10 +37,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * the shuffle and spill buffers carry the family's
   * [[SketchFormat.partialImage]], which for CMS ((cell, count) pairs) and
   * HLL (set registers) is sized to the group, not to the 40 KB table or
-  * the 4 KB register array. Partial images never leave an aggregate:
-  * `eval`, and so every stored column, is the canonical `serialize()`.
-  * Every sketch moves its arrays through bulk `ByteBuffer` or
-  * `System.arraycopy` copies, never element by element through a stream.
+  * the 4 KB register array. Theta's image is its hash buffer as it is, so
+  * writing a partial sorts nothing. Partial images never leave an
+  * aggregate: `eval`, and so every stored column, is the canonical
+  * `serialize()`. Every sketch moves its arrays through bulk `ByteBuffer`
+  * or `System.arraycopy` copies, never element by element through a stream.
+  *
+  * Per row, a `GROUP BY` with several sketches pays Spark's per-aggregate
+  * plumbing (a buffer get, an `update` call and a buffer set) once per
+  * sketch. The [[SketchBundle]] rule, installed with the function table,
+  * runs them as one [[SketchBundleAgg]] whose buffer holds every member
+  * sketch, so that plumbing is paid once per row. Inside the sketches:
+  *  - REQ sorts only the items added to a level since its last sort and
+  *    merges them into the sorted run (`DoubleBuffer.sort`);
+  *  - Theta sorts only the hashes appended since its last rebuild, and
+  *    only when its buffer fills or something reads it;
+  *  - both sort by bucketing on the values' spread (`BucketSort`);
+  *  - CMS counts each row under its item's hash with one probe until the
+  *    sketch has seen 64 items (at 5 x 1024), and sets the depth cells per
+  *    item only after;
+  *  - KLL still sorts a whole level at each compaction: its `serialize()`
+  *    writes levels in insertion order, so a sorted run would change its
+  *    bytes;
+  *  - HLL and the Bloom filters sort nothing.
   *
   * A build aggregate whose child is a plain column (a `BoundReference`
   * once the plan is bound) reads the field at [[inputOrdinal]] straight
@@ -53,8 +72,10 @@ abstract class BinarySketchAgg[S <: Mergeable[S]](format: SketchFormat[S])
   override def nullable: Boolean = false
   override def dataType: DataType = BinaryType
 
-  /** The child's ordinal in the input row when it is a bound column, else -1. */
-  @transient protected final lazy val inputOrdinal: Int = child match {
+  /** The child's ordinal in the input row when it is a bound column, or -1
+    * otherwise. A plain field, read once per row: a case class sets its
+    * `child` parameter before this initializer runs. */
+  protected final val inputOrdinal: Int = child match {
     case b: BoundReference => b.ordinal
     case _                 => -1
   }

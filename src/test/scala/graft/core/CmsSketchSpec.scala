@@ -163,6 +163,31 @@ class CmsSketchSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("item mode across the limit serializes the dense reference bytes (5x1024, 3x100, 3x64)") {
+    for ((depth, width) <- Seq((5, 1024), (3, 100), (3, 64))) {
+      val limit = CmsSketch(depth, width).itemLimit
+      assert(limit == depth * width / 16 / depth)
+      for (n <- Seq(0, 1, limit - 1, limit, limit + 1, limit + 2, 2 * limit + 3).filter(_ >= 0).distinct) {
+        // every item twice, the repeats interleaved, so counts pass 1 in item mode
+        val items = (0 until n).flatMap(i => Seq(s"item$i", s"item${i / 2}"))
+        val sk = CmsSketch(depth, width)
+        val ref = new DenseCms(depth, width)
+        items.foreach { i => sk.update(i); ref.update(i) }
+        val label = s"${depth}x$width n=$n"
+        (items.distinct :+ "absent").foreach(i => assert(sk.estimate(i) == ref.estimate(i), s"$label $i"))
+        assert(sk.serialize().sameElements(ref.bytes), label)
+        // two item-mode halves merged, in memory and through partial images
+        val (left, right) = items.splitAt(items.length / 2)
+        def build(xs: Seq[String]) = { val s = CmsSketch(depth, width); xs.foreach(s.update(_)); s }
+        assert(build(left).merge(build(right)).serialize().sameElements(ref.bytes), s"$label merged")
+        val viaImages = CmsSketch.readPartialImage(CmsSketch.partialImage(build(left)))
+          .merge(CmsSketch.readPartialImage(CmsSketch.partialImage(build(right))))
+        assert(viaImages.serialize().sameElements(ref.bytes), s"$label via partial images")
+        assert(build(items).rowsConserved, label)
+      }
+    }
+  }
 }
 
 object CmsSketchSpec {

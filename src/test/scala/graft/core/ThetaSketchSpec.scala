@@ -106,4 +106,56 @@ class ThetaSketchSpec extends AnyFunSuite {
         s"off=$off len=$len")
     }
   }
+
+  /** Each observer, called first on a fresh sketch from `build`, against the
+    * same observer of a serialized copy. */
+  private def assertObservesLikeCopy(build: () => ThetaSketch, label: String): Unit = {
+    val copy = ThetaSketch.deserialize(build().serialize())
+    assert(build().isEstimationMode == copy.isEstimationMode, s"$label isEstimationMode")
+    assert(build().thetaLong == copy.thetaLong, s"$label thetaLong")
+    assert(build().thetaFraction == copy.thetaFraction, s"$label thetaFraction")
+    assert(build().retained == copy.retained, s"$label retained")
+    assert(build().estimate == copy.estimate, s"$label estimate")
+    assert(build().lowerBound(3) == copy.lowerBound(3), s"$label lowerBound")
+    assert(build().upperBound(3) == copy.upperBound(3), s"$label upperBound")
+  }
+
+  test("observers of a live sketch read what its serialized copy reads") {
+    for (n <- Seq(0, 10, 5000, 9000, 50000)) assertObservesLikeCopy(() => sketchOf(keys(n, 21L)), s"n=$n")
+    // 5,000 distinct keys fill no 8,192-hash buffer: theta only moves at a rebuild
+    val live = sketchOf(keys(5000, 22L))
+    assert(live.lowerBound(3) < live.estimate && live.estimate < live.upperBound(3))
+  }
+
+  test("observers of a merged sketch read what its serialized copy reads") {
+    for ((na, nb) <- Seq((10, 20), (3000, 3000), (6000, 200), (50000, 7000))) {
+      assertObservesLikeCopy(() => sketchOf(keys(na, 31L)).merge(sketchOf(keys(nb, 32L) ++ keys(na / 2, 31L))),
+        s"($na,$nb)")
+    }
+  }
+
+  test("set expressions over live sketches equal those over serialized copies") {
+    val common = keys(3000, 41L)
+    def a() = sketchOf(keys(3000, 42L) ++ common)
+    def b() = sketchOf(keys(3000, 43L) ++ common)
+    def copy(s: ThetaSketch) = ThetaSketch.deserialize(s.serialize())
+    val live = ThetaSketch.intersection(a(), b())
+    assert(live == ThetaSketch.intersection(copy(a()), copy(b())))
+    assert(math.abs(live.estimate - 3000) < 0.1 * 3000, s"intersection ${live.estimate}")
+    assert(ThetaSketch.aNotB(a(), b()) == ThetaSketch.aNotB(copy(a()), copy(b())))
+  }
+
+  test("partial images carry the buffer as it is and merge to the single-stream bytes") {
+    for ((na, nb) <- Seq((0, 0), (1, 40), (3000, 5000), (9000, 100), (50000, 60000))) {
+      val a = sketchOf(keys(na, 51L))
+      val b = sketchOf(keys(nb, 52L) ++ keys(na / 3, 51L))
+      val single = sketchOf(keys(na, 51L) ++ keys(nb, 52L) ++ keys(na / 3, 51L)).serialize()
+      val viaImages = ThetaSketch.readPartialImage(ThetaSketch.partialImage(a))
+      viaImages.merge(ThetaSketch.readPartialImage(ThetaSketch.partialImage(b)))
+      // a merged partial goes through an image again, as a spilled buffer does
+      val again = ThetaSketch.readPartialImage(ThetaSketch.partialImage(viaImages))
+      assert(again.serialize().sameElements(single), s"($na,$nb)")
+      assert(a.merge(b).serialize().sameElements(single), s"($na,$nb) in memory")
+    }
+  }
 }

@@ -1,9 +1,10 @@
 package graft.spark
 
 import graft.core.{BloomFilter, CmsSketch, CountingBloomFilter, FreqSketch, HllSketch, KllSketch, Mergeable, ReqSketch, ThetaSketch}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Concat, Expression, Literal}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Concat, Expression, GreaterThan, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
@@ -372,5 +373,119 @@ class SketchAggSpec extends AnyFunSuite with SparkSuiteBase {
     same[CmsSketch]("cms_sketch", CmsSketchAgg(_), str)
     same[BloomFilter]("bloom_agg", BloomAgg(_, 1000L, 0.01), l)
     same[CountingBloomFilter]("cbloom_agg", CBloomAgg.sized(_, 1000L, 0.01), l)
+  }
+
+  /** Runs `body` with the [[SketchBundle]] rule taken off this session. */
+  private def withoutBundle[T](body: => T): T = {
+    val experimental = spark.experimental
+    val saved = experimental.extraOptimizations
+    experimental.extraOptimizations = saved.filterNot(_ == SketchBundle)
+    try body finally experimental.extraOptimizations = saved
+  }
+
+  /** Per `Aggregate` of the optimized plan: the member count of each
+    * distinct bundle it holds. */
+  private def bundles(df: DataFrame): Seq[Seq[Int]] =
+    df.queryExecution.optimizedPlan.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+      a.aggregateExpressions.flatMap(_.collect {
+        case ae @ AggregateExpression(b: SketchBundleAgg, _, _, _, _) => ae.canonicalized -> b.members.size
+      }).distinct.map(_._2)
+    }
+
+  /** Rows keyed by their first column, binary columns as byte sequences. */
+  private def rowsOf(df: DataFrame): Map[Any, Seq[Any]] =
+    df.collect().map { r =>
+      r.get(0) -> r.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }
+    }.toMap
+
+  /** `build` with the rule on bundles each of its aggregates into one
+    * bundle of `members`, and answers byte for byte as with the rule off. */
+  private def assertBundledSame(label: String, members: Seq[Int])(build: => DataFrame): Unit = {
+    val bundled = build
+    assert(bundles(bundled).filter(_.nonEmpty) == members.map(Seq(_)), s"$label: bundles")
+    val off = withoutBundle { val df = build; assert(bundles(df).flatten.isEmpty, label); rowsOf(df) }
+    val on = rowsOf(bundled)
+    assert(on.size == off.size && on.nonEmpty, s"$label: row count")
+    on.foreach { case (k, row) => assert(row == off(k), s"$label: group $k") }
+  }
+
+  test("bundled sketch aggregates answer byte for byte as unbundled ones") {
+    GraftFunctions.register(spark)
+    // perfbench's sketch_rollup table, smaller: 2,048 groups of 32 rows in
+    // 4 partitions; the 16-group keys each union 128 of them
+    val groups = 2048
+    val events = spark.range(0L, groups * 32L, 1L, 4).select(
+      (col("id") % groups).cast("int").as("gk"),
+      (col("id") % 16).cast("int").as("g16"),
+      (col("id") * 7919 % 3001).cast("double").as("v"),
+      (col("id") % groups + (col("id") / groups % 12).cast("long") * groups.toLong).as("u"),
+      concat(lit("t"), floor(log2(col("id") / groups + 1)).cast("string")).as("item"))
+    val five = Seq(expr("req_sketch(v)").as("req"), expr("kll_sketch(v)").as("kll"),
+      expr("hll_sketch(u)").as("hll"), expr("theta_sketch(u)").as("theta"), expr("cms_sketch(item)").as("cms"))
+    assertBundledSame("five sketches, 16 groups", Seq(5))(events.groupBy("g16").agg(five.head, five.tail: _*))
+    assertBundledSame("five sketches, 2,048 groups", Seq(5))(events.groupBy("gk").agg(five.head, five.tail: _*))
+    // the rollup's three merges over the 2,048 stored groups (held fixed, so
+    // only the rollup differs between the two runs)
+    val many = withoutBundle(GraftBridge.materialize(events.groupBy("gk").agg(five.head, five.tail: _*)))
+    assertBundledSame("rollup merges", Seq(3))(many.groupBy((col("gk") % 16).as("g16"))
+      .agg(expr("req_merge(req)").as("req"), expr("hll_union(hll)").as("hll"),
+        expr("theta_union(theta)").as("theta")))
+    // cluster_stats' aggregate: three sketches beside a count, finishers above
+    val docs = spark.range(0L, 6000L, 1L, 4).select((col("id") % 700).as("component"), col("id"),
+      concat(lit("http://h"), (col("id") % 97).cast("string")).as("url"),
+      expr("repeat('x', cast(id * 31 % 400 as int))").as("text"))
+    assertBundledSame("cluster_stats", Seq(3))(docs.groupBy("component").agg(
+        count(lit(1)).as("size"),
+        GraftFunctions.call("hll_sketch", col("url")).as("url_hll"),
+        GraftFunctions.call("theta_sketch", col("id")).as("id_theta"),
+        GraftFunctions.call("req_sketch", length(col("text"))).as("len_req"))
+      .select(col("component"), col("size"),
+        round(GraftFunctions.call("hll_estimate", col("url_hll"))).cast("bigint").as("distinct_urls"),
+        GraftFunctions.call("theta_estimate", col("id_theta")).cast("bigint").as("distinct_ids"),
+        GraftFunctions.call("req_quantile", col("len_req"), lit(0.5)).as("p50_len"),
+        col("len_req")))
+  }
+
+  test("one bundle per Aggregate; streaming, DISTINCT and FILTER aggregates stay unbundled (plan check)") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val df = (1 to 200).map(i => (i % 5, i.toDouble, i.toLong % 17)).toDF("g", "v", "u")
+    df.createOrReplaceTempView("bundle_plan_t")
+    // one bundle, shared by a sketch named twice, beside a non-sketch aggregate
+    val shared = spark.sql("""SELECT g, req_sketch(v) a, theta_sketch(u) b, theta_sketch(u) c,
+                             |  hll_sketch(u) d, count(*) n FROM bundle_plan_t GROUP BY g""".stripMargin)
+    assert(bundles(shared) == Seq(Seq(3)))
+    val executed = shared.queryExecution.executedPlan.toString
+    assert(executed.contains("sketch_bundle") && executed.contains("ObjectHashAggregate"), executed)
+    val r = shared.orderBy("g").first()
+    assert(r.getAs[Array[Byte]]("b").sameElements(r.getAs[Array[Byte]]("c")))
+    // two Aggregates, one bundle each
+    val twoLevels = spark.sql("""SELECT g % 2 k, req_merge(a) a, theta_union(b) b FROM (
+                                |  SELECT g, req_sketch(v) a, theta_sketch(u) b FROM bundle_plan_t GROUP BY g)
+                                |GROUP BY g % 2""".stripMargin)
+    assert(bundles(twoLevels) == Seq(Seq(2), Seq(2)))
+    // a lone sketch is left as it is
+    assert(bundles(spark.sql("SELECT g, req_sketch(v), count(*) FROM bundle_plan_t GROUP BY g")) == Seq(Seq()))
+    // FILTER and DISTINCT as the Column API builds them (SQL text refuses
+    // both on a graft function, whose builder returns an AggregateExpression)
+    def sketchOf(f: Expression, distinct: Boolean = false, filter: Option[Expression] = None) =
+      GraftBridge.column(AggregateExpression(f.asInstanceOf[org.apache.spark.sql.catalyst.expressions.aggregate
+        .AggregateFunction], org.apache.spark.sql.catalyst.expressions.aggregate.Complete, distinct, filter))
+    val (v, u) = (UnresolvedAttribute("v"), UnresolvedAttribute("u"))
+    // FILTER: the filtered sketch stays outside the bundle of the other two
+    assertBundledSame("filtered", Seq(2))(df.groupBy("g").agg(
+      sketchOf(ReqSketchAgg(v), filter = Some(GreaterThan(v, Literal(10.0)))).as("a"),
+      sketchOf(ThetaSketchAgg(u)).as("b"), sketchOf(HllSketchAgg(u)).as("c")))
+    // DISTINCT anywhere in the Aggregate: nothing is bundled
+    assert(bundles(df.groupBy("g").agg(sketchOf(ThetaSketchAgg(u), distinct = true),
+      sketchOf(HllSketchAgg(u)), sketchOf(ReqSketchAgg(v)))) == Seq(Seq()))
+    assert(bundles(df.groupBy("g").agg(countDistinct("u"), sketchOf(HllSketchAgg(u)),
+      sketchOf(ReqSketchAgg(v)))) == Seq(Seq()))
+    // streaming: the state store keeps each sketch's own buffer
+    val stream = spark.readStream.format("rate").load()
+      .groupBy((col("value") % 3).as("g"))
+      .agg(expr("req_sketch(cast(value AS double))"), expr("hll_sketch(value)"))
+    val analyzed = stream.queryExecution.analyzed
+    assert(analyzed.isStreaming && SketchBundle(analyzed) == analyzed)
   }
 }
