@@ -64,8 +64,6 @@ object Bench {
       // executors blocked in IndexShuffleBlockResolver). A real cluster
       // would use local NVMe.
       .config("spark.local.dir", graft.spark.Scratch.localDir)
-      // FAIR pools: the pipeline's lineage trailer must free-ride on idle
-      // slots, never queue head-of-line against compute (Scratch.fairPoolsXml)
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.scheduler.allocation.file", graft.spark.Scratch.fairPoolsXml)
       .config("spark.file.transferTo", "false")

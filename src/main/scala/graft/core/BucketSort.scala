@@ -3,13 +3,13 @@ package graft.core
 import java.util.Arrays
 
 /** Ascending sorts for the keys the sketches sort: Theta's 63-bit hashes
-  * and REQ's doubles, both spread fairly evenly over their range. One
-  * counting pass puts the keys into about one bucket per key by where they
-  * fall between the range's ends, then an insertion sort fixes the order
-  * inside the buckets. The result is `Arrays.sort`'s, element for element
-  * (-0.0 before 0.0 included); short ranges, ranges whose keys crowd into a
-  * few buckets and double ranges with an infinite end go to `Arrays.sort`
-  * itself. */
+  * and REQ's and KLL's doubles, all spread fairly evenly over their range.
+  * One counting pass puts the keys into about one bucket per key by where
+  * they fall between the range's ends, then an insertion sort fixes the
+  * order inside the buckets. The result is `Arrays.sort`'s, element for
+  * element (-0.0 before 0.0 included); short ranges, ranges whose keys
+  * crowd into a few buckets and double ranges with an infinite end go to
+  * `Arrays.sort` itself. */
 private[core] object BucketSort {
   /** Below this many keys `Arrays.sort`'s insertion and quick sorts win. */
   private val MinLength = 32
@@ -19,7 +19,7 @@ private[core] object BucketSort {
   def sort(a: Array[Long], from: Int, to: Int): Unit =
     if (to - from < MinLength || !bucketSort(a, from, to)) Arrays.sort(a, from, to)
 
-  /** Sorts doubles that hold no NaN (REQ drops NaN on update). */
+  /** Sorts doubles that hold no NaN (REQ and KLL drop NaN on update). */
   def sort(a: Array[Double], from: Int, to: Int): Unit =
     if (to - from < MinLength || !bucketSort(a, from, to)) Arrays.sort(a, from, to)
 

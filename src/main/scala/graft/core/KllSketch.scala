@@ -91,7 +91,7 @@ final class KllSketch private (
         if (h + 1 == levels.length) addLevel()
         val arr = levels(h)
         val len = sizes(h)
-        java.util.Arrays.sort(arr, 0, len)
+        BucketSort.sort(arr, 0, len)
         // odd length: hold the smallest item out of the compaction so the
         // compacted range is even — total weight is conserved exactly:
         // promoted * 2^(h+1) + excess * 2^h == length * 2^h

@@ -27,6 +27,13 @@ object ConnectedComponents {
   /** @param edges DataFrame with two long columns (src, dst)
     * @return (id, component) — component = min id reachable
     *
+    * The input may repeat an edge, in either direction (the pipeline
+    * hands over the union of its lanes' edges): the union-find and the
+    * contraction are both insensitive to it. A list within
+    * `localFinishMaxEdges` rows goes to the driver union-find (phase 2) as
+    * it is; a longer one is deduplicated first, and its distinct count
+    * decides between phase 2 and the contraction.
+    *
     * Three phases:
     *  1. STAR CONTRACTION (distributed): l0(id) = min(id ∪ neighbors);
     *     edges are relabeled through l0 and deduped. Dedup graphs are
@@ -73,28 +80,43 @@ object ConnectedComponents {
         e0.select($"u".as("id"), $"v".as("component"))
       } else localFinish(spark, e0)
     } else {
-      // phase 1: one-hop min labels, then contract
-      val (l0, _, _) = minLabels(e0)
-      val (e1, e1Count, _) = materializeCounting(
-        e0.join(l0.withColumnRenamed("id", "u").withColumnRenamed("label", "lu"), "u")
-          .join(l0.withColumnRenamed("id", "v").withColumnRenamed("label", "lv"), "v")
-          .select($"lu".as("u"), $"lv".as("v"))
-          .filter($"u" =!= $"v")
-          .distinct())
+      // over the bound, count distinct undirected edges: repeats (up to
+      // one per pipeline lane, in either direction) must not push a graph
+      // that fits the union-find onto the contraction path. The shuffle is
+      // paid on this path only.
+      val (e, eCount, _) = materializeCounting(
+        e0.select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v")).distinct())
+      if (eCount <= localFinishMaxEdges) localFinish(spark, e)
+      else contract(spark, e, localFinishMaxEdges)
+    }
+  }
 
-      if (e1Count == 0) {
-        // every star was a whole component — no phase 2/3 work at all
-        l0.select($"id", $"label".as("component"))
-      } else {
-        val contracted =
-          if (e1Count <= localFinishMaxEdges) localFinish(spark, e1)
-          else iterate(e1)
-        // compose: component(id) = component(l0(id)) in the contracted graph,
-        // or l0(id) itself when its star was already a whole component
-        l0.join(contracted.withColumnRenamed("id", "lid").withColumnRenamed("component", "comp"),
-            $"label" === $"lid", "left")
-          .select($"id", coalesce($"comp", $"label").as("component"))
-      }
+  /** Phases 1 and 3 (and 2 on the contracted residual) over a distinct,
+    * non-empty edge list (u, v). */
+  private def contract(spark: SparkSession, e0: DataFrame,
+                       localFinishMaxEdges: Long): DataFrame = {
+    import spark.implicits._
+    // phase 1: one-hop min labels, then contract
+    val (l0, _, _) = minLabels(e0)
+    val (e1, e1Count, _) = materializeCounting(
+      e0.join(l0.withColumnRenamed("id", "u").withColumnRenamed("label", "lu"), "u")
+        .join(l0.withColumnRenamed("id", "v").withColumnRenamed("label", "lv"), "v")
+        .select($"lu".as("u"), $"lv".as("v"))
+        .filter($"u" =!= $"v")
+        .distinct())
+
+    if (e1Count == 0) {
+      // every star was a whole component — no phase 2/3 work at all
+      l0.select($"id", $"label".as("component"))
+    } else {
+      val contracted =
+        if (e1Count <= localFinishMaxEdges) localFinish(spark, e1)
+        else iterate(e1)
+      // compose: component(id) = component(l0(id)) in the contracted graph,
+      // or l0(id) itself when its star was already a whole component
+      l0.join(contracted.withColumnRenamed("id", "lid").withColumnRenamed("component", "comp"),
+          $"label" === $"lid", "left")
+        .select($"id", coalesce($"comp", $"label").as("component"))
     }
   }
 

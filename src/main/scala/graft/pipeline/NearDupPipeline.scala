@@ -238,18 +238,6 @@ object NearDupPipeline {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // FAIR scheduling between the lane pool and the lineage trailer pool:
-    // under the default FIFO queue a metrics job submitted first (e.g. the
-    // extracted stage's) holds task slots head-of-line against all four
-    // lanes (measured: the extracted metrics trail alone stretched to 65s
-    // of lane wall in a degraded-host window). FAIR makes the trailer a
-    // free-rider on idle slots instead. Pool assignment is per-thread, so
-    // each lane future sets it on its own executor-pool thread; no-op if
-    // the session keeps FIFO scheduling.
-    def inPool[T](pool: String)(body: => T): T = {
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-      try body finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-    }
     // ONE full-text scan computes every lane's keys (content hash, 16 LSH
     // band keys, 64-bit simhash, winnowed fingerprints — tokenized once,
     // values bit-identical to the standalone kernels). The lanes then
@@ -281,35 +269,39 @@ object NearDupPipeline {
       // not 5*10^11 — connectivity through the hub is all CC needs. The
       // complete-pair contract lives in ExactDedup.pairs (oracle-checked
       // q_exact_dup_pairs), not in the pipeline.
-      "edges_exact" -> Future(inPool("graft-lanes")(m.stage("edges_exact") {
+      "edges_exact" -> Future(m.stage("edges_exact") {
         ExactDedup.starEdgesFromHashes(features.select("th", "id"), "th", "id")
-      })),
-      "edges_minhash" -> Future(inPool("graft-lanes")(m.stage("edges_minhash") {
+      }),
+      "edges_minhash" -> Future(m.stage("edges_minhash") {
         MinHashLSH.verifyPairs(
             MinHashLSH.candidatePairsFromBands(
               features.select("id", "bands"), MaxBucketSize),
             texts, "id", "text", cfg.jaccardThreshold)
           .select("id_a", "id_b")
-      })),
-      "edges_simhash" -> Future(inPool("graft-lanes")(m.stage("edges_simhash") {
+      }),
+      "edges_simhash" -> Future(m.stage("edges_simhash") {
         if (cfg.simhashMaxDist < 0)
           spark.range(0).select(col("id").as("id_a"), col("id").as("id_b"))
         else
           SimHashDedup.pairsFromHashes(features.select("id", "sim"),
               cfg.simhashMaxDist, MaxBucketSize)
             .select("id_a", "id_b")
-      })),
-      "edges_substring" -> Future(inPool("graft-lanes")(m.stage("edges_substring") {
+      }),
+      "edges_substring" -> Future(m.stage("edges_substring") {
         SubstringDedup.pairsFromFingerprints(features.select("id", "fps"),
             texts, "id", "text", MinSubstringLen, MaxBucketSize)
           .select("id_a", "id_b")
-      })))
+      }))
     val Seq(exact, minhash, simhash, substring) =
       laneFutures.map { case (_, f) => Await.result(f, Duration.Inf) }
     // checkpoint blocks behind `features` are released by the
     // ContextCleaner once the frame goes unreferenced
 
-    // ---- union of lanes -> connected components -> cluster table.
+    // ---- union of lanes -> connected components -> cluster table. An edge
+    // two lanes both found stays in twice: connected components does not
+    // care (the union-find and the star contraction are insensitive to
+    // duplicate edges), and it deduplicates only a list over its
+    // driver-side bound, so a small graph pays no `distinct` shuffle.
     // ConnectedComponents.run returns labels for EDGE-INCIDENT ids only (a
     // small fraction of the corpus), so the cluster table is ONE left join
     // of the corpus against that small side (AQE broadcasts it) — never a
@@ -319,7 +311,6 @@ object NearDupPipeline {
         .unionByName(minhash())
         .unionByName(simhash())
         .unionByName(substring())
-        .distinct()
       val comps = ConnectedComponents.run(edges).withColumnRenamed("id", "cid")
       extracted.select(col("url"), col("id"))
         .join(comps, col("id") === col("cid"), "left")
@@ -362,7 +353,6 @@ object NearDupPipeline {
     }
 
     if (extractedCached) extracted.unpersist(false)
-    m.awaitCommits()
     Result(clusters(), stats(), m.metrics)
   }
 
@@ -398,11 +388,19 @@ object NearDupPipeline {
   * output is never re-read for metrics, so a fresh run issues exactly one
   * scan per stage input (asserted in NearDupPipelineSpec).
   *
-  * Job budget: a stage costs only its compute-and-write jobs and its
-  * metrics append. Opening a stage table (`io.read`, after the write or
-  * on resume) and the metrics table launches none, because TableIO reads
-  * carry the stored schema instead of inferring it; so a fully committed
-  * resume launches no Spark job inside `NearDupPipeline.run`.
+  * Lineage rows are written on the driver, right after the stage's write
+  * and before its commit marker, under one lock that serializes the
+  * concurrent lanes' appends to the shared metrics table. Crash rule: a
+  * stage's metrics rows land before its commit marker, so a run
+  * interrupted between the two recomputes the stage.
+  *
+  * Job budget: a stage costs only its compute-and-write jobs. Its metrics
+  * append launches none: the rows form a `LocalRelation`, which
+  * [[ParquetTableIO.append]] writes as one parquet file from the driver.
+  * Opening a stage table (`io.read`, after the write or on resume) and the
+  * metrics table launches none either, because TableIO reads carry the
+  * stored schema instead of inferring it; so a fully committed resume
+  * launches no Spark job inside `NearDupPipeline.run`.
   * NearDupPipelineSpec's job-budget tests pin that and a fresh run's
   * total.
   *
@@ -417,21 +415,11 @@ object NearDupPipeline {
   */
 class Lineage(spark: SparkSession, io: TableIO, fingerprint: String) {
   private val done = scala.collection.mutable.ArrayBuffer[String]()
-  // metrics + commit run OFF the critical path: no later stage consumes the
-  // metrics table, so each stage's lineage append + commit marker trails on
-  // a single worker thread (which also serializes the shared metrics
-  // table's appends). awaitCommits() joins them before the pipeline
-  // returns. Crash safety is unchanged: the commit marker is still written
-  // only AFTER the metrics row, so an interrupted run recomputes the stage.
-  private val trailer = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-    val t = new Thread(r, "graft-lineage"); t.setDaemon(true); t
-  })
-  private val pending = scala.collection.mutable.ArrayBuffer[java.util.concurrent.Future[_]]()
 
   /** Compute-or-load: if the stage output is committed under this run's
     * fingerprint, hand back a lazy handle to it (resume); otherwise
-    * compute, write, read the output back, and trail the lineage row +
-    * commit. The handle is memoized, so a table is opened at most once. */
+    * compute, write, append the lineage rows, commit, and read the output
+    * back. The handle is memoized, so a table is opened at most once. */
   def stage(name: String)(compute: => DataFrame): () => DataFrame = {
     val computes = !io.committedFingerprint(name).contains(fingerprint)
     if (computes) {
@@ -440,24 +428,12 @@ class Lineage(spark: SparkSession, io: TableIO, fingerprint: String) {
       // a pass-through tap — no post-write re-read of the stage output
       val (tapped, statsAcc) = graft.spark.PartitionStatsTap.attach(compute)
       io.overwrite(name, tapped)
-      val tWrite = System.nanoTime()
       if (sys.env.contains("GRAFT_STAGE_TIMING"))
-        System.err.println(f"[graft-stage] $name compute=${(tWrite - t0) / 1e9}%.2fs")
-      val snapshotId = synchronized { done += name; done.length.toLong }
+        System.err.println(f"[graft-stage] $name compute=${(System.nanoTime() - t0) / 1e9}%.2fs")
       synchronized {
-        pending += trailer.submit(new Runnable {
-          override def run(): Unit = {
-            // low-priority free-rider pool (see FAIR note in `run`): the
-            // trailer must never hold task slots head-of-line against the
-            // pipeline's own stages
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft-lineage")
-            val m0 = System.nanoTime()
-            appendMetrics(name, snapshotId, statsAcc.value)
-            io.commit(name, fingerprint)
-            if (sys.env.contains("GRAFT_STAGE_TIMING"))
-              System.err.println(f"[graft-metrics] $name trail=${(System.nanoTime() - m0) / 1e9}%.2fs")
-          }
-        })
+        done += name
+        appendMetrics(name, done.length.toLong, statsAcc.value) // before the commit marker
+        io.commit(name, fingerprint)
       }
     } else synchronized { done += name }
     lazy val table = io.read(name)
@@ -465,21 +441,15 @@ class Lineage(spark: SparkSession, io: TableIO, fingerprint: String) {
     () => table
   }
 
-  /** Join all trailing metrics/commit work (call before returning results). */
-  def awaitCommits(): Unit = {
-    val t0 = System.nanoTime()
-    synchronized { pending.toList }.foreach(_.get())
-    if (sys.env.contains("GRAFT_STAGE_TIMING"))
-      System.err.println(f"[graft-metrics] awaitCommits tail=${(System.nanoTime() - t0) / 1e9}%.2fs")
-  }
-
   private def appendMetrics(stage: String, snapshotId: Long,
                             stats: Map[Int, graft.spark.PartitionStat]): Unit = {
     // per-partition lineage: rows per partition + a theta sketch of the
     // first column's values (cross-partition dup estimation support),
     // collected by the stage's OWN write job (PartitionStatsTap) — this
-    // method only materializes the tiny driver-side map into the table
+    // method only writes the tiny driver-side map into the table, as a
+    // LocalRelation that the append writes without a job
     import org.apache.spark.sql.Row
+    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("stage", StringType, nullable = false),
@@ -493,8 +463,7 @@ class Lineage(spark: SparkSession, io: TableIO, fingerprint: String) {
     val rows = stats.toSeq.sortBy(_._1).map { case (pid, st) =>
       Row(stage, pid, st.rows, st.theta, snapshotId, fingerprint, now)
     }
-    io.append("_metrics", spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), schema))
+    io.append("_metrics", spark.createDataFrame(rows.asJava, schema))
   }
 
   def metrics: DataFrame =

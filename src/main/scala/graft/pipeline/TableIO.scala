@@ -20,9 +20,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * job per read) and a fully committed resume launches none at all.
   */
 trait TableIO {
-  /** Read the table HEAD (the latest written snapshot, committed or not —
-    * a stage reads its own output back immediately after writing, before
-    * the trailing commit lands). */
+  /** Read the table HEAD (the latest written snapshot, committed or
+    * not). */
   def read(table: String): DataFrame
   /** Write the full table content as a NEW head snapshot. NOT yet
     * committed; a crash before `commit` leaves the previous committed
@@ -30,7 +29,9 @@ trait TableIO {
     * `partitionBy` lays the snapshot out partitioned by those columns
     * (e.g. the IVF index's `cell`), enabling partition pruning on read. */
   def overwrite(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit
-  /** Append rows (metrics/lineage table). Appends are self-committing. */
+  /** Append driver-side rows (metrics/lineage table; `df` is built from
+    * local rows, e.g. `createDataFrame(rows.asJava, schema)`). Appends are
+    * self-committing. */
   def append(table: String, df: DataFrame): Unit
   def exists(table: String): Boolean
   /** Commit the head snapshot under `fingerprint` (atomic wrt
@@ -139,7 +140,7 @@ object TableIO {
   * writes a fresh `v<N>` subdir under the table dir, and `commit` appends
   * `(N, fingerprint)` to the `_GRAFT_COMMITS` log. The head is the
   * highest-numbered version dir; an uncommitted head (crash before the
-  * trailing commit) is simply rewritten by the next run's overwrite, so
+  * commit) is simply rewritten by the next run's overwrite, so
   * committed history is never mutated. Append-mode tables (`_metrics`)
   * stay flat parquet-append dirs — they are their own log.
   *
@@ -223,8 +224,10 @@ class ParquetTableIO(spark: SparkSession, root: String) extends TableIO {
     writeUtf8(schemaFile(versionDir(table, next)), df.schema.json)
   }
 
+  /** The rows (a `LocalRelation` plan) are written as one parquet file
+    * from the driver, with no Spark job. */
   override def append(table: String, df: DataFrame): Unit = {
-    df.write.mode(SaveMode.Append).parquet(dir(table).toString)
+    org.apache.spark.sql.GraftBridge.appendLocalParquet(df, dir(table).toString)
     if (!fs.exists(schemaFile(dir(table)))) writeUtf8(schemaFile(dir(table)), df.schema.json)
   }
 

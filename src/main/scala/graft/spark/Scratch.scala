@@ -32,13 +32,8 @@ object Scratch {
     p
   }
 
-  /** FAIR-scheduler allocation file giving compute pools — the pipeline's
-    * lane pool AND the implicit `default` pool (main-thread stages, bench
-    * queries) — 8x the weight of the lineage/metrics trailer pool
-    * (NearDupPipeline sets the pool names per thread): the trailer becomes
-    * a free-rider on idle task slots instead of queueing head-of-line (or
-    * fair-sharing half the slots) against compute stages.
-    * Sessions opt in with
+  /** FAIR-scheduler allocation file with the one `default` pool, FIFO
+    * inside: every job of the session runs in it. Sessions opt in with
     * `spark.scheduler.mode=FAIR, spark.scheduler.allocation.file=<this>`. */
   lazy val fairPoolsXml: String = {
     val f = java.nio.file.Files.createTempFile("graft-fair-pools", ".xml")
@@ -47,12 +42,6 @@ object Scratch {
         |<allocations>
         |  <pool name="default">
         |    <schedulingMode>FIFO</schedulingMode><weight>8</weight><minShare>0</minShare>
-        |  </pool>
-        |  <pool name="graft-lanes">
-        |    <schedulingMode>FIFO</schedulingMode><weight>8</weight><minShare>0</minShare>
-        |  </pool>
-        |  <pool name="graft-lineage">
-        |    <schedulingMode>FIFO</schedulingMode><weight>1</weight><minShare>0</minShare>
         |  </pool>
         |</allocations>
         |""".stripMargin.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -83,6 +83,47 @@ object GraftBridge {
                        schema: types.StructType): Dataset[Row] =
     session.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
+  /** Append `df`, whose optimized plan must be a `LocalRelation` (rows
+    * that already sit on the driver, e.g. `createDataFrame(rows.asJava,
+    * schema)`), to the parquet directory `dir` as one file written on the
+    * driver; no Spark job runs. The rows go through the writer that
+    * `df.write` runs in each task (`ParquetUtils.prepareWrite` ->
+    * `OutputWriterFactory`), so the file reads back as a `df.write` file of
+    * the same rows. It is written under an `_`-prefixed name, which file
+    * listings skip, and renamed into place once closed: a reader never
+    * sees a partial file. */
+  def appendLocalParquet(df: Dataset[Row], dir: String): Unit = {
+    val local = df.queryExecution.optimizedPlan match {
+      case l: catalyst.plans.logical.LocalRelation => l
+      case other => throw new IllegalArgumentException(
+        "appendLocalParquet takes driver-side rows (a LocalRelation plan, " +
+          s"e.g. createDataFrame(rows.asJava, schema)), not a ${other.nodeName} plan")
+    }
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val conf = session.sessionState.conf
+    val job = Job.getInstance(session.sessionState.newHadoopConf())
+    val schema = df.schema
+    internal.SQLConf.withExistingConf(conf) {
+      val factory = ParquetUtils.prepareWrite(conf, job, schema,
+        new ParquetOptions(Map.empty[String, String], conf))
+      val attempt = new TaskAttemptID(
+        new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
+      val context = new TaskAttemptContextImpl(job.getConfiguration, attempt)
+      val name = s"part-00000-${java.util.UUID.randomUUID()}-c000" +
+        factory.getFileExtension(context)
+      val tmp = new Path(dir, "_" + name)
+      val writer = factory.newInstance(tmp.toString, schema, context)
+      try local.data.foreach(writer.write) finally writer.close()
+      val fs = tmp.getFileSystem(job.getConfiguration)
+      if (!fs.rename(tmp, new Path(dir, name)))
+        throw new java.io.IOException(s"could not rename $tmp into $dir")
+    }
+  }
+
   /** Block until the async listener bus has delivered all queued events —
     * required before reading metrics accumulated by a SparkListener (the
     * bus lags behind job completion, so task-end events from the final

@@ -87,4 +87,45 @@ class KllSketchSpec extends AnyFunSuite {
     assert(sk.count == 0)
     assert(sk.quantile(0.5).isNaN)
   }
+
+  test("KLL bytes equal the Arrays.sort compaction's: spread, signed-zero, duplicate and monotone streams, merges, serde") {
+    // the digest was recorded with `compress` sorting each full level by
+    // `java.util.Arrays.sort`; the streams take BucketSort's bucket path
+    // (spread values) and each of its fallbacks (infinities, crowded
+    // duplicates, short levels at small k)
+    def spread(i: Int): Double = ((SplitMix64.mix(i.toLong) >>> 11).toDouble / (1L << 53)) * 200.0 - 100.0
+    def signedZero(i: Int): Double = {
+      val x = SplitMix64.mix(i.toLong + 0x5bd1e995L)
+      (x & 7) match {
+        case 0 | 1 => -0.0
+        case 2 | 3 => 0.0
+        case 4 => if ((x & 8) == 0) Double.PositiveInfinity else Double.NegativeInfinity
+        case 5 => ((x >>> 8) % 5).toDouble - 2.0
+        case _ => spread(i)
+      }
+    }
+    def crowded(i: Int): Double = (SplitMix64.mix(i.toLong) % 17).toDouble
+    val streams = Seq[Int => Double](spread, signedZero, crowded, i => i.toDouble, i => -i.toDouble)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    for (k <- Seq(8, 20, 200); (f, s) <- streams.zipWithIndex; n <- Seq(10, 1000, 30000)) {
+      val whole = KllSketch(k)
+      val parts = Seq.fill(3)(KllSketch(k))
+      var i = 0
+      while (i < n) {
+        val v = f(i)
+        whole.update(v)
+        parts((i / 7 + s) % 3).update(v)
+        i += 1
+      }
+      md.update(whole.serialize())
+      val merged = KllSketch.deserialize(parts(0).serialize())
+      merged.merge(parts(1))
+      merged.merge(KllSketch.deserialize(parts(2).serialize()))
+      md.update(merged.serialize())
+      (0 until 500).foreach(j => merged.update(f(n + j)))
+      md.update(merged.serialize())
+    }
+    assert(md.digest().map("%02x".format(_)).mkString ==
+      "ec32968df67da0cdb958619c3e5445d39ac58f984feba18832fd0174360dea27")
+  }
 }

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.ConnectedComponents
 
 /** Connected components across its four execution paths: the small-graph
-  * fast path (whole input within the union-find bound — skips contraction
-  * entirely), contraction-only (residual empty), contraction + driver
+  * fast path (whole input, or its distinct edges, within the union-find
+  * bound — skips contraction entirely), contraction-only (residual empty), contraction + driver
   * union-find finish (small residual), and the distributed
   * label-propagation loop (forced via localFinishMaxEdges = 0). Paths are
   * forced by sizing localFinishMaxEdges relative to the input edge count.
@@ -73,6 +73,48 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSuiteBase {
       localFinishMaxEdges = 0L).as[(Long, Long)].collect().toMap
     assert(viaLocal == truth(edges))
     assert(viaLoop == viaLocal)
+  }
+
+  // the pipeline hands over the union of its lanes' edges without a
+  // distinct: an edge two lanes found arrives twice, in either direction
+  test("duplicate edges in both directions: labels equal the deduplicated set's on both paths") {
+    val rnd = new scala.util.Random(11)
+    val random = Seq.tabulate(200)(_ => (rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+    val chain = (0L until 30L).map(i => (1000L + i, 1001L + i))
+    val star = (2L to 15L).map(l => (2000L, 2000L + l))
+    val unique = (random ++ chain ++ star).filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+    val repeated = rnd.shuffle(unique.flatMap { case (a, b) =>
+      Seq.fill(1 + rnd.nextInt(4))(if (rnd.nextBoolean()) (a, b) else (b, a))
+    })
+    assert(repeated.size > unique.size * 2)
+    def labels(edges: Seq[(Long, Long)], localMax: Long) =
+      ConnectedComponents.run(edges.toDF("id_a", "id_b"), localFinishMaxEdges = localMax)
+        .as[(Long, Long)].collect().toMap
+    for (localMax <- Seq(4000000L, 0L)) {
+      val want = labels(unique, localMax)
+      assert(want == truth(unique), s"localFinishMaxEdges=$localMax")
+      assert(labels(repeated, localMax) == want, s"localFinishMaxEdges=$localMax")
+    }
+  }
+
+  // repeats count against the driver-side bound only until they are
+  // deduplicated: a list over the bound whose distinct undirected edges fit
+  // it still finishes on the driver (a LocalRelation result), and one
+  // distinct edge over the bound contracts
+  test("repeated edges over the bound: the distinct count picks the path") {
+    val unique = (0L until 40L).map(i => (100L + i, 101L + i)) ++ (2L to 9L).map(l => (1L, l))
+    val repeated = unique.flatMap { case (a, b) => Seq((a, b), (b, a), (a, b)) }
+    def run(localMax: Long) =
+      ConnectedComponents.run(repeated.toDF("id_a", "id_b"), localFinishMaxEdges = localMax)
+    val onDriver = run(unique.size.toLong)
+    assert(onDriver.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(onDriver.as[(Long, Long)].collect().toMap == truth(unique))
+    val contracted = run(unique.size - 1L)
+    assert(!contracted.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(contracted.as[(Long, Long)].collect().toMap == truth(unique))
   }
 
   test("clustersWithSingletons: every id labelled, singletons self-labelled") {

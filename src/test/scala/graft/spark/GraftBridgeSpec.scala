@@ -65,4 +65,20 @@ class GraftBridgeSpec extends AnyFunSuite with SparkSuiteBase {
       f = next
     }
   }
+
+  test("appendLocalParquet writes driver-side rows and refuses a frame that needs a job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-append").toString
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("k STRING, n BIGINT")
+    val rows = Seq(org.apache.spark.sql.Row("a", 1L), org.apache.spark.sql.Row("b", 2L))
+    import scala.jdk.CollectionConverters._
+    GraftBridge.appendLocalParquet(spark.createDataFrame(rows.asJava, schema), dir)
+    GraftBridge.appendLocalParquet(spark.createDataFrame(rows.take(1).asJava, schema), dir)
+    assert(spark.read.parquet(dir).collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq ==
+      Seq(("a", 1L), ("a", 1L), ("b", 2L)))
+    val e = intercept[IllegalArgumentException](
+      GraftBridge.appendLocalParquet(spark.range(3).toDF(), dir))
+    assert(e.getMessage.contains("LocalRelation"))
+    assert(spark.read.parquet(dir).count() == 3)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
 }

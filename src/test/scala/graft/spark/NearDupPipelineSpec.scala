@@ -25,8 +25,8 @@ class NearDupPipelineSpec extends AnyFunSuite with SparkSuiteBase {
     Files.createTempDirectory(s"graft-$tag").toString
 
   /** `body`'s result and the call site (final stage name) of every Spark
-    * job started while it ran, on any thread (lane futures and the lineage
-    * trailer launch jobs too). Suites run one at a time, so no other
+    * job started while it ran, on any thread (the lane futures launch jobs
+    * too). Suites run one at a time, so no other
     * test's jobs interleave. */
   private def jobsDuring[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
@@ -126,15 +126,76 @@ class NearDupPipelineSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("job budget: a fresh run launches at least 10 fewer jobs than before") {
-    // this fresh run launched 53 jobs before (54 when AQE's stage timing
-    // runs one more shuffle stage; 10 runs at aee32ae): the same 8
-    // inference jobs, plus 2 (AQE map + result) for connected components'
-    // edge recount, which the materialize pass now supplies. It now
-    // launches 43, or 44 under the same timing.
+    // this fresh run launched 53 jobs at aee32ae (54 when AQE's stage
+    // timing runs one more shuffle stage): 8 schema-inference jobs, since
+    // gone with the schema sidecars, and 2 (AQE map + result) for
+    // connected components' edge recount, which the materialize pass now
+    // supplies. That left 43, or 44 under the same timing, of which 7
+    // appended a stage's lineage rows and 1 was the shuffle of a
+    // `distinct` over the lanes' edges. The lineage rows are now written
+    // on the driver and the edges reach connected components as they are:
+    // 8 fewer again.
     val ParentFreshJobs = 54
     val freshJobs = jobBudget._1
-    assert(freshJobs.size <= ParentFreshJobs - 10,
+    assert(freshJobs.size <= ParentFreshJobs - 10 - 8,
       s"fresh run launched ${freshJobs.size} jobs: ${freshJobs.mkString("; ")}")
+  }
+
+  /** A parquet TableIO that records, in call order, each `_metrics`
+    * append (with the stages its rows name) and each `commit`, and also
+    * appends every `_metrics` frame with `df.write` to `refDir`. */
+  private class RecordingIO(dir: String, refDir: String) extends graft.pipeline.ParquetTableIO(spark, dir) {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, Set[String])]()
+    override def append(table: String, df: DataFrame): Unit = {
+      super.append(table, df)
+      events.add(("append", df.select("stage").collect().map(_.getString(0)).toSet))
+      df.write.mode("append").parquet(refDir)
+    }
+    override def commit(table: String, fingerprint: String): Unit = {
+      events.add(("commit", Set(table)))
+      super.commit(table, fingerprint)
+    }
+  }
+
+  /** A fresh run through a [[RecordingIO]]: its events, its `_metrics`
+    * table, and the `df.write` reference copy of the same appends. */
+  private lazy val recorded: (Seq[(String, Set[String])], DataFrame, DataFrame, String) = {
+    val (df, _) = pagesDf(300, 9L)
+    val dir = tmpDir("lineage")
+    val refDir = s"$dir-ref"
+    val io = new RecordingIO(dir, refDir)
+    val res = NearDupPipeline.run(spark, df,
+      NearDupPipeline.Config(workDir = dir, inputSnapshotId = Some("snap-1")), io)
+    (io.events.asScala.toSeq, res.metrics, spark.read.parquet(refDir), s"$dir/_metrics")
+  }
+
+  test("crash rule: each stage's lineage rows are appended right before its commit") {
+    val events = recorded._1
+    val stages = Seq("extracted", "edges_exact", "edges_minhash", "edges_simhash",
+      "edges_substring", "clusters", "cluster_stats")
+    assert(events.size == 2 * stages.size, events.toString)
+    events.grouped(2).foreach {
+      case Seq(("append", rows), ("commit", table)) =>
+        assert(rows == table, s"$table committed after an append of $rows: $events")
+      case pair => fail(s"not an append then its commit: $pair in $events")
+    }
+    assert(events.collect { case ("commit", t) => t.head }.toSet == stages.toSet)
+  }
+
+  test("lineage rows written on the driver read back as the df.write reference's") {
+    val (_, metrics, reference, metricsDir) = recorded
+    def rows(m: DataFrame) = m.select("stage", "partition_id", "rows", "sketch",
+        "snapshot_id", "config_fp", "ts").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getAs[Array[Byte]](3).toSeq,
+        r.getLong(4), r.getString(5), r.getTimestamp(6)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    val got = rows(metrics)
+    assert(got.nonEmpty)
+    assert(got == rows(reference))
+    // the files' own parquet schema, read without the sidecar, types the
+    // columns as Spark's writer does
+    def types(d: DataFrame) = d.schema.fields.map(f => f.name -> f.dataType).toSeq
+    assert(types(spark.read.parquet(metricsDir)) == types(reference))
   }
 
   /** A parquet TableIO that counts `read` calls per table and notes how
