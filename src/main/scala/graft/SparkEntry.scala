@@ -1673,7 +1673,7 @@ object SparkEntry {
       // still hash-match the raw table; file shrink / fingerprint /
       // history invariants are require()d in-plan (q_simhash-style
       // self-verification — file layout is not SQL-expressible)
-      val root = java.nio.file.Files.createTempDirectory(graft.spark.Scratch.workParent, "graft-compact-q").toString
+      val root = graft.spark.Scratch.workDir("graft-compact-q")
       val io = new graft.pipeline.ParquetTableIO(s, root)
       io.overwrite("docs", t(s, dir, "documents")
         .select("doc_id", "text").repartition(32))
@@ -1788,7 +1788,7 @@ object SparkEntry {
       // both updated AND deleted — delete wins), commit v2, read back;
       // the oracle rebuilds the expected final table from the same
       // arithmetic
-      val root = java.nio.file.Files.createTempDirectory(graft.spark.Scratch.workParent, "graft-upsert-q").toString
+      val root = graft.spark.Scratch.workDir("graft-upsert-q")
       val io = new graft.pipeline.ParquetTableIO(s, root)
       val v1 = t(s, dir, "documents").select("doc_id", "text")
       io.overwrite("docs", v1); io.commit("docs", "v1")
@@ -1808,7 +1808,7 @@ object SparkEntry {
       // snapshots (v2 = edits + deletes + new docs, all by arithmetic the
       // oracle mirrors), then TableIO.diff emits the exact changelog —
       // an update shows up as one delete + one insert.
-      val root = java.nio.file.Files.createTempDirectory(graft.spark.Scratch.workParent, "graft-diff-q").toString
+      val root = graft.spark.Scratch.workDir("graft-diff-q")
       val io = new graft.pipeline.ParquetTableIO(s, root)
       val v1 = t(s, dir, "documents").select("doc_id", "text")
       io.overwrite("docs", v1); io.commit("docs", "v1")
@@ -2510,7 +2510,7 @@ object SparkEntry {
   private var entryPipelineWorkDir: Option[String] = None
   private def entryPipelineWork: String = synchronized {
     entryPipelineWorkDir.getOrElse {
-      val d = java.nio.file.Files.createTempDirectory(graft.spark.Scratch.workParent, "graft-entry-pipe").toString
+      val d = graft.spark.Scratch.workDir("graft-entry-pipe")
       entryPipelineWorkDir = Some(d)
       d
     }
@@ -2522,7 +2522,7 @@ object SparkEntry {
   private var docsPipelineWorkDir: Option[String] = None
   private def docsPipelineWork: String = synchronized {
     docsPipelineWorkDir.getOrElse {
-      val d = java.nio.file.Files.createTempDirectory(graft.spark.Scratch.workParent, "graft-docs-pipe").toString
+      val d = graft.spark.Scratch.workDir("graft-docs-pipe")
       docsPipelineWorkDir = Some(d)
       d
     }

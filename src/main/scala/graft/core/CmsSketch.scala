@@ -16,8 +16,7 @@ import java.nio.ByteBuffer
   * any partition of the stream, updated into partials and merged in any
   * order/shape, yields the byte-identical counter table of the single-pass
   * sketch (CmsSketchSpec pins this). Same zero/insert/merge/query
-  * lifecycle as the reference sketch
-  * (`/root/reference/src/DataSketches/Quantiles/RelativeErrorQuantile.hs:479-503`).
+  * lifecycle as the reference sketch (`RelativeErrorQuantile.hs:479-503`).
   *
   * Deterministic guarantees (pinned by `q_cms_tokens` / the spec):
   *  - `estimate(x) >= trueCount(x)` always (counters only over-count);
@@ -28,34 +27,32 @@ import java.nio.ByteBuffer
   * depth rows with probability 1 - e^-depth — probabilistic, so it lives in
   * the spec as a generous assertion, not in the hash-checked query.
   *
-  * Storage, in three modes that a sketch passes through in order:
+  * Storage, in two modes:
   *  - items: while it has seen at most [[itemLimit]] distinct items
-  *    (`sparseLimit / depth`: 64 at the default 5 x 1024) it counts by item
-  *    hash in a small open-addressing table, one probe per update;
-  *  - sparse cells: the next new item spreads the counted items into an
-  *    open-addressing table of set cells (cell -> count), which holds them
-  *    all, and updates go to the depth cells of their item;
-  *  - dense: once more than 1/16 of the cells are set ([[sparseLimit]]:
-  *    320 at 5 x 1024) the cells move to the depth x width array.
+  *    (`width / 16`: 64 at the default 5 x 1024) it counts by item hash in
+  *    a small open-addressing table, one probe per update;
+  *  - dense: the next new item moves the counted items into the
+  *    depth x width table, and updates go to the depth counters of their
+  *    item.
   * A group of a many-group aggregate typically holds a few dozen items, so
   * its buffer is a few hundred bytes instead of 40 KB. Counters are linear,
-  * so counting an item's updates before spreading them sets the same cells
-  * to the same counts. Every reader of cells (estimates, merges,
-  * `rowsConserved`, `serialize()` and the partial image) spreads first, and
-  * the mode never shows in the bytes: `serialize()` writes the dense v1
-  * image in every mode, so equal streams serialize byte-identically
-  * whatever path built them. Only the partial image
+  * so counting an item's updates before adding them to its counters sets
+  * the same counters to the same counts, and the mode never shows in the
+  * bytes: `serialize()` writes the dense v1 image in either mode (an
+  * item-mode sketch adds its items at their counters' offsets of the
+  * zeroed image), so equal streams serialize byte-identically whatever path
+  * built them. Estimates, `rowsConserved` and a merge with a dense sketch
+  * move an item-mode sketch to the dense table first; a merge of item-mode
+  * sketches counts the other's items one by one. Only the partial image
   * (`CmsSketch.partialImage`, an aggregate's own shuffle and spill
-  * buffers) writes (cell, count) pairs while the sketch is sparse.
+  * buffers) writes (item hash, count) pairs while the sketch is in item
+  * mode.
   */
 final class CmsSketch private (
     val depth: Int,
     val width: Int,
-    private var table: Array[Long], // dense: row-major depth x width; null while sparse
-    private var cells: Array[Int],  // sparse: cell index + 1 per slot, 0 = empty; null once dense
-    private var counts: Array[Long], // sparse: the count of each slot's cell
-    private var used: Int,           // sparse: occupied slots
-    private var itemHashes: Array[Long], // items: each slot's item hash; null once spread
+    private var table: Array[Long],      // dense: row-major depth x width; null in item mode
+    private var itemHashes: Array[Long], // items: each slot's item hash; null once dense
     private var itemCounts: Array[Long], // items: each slot's count, 0 = empty
     private var items: Int,              // items: occupied slots
     private var _streamWeight: Long
@@ -64,12 +61,9 @@ final class CmsSketch private (
 
   def streamWeight: Long = _streamWeight
 
-  /** Cells a sparse sketch holds before it switches to the dense table. */
-  def sparseLimit: Int = depth * width / 16
-
-  /** Distinct items counted by hash before they spread into cells; they
-    * then set at most [[sparseLimit]] cells, so the cell table stays sparse. */
-  val itemLimit: Int = sparseLimit / depth
+  /** Distinct items counted by hash before the sketch moves to the dense
+    * table. */
+  val itemLimit: Int = width / 16
 
   // width - 1 for a power-of-two width (the default), where masking equals
   // the non-negative remainder; -1 selects the division
@@ -96,12 +90,7 @@ final class CmsSketch private (
   def updateHash(itemHash: Long, weight: Long): Unit = {
     require(weight > 0, s"weight must be positive, got $weight")
     _streamWeight += weight
-    if (itemCounts != null && countItem(itemHash, weight)) return
-    var r = 0
-    while (r < depth) {
-      add(r * width + bucket(r, itemHash), weight)
-      r += 1
-    }
+    add(itemHash, weight)
   }
 
   /** Point estimate: min over rows — never below the true count. */
@@ -109,32 +98,17 @@ final class CmsSketch private (
     estimateHash(ThetaSketch.hashBytes(item.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
   def estimateHash(itemHash: Long): Long = {
-    spread()
+    densify()
     var min = Long.MaxValue
     var r = 0
-    while (r < depth) {
-      val c = counter(r * width + bucket(r, itemHash))
-      if (c < min) min = c
-      r += 1
-    }
-    if (min == Long.MaxValue) 0L else min
+    while (r < depth) { min = math.min(min, table(r * width + bucket(r, itemHash))); r += 1 }
+    min
   }
 
   /** Conservation invariant: every row's counters sum to streamWeight. */
   def rowsConserved: Boolean = {
-    spread()
-    val sums = new Array[Long](depth)
-    if (table != null) {
-      var i = 0
-      while (i < table.length) { sums(i / width) += table(i); i += 1 }
-    } else {
-      var i = 0
-      while (i < cells.length) {
-        if (cells(i) != 0) sums((cells(i) - 1) / width) += counts(i)
-        i += 1
-      }
-    }
-    sums.forall(_ == _streamWeight)
+    densify()
+    table.grouped(width).forall(_.sum == _streamWeight)
   }
 
   /** The a-priori per-row error scale eps*W = e/width * W (the bound the
@@ -145,21 +119,11 @@ final class CmsSketch private (
   def merge(other: CmsSketch): CmsSketch = {
     require(other.depth == depth && other.width == width,
       s"cannot merge CmsSketch ${depth}x$width with ${other.depth}x${other.width}")
-    spread()
-    other.spread()
     if (other.table != null) {
-      if (table == null) densify()
+      densify()
       var i = 0
       while (i < table.length) { table(i) += other.table(i); i += 1 }
-    } else {
-      if (table == null) reserve(math.min(used + other.used, sparseLimit))
-      val oc = other.cells
-      var i = 0
-      while (i < oc.length) {
-        if (oc(i) != 0) add(oc(i) - 1, other.counts(i))
-        i += 1
-      }
-    }
+    } else foreachItem(other.itemHashes, other.itemCounts)(add)
     _streamWeight += other._streamWeight
     this
   }
@@ -172,60 +136,45 @@ final class CmsSketch private (
   }
 
   private def writeCanonical(buf: ByteBuffer): Unit = {
-    spread()
     buf.put(1.toByte).putInt(depth).putInt(width).putLong(_streamWeight)
     if (table != null) buf.asLongBuffer().put(table)
     else {
-      // the buffer is zeroed: write the set cells at their dense offsets
+      // the buffer is zeroed: add each item's count at its counters' offsets
       val base = buf.position()
-      var i = 0
-      while (i < cells.length) {
-        if (cells(i) != 0) buf.putLong(base + (cells(i) - 1) * 8, counts(i))
-        i += 1
+      foreachItem(itemHashes, itemCounts) { (h, c) =>
+        var r = 0
+        while (r < depth) {
+          val at = base + (r * width + bucket(r, h)) * 8
+          buf.putLong(at, buf.getLong(at) + c)
+          r += 1
+        }
       }
     }
   }
 
-  private def counter(cell: Int): Long =
-    if (table != null) table(cell)
-    else {
-      val i = slotOf(cell)
-      if (cells(i) == 0) 0L else counts(i)
-    }
-
-  /** Adds `w` to `cell`; a sparse sketch that would set more than
-    * [[sparseLimit]] cells switches to the dense table first. */
-  private def add(cell: Int, w: Long): Unit = {
+  /** Adds `w` to the item hashed `h`: to its count in item mode, where a
+    * new item past [[itemLimit]] moves the sketch to the dense table, and
+    * to its depth counters once dense. */
+  private def add(h: Long, w: Long): Unit = {
     if (table == null) {
-      if (2 * used >= cells.length && used < sparseLimit) rehash(2 * cells.length)
-      val i = slotOf(cell)
-      if (cells(i) != 0) { counts(i) += w; return }
-      if (used < sparseLimit) {
-        cells(i) = cell + 1
-        counts(i) = w
-        used += 1
-        return
-      }
+      if (countItem(h, w)) return
       densify()
     }
-    table(cell) += w
+    var r = 0
+    while (r < depth) { table(r * width + bucket(r, h)) += w; r += 1 }
   }
 
-  /** Item mode: adds `w` to the count of the item hashed `h`. A new item
-    * past [[itemLimit]] spreads the table into cells and returns false: the
-    * caller then adds it to its cells. */
+  /** Item mode: adds `w` to the count of the item hashed `h`; false, with
+    * nothing counted, for a new item past [[itemLimit]]. */
   private def countItem(h: Long, w: Long): Boolean = {
     if (2 * items >= itemCounts.length && items < itemLimit) rehashItems(2 * itemCounts.length)
     val i = itemSlotOf(h)
     if (itemCounts(i) != 0) { itemCounts(i) += w; return true }
-    if (items < itemLimit) {
-      itemHashes(i) = h
-      itemCounts(i) = w
-      items += 1
-      return true
-    }
-    spread()
-    false
+    if (items == itemLimit) return false
+    itemHashes(i) = h
+    itemCounts(i) = w
+    items += 1
+    true
   }
 
   /** The item slot that holds hash `h`, or the empty slot where it goes. */
@@ -240,78 +189,24 @@ final class CmsSketch private (
     val (oldHashes, oldCounts) = (itemHashes, itemCounts)
     itemHashes = new Array[Long](cap)
     itemCounts = new Array[Long](cap)
-    var j = 0
-    while (j < oldCounts.length) {
-      if (oldCounts(j) != 0) {
-        val i = itemSlotOf(oldHashes(j))
-        itemHashes(i) = oldHashes(j)
-        itemCounts(i) = oldCounts(j)
-      }
-      j += 1
+    foreachItem(oldHashes, oldCounts) { (h, c) =>
+      val i = itemSlotOf(h)
+      itemHashes(i) = h
+      itemCounts(i) = c
     }
   }
 
-  /** Leaves item mode: adds each counted item to its depth cells. A no-op
-    * once spread. */
-  private def spread(): Unit =
-    if (itemCounts != null) {
+  /** Leaves item mode: adds each counted item to its depth counters of a
+    * new dense table. A no-op once dense. */
+  private def densify(): Unit =
+    if (table == null) {
+      table = new Array[Long](depth * width)
       val (hs, cs) = (itemHashes, itemCounts)
       itemHashes = null
       itemCounts = null
-      val cap = capacityFor(math.min(items * depth, sparseLimit))
-      cells = new Array[Int](cap)
-      counts = new Array[Long](cap)
-      var s = 0
-      while (s < cs.length) {
-        if (cs(s) != 0) {
-          var r = 0
-          while (r < depth) { add(r * width + bucket(r, hs(s)), cs(s)); r += 1 }
-        }
-        s += 1
-      }
+      items = 0
+      foreachItem(hs, cs)(add)
     }
-
-  /** The sparse slot that holds `cell`, or the empty slot where it goes. */
-  private def slotOf(cell: Int): Int = {
-    val key = cell + 1
-    val mask = cells.length - 1
-    var i = slot(cell) & mask
-    while (cells(i) != 0 && cells(i) != key) i = (i + 1) & mask
-    i
-  }
-
-  /** Grows the sparse table, before a bulk insert, to hold `n` cells at a
-    * load of at most one half. */
-  private def reserve(n: Int): Unit = {
-    val cap = capacityFor(n)
-    if (cap > cells.length) rehash(cap)
-  }
-
-  private def rehash(cap: Int): Unit = {
-    val (oldCells, oldCounts) = (cells, counts)
-    cells = new Array[Int](cap)
-    counts = new Array[Long](cap)
-    var j = 0
-    while (j < oldCells.length) {
-      if (oldCells(j) != 0) {
-        val i = slotOf(oldCells(j) - 1)
-        cells(i) = oldCells(j)
-        counts(i) = oldCounts(j)
-      }
-      j += 1
-    }
-  }
-
-  private def densify(): Unit = {
-    table = new Array[Long](depth * width)
-    var i = 0
-    while (i < cells.length) {
-      if (cells(i) != 0) table(cells(i) - 1) = counts(i)
-      i += 1
-    }
-    cells = null
-    counts = null
-  }
 }
 
 object CmsSketch extends SketchFormat[CmsSketch] {
@@ -320,30 +215,19 @@ object CmsSketch extends SketchFormat[CmsSketch] {
   private val HeaderBytes = 1 + 4 + 4 + 8
   // partial-image tags
   private val DenseImage: Byte = 0
-  private val SparseImage: Byte = 1
+  private val ItemImage: Byte = 1
   private val MinCapacity = 16
+
+  /** Calls `f(hash, count)` for each counted item of an item table. */
+  private def foreachItem(hashes: Array[Long], counts: Array[Long])(f: (Long, Long) => Unit): Unit = {
+    var s = 0
+    while (s < counts.length) { if (counts(s) != 0) f(hashes(s), counts(s)); s += 1 }
+  }
 
   def apply(depth: Int = DefaultDepth, width: Int = DefaultWidth): CmsSketch = {
     require(depth >= 1 && depth <= 32, s"depth must be in [1, 32], got $depth")
     require(width >= 2, s"width must be >= 2, got $width")
-    new CmsSketch(depth, width, null, null, null, 0,
-      new Array[Long](MinCapacity), new Array[Long](MinCapacity), 0, 0L)
-  }
-
-  private def sparse(depth: Int, width: Int, expectedCells: Int, weight: Long): CmsSketch = {
-    val cap = capacityFor(expectedCells)
-    new CmsSketch(depth, width, null, new Array[Int](cap), new Array[Long](cap), 0, null, null, 0, weight)
-  }
-
-  /** Smallest power-of-two slot count that holds `n` cells at load <= 1/2. */
-  private def capacityFor(n: Int): Int =
-    math.max(MinCapacity, Integer.highestOneBit(math.max(2 * n - 1, 1)) << 1)
-
-  /** Slot hash of a cell index: Fibonacci multiply, then fold the high
-    * bits down so a power-of-two mask sees all of them. */
-  @inline private def slot(cell: Int): Int = {
-    val h = cell * 0x9e3779b9
-    h ^ (h >>> 16)
+    new CmsSketch(depth, width, null, new Array[Long](MinCapacity), new Array[Long](MinCapacity), 0, 0L)
   }
 
   def deserialize(bytes: Array[Byte]): CmsSketch = readCanonical(ByteBuffer.wrap(bytes))
@@ -356,46 +240,39 @@ object CmsSketch extends SketchFormat[CmsSketch] {
     val weight = buf.getLong()
     val table = new Array[Long](depth * width)
     buf.asLongBuffer().get(table)
-    new CmsSketch(depth, width, table, null, null, 0, null, null, 0, weight)
+    new CmsSketch(depth, width, table, null, null, 0, weight)
   }
 
-  /** Sparse: [1][depth:4][width:4][weight:8][n:4] then n x [cell:4][count:8];
+  /** Item mode: [1][depth:4][width:4][weight:8][n:4] then n x [hash:8][count:8];
     * dense: [0] followed by the `serialize()` bytes. */
-  override def partialImage(s: CmsSketch): Array[Byte] = {
-    s.spread()
+  override def partialImage(s: CmsSketch): Array[Byte] =
     if (s.table != null) {
       val buf = ByteBuffer.allocate(1 + HeaderBytes + s.depth * s.width * 8)
       buf.put(DenseImage)
       s.writeCanonical(buf)
       buf.array()
     } else {
-      val buf = ByteBuffer.allocate(1 + 4 + 4 + 8 + 4 + 12 * s.used)
-      buf.put(SparseImage).putInt(s.depth).putInt(s.width).putLong(s._streamWeight).putInt(s.used)
-      var i = 0
-      while (i < s.cells.length) {
-        if (s.cells(i) != 0) buf.putInt(s.cells(i) - 1).putLong(s.counts(i))
-        i += 1
-      }
+      val buf = ByteBuffer.allocate(HeaderBytes + 4 + 16 * s.items) // the tag takes the version's byte
+      buf.put(ItemImage).putInt(s.depth).putInt(s.width).putLong(s._streamWeight).putInt(s.items)
+      foreachItem(s.itemHashes, s.itemCounts)((h, c) => buf.putLong(h).putLong(c))
       buf.array()
     }
-  }
 
   override def readPartialImage(bytes: Array[Byte]): CmsSketch = {
     val buf = ByteBuffer.wrap(bytes)
     val tag = buf.get()
     if (tag == DenseImage) readCanonical(buf)
     else {
-      require(tag == SparseImage, s"unknown CmsSketch partial image tag $tag")
+      require(tag == ItemImage, s"unknown CmsSketch partial image tag $tag")
       val depth = buf.getInt()
       val width = buf.getInt()
       val weight = buf.getLong()
       val n = buf.getInt()
-      val s = sparse(depth, width, n, weight)
-      var i = 0
-      while (i < n) {
-        s.add(buf.getInt(), buf.getLong())
-        i += 1
-      }
+      // the smallest power of two of at least 2n slots: the n items fit
+      // without a rehash
+      val cap = math.max(MinCapacity, Integer.highestOneBit(math.max(2 * n - 1, 1)) << 1)
+      val s = new CmsSketch(depth, width, null, new Array[Long](cap), new Array[Long](cap), 0, weight)
+      for (_ <- 0 until n) s.add(buf.getLong(), buf.getLong())
       s
     }
   }

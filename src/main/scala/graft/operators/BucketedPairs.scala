@@ -13,15 +13,16 @@ import graft.spark.{CappedIdsAgg, CappedIdsMergeAgg, GraftFunctions}
   *
   *   - small buckets (n <= cap): all C(n,2) pairs (complete — downstream
   *     verify decides),
-  *   - hot buckets (cap < n <= SaltBuckets*(cap+1)): star edges to the
-  *     bucket's minimum id, straight from the kept member list. A hot
-  *     bucket emits n-1 edges instead of ~n^2/2; the hub keeps it
-  *     connected for clustering, and every edge still passes the lane's
-  *     verify step,
-  *   - monster buckets beyond that (e.g. a 10^6-member soft-404 template):
-  *     the kept list overflows to (count, min) only, and star edges come
-  *     from joining the monster-key list back to the membership rows — no
-  *     aggregation buffer ever holds the bucket.
+  *   - hot buckets (cap < n <= SaltBuckets*(cap+1), no salt slice over
+  *     cap): star edges to the bucket's minimum id, straight from the kept
+  *     member list. A hot bucket emits n-1 edges instead of ~n^2/2; the
+  *     hub keeps it connected for clustering, and every edge still passes
+  *     the lane's verify step,
+  *   - monster buckets, where a salt slice holds more than cap members or
+  *     the bucket more than SaltBuckets*(cap+1) (e.g. a 10^6-member
+  *     soft-404 template): the kept list overflows to (count, min) only,
+  *     and star edges come from joining the monster-key list back to the
+  *     membership rows — no aggregation buffer ever holds the bucket.
   *
   * Memory/skew structure (vs a plain `groupBy(key).agg(collect_list)`,
   * which materializes the whole bucket in one buffer before any cap):
@@ -56,11 +57,13 @@ object BucketedPairs {
     * the incremental probe lane (MinHashLSH.incrementalNearDupPairs): one
     * row per key tuple with the bounded struct `s = (n, hub, ids)` —
     * `n` the true bucket size, `hub` its minimum id, `ids` the kept member
-    * list (NULL exactly when the bucket overflowed `SaltBuckets*(cap+1)`
-    * or n < 2; a singleton's lone id IS its hub). Null-keyed rows are
-    * dropped (they can't bucket). Every aggregation buffer in both phases
-    * holds at most cap+1 ids regardless of bucket size — the skew story
-    * from the object doc. */
+    * list (NULL exactly when one of the bucket's SaltBuckets salt slices
+    * held more than cap members, when the bucket held more than
+    * `SaltBuckets*(cap+1)`, or when n < 2; a singleton's lone id IS its
+    * hub). Null-keyed rows are dropped (they can't bucket). Whatever the
+    * bucket's size, a phase-1 buffer holds at most cap+1 ids and a phase-2
+    * buffer at most SaltBuckets*(cap+1) — the skew story from the object
+    * doc. */
   def cappedBuckets(members: DataFrame, keyCols: Seq[String], idCol: String,
                     cap: Int): DataFrame = {
     require(cap >= 2, s"cap must be >= 2, got $cap")
@@ -89,7 +92,11 @@ object BucketedPairs {
     * semi-joined to the batch's distinct keys first — only touched buckets
     * ever aggregate (partition pruning's entry point on a bucketed index
     * table) — then postings collect through [[cappedBuckets]] (every
-    * buffer bounded) with over-cap buckets degrading to their hub.
+    * buffer bounded). A touched bucket degrades to its hub only when one
+    * of its SaltBuckets (16) salt slices holds more than cap postings or
+    * the bucket more than SaltBuckets*(cap+1); below that every posting is
+    * a candidate, so an evenly salted bucket of a few times cap postings
+    * lists them all.
     *
     * EAGER: the probe side is materialized here, so building (or merely
     * explaining) the frame of any incremental lane that calls this runs

@@ -32,8 +32,10 @@ import graft.spark.GraftFunctions.call
   */
 object MinHashLSH {
 
-  /** Corpus postings per touched bucket above which an incremental probe
-    * degrades the bucket to its hub. */
+  /** Posting cap of the incremental probe: a touched bucket degrades to
+    * its hub once one of its 16 salt slices holds more than this many
+    * corpus postings, or the bucket more than 16 x (this + 1)
+    * (`BucketedPairs.probeCandidates`). */
   val MaxPostings = 1000
 
   /** Candidate pairs (idA < idB) from LSH banding over `textCol`. */
@@ -204,11 +206,13 @@ object MinHashLSH {
     *     partitioned index table this is where partition pruning bites);
     *  2. touched buckets collect corpus postings through the SAME salted
     *     capped machinery as the batch lane ([[BucketedPairs.cappedBuckets]]
-    *     — every buffer bounded at maxPostings+1 ids);
-    *  3. a hot bucket (template page family with > maxPostings corpus
-    *     members) degrades to its hub (minimum corpus id) as the sole
-    *     candidate — same approximation class as the batch lane's star
-    *     edges: template members are near-identical, so the hub stands for
+    *     — a phase-1 buffer holds at most maxPostings+1 ids, a phase-2
+    *     buffer at most 16 x (maxPostings+1));
+    *  3. a hot bucket (template page family where one of the 16 salt
+    *     slices holds > maxPostings corpus members, or the bucket
+    *     > 16 x (maxPostings+1)) degrades to its hub (minimum corpus id)
+    *     as the sole candidate — same approximation class as the batch
+    *     lane's star edges: template members are near-identical, so the hub stands for
     *     the bucket in the verify step, and the exact incremental lane
     *     (`ExactDedup.incrementalSurvivors*`) catches byte-identical
     *     template copies linearly. Past the cap, pair COMPLETENESS (every

@@ -54,9 +54,11 @@ object SimHashDedup {
     * stored [[probeIndex]]: batch hashed once (materialized — probes and
     * verify both read it), index semi-joined to the batch's probe keys so
     * only touched buckets aggregate, postings collected through the shared
-    * salted capped machinery (`BucketedPairs.cappedBuckets`, every buffer
-    * bounded at maxPostings+1), hot buckets degrading to their hub exactly
-    * as in the batch lane. Below the cap the pigeonhole argument makes the
+    * salted capped machinery (`BucketedPairs.cappedBuckets`: a phase-1
+    * buffer holds at most maxPostings+1 ids, a phase-2 buffer at most
+    * 16 x (maxPostings+1)); a bucket degrades to its hub once one of its
+    * 16 salt slices holds more than maxPostings postings or the bucket
+    * more than 16 x (maxPostings+1), as in `BucketedPairs.probeCandidates`. Below the cap the pigeonhole argument makes the
     * probe EXACT: any cross pair within maxDist agrees on >= 1 of
     * maxDist+1 blocks, so it shares a probe bucket. */
   def incrementalPairs(index: DataFrame, incoming: DataFrame, idCol: String,

@@ -324,7 +324,9 @@ object DocChunker {
     * the minhash/simhash/substring lanes already have: an incoming batch
     * is chunked, candidates come from the stored [[cdcChunkIndex]] through
     * the SAME probe helper as every other tier (touched-bucket semi-join →
-    * salted capped collection → hub degradation past [[MaxPostings]]), and
+    * salted capped collection → hub degradation once a salt slice holds
+    * more than [[MaxPostings]] postings or the bucket more than 16 x
+    * ([[MaxPostings]] + 1)), and
     * `shared_chunks` is then recounted EXACTLY from the index postings of
     * the candidate pairs — no corpus text is ever read; probe AND verify
     * run entirely against the stored index. Candidate completeness is a

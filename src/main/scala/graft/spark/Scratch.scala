@@ -32,6 +32,15 @@ object Scratch {
     p
   }
 
+  /** A new `<prefix><digits>` work dir under [[workParent]], deleted with
+    * everything in it when the JVM exits: the frames a query builds over
+    * it read it lazily, so it cannot go when the query returns. */
+  def workDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(workParent, prefix).toFile
+    org.apache.spark.sql.GraftBridge.deleteOnExit(d)
+    d.toString
+  }
+
   /** FAIR-scheduler allocation file with the one `default` pool, FIFO
     * inside: every job of the session runs in it. Sessions opt in with
     * `spark.scheduler.mode=FAIR, spark.scheduler.allocation.file=<this>`. */

@@ -33,11 +33,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * therefore run about once per input group per task, so all three must
   * cost in proportion to what a group holds, not to its sketch's config.
   * `ThetaSketch` grows its hash buffer with what it holds; `CmsSketch`
-  * keeps its set cells in a small table until 1/16 of them are set; and
-  * the shuffle and spill buffers carry the family's
-  * [[SketchFormat.partialImage]], which for CMS ((cell, count) pairs) and
-  * HLL (set registers) is sized to the group, not to the 40 KB table or
-  * the 4 KB register array. Theta's image is its hash buffer as it is, so
+  * has two modes, counting by item hash in a small table until it has
+  * seen `width / 16` items and then the dense table; and the shuffle and
+  * spill buffers carry the family's [[SketchFormat.partialImage]], which
+  * for CMS ((item hash, count) pairs in item mode) and HLL (set
+  * registers) is sized to the group, not to the 40 KB table or the 4 KB
+  * register array. Theta's image is its hash buffer as it is, so
   * writing a partial sorts nothing. Partial images never leave an
   * aggregate: `eval`, and so every stored column, is the canonical
   * `serialize()`. Every sketch moves its arrays through bulk `ByteBuffer`
@@ -54,8 +55,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    only when its buffer fills or something reads it;
   *  - both sort by bucketing on the values' spread (`BucketSort`);
   *  - CMS counts each row under its item's hash with one probe until the
-  *    sketch has seen 64 items (at 5 x 1024), and sets the depth cells per
-  *    item only after;
+  *    sketch has seen 64 items (at 5 x 1024), and adds to the depth
+  *    counters of the dense table per row only after;
   *  - KLL still sorts a whole level at each compaction: its `serialize()`
   *    writes levels in insertion order, so a sorted run would change its
   *    bytes;
@@ -279,7 +280,9 @@ case class FreqSketchAgg(
 /** `cms_sketch(col[, depth[, width]])` — Count-Min frequency sketch over a
   * string column. Linear (counters add), so any partial/merge schedule is
   * byte-identical to the single-pass sketch; the shuffle carries one
-  * depth x width counter table per partition, never item rows. */
+  * partial per group and partition — (item hash, count) pairs up to the
+  * item limit, the depth x width counter table past it — never item
+  * rows. */
 case class CmsSketchAgg(
     child: Expression,
     depth: Int = CmsSketch.DefaultDepth,

@@ -124,6 +124,12 @@ object GraftBridge {
     }
   }
 
+  /** Deletes `dir` and everything in it when the JVM exits, in the
+    * shutdown hook that deletes Spark's own temp dirs (it runs after the
+    * SparkContext's). */
+  def deleteOnExit(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
+
   /** Block until the async listener bus has delivered all queued events —
     * required before reading metrics accumulated by a SparkListener (the
     * bus lags behind job completion, so task-end events from the final

@@ -99,12 +99,12 @@ class CmsSketchSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { c.update("x", 0L) }
   }
 
-  test("sparse and dense storage serialize the dense reference bytes across the sparse limit") {
+  test("item and dense storage serialize the dense reference bytes across the item limit") {
     for ((depth, width) <- Seq((5, 1024), (4, 1000), (3, 64))) {
-      val limit = CmsSketch(depth, width).sparseLimit
-      assert(limit == depth * width / 16)
-      // n distinct items set about depth * n cells: step n across the limit
-      for (n <- (0 to 3 * limit / depth) by math.max(1, limit / depth / 8)) {
+      val limit = CmsSketch(depth, width).itemLimit
+      assert(limit == width / 16)
+      // step the distinct item count n across the limit
+      for (n <- (0 to 3 * limit) by math.max(1, limit / 8)) {
         val items = (0 until n).map(i => s"item$i") ++ (0 until n by 3).map(i => s"item$i")
         val sk = CmsSketch(depth, width)
         val ref = new DenseCms(depth, width)
@@ -117,21 +117,21 @@ class CmsSketchSpec extends AnyFunSuite {
     }
   }
 
-  test("merges of sparse and dense sketches equal the single-pass bytes") {
+  test("merges of item-mode and dense sketches equal the single-pass bytes") {
     val (depth, width) = (5, 1024)
     def build(items: Seq[String]): CmsSketch = { val s = CmsSketch(depth, width); items.foreach(s.update(_)); s }
     def items(from: Int, n: Int): Seq[String] = (from until from + n).map(i => s"tok$i")
-    val limit = CmsSketch(depth, width).sparseLimit
-    val small1 = items(0, 10)                   // sparse
-    val small2 = items(5, 20)                   // sparse, overlapping
-    val nearLimit = items(100, limit / depth - 4) // sparse, two of them cross the limit
-    val big = items(1000, 3 * limit)            // dense
+    val limit = CmsSketch(depth, width).itemLimit
+    val small1 = items(0, 10)                   // items
+    val small2 = items(5, 20)                   // items, overlapping
+    val nearLimit = items(100, limit - 4)       // items, two of them cross the limit
+    val big = items(1000, 15 * limit)           // dense
     for ((a, b, kind) <- Seq(
-           (small1, small2, "sparse + sparse"),
-           (nearLimit, items(500, limit / depth - 4), "sparse + sparse crossing the limit"),
-           (small1, big, "sparse + dense"),
-           (big, small1, "dense + sparse"),
-           (big, items(9000, 2 * limit), "dense + dense"))) {
+           (small1, small2, "items + items"),
+           (nearLimit, items(500, limit - 4), "items + items crossing the limit"),
+           (small1, big, "items + dense"),
+           (big, small1, "dense + items"),
+           (big, items(9000, 10 * limit), "dense + dense"))) {
       val single = build(a ++ b).serialize()
       assert(build(a).merge(build(b)).serialize().sameElements(single), kind)
       // through partial images too, as a shuffled aggregate buffer is
@@ -144,8 +144,8 @@ class CmsSketchSpec extends AnyFunSuite {
     }
   }
 
-  test("partial images round-trip to the original bytes, sparse and dense-tag fallback") {
-    for ((depth, width) <- Seq((5, 1024), (3, 100)); n <- Seq(0, 1, 7, 40, 63, 64, 65, 66, 200, 3000)) {
+  test("partial images round-trip to the original bytes, item and dense-tag fallback") {
+    for ((depth, width) <- Seq((5, 1024), (3, 100)); n <- Seq(0, 1, 5, 6, 7, 40, 63, 64, 65, 66, 200, 3000)) {
       val sk = CmsSketch(depth, width)
       (0 until n).foreach(i => sk.update(s"w$i", 1L + i % 3))
       val canonical = sk.serialize()
@@ -154,14 +154,26 @@ class CmsSketchSpec extends AnyFunSuite {
       val label = s"${depth}x$width n=$n"
       assert(back.serialize().sameElements(canonical), label)
       assert(back.streamWeight == sk.streamWeight && back.rowsConserved, label)
-      val cells = ByteBuffer.wrap(canonical, 17, canonical.length - 17).asLongBuffer()
-      val set = Iterator.range(0, depth * width).count(cells.get(_) != 0)
-      if (set <= sk.sparseLimit) { // sparse: (cell, count) pairs after a 21-byte header
-        assert(image(0) == 1 && image.length == 1 + 20 + 12 * set, label)
-      } else {                     // dense: a tag byte plus the canonical bytes
+      if (n <= sk.itemLimit) { // items: (hash, count) pairs after a 21-byte header
+        assert(image(0) == 1 && image.length == 1 + 20 + 16 * n, label)
+      } else {                 // dense: a tag byte plus the canonical bytes
         assert(image(0) == 0 && image.drop(1).sameElements(canonical), label)
       }
     }
+  }
+
+  test("an item-mode partial image is 21 + 16 x items bytes: its header, then (item hash, count) pairs") {
+    val sk = CmsSketch(5, 1024)
+    val stream = (0 until 200).map(i => s"tok${i % 11}") // 11 items, as a rollup group holds
+    stream.foreach(sk.update(_, 3L))
+    val image = CmsSketch.partialImage(sk)
+    assert(image.length == 21 + 16 * 11)
+    val buf = ByteBuffer.wrap(image)
+    assert(buf.get() == 1 && buf.getInt() == 5 && buf.getInt() == 1024 && buf.getLong() == 600L && buf.getInt() == 11)
+    val pairs = Seq.fill(11)(buf.getLong() -> buf.getLong()).toMap
+    val hash = (t: String) => ThetaSketch.hashBytes(t.getBytes(StandardCharsets.UTF_8))
+    assert(pairs == stream.groupBy(identity).map { case (t, xs) => hash(t) -> 3L * xs.size })
+    assert(CmsSketch.readPartialImage(image).serialize().sameElements(sk.serialize()))
   }
 
   test("item mode across the limit serializes the dense reference bytes (5x1024, 3x100, 3x64)") {

@@ -61,6 +61,30 @@ class BucketedPairsSpec extends AnyFunSuite with SparkSuiteBase {
     assert(got.size == 64 * 63 / 2)
   }
 
+  test("incremental probe degrades a bucket only past a salt slice's cap, not past cap members") {
+    import spark.implicits._
+    val cap = 8
+    // the salt slice of each id, as cappedBuckets computes it
+    val salt = spark.range(0L, 4000L).select(col("id"), pmod(xxhash64(col("id")), lit(16L)))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def sliceSizes(ids: Seq[Long]): Iterable[Int] = ids.groupBy(salt).values.map(_.size)
+    // key 1: 3 x cap postings, at most cap in any slice
+    val even = (1000L until 4000L).foldLeft(Vector.empty[Long]) { (kept, id) =>
+      if (kept.size < 3 * cap && kept.count(salt(_) == salt(id)) < cap) kept :+ id else kept
+    }
+    assert(even.size == 3 * cap && sliceSizes(even).max <= cap)
+    // key 2: cap + 2 postings in one slice and two in others, 12 in all
+    val crowded = (0L until 1000L).filter(salt(_) == 0L).take(cap + 2) ++
+      (0L until 1000L).filter(salt(_) != 0L).take(2)
+    assert(crowded.size < 3 * cap && sliceSizes(crowded).max > cap)
+    val index = (even.map(1L -> _) ++ crowded.map(2L -> _)).toDF("k", "id")
+    val probes = Seq((1L, -1L), (2L, -2L)).toDF("k", "new_id")
+    val got = BucketedPairs.probeCandidates(index, probes, Seq("k"), "id", "new_id", cap)
+      .collect().groupBy(_.getLong(0)).map { case (p, rs) => p -> rs.map(_.getLong(1)).toSet }
+    assert(got(-1L) == even.toSet, "a bucket of 3 x cap postings with no slice over the cap lists them all")
+    assert(got(-2L) == Set(crowded.min), "an over-cap slice degrades the bucket to its hub")
+  }
+
   test("pair_combos stays null-safe after the lanes that expand pairs run") {
     // the SQL name is the one table entry the lanes call; it returns NULL
     // for a NULL id array before and after the lanes run

@@ -28,7 +28,7 @@ class GraftBridgeSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("a small materialized frame joined to a parquet scan plans a broadcast hash join unhinted") {
-    val work = java.nio.file.Files.createTempDirectory("graft-bridge").toString
+    val work = tmpDir("bridge")
     spark.range(0, 20000, 1, 2)
       .select(col("id").as("k"), sha2(col("id").cast("string"), 256).as("payload"))
       .write.parquet(s"$work/big")
@@ -67,7 +67,7 @@ class GraftBridgeSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("appendLocalParquet writes driver-side rows and refuses a frame that needs a job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-append").toString
+    val dir = tmpDir("append")
     val schema = org.apache.spark.sql.types.StructType.fromDDL("k STRING, n BIGINT")
     val rows = Seq(org.apache.spark.sql.Row("a", 1L), org.apache.spark.sql.Row("b", 2L))
     import scala.jdk.CollectionConverters._

@@ -84,7 +84,7 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSuiteBase {
     val events = pages.take(20).map(p => (p.warc_ts, "g", p.text)).toDF("ts", "grp", "text")
     assert(StreamingOps.windowedCmsSketch(events, "ts", "text", "grp",
       "10 minutes", "5 minutes").count() > 0)
-    val work = java.nio.file.Files.createTempDirectory("graft-session").toString
+    val work = tmpDir("session")
     val res = NearDupPipeline.run(s, s.createDataFrame(s.sparkContext.parallelize(pages, 4)),
       NearDupPipeline.Config(workDir = work))
     assert(res.clusters.count() > 0)
@@ -162,7 +162,7 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkSuiteBase {
   test("the function table installs once per session; a caller's own graft name is replaced") {
     val s = spark.newSession()
     // building a catalog query reads only its input's schema
-    val dir = java.nio.file.Files.createTempDirectory("graft-install").toString
+    val dir = tmpDir("install")
     s.createDataFrame(Seq((1L, "en", "alpha beta"))).toDF("doc_id", "lang", "text")
       .write.parquet(s"$dir/documents.parquet")
     // a new session holds only Spark's built-ins: the first install

@@ -258,7 +258,7 @@ class IncrementalNearDupSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("index survives TableIO persistence and append maintenance catches the next batch") {
-    val root = java.nio.file.Files.createTempDirectory("graft-incnd").toString
+    val root = tmpDir("incnd")
     val io = new ParquetTableIO(spark, root)
     // epoch 0: persist the corpus index (partitioned by band — the probe
     // join's co-location/pruning key at scale)

@@ -88,7 +88,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSuiteBase {
     val vecs = clusteredVecs(800, 32, 8, 41L)
     val df = toDf(vecs)
     val queries = df.filter(col("id") < 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tmpDir("ivf")
     val io = new graft.pipeline.ParquetTableIO(spark, dir)
     val cents = IvfIndex.buildStored(df, "id", "v", k = 16, io, "ivf_index", iters = 3)
 

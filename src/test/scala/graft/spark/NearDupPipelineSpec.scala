@@ -5,7 +5,6 @@ import graft.pipeline.NearDupPipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 /** End-to-end north-rule pipeline correctness: dup-pair recall >= 0.99
@@ -20,9 +19,6 @@ class NearDupPipelineSpec extends AnyFunSuite with SparkSuiteBase {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(pages, 8))
     (df, truth)
   }
-
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
 
   /** `body`'s result and the call site (final stage name) of every Spark
     * job started while it ran, on any thread (the lane futures launch jobs
@@ -162,7 +158,7 @@ class NearDupPipelineSpec extends AnyFunSuite with SparkSuiteBase {
   private lazy val recorded: (Seq[(String, Set[String])], DataFrame, DataFrame, String) = {
     val (df, _) = pagesDf(300, 9L)
     val dir = tmpDir("lineage")
-    val refDir = s"$dir-ref"
+    val refDir = tmpDir("lineage-ref")
     val io = new RecordingIO(dir, refDir)
     val res = NearDupPipeline.run(spark, df,
       NearDupPipeline.Config(workDir = dir, inputSnapshotId = Some("snap-1")), io)

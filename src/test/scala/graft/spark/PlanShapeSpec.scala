@@ -266,7 +266,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuiteBase {
     import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val p = spark.sparkContext.defaultParallelism
-    val work = java.nio.file.Files.createTempDirectory("graft-spread").toString
+    val work = tmpDir("spread")
     spark.range(0, 400, 1, p).toDF("doc_id").write.parquet(s"$work/multi")
     spark.range(0, 400, 1, 1).toDF("doc_id").write.parquet(s"$work/one")
     val multi = spark.read.parquet(s"$work/multi")

@@ -230,6 +230,78 @@ class SketchAggSpec extends AnyFunSuite with SparkSuiteBase {
     assert(nullRow.isNullAt(1))
   }
 
+  test("cms_sketch over 4 partitions: item-mode partials whose union passes the item limit merge to single-pass bytes") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    val limit = CmsSketch().itemLimit
+    // slice p: items 20p .. 20p+39 of group 0, each twice (40 items per
+    // slice, 100 in the group), and items 0..9 of group 1
+    val slices = (0 until 4).map { p =>
+      (0 until 40).flatMap(j => Seq.fill(2)((0, s"tok${20 * p + j}"))) ++ (0 until 10).map(j => (1, s"tok$j"))
+    }
+    // equal-sized slices: parallelize puts slice p in partition p
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(slices.flatten, 4)).toDF("g", "tok")
+    val perPartition = df.rdd.mapPartitions(rows => Iterator(rows.filter(_.getInt(0) == 0).map(_.getString(1)).toSet.size))
+      .collect()
+    assert(perPartition.toSeq == Seq.fill(4)(40) && 40 < limit)
+    assert(slices.flatten.filter(_._1 == 0).map(_._2).distinct.size == 100 && 100 > limit)
+    // each partition's partial travels as an item image
+    slices.foreach { slice =>
+      val partial = CmsSketch()
+      slice.filter(_._1 == 0).foreach(r => partial.update(r._2))
+      assert(CmsSketch.partialImage(partial)(0) == 1)
+    }
+    def single(rows: Seq[(Int, String)]): Array[Byte] = {
+      val s = CmsSketch(); rows.foreach(r => s.update(r._2)); s.serialize()
+    }
+    val grouped = df.groupBy("g").agg(expr("cms_sketch(tok)").as("cms")).collect()
+      .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+    for (g <- Seq(0, 1))
+      assert(grouped(g).sameElements(single(slices.flatten.filter(_._1 == g))), s"group $g")
+    assert(df.agg(expr("cms_sketch(tok)")).first().getAs[Array[Byte]](0).sameElements(single(slices.flatten)))
+  }
+
+  test("req_merge of stored req_sketch partials: every rank it claims exact is the counted rank") {
+    import spark.implicits._
+    GraftFunctions.register(spark)
+    // 20,000 values, two copies of each of 10,000, in 8 groups over 4 partitions
+    val n = 20000
+    val values = (0 until n).map(i => (i * 7919L % (n / 2)).toDouble / 4)
+    val rows = values.zipWithIndex.map { case (v, i) => (i % 8, v) }
+    val dir = tmpDir("req-exact")
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4)).toDF("g", "v")
+      .groupBy("g").agg(expr("req_sketch(v)").as("rs"))
+      .write.parquet(s"$dir/partials")
+    val merged = spark.read.parquet(s"$dir/partials").agg(expr("req_merge(rs)").as("m")).cache()
+    val sk = ReqSketch.deserialize(merged.first().getAs[Array[Byte]](0))
+    assert(sk.count == n && sk.isEstimationMode)
+    // probe every distinct value from 40 below the HRA threshold rank
+    // 1 - 3k/n to the top, each value's midpoint to the next, and past the max
+    val sorted = values.sorted.toArray
+    def counted(x: Double): Int = { // values below x
+      var (lo, hi) = (0, n)
+      while (lo < hi) { val m = (lo + hi) >>> 1; if (sorted(m) < x) lo = m + 1 else hi = m }
+      lo
+    }
+    val distinct = sorted.distinct.toSeq
+    val threshold = 1.0 - 3.0 * ReqSketch.DefaultK / n
+    val from = distinct.indexWhere(v => counted(v).toDouble / n >= threshold) - 40
+    val tail = distinct.drop(from)
+    val probes = tail ++ tail.zip(tail.tail).map { case (a, b) => (a + b) / 2 } :+ (distinct.last + 1)
+    val answers = probes.toDF("x").crossJoin(merged)
+      .select($"x", $"m", expr("req_rank(m, x)").as("r"))
+      .select($"x", $"r", expr("req_rank_lb(m, r, 3)").as("lb"), expr("req_rank_ub(m, r, 3)").as("ub"))
+      .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+    merged.unpersist()
+    val claimed = answers.filter { case (_, _, lb, ub) => lb == ub }
+    // non-vacuous: ranks on both sides of the threshold, some claimed exact
+    assert(claimed.nonEmpty && claimed.length < answers.length)
+    val wrong = claimed.collect {
+      case (x, r, _, _) if r != counted(x).toDouble / n => s"rank($x) = $r, counted ${counted(x)}/$n"
+    }
+    assert(wrong.isEmpty, wrong.take(10).mkString("\n", "\n", ""))
+  }
+
   test("string inputs hash in place, equal to hashing their UTF-8 bytes") {
     val backing = "row-buffer: naïve café 日本語 tail".getBytes(java.nio.charset.StandardCharsets.UTF_8)
     for (off <- Seq(0, 3, 12); len <- Seq(0, 1, 8, 17)) {

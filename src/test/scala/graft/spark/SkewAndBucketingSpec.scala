@@ -64,7 +64,7 @@ class SkewAndBucketingSpec extends AnyFunSuite with SparkSuiteBase {
     // moves. Asserted by executing the SAME probe against the bucketed
     // table and the in-plan unbucketed index: identical candidates,
     // strictly fewer hash exchanges, bucketed scan visible in the plan.
-    val wh = java.nio.file.Files.createTempDirectory("graft-idx-bucket").toString
+    val wh = tmpDir("idx-bucket")
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val corpus = (0 until 2000).map(i =>
@@ -121,7 +121,7 @@ class SkewAndBucketingSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("bucketed tables join with no shuffle exchange on either side") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucketing").toString
+    val wh = tmpDir("bucketing")
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val docs = (0 until 5000).map(i => (i.toLong, s"text $i")).toDF("doc_id", "text")

@@ -22,7 +22,22 @@ trait SparkSuiteBase extends BeforeAndAfterAll { self: Suite =>
     }
   }
 
-  override def afterAll(): Unit = super.afterAll()
+  private val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A new `graft-<tag>` work dir under the JVM temp dir, deleted with
+    * everything in it after the suite's last test. */
+  protected def tmpDir(tag: String): String = synchronized {
+    val d = java.nio.file.Files.createTempDirectory(s"graft-$tag").toFile
+    tmpDirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally synchronized {
+      tmpDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+      tmpDirs.clear()
+    }
 }
 
 object SparkSuiteBase {

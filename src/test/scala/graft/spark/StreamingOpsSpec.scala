@@ -548,7 +548,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuiteBase {
     val sq = spark
     import sq.implicits._
     implicit val ctx = sq.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-ssink").toString
+    val root = tmpDir("ssink")
     val io = new graft.pipeline.ParquetTableIO(sq, root)
     val input = MemoryStream[(Long, String)]
     val q = StreamingOps.sinkToTable(
@@ -578,7 +578,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuiteBase {
   test("sink crash between upsert write and commit: epoch replay recovers") {
     val sq = spark
     import sq.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-scrash").toString
+    val root = tmpDir("scrash")
     val io = new graft.pipeline.ParquetTableIO(sq, root)
     // epoch 0 lands cleanly
     assert(StreamingOps.applyEpoch(io, "t", Seq("id"),
@@ -605,7 +605,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuiteBase {
     val sq = spark
     import sq.implicits._
     implicit val ctx = sq.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft-sclu").toString
+    val root = tmpDir("sclu")
     val io = new graft.pipeline.ParquetTableIO(sq, root)
     val base = graft.core.WebPages.generate(120, 88L).zipWithIndex
       .map { case (p, i) => (i.toLong, p.text) }
@@ -682,7 +682,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuiteBase {
   test("re-arrived ids that are stored cluster labels: retired and live collisions re-mint cleanly") {
     val sq = spark
     import sq.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-sclu2").toString
+    val root = tmpDir("sclu2")
     val io = new graft.pipeline.ParquetTableIO(sq, root)
     val t80 = (1 to 80).map(i => s"nword$i").mkString(" ")
     val u80 = (1 to 80).map(i => s"uword$i").mkString(" ")
@@ -743,7 +743,7 @@ class StreamingOpsSpec extends AnyFunSuite with SparkSuiteBase {
     val sq = spark
     import sq.implicits._
     import scala.sys.process._
-    val root = java.nio.file.Files.createTempDirectory("graft-sclu3").toString
+    val root = tmpDir("sclu3")
     val io = new graft.pipeline.ParquetTableIO(sq, root)
     val u80 = (1 to 80).map(i => s"vword$i").mkString(" ")
     val novel = (1 to 80).map(i => s"fresh13v$i").mkString(" ")

@@ -11,7 +11,7 @@ class TableIOCompactSpec extends AnyFunSuite with SparkSuiteBase {
   import spark.implicits._
 
   test("compact: fewer files, identical rows, fingerprint preserved, history intact") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val root = tmpDir("compact")
     val io = new ParquetTableIO(spark, root)
     val df = (0 until 500).map(i => (i.toLong, s"text body $i")).toDF("doc_id", "text")
 
@@ -35,7 +35,7 @@ class TableIOCompactSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("fault injection: crash between write and commit — resume recomputes, never reads the partial head") {
-    val root = java.nio.file.Files.createTempDirectory("graft-fault").toString
+    val root = tmpDir("fault")
     val io = new ParquetTableIO(spark, root)
     io.overwrite("t", Seq((1L, "good"), (2L, "good")).toDF("id", "x"))
     io.commit("t", "fp-run1")
@@ -56,7 +56,7 @@ class TableIOCompactSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("discardUncommittedHead: restores the committed head, idempotent, no-op when committed") {
-    val root = java.nio.file.Files.createTempDirectory("graft-discard").toString
+    val root = tmpDir("discard")
     val io = new ParquetTableIO(spark, root)
     io.overwrite("t", Seq((1L, "a")).toDF("id", "x"))
     io.commit("t", "f1")
@@ -69,7 +69,7 @@ class TableIOCompactSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("diff: update = delete+insert, pure add = insert, pure remove = delete") {
-    val root = java.nio.file.Files.createTempDirectory("graft-diff").toString
+    val root = tmpDir("diff")
     val io = new ParquetTableIO(spark, root)
     io.overwrite("t", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "x"))
     io.commit("t", "v1")
@@ -85,7 +85,7 @@ class TableIOCompactSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("upsert: updates replace by key, inserts appear, deletes drop, rest kept") {
-    val root = java.nio.file.Files.createTempDirectory("graft-upsert").toString
+    val root = tmpDir("upsert")
     val io = new ParquetTableIO(spark, root)
     val v1 = (0 until 50).map(i => (i.toLong, s"body $i")).toDF("id", "x")
     io.overwrite("t", v1); io.commit("t", "f1")
@@ -103,7 +103,7 @@ class TableIOCompactSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("upsert refuses duplicate update keys and uncommitted heads") {
-    val root = java.nio.file.Files.createTempDirectory("graft-upsert2").toString
+    val root = tmpDir("upsert2")
     val io = new ParquetTableIO(spark, root)
     io.overwrite("t", Seq((1L, "a")).toDF("id", "x"))
     // head not committed yet
@@ -120,7 +120,7 @@ class TableIOCompactSpec extends AnyFunSuite with SparkSuiteBase {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import graft.operators.IvfIndex
-    val root = java.nio.file.Files.createTempDirectory("graft-compact-cells").toString
+    val root = tmpDir("compact-cells")
     val io = new ParquetTableIO(spark, root)
     val vecs = (0 until 400).map(i => (i.toLong, Array.tabulate(8)(d => ((i * 7 + d * 13) % 23).toDouble)))
       .toDF("id", "v")
@@ -169,7 +169,7 @@ class TableIOCompactSpec extends AnyFunSuite with SparkSuiteBase {
   }
 
   test("compact refuses an uncommitted head") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact2").toString
+    val root = tmpDir("compact2")
     val io = new ParquetTableIO(spark, root)
     io.overwrite("docs", Seq((1L, "a")).toDF("doc_id", "text"))
     intercept[IllegalStateException] { io.compact("docs", 1) }

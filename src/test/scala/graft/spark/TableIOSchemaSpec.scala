@@ -20,9 +20,6 @@ class TableIOSchemaSpec extends AnyFunSuite with SparkSuiteBase {
   private val Stages = Seq("extracted", "edges_exact", "edges_minhash", "edges_simhash",
     "edges_substring", "clusters", "cluster_stats")
 
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$tag").toString
-
   private def inferred(path: String): StructType = spark.read.parquet(path).schema
 
   private def sidecars(root: String): Seq[Path] = {

@@ -26,11 +26,15 @@ PARAM = re.compile(r"\s*(?:implicit\s+)?(?:(?:private|protected|override|final|v
 NAMED_ARG = re.compile(r"\s*[A-Za-z_]\w*\s*=(?![=>])")
 
 
+# Scala comments and string/char literals: one match per lexeme, so a `//`
+# inside a string is not a comment and a quote inside a comment opens no string
+LEXEMES = re.compile(r'//[^\n]*|/\*.*?\*/|""".*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\])\'', re.S)
+
+
 def blank(src):
     """`src` with comments and string/char literal contents blanked to
     spaces, so parentheses inside them do not count."""
-    pat = re.compile(r'//[^\n]*|/\*.*?\*/|""".*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\])\'', re.S)
-    return pat.sub(lambda m: re.sub(r"[^\n]", " ", m.group(0)), src)
+    return LEXEMES.sub(lambda m: re.sub(r"[^\n]", " ", m.group(0)), src)
 
 
 def arg_groups(s, i):
